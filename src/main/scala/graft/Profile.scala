@@ -1,12 +1,16 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run chosen queries N times each in one JVM and report
   * wall seconds plus scheduler counters (jobs / stages / tasks and
   * summed task time) per run, so overhead-dominated queries (many
-  * tiny stages) can be told apart from compute-bound ones. Same
+  * tiny stages) can be told apart from compute-bound ones, plus the
+  * classes Spark's code generator compiled (`compiles`): a query whose
+  * generated code stops repeating, or that the codegen cache no
+  * longer holds, shows compiles > 0 from rep 2 on. Same
   * session config as Bench; noop sink; not part of the driver
   * contract.
   *
@@ -66,6 +70,7 @@ object Profile {
       (1 to reps).foreach { rep =>
         synchronized { jobs = 0; stages = 0; tasks = 0; taskMs = 0L }
         stageRows.clear()
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         try run(n) catch {
           case e: Throwable => println(s"PROF $n rep$rep FAILED: $e")
@@ -73,8 +78,11 @@ object Profile {
         val wall = (System.nanoTime() - t0) / 1e9
         // brief settle so straggling listener events land in this rep
         Thread.sleep(150)
+        val compiles =
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
         println(f"PROF $n%-32s rep$rep wall=$wall%7.3f jobs=$jobs%3d " +
-          f"stages=$stages%4d tasks=$tasks%5d taskSec=${taskMs / 1e3}%8.2f")
+          f"stages=$stages%4d tasks=$tasks%5d taskSec=${taskMs / 1e3}%8.2f " +
+          f"compiles=$compiles%4d")
         if (stageDetail) {
           import scala.jdk.CollectionConverters._
           stageRows.asScala.toSeq.sortBy(-_._3).take(12).foreach {

@@ -731,7 +731,8 @@ object Similarity {
     * codebook centroid — NQ·m·k longs of constant model state (the
     * collectedCentroids pattern), computed by the very expression the
     * r21 shape broadcast as a frame, so every entry is bit-identical.
-    * Returns (query ids ascending, tables). */
+    * Returns (query ids ascending, tables); both are empty when the
+    * dataset has no queries. */
   private def adcTables(s: SparkSession, d: String,
       book: DataFrame): (Seq[Long], Map[Long, IndexedSeq[Seq[Long]]]) = {
     val qComps = pqComponents(queries(s, d)
@@ -742,6 +743,7 @@ object Similarity {
       .groupBy(col("q_id"), col("ss"), col("cell"))
       .agg(sum((col("qx") - col("c")) * (col("qx") - col("c"))).as("dt"))
       .collect() // NQ·m·k rows — constant model state, driver-scale
+    if (rows.isEmpty) return (Nil, Map.empty)
     val maxCell = rows.map(_.getLong(2)).max
     if (maxCell >= 65536) throw new IllegalStateException(
       s"PQ cell id $maxCell too sparse for literal ADC tables — the " +

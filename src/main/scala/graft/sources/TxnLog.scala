@@ -994,7 +994,7 @@ object TxnLog {
     val stages = slices.map(_ => newStage(t, t.dataDir))
     try {
       val reg = registeredSchema(t)
-      val lineSets = stagedPar(slices.zip(stages).map {
+      val lineSets = stagedPar(s, slices.zip(stages).map {
         case (df, stg) => () => {
           toPhysical(df, reg).write.parquet(stg.toString)
           addLinesFor(s, t, stg, statsCols)
@@ -2518,7 +2518,7 @@ object TxnLog {
       // survivor restage, incoming-stage constraint check and the
       // old-image change-file write are independent sliver-scale jobs
       // — overlapped (stagedPar, §2.6); refusals still precede commit
-      val stagedOut = stagedPar(Seq(
+      val stagedOut = stagedPar(s, Seq(
         () => affected.toSeq.flatMap(a =>
           stageAdds(s, t, a.filter(not(cond)), survivorStage, partCols,
             statsCols, snap.schemaJson)),
@@ -2634,19 +2634,35 @@ object TxnLog {
     * rethrows the ORIGINAL builder exception, so refusal semantics
     * (constraints, scope probes) are unchanged. Spark job submission
     * is thread-safe and job descriptions are thread-local
-    * (inherited), per the guide. */
-  private def stagedPar[A](thunks: Seq[() => A]): Seq[A] = {
+    * (inherited), per the guide. When one thunk fails, its siblings
+    * are interrupted and awaited, and the Spark jobs they started are
+    * cancelled, before the failure rethrows: the caller's seal() must
+    * not remove a stage's .inflight marker while a sibling still
+    * writes into it. */
+  private[graft] def stagedPar[A](s: SparkSession,
+      thunks: Seq[() => A]): Seq[A] = {
     if (thunks.length <= 1) return thunks.map(_())
+    val tag = s"graft-staged-${UUID.randomUUID()}"
     val pool =
       java.util.concurrent.Executors.newFixedThreadPool(thunks.length)
     try {
       val futs = thunks.map(th => pool.submit(
-        new java.util.concurrent.Callable[A] { def call(): A = th() }))
+        new java.util.concurrent.Callable[A] {
+          def call(): A = { s.sparkContext.addJobTag(tag); th() }
+        }))
       futs.map { f =>
         try f.get()
         catch { case e: java.util.concurrent.ExecutionException =>
           throw e.getCause }
       }
+    } catch { case e: Throwable =>
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue,
+        java.util.concurrent.TimeUnit.NANOSECONDS)
+      // every thread has stopped, so no tagged job starts after this;
+      // an interrupted thread leaves the job it waited on running
+      s.sparkContext.cancelJobsWithTag(tag)
+      throw e
     } finally pool.shutdown()
   }
 
@@ -2739,7 +2755,7 @@ object TxnLog {
       // The survivor restage and the change-file write are
       // independent sliver-scale jobs — overlapped (stagedPar, §2.6)
       val partCols = snap.partCols
-      val staged = stagedPar(Seq(
+      val staged = stagedPar(s, Seq(
         () => stageAdds(s, t, affected.filter(not(cond)), stage,
           partCols, statsCols, snap.schemaJson),
         () => {
@@ -2837,7 +2853,7 @@ object TxnLog {
       // §2.6). A constraint refusal still throws before anything
       // commits; concurrently staged garbage is sealed for vacuum,
       // exactly as the sequential shape left it.
-      val staged = stagedPar(Seq(
+      val staged = stagedPar(s, Seq(
         () => stageAdds(s, t, affected.filter(not(cond)), survivorStage,
           partCols, statsCols, snap.schemaJson),
         () => {
@@ -3213,7 +3229,7 @@ object TxnLog {
       // are byte-identical rewrites) and the old-image change-file
       // write are independent sliver-scale jobs — overlapped
       // (stagedPar, §2.6); refusals still throw before the commit
-      val staged = stagedPar(Seq(
+      val staged = stagedPar(s, Seq(
         () => stageAdds(s, t,
           affected.join(keys, Seq(keyCol), "left_anti"),
           survivorStage, partCols, statsCols, snap.schemaJson),
@@ -3693,7 +3709,7 @@ object TxnLog {
       // — overlapped (stagedPar, §2.6); the constraint check (updated
       // new images + accepted inserts can violate; survivors are
       // byte-identical rewrites) still throws before the commit
-      val stagedOut = stagedPar(Seq(
+      val stagedOut = stagedPar(s, Seq(
         () => survivors.toSeq.flatMap(
           stageAdds(s, t, _, survivorStage, partCols, statsCols,
             snap.schemaJson)),
@@ -3983,17 +3999,11 @@ object TxnLog {
   }
 
   /** The earliest retained version committed AT OR AFTER `ts` (epoch
-    * millis) — the streaming `startingTimestamp` resolution (Delta's
-    * inclusive contract: changes committed at or after the instant
-    * stream). latest+1 when every retained commit is older: the
-    * stream WAITS for the next commit instead of replaying history
-    * the caller asked to skip. */
-  def versionAtOrAfter(t: Table, ts: Long): Long =
-    versionFiles(t)
-      .find(vf => Files.getLastModifiedTime(vf).toMillis >= ts)
-      .map(versionOf).getOrElse(latestVersion(t) + 1)
-
-  /** [[versionAtOrAfter]] for FEED reads — refuses when expired
+    * millis) — the streaming `startingTimestamp` and feed timestamp
+    * resolution (Delta's inclusive contract: changes committed at or
+    * after the instant stream). latest+1 when every retained commit is
+    * older: the stream WAITS for the next commit instead of replaying
+    * history the caller asked to skip. Refuses when expired
     * history could hide commits at or after `ts`: if the earliest
     * RETAINED commit is not v0 and its instant is already at-or-after
     * the bound, expired commits may also have been, and resolving to
@@ -4298,14 +4308,6 @@ object TxnLog {
       case (None, None)       => empty
     }
   }
-
-  /** [[tableChanges]] addressed by path string — the programmatic
-    * convenience twin of the `txnlog_changes` TVF's version form
-    * (the TVF itself resolves names/timestamps and calls
-    * [[tableChanges]]/[[tableChangesLowest]] directly). */
-  def tableChangesByPath(s: SparkSession, path: String, from: Long,
-                         to: Long): DataFrame =
-    tableChanges(s, Table(pathOf(path)), from, to)
 
   /** ADDITIVE schema evolution as explicit DDL: register `newCols`
     * appended to the current schema in one metadata-only commit (the

@@ -219,6 +219,17 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("ADC search with no queries: knnPq and knnIvfPq return no rows") {
+    import org.apache.spark.sql.functions.col
+    // the corpus without its query block (vec_id < 20)
+    val dir = java.nio.file.Files.createTempDirectory("graft-noq-").toString
+    graft.sources.Tables.embeddings(spark, sf)
+      .filter(col("vec_id") >= 20)
+      .write.parquet(s"$dir/embeddings.parquet")
+    assert(Similarity.knnPq(spark, dir).collect().isEmpty)
+    assert(Similarity.knnIvfPq(spark, dir).collect().isEmpty)
+  }
+
   test("range search returns exactly the above-threshold pairs") {
     import org.apache.spark.sql.functions.col
     val vecs = graft.sources.Tables.embeddings(spark, sf)

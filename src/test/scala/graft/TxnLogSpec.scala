@@ -22,6 +22,39 @@ class TxnLogSpec extends AnyFunSuite {
     Seq(id).toDF("id")
   }
 
+  test("txnlog: a failed staging thunk stops its running siblings before it rethrows") {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.CountDownLatch(1)
+    @volatile var siblingStopped = false
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      TxnLog.stagedPar(spark, Seq(
+        () => {
+          started.await()
+          Thread.sleep(200) // the sibling's job is running by now
+          throw new IllegalStateException("refused")
+        },
+        () => try {
+          started.countDown()
+          // a slow staging job: its tasks run until killed (60 s cap)
+          spark.range(0, 4, 1, 4).foreach { _ =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val end = System.nanoTime() + 60000000000L
+            while (!ctx.isInterrupted() && System.nanoTime() < end)
+              Thread.sleep(10)
+          }
+        } finally siblingStopped = true))
+    }
+    assert(e.getMessage === "refused")
+    assert(siblingStopped, "stagedPar rethrew while a sibling still ran")
+    // the sibling was cancelled, not waited out; its job's tasks end
+    assert((System.nanoTime() - t0) / 1e9 < 30)
+    val deadline = System.nanoTime() + 30000000000L
+    while (sc.statusTracker.getActiveStageIds.nonEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getActiveStageIds.isEmpty)
+  }
+
   test("txnlog: staged data and tmp log files are invisible until the version links") {
     val t = freshTable()
     TxnLog.append(spark, t, oneRowDf(1))
