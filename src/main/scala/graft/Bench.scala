@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every declared query at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -30,16 +28,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.TxnLogCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Unit =

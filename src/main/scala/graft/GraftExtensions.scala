@@ -59,8 +59,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         // table_changes accepts both spellings
         val t =
           if (raw.contains('/')) TxnLog.Table(TxnLog.pathOf(raw))
-          else graft.sources.GraftSqlParser
-            .tryResolveTable(spark0, raw).getOrElse(
+          else graft.sources.GraftSqlParser.tryResolveTable(spark0,
+              spark0.sessionState.sqlParser.parseMultipartIdentifier(raw))
+            .getOrElse(
               throw new IllegalArgumentException(
                 s"txnlog_changes: $raw is neither a path nor a " +
                   "catalog table USING txnlog"))
@@ -131,10 +132,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         }
         df.queryExecution.analyzed
       }))
-    // SQL DML for txnlog tables (DELETE FROM / MERGE INTO / OPTIMIZE /
-    // VACUUM) — a delegating parser front end; see GraftSqlParser.
-    // Parser injection is build-time only: sessions get it through
-    // .withExtensions(new GraftExtensions) or
+    // SQL for txnlog tables — a delegating parser front end (text
+    // recognition only for the six statements Spark has no grammar
+    // for; see GraftSqlParser). Parser injection is build-time only:
+    // sessions get it through .withExtensions(new GraftExtensions) or
     // spark.sql.extensions=graft.GraftExtensions, not install().
     e.injectParser((session, delegate) =>
       new graft.sources.GraftSqlParser(delegate, () => session))
@@ -146,12 +147,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // TxnLogTable relations ever appear).
     e.injectResolutionRule(session =>
       graft.sources.TxnLogV2ReadRewrite(session))
-    // CREATE OR REPLACE TABLE / writeTo.createOrReplace() — HINTS
-    // batch: the rewrite must beat ResolveSessionCatalog's V1-provider
-    // REPLACE refusal, which fires inside the Resolution batch before
-    // any injected resolution rule could run. Root-only match, O(1).
+    // every parsed statement Spark's grammar covers (DML, ALTER,
+    // SHOW, CREATE [OR REPLACE]) lowers onto a txnlog command when its
+    // target is ours — HINTS batch: the rewrite must beat
+    // ResolveSessionCatalog, which claims these statements (and
+    // refuses REPLACE for V1 providers) inside the Resolution batch
+    // before any injected resolution rule could run. Root-only, O(1).
     e.injectHintResolutionRule(session =>
-      graft.sources.TxnLogReplaceTableRule(session))
+      graft.sources.TxnLogStatementRule(session))
     // partitioned CTAS keeps its declared layout (Spark's V1 CTAS
     // command would silently flatten it through the
     // CreatableRelationProvider seam) — POST-HOC: the V1 command is

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run chosen queries N times each in one JVM and report
   * wall seconds plus scheduler counters (jobs / stages / tasks and
@@ -21,15 +20,7 @@ object Profile {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.spark_catalog", "graft.sources.TxnLogCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
 
     @volatile var jobs = 0

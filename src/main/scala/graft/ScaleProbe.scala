@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time the same queries against two data dirs and print the
   * scaling ratio — evidence for the would-it-hold-at-N× question.
   *
@@ -11,16 +9,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(small, big, qcsv) = args.take(3)
     val names = qcsv.split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.catalog.spark_catalog",
-        "graft.sources.TxnLogCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     def time(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -707,12 +707,20 @@ object Similarity {
     * collected book; cells are label-seeded and label-dense). d2 is a
     * 16-term sum of squared micro-unit deltas (≤ ~6·10¹³ on
     * unit-scale embeddings), so the ×2¹⁶ shift stays far inside a
-    * long — the unpacked sum already relied on the same headroom. */
+    * long — the unpacked sum already relied on the same headroom.
+    * Past it (components of magnitude ~1.5 and up) the packed value
+    * would wrap and flip the per-subspace winner, so a d2 above
+    * [[PackHeadroom]] raises an error instead. */
   private[operators] val PackRadix = 65536L
+  private[operators] val PackHeadroom = (Long.MaxValue - PackRadix) / PackRadix
 
-  private def pqCodesPivoted(comps: DataFrame, book: DataFrame,
+  private[graft] def pqCodesPivoted(comps: DataFrame, book: DataFrame,
       carry: Seq[String] = Nil): DataFrame = {
-    def packed = col("d2") * PackRadix + col("cell")
+    def packed = when(col("d2") > PackHeadroom, raise_error(lit(
+      "PQ squared distance exceeds the packed-argmin headroom " +
+        s"($PackHeadroom): embedding components too large for the " +
+        "micro-unit encode")))
+      .otherwise(col("d2") * PackRadix + col("cell"))
     comps.join(broadcast(book), Seq("ss", "i"))
       .groupBy((Seq(col("vec_id")) ++ carry.map(col) ++
         Seq(col("ss"), col("cell"))): _*)

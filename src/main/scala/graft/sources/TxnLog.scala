@@ -984,10 +984,23 @@ object TxnLog {
     * like [[append]]; `statsCols` stamp per-file (min, max) exactly
     * like [[appendWithStats]]. The wave stages against the wave-entry
     * registered schema; a concurrent schema-changing commit conflicts
-    * through commitRegistering's re-merge, as with any append race. */
+    * through commitRegistering's re-merge, as with any append race.
+    * Every slice must carry one schema (nullability aside): a slice
+    * that evolved the schema would stage against a registration its
+    * predecessor's commit has not made yet, so a differing slice
+    * refuses by index before anything stages. */
   def appendSlices(s: SparkSession, t: Table, slices: Seq[DataFrame],
                    statsCols: Seq[String] = Nil): Seq[Long] = {
     if (slices.isEmpty) return Nil
+    slices.zipWithIndex.find { case (df, _) =>
+      !org.apache.spark.sql.catalyst.types.DataTypeUtils
+        .sameType(df.schema, slices.head.schema)
+    }.foreach { case (df, i) =>
+      throw new IllegalArgumentException(
+        s"appendSlices needs every slice to share one schema; slice $i " +
+          s"has ${df.schema.simpleString}, slice 0 has " +
+          slices.head.schema.simpleString)
+    }
     require(declaredPartCols(t).isEmpty,
       "appendSlices stages flat; a table declared PARTITIONED BY " +
         "routes through appendPartitioned per slice")
@@ -4796,18 +4809,15 @@ object TxnLog {
       .map(parseSchema(_).fieldNames.toSet)
     val curFields = cur.schemaJson
       .map(parseSchema(_).fieldNames.toSet).getOrElse(Set.empty)
-    def refs(sql: String): Set[String] = {
-      // mask string literals first: CHECK (status != 'price') must
-      // not read the word inside the literal as a column reference
-      // (a false hit here silently DROPS a valid constraint)
-      val masked = GraftSqlParser.literalSpans(sql)
-        .foldLeft(new StringBuilder(sql)) { case (sb, (a, b)) =>
-          for (i <- a until math.min(b, sb.length)) sb.setCharAt(i, ' ')
-          sb
-        }.toString
-      """[A-Za-z_][A-Za-z0-9_]*""".r.findAllIn(masked).toSet
-        .intersect(curFields)
-    }
+    // the CHECK's column references, read by Spark's expression
+    // parser (no session needed): words inside string literals are not
+    // references, and a backtick-quoted name stays one name
+    def refs(sql: String): Set[String] =
+      org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+        .parseExpression(sql).collect {
+          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+            a.nameParts.head
+        }.toSet.intersect(curFields)
     val keptNotNull =
       cur.notNull.filter(c => restoredFields.forall(_.contains(c)))
     val keptChecks = cur.checks.filter { case (_, sql) =>

@@ -1,67 +1,74 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.parser.ParserInterface
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel,
+  UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation,
+  UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression,
+  Literal}
+import org.apache.spark.sql.catalyst.parser.{ParseException, ParserInterface}
+import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.functions.{expr, lit}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-/** SQL entry points for the transaction-log DML the Scala API
-  * already provides — the statement surface a SQL-first lakehouse
-  * user expects:
+/** SQL entry points for the transaction-log operations the Scala API
+  * provides. Spark's own parser produces the plan for every statement
+  * it has grammar for, and [[TxnLogStatementRule]] lowers the plan
+  * onto a txnlog command when its target is ours:
   *
   * {{{
   *   DELETE FROM txnlog.`/path/to/table` WHERE k % 10 = 3
   *   UPDATE txnlog.`/p` SET v = v + 1, s = 'x' WHERE k % 10 = 3
-  *   INSERT INTO txnlog.`/p` VALUES (1, 2), (3, 4)    -- append commit
-  *   INSERT OVERWRITE txnlog.`/p` SELECT ...          -- atomic replace
-  *   MERGE INTO txnlog.`/p` t USING src s ON t.k = s.k
-  *     WHEN MATCHED AND s.v > 5 THEN UPDATE SET v = t.v + s.v
-  *     WHEN MATCHED THEN DELETE
-  *     WHEN NOT MATCHED AND s.k % 2 = 0 THEN INSERT *
-  *   OPTIMIZE txnlog.`/p` [ZORDER BY (a, b[, c ...])]
-  *   VACUUM txnlog.`/p` [RETAIN 168 HOURS] [DRY RUN]
-  *   DESCRIBE DETAIL txnlog.`/p`                      -- manifest-only
-  *   RESTORE TABLE txnlog.`/p` TO VERSION AS OF 3      -- rollback
-  *   ALTER TABLE txnlog.`/p` ADD COLUMNS (x BIGINT)    -- evolution
-  *   SHOW PARTITIONS txnlog.`/p`                       -- manifest-only
-  *   SELECT ... FROM txnlog.`/p` VERSION AS OF 3       -- time travel
-  *   SELECT ... FROM txnlog.`/p` TIMESTAMP AS OF '2026-01-01T00:00:00Z'
+  *   INSERT INTO | OVERWRITE txnlog.`/p` [(cols)] <query>
+  *   MERGE [WITH SCHEMA EVOLUTION] INTO txnlog.`/p` t USING src s
+  *     ON t.k = s.k
+  *     WHEN MATCHED [AND c] THEN UPDATE SET v = t.v + s.v | SET * | DELETE
+  *     WHEN NOT MATCHED [AND c] THEN INSERT * | INSERT (cols) VALUES (..)
+  *     WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET .. | DELETE
+  *   ALTER TABLE txnlog.`/p` ADD COLUMNS (x BIGINT DEFAULT 7)
+  *   ALTER TABLE txnlog.`/p` DROP COLUMN x | RENAME COLUMN a TO b
+  *   ALTER TABLE txnlog.`/p` ALTER COLUMN c TYPE DOUBLE | SET|DROP NOT NULL
+  *   ALTER TABLE txnlog.`/p` ADD CONSTRAINT n CHECK (v > 0) | DROP CONSTRAINT n
+  *   ALTER TABLE txnlog.`/p` SET | UNSET TBLPROPERTIES (...)
+  *   SHOW PARTITIONS txnlog.`/p`      SHOW TBLPROPERTIES txnlog.`/p`
+  *   CREATE [OR REPLACE] TABLE t (cols) USING txnlog [PARTITIONED BY ..]
+  *   SELECT ... FROM txnlog.`/p` VERSION AS OF 3 | TIMESTAMP AS OF '..'
   * }}}
   *
-  * Tables address either by path (the Delta `format.\`/path\``
-  * convention) or by a catalog table created with
-  * `CREATE TABLE ... USING txnlog OPTIONS (path ...)`. The parser is
-  * a DELEGATING front end (the SparkSessionExtensions injectParser
-  * mechanism, the same seam Delta's own SQL support rides): the four
-  * statement shapes above are recognized textually and lower onto
-  * [[TxnLog.delete]]/[[TxnLog.mergeInto]]/[[TxnLog.compact]]/
-  * [[TxnLog.compactZorder]]/[[TxnLog.vacuum]]; everything else
-  * passes through untouched. Conditions and SET expressions stay SQL
-  * text until run time, where they resolve against the target/source
-  * aliases exactly as the Scala clause API does. A DELETE/MERGE whose
-  * target turns out NOT to be a txnlog table executes Spark's own
-  * plan for the same statement (captured from the delegate at parse
-  * time), so v2 catalogs in the same session keep their native DML. */
+  * Six statements have no Spark grammar, so this front end recognizes
+  * them as text before it delegates:
+  *
+  * {{{
+  *   OPTIMIZE txnlog.`/p` [WHERE <partition spec>] [ZORDER BY (a, b)]
+  *   VACUUM txnlog.`/p` [RETAIN 168 HOURS] [DRY RUN]
+  *   DESCRIBE DETAIL txnlog.`/p`      DESCRIBE HISTORY txnlog.`/p` [LIMIT n]
+  *   RESTORE TABLE txnlog.`/p` TO VERSION AS OF 3 | TIMESTAMP AS OF ts
+  *   CREATE TABLE dst SHALLOW CLONE src [VERSION AS OF n] [LOCATION '..']
+  * }}}
+  *
+  * Two refusals of Spark's parser are answered for txnlog tables (see
+  * [[GraftSqlParser.parseRefused]]): a MERGE whose USING source is a
+  * time-traveled txnlog path, and SET TBLPROPERTIES with a key Spark
+  * reserves. Tables address either by path (the Delta
+  * `format.\`/path\`` convention) or by a catalog table created
+  * `USING txnlog`. The parser is a delegating front end (the
+  * SparkSessionExtensions injectParser seam Delta's SQL support
+  * rides); a statement whose target is not a txnlog table keeps
+  * Spark's own plan, so other catalogs in the session keep their
+  * native DML. */
 class GraftSqlParser(delegate: ParserInterface,
     session: () => SparkSession = () => SparkSession.active)
   extends ParserInterface {
   import GraftSqlParser._
 
   override def parsePlan(sqlText: String): LogicalPlan = {
-    // The time-travel rewrite folds `txnlog.`/p` VERSION AS OF n`
-    // into the `@v` path-suffix form EVERYWHERE except a RESTORE
-    // statement, whose own TO VERSION AS OF clause must stay a
-    // clause — so a MERGE can read a time-traveled SOURCE
-    // (`USING txnlog.`/p` VERSION AS OF 3 s`) through the same
-    // suffix resolveSource peels.
-    val sql =
-      if (RestorePrefix.findFirstIn(sqlText).isDefined) sqlText
-      else rewriteTimeTravel(sqlText)
-    val plan = parseDml(sql, delegate).getOrElse(delegate.parsePlan(sql))
+    val plan = parseGraftStatement(sqlText).getOrElse(
+      try delegate.parsePlan(sqlText)
+      catch { case e: ParseException =>
+        parseRefused(session(), delegate, sqlText, e)
+      })
     resolveTxnlogPaths(session(), plan)
   }
 
@@ -78,8 +85,7 @@ class GraftSqlParser(delegate: ParserInterface,
   // substitute here exactly as in parsePlan, or a view over
   // txnlog.`/p` fails analysis as SQL-on-files
   override def parseQuery(sqlText: String): LogicalPlan =
-    resolveTxnlogPaths(session(),
-      delegate.parseQuery(rewriteTimeTravel(sqlText)))
+    resolveTxnlogPaths(session(), delegate.parseQuery(sqlText))
   override def parseRoutineParam(sqlText: String): StructType =
     delegate.parseRoutineParam(sqlText)
   override def parseTableSchema(sqlText: String): StructType =
@@ -91,17 +97,9 @@ class GraftSqlParser(delegate: ParserInterface,
 object GraftSqlParser {
 
   private val Ident = """[\w.]+|txnlog\.`[^`]+`"""
-  private val DeleteRe =
-    (s"""(?is)^\\s*DELETE\\s+FROM\\s+($Ident)(?:\\s+AS\\b)?""" +
-      """(?:\s+(?!WHERE\b)(\w+))?(?:\s+WHERE\s+(.+?))?\s*;?\s*$""").r
-  private val UpdateRe =
-    (s"""(?is)^\\s*UPDATE\\s+($Ident)(?:\\s+AS\\b)?""" +
-      """(?:\s+(?!SET\b)(\w+))?\s+SET\s+([\s\S]+?)\s*;?\s*$""").r
   private val OptimizeRe =
     (s"""(?is)^\\s*OPTIMIZE\\s+($Ident)(?:\\s+WHERE\\s+(.+?))?""" +
       """(?:\s+ZORDER\s+BY\s*\(([^)]+)\))?\s*;?\s*$""").r
-  private[sources] val PartEqRe =
-    """(?s)^\s*(\w+)\s*=\s*(?:'([^']*)'|(\w+))\s*$""".r
   private val VacuumRe =
     (s"""(?is)^\\s*VACUUM\\s+($Ident)(?:\\s+RETAIN\\s+(\\d+)\\s+HOURS)?""" +
       """(?:\s+(DRY\s+RUN))?\s*;?\s*$""").r
@@ -109,66 +107,10 @@ object GraftSqlParser {
     s"""(?is)^\\s*DESCRIBE\\s+DETAIL\\s+($Ident)\\s*;?\\s*$$""".r
   private val HistoryRe =
     s"""(?is)^\\s*DESCRIBE\\s+HISTORY\\s+($Ident)(?:\\s+LIMIT\\s+(\\d+))?\\s*;?\\s*$$""".r
-  private val InsertRe =
-    (s"""(?is)^\\s*INSERT\\s+(INTO|OVERWRITE)(?:\\s+TABLE)?\\s+($Ident)""" +
-      // the column-list group must NOT swallow a parenthesized query
-      // (`INSERT INTO t (SELECT ...)`): a paren whose first word is a
-      // query head falls through to the query group instead
-      """\s*(\((?!\s*(?:SELECT|VALUES|WITH|FROM|TABLE)\b)[\w\s,`]*\))?""" +
-      """\s*((?:\(\s*)?(?:SELECT|VALUES|WITH|FROM|TABLE)\b[\s\S]+?)\s*;?\s*$""").r
   private val RestoreRe =
     (s"""(?is)^\\s*RESTORE\\s+TABLE\\s+($Ident)\\s+TO\\s+""" +
       """(?:VERSION\s+AS\s+OF\s+(\d+)|""" +
       """TIMESTAMP\s+AS\s+OF\s+(?:'([^']+)'|(\d+)))\s*;?\s*$""").r
-  private[sources] val RestorePrefix = """(?is)^\s*RESTORE\b""".r
-  // head-only: the column list is balanced-paren-scanned (DEFAULT
-  // expressions and DECIMAL(10,2) types nest parens a regex cannot)
-  private val AlterAddRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+ADD\\s+COLUMNS?\\s*""" +
-      """(\([\s\S]+)$""").r
-  private val AlterAddCheckRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+ADD\\s+CONSTRAINT\\s+""" +
-      """(\w+)\s+CHECK\s*\((.+)\)\s*;?\s*$""").r
-  private val AlterDropConstraintRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+DROP\\s+CONSTRAINT\\s+""" +
-      """(\w+)\s*;?\s*$""").r
-  private val AlterNotNullRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+ALTER\\s+COLUMN\\s+""" +
-      """(\w+)\s+(SET|DROP)\s+NOT\s+NULL\s*;?\s*$""").r
-  private val AlterColTypeRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+ALTER\\s+COLUMN\\s+""" +
-      """(\w+)\s+TYPE\s+([\w()\s,]+?)\s*;?\s*$""").r
-  private val AlterRenameColRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+RENAME\\s+COLUMN\\s+""" +
-      """(\w+)\s+TO\s+(\w+)\s*;?\s*$""").r
-  private val AlterDropColRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+DROP\\s+COLUMN\\s+""" +
-      """(\w+)\s*;?\s*$""").r
-  private val ShowPartsRe =
-    s"""(?is)^\\s*SHOW\\s+PARTITIONS\\s+($Ident)\\s*;?\\s*$$""".r
-  private val AlterSetPropsRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+SET\\s+""" +
-      """TBLPROPERTIES\s*\(([\s\S]+)\)\s*;?\s*$""").r
-  private val AlterUnsetPropsRe =
-    (s"""(?is)^\\s*ALTER\\s+TABLE\\s+($Ident)\\s+UNSET\\s+""" +
-      """TBLPROPERTIES\s*(?:IF\s+EXISTS\s*)?\(([\s\S]+)\)\s*;?\s*$""").r
-  private val ShowPropsRe =
-    s"""(?is)^\\s*SHOW\\s+TBLPROPERTIES\\s+($Ident)\\s*;?\\s*$$""".r
-  // quoted keys/values accept SQL's doubled-quote escape (`''` for a
-  // literal apostrophe, mirroring literalSpans) — consumers unescape
-  // via [[unescapeProp]] before storing
-  private[sources] val PropPairRe =
-    """(?s)^\s*(?:'((?:[^']|'')+)'|([\w.]+))\s*=\s*'((?:[^']|'')*)'\s*$""".r
-  private[sources] val PropKeyRe =
-    """(?s)^\s*(?:'((?:[^']|'')+)'|([\w.]+))\s*$""".r
-  private[sources] def unescapeProp(s: String): String =
-    s.replace("''", "'")
-  // CREATE TABLE with an explicit column list: the head up to the
-  // opening paren; the column list itself is balanced-paren-scanned
-  // (DECIMAL(10,2) etc. would break a regex group)
-  private val CreateHeadRe =
-    (s"""(?is)^\\s*CREATE\\s+TABLE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?""" +
-      s"""($Ident)\\s*(\\([\\s\\S]*)$$""").r
   // CREATE TABLE dst SHALLOW CLONE src [VERSION AS OF n |
   // TIMESTAMP AS OF 'ts'] [LOCATION '...'] — Delta's zero-copy fork
   private val CloneRe =
@@ -177,114 +119,90 @@ object GraftSqlParser {
       """(?:\s+VERSION\s+AS\s+OF\s+(\d+))?""" +
       """(?:\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)')?""" +
       """(?:\s+LOCATION\s+'([^']+)')?\s*;?\s*$""").r
-  private val CreateUsingRe =
-    """(?is)^\s+USING\s+txnlog\b[\s\S]*$""".r
-  private val PartitionedByRe =
-    """(?is)\bPARTITIONED\s+BY\s*\(([^)]+)\)""".r
-  private val OptionsHeadRe = """(?is)\bOPTIONS\s*\(""".r
-  private val TblPropsHeadRe = """(?is)\bTBLPROPERTIES\s*\(""".r
-  // the `path` OPTION key, anchored at a key position ('(' or ',' in
-  // the OPTIONS span) in both spellings — path '/x', path = '/x',
-  // 'path' '/x', 'path'='/x' — so a TBLPROPERTIES key merely ENDING
-  // in "path" ('data.path') can never hijack the table location
-  private val OptPathRe =
-    """(?is)[(,]\s*'?path'?\s*=?\s*'([^']+)'""".r
-  private val LocationRe = """(?is)\bLOCATION\s+'([^']+)'""".r
+  // the two refusals parseRefused answers
+  private val MergeHeadRe = """(?is)^\s*MERGE\b.*""".r
+  private val MergeTravelSourceRe =
+    ("""(?is)(\bUSING\s+)(txnlog\.`[^`]+`\s+(?:VERSION|TIMESTAMP)""" +
+      """\s+AS\s+OF\s+(?:\d+|'[^']*'))""").r
+  private val SetPropsRe =
+    """(?is)^\s*ALTER\s+TABLE\s+(.+?)\s+SET\s+TBLPROPERTIES\s*(\([\s\S]*\))\s*;?\s*$""".r
 
-  /** First match of `re` whose START lies outside every single-quoted
-    * string literal — structural CREATE-tail keywords (PARTITIONED
-    * BY, OPTIONS, LOCATION) must not be found inside a property or
-    * comment VALUE that happens to contain the words. */
-  private def findOutsideLiterals(re: scala.util.matching.Regex,
-      s: String): Option[scala.util.matching.Regex.Match] = {
-    val lits = literalSpans(s)
-    re.findAllMatchIn(s).find(m =>
-      !lits.exists { case (a, b) => m.start >= a && m.start < b })
+  /** The six statements Spark has no grammar for, recognized by their
+    * leading keywords; None hands the text to Spark's parser. */
+  private[sources] def parseGraftStatement(sqlText: String)
+      : Option[LogicalPlan] = sqlText match {
+    case OptimizeRe(tbl, where, zcols) =>
+      Some(TxnLogOptimizeCommand(tbl, Option(where),
+        Option(zcols).map(_.split(',').map(_.trim).toSeq)))
+    case VacuumRe(tbl, hours, dry) =>
+      Some(TxnLogVacuumCommand(tbl, Option(hours).map(_.toLong),
+        dryRun = dry != null))
+    case HistoryRe(tbl, limit) =>
+      Some(TxnLogHistoryCommand(tbl, Option(limit).map(_.toInt)))
+    case DetailRe(tbl) =>
+      Some(TxnLogDetailCommand(tbl))
+    case RestoreRe(tbl, ver, tsQ, tsN) =>
+      Some(TxnLogRestoreCommand(tbl, Option(ver).map(_.toLong),
+        Option(tsQ).orElse(Option(tsN))))
+    case CloneRe(ine, dst, srcT, ver, ts, loc) =>
+      Some(TxnLogCloneCommand(dst, ine != null, srcT,
+        Option(ver).map(_.toLong), Option(ts), Option(loc)))
+    case _ => None
   }
-  /** MERGE head only — the USING source span is found by the
-    * balanced-paren scanner ([[balancedParen]]), not a regex group:
-    * a regex can match only bounded nesting, and a source like
-    * `USING (SELECT ... WHERE k IN (SELECT ...))` must not silently
-    * fall off the MERGE path (a txnlog target would then die with
-    * Spark's table-not-found instead of this engine's handling). */
-  private val MergeHeadRe =
-    (s"""(?is)^\\s*MERGE\\s+(WITH\\s+SCHEMA\\s+EVOLUTION\\s+)?""" +
-      s"""INTO\\s+($Ident)(?:\\s+AS\\b)?""" +
-      """(?:\s+(?!USING\b)(\w+))?\s+USING\s+([\s\S]+)$""").r
-  // backtick alternative FIRST: with a trailing catch-all group there
-  // is no context to force backtracking, and `[\w.]+` would otherwise
-  // eat the bare `txnlog.` prefix of a path reference
-  private val MergeSrcIdentRe =
-    """(?is)^(txnlog\.`[^`]+`|[\w.]+)([\s\S]*)$""".r
-  private val MergeAfterSrcRe =
-    """(?is)^(?:\s+AS\b)?(?:\s+(?!ON\b)(\w+))?\s+ON\s+([\s\S]+?)\s*;?\s*$""".r
-  private val MatchedUpdateStarRe =
-    """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+\*\s*$""".r
-  private val MatchedUpdateRe =
-    """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+(.+?)\s*$""".r
-  private val NotMatchedInsertColsRe =
-    ("""(?is)^NOT\s+MATCHED(?:\s+BY\s+TARGET)?(?:\s+AND\s+(.+?))?""" +
-      """\s+THEN\s+INSERT\s*\(([\w\s,`]+)\)\s*VALUES\s*\(([\s\S]+)\)\s*$""").r
-  private val MatchedDeleteRe =
-    """(?is)^MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE\s*$""".r
-  private val NotMatchedInsertRe =
-    """(?is)^NOT\s+MATCHED(?:\s+BY\s+TARGET)?(?:\s+AND\s+(.+?))?\s+THEN\s+INSERT\s+\*\s*$""".r
-  private val BySourceUpdateRe =
-    """(?is)^NOT\s+MATCHED\s+BY\s+SOURCE(?:\s+AND\s+(.+?))?\s+THEN\s+UPDATE\s+SET\s+(.+?)\s*$""".r
-  private val BySourceDeleteRe =
-    """(?is)^NOT\s+MATCHED\s+BY\s+SOURCE(?:\s+AND\s+(.+?))?\s+THEN\s+DELETE\s*$""".r
-  private val PathIdent = """(?is)^txnlog\.`([^`]+)`\s*$""".r
 
-  /** Parse a CREATE/ADD-COLUMNS column list that may carry
-    * `DEFAULT <expr>` clauses (Spark's colTypeList grammar used by
-    * parseTableSchema does not): each DEFAULT expression must be a
-    * CONSTANT (analyzed with no input rows — column references fail
-    * loudly) that casts non-nully to the column type, and lands in
-    * the field's CURRENT_DEFAULT/EXISTS_DEFAULT metadata — Spark's
-    * own default-value keys, which its parquet readers honor for
-    * physically-missing columns. DEFAULT must be the LAST clause of
-    * its column entry. */
-  private[sources] def parseColsWithDefaults(spark: SparkSession,
-      ddl: String): StructType = {
-    // FAST PATH: no DEFAULT clause anywhere → Spark's own DDL parser
-    // handles the whole list (nested STRUCT/MAP types, comments,
-    // NOT NULL — everything it always handled; this path must never
-    // regress). The keyword probe masks string literals, backticked
-    // identifiers AND bracket depth, so `m MAP<STRING, INT>`, a
-    // column named `DEFAULT` or a COMMENT containing the word never
-    // trip the DEFAULT machinery.
-    if (findDefaultAtTopLevel(ddl).isEmpty)
-      return spark.sessionState.sqlParser.parseTableSchema(ddl)
-    StructType(splitColsTopLevel(ddl).flatMap { item =>
-      findDefaultAtTopLevel(item) match {
-        case None =>
-          spark.sessionState.sqlParser.parseTableSchema(item).fields
-        case Some((start, end)) =>
-          val base = item.substring(0, start).trim
-          val d = item.substring(end).trim
-          require(d.nonEmpty, s"empty DEFAULT expression in: $item")
-          val fields =
-            spark.sessionState.sqlParser.parseTableSchema(base).fields
-          require(fields.length == 1,
-            s"DEFAULT must follow exactly one column, got: $item")
-          Seq(frozenDefault(spark, fields.head, d))
+  /** Statements Spark's parser refuses but a txnlog table accepts:
+    *  - a MERGE whose USING source is a time-traveled txnlog path
+    *    (Spark's MERGE grammar has no temporal clause on the source) —
+    *    re-parsed with that source as the equivalent subquery. Any
+    *    other refused MERGE fails naming the clause grammar;
+    *  - SET TBLPROPERTIES with a key Spark reserves (`owner`,
+    *    `comment`, ...): a txnlog table's properties live in its log,
+    *    so the statement is read through Spark's SET SERDEPROPERTIES
+    *    grammar (the same property list, no reserved keys) instead.
+    *    Other targets keep Spark's refusal.
+    * Anything else rethrows Spark's own error. */
+  private[sources] def parseRefused(spark: SparkSession,
+      delegate: ParserInterface, sqlText: String,
+      refusal: ParseException): LogicalPlan = sqlText match {
+    case MergeHeadRe() =>
+      val asSubquery = MergeTravelSourceRe.replaceAllIn(sqlText, m =>
+        scala.util.matching.Regex.quoteReplacement(
+          s"${m.group(1)}(SELECT * FROM ${m.group(2)})"))
+      try delegate.parsePlan(asSubquery)
+      catch { case _: ParseException =>
+        throw new IllegalArgumentException(
+          s"cannot parse MERGE statement: ${refusal.getMessage} " +
+            "(supported: WHEN MATCHED [AND c] THEN UPDATE SET a = e, ... | " +
+            "UPDATE SET * | DELETE; WHEN NOT MATCHED [BY TARGET] [AND c] " +
+            "THEN INSERT * | INSERT (cols) VALUES (...) with one VALUES " +
+            "expression per column; WHEN NOT MATCHED BY SOURCE [AND c] " +
+            "THEN UPDATE SET ... | DELETE)", refusal)
       }
-    })
+    case SetPropsRe(name, list) =>
+      val asSerde =
+        try delegate.parsePlan(s"ALTER TABLE $name SET SERDEPROPERTIES $list")
+        catch { case _: ParseException => throw refusal }
+      asSerde match {
+        case SetTableSerDeProperties(target, _, Some(props), None) =>
+          nameParts(target).flatMap(tryResolveTable(spark, _))
+            .map(TxnLogPropertiesCommand(_, props, Nil))
+            .getOrElse(throw refusal)
+        case _ => throw refusal
+      }
+    case _ => throw refusal
   }
 
   /** Validate a column DEFAULT and freeze it into the field's
     * metadata — the ONE gate every DDL spelling routes through
-    * (column-list CREATE, ADD COLUMNS, and CREATE OR REPLACE, whose
-    * native-parsed columns arrive with Spark's UNANALYZED default
-    * text). Constant-only (analyzed rowless — column references
-    * refuse), deterministic-only (the value is served to every
-    * pre-evolution read forever), castable (ANSI errors refuse by
-    * name), stored as the FOLDED literal (null normalizes to the
-    * bare NULL keyword consumers can recognize without
-    * re-analysis). */
+    * (CREATE, CREATE OR REPLACE and ADD COLUMNS, whose parsed columns
+    * arrive with Spark's UNANALYZED default text). Constant-only
+    * (analyzed rowless — column references refuse),
+    * deterministic-only (the value is served to every pre-evolution
+    * read forever), castable (ANSI errors refuse by name), stored as
+    * the FOLDED literal (null normalizes to the bare NULL keyword
+    * consumers can recognize without re-analysis). */
   private[sources] def frozenDefault(spark: SparkSession,
-      f: org.apache.spark.sql.types.StructField,
-      d: String): org.apache.spark.sql.types.StructField = {
+      f: StructField, d: String): StructField = {
     val plan =
       try spark.sql(s"SELECT CAST(($d) AS ${f.dataType.sql})")
       catch { case e: Exception =>
@@ -302,15 +220,13 @@ object GraftSqlParser {
     // column at DDL time (r20 verdict wrong #2); DDL sits on
     // interactive paths. ANSI cast failures surface while computing
     // optimizedPlan and refuse by name exactly as head() did.
-    import org.apache.spark.sql.catalyst.expressions.{Alias,
-      Literal => CatLit}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    val folded: Option[CatLit] =
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    val folded: Option[Literal] =
       try plan.queryExecution.optimizedPlan match {
         case Project(projectList, _) => projectList.head match {
-          case Alias(l: CatLit, _) => Some(l)
-          case l: CatLit           => Some(l)
-          case _                   => None
+          case Alias(l: Literal, _) => Some(l)
+          case l: Literal           => Some(l)
+          case _                    => None
         }
         case _ => None
       } catch { case e: Exception =>
@@ -331,8 +247,7 @@ object GraftSqlParser {
         }
         (v.isNullAt(0),
           if (v.isNullAt(0)) "NULL"
-          else org.apache.spark.sql.catalyst.expressions.Literal
-            .create(v.get(0), f.dataType).sql)
+          else Literal.create(v.get(0), f.dataType).sql)
     }
     require(!isNull || d.equalsIgnoreCase("NULL"),
       s"DEFAULT $d does not cast to ${f.dataType.simpleString} " +
@@ -345,10 +260,9 @@ object GraftSqlParser {
         .putString("EXISTS_DEFAULT", lit).build())
   }
 
-  /** Route every default-carrying field of a natively-parsed schema
-    * through [[frozenDefault]] — CREATE OR REPLACE's column list
-    * arrives via Spark's own parser, which stores the raw
-    * (unanalyzed, possibly non-constant) DEFAULT text. */
+  /** Route every default-carrying field of a parsed schema through
+    * [[frozenDefault]] — Spark's parser stores the raw (unanalyzed,
+    * possibly non-constant) DEFAULT text. */
   private[sources] def revalidateDefaults(spark: SparkSession,
       schema: StructType): StructType =
     StructType(schema.fields.map { f =>
@@ -358,83 +272,6 @@ object GraftSqlParser {
       }
     })
 
-  /** (start, end) of the first `DEFAULT` keyword that sits OUTSIDE
-    * string literals, backticked identifiers and any ()/<> nesting —
-    * the only position where it is a column-default clause. */
-  private[sources] def findDefaultAtTopLevel(s: String)
-      : Option[(Int, Int)] = {
-    var i = 0; var depth = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') { // skip the literal (backslash-escape aware)
-        i += 1
-        while (i < s.length && s.charAt(i) != '\'') {
-          if (s.charAt(i) == '\\') i += 1
-          i += 1
-        }
-        i += 1
-      } else if (c == '`') {
-        val close = s.indexOf('`', i + 1)
-        i = if (close < 0) s.length else close + 1
-      } else if (c == '(' || c == '<') { depth += 1; i += 1 }
-      else if (c == ')' || c == '>') { depth -= 1; i += 1 }
-      else if (depth == 0 && (c == 'd' || c == 'D') &&
-          s.regionMatches(true, i, "DEFAULT", 0, 7) &&
-          (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) &&
-            s.charAt(i - 1) != '_') &&
-          (i + 7 == s.length ||
-            !Character.isLetterOrDigit(s.charAt(i + 7)) &&
-              s.charAt(i + 7) != '_')) {
-        return Some((i, i + 7))
-      } else i += 1
-    }
-    None
-  }
-
-  /** Split a column-list DDL on top-level commas, honoring string
-    * literals, backticked identifiers and ()/<> nesting — so
-    * `MAP<STRING, INT>` and `DECIMAL(10, 2)` never fracture. */
-  private[sources] def splitColsTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0; var depth = 0
-    // once the current entry's DEFAULT keyword has passed, '<'/'>'
-    // are comparison operators (DEFAULT 1 < 2), not type brackets —
-    // counting them would swallow the next top-level comma
-    var sawDefault = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'') {
-        cur += c; i += 1
-        while (i < s.length && s.charAt(i) != '\'') {
-          if (s.charAt(i) == '\\') { cur += s.charAt(i); i += 1 }
-          if (i < s.length) { cur += s.charAt(i); i += 1 }
-        }
-        if (i < s.length) { cur += s.charAt(i); i += 1 }
-      } else if (c == '`') {
-        val close = s.indexOf('`', i + 1)
-        val stop = if (close < 0) s.length else close + 1
-        cur ++= s.substring(i, stop); i = stop
-      } else if (c == '(') { depth += 1; cur += c; i += 1 }
-      else if (c == ')') { depth -= 1; cur += c; i += 1 }
-      else if (!sawDefault && (c == '<' || c == '>')) {
-        depth += (if (c == '<') 1 else -1); cur += c; i += 1
-      } else if (depth == 0 && (c == 'd' || c == 'D') &&
-          s.regionMatches(true, i, "DEFAULT", 0, 7) &&
-          (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) &&
-            s.charAt(i - 1) != '_') &&
-          (i + 7 == s.length ||
-            !Character.isLetterOrDigit(s.charAt(i + 7)) &&
-              s.charAt(i + 7) != '_')) {
-        sawDefault = true; cur ++= s.substring(i, i + 7); i += 7
-      } else if (c == ',' && depth == 0) {
-        out += cur.toString; cur.clear(); sawDefault = false; i += 1
-      } else { cur += c; i += 1 }
-    }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
   /** Does the snapshot opt SQL DML into the merge-on-read path?
     * Takes the statement's OWN snapshot — the property check must
     * not pay a second full log replay per statement. */
@@ -442,602 +279,344 @@ object GraftSqlParser {
     snap.properties.get("graft.enableDeletionVectors")
       .exists(_.equalsIgnoreCase("true"))
 
-  /** The path of a `txnlog.\`/p\`` identifier, if it is one. */
-  private[sources] def pathIdentOf(ident: String): Option[String] =
-    ident.trim match {
-      case PathIdent(p) => Some(p)
-      case _            => None
-    }
-  private[sources] val OnKeyRe =
-    """(?s)^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$""".r
-  private val AssignRe = """(?s)^\s*([\w.]+)\s*=\s*(.+?)\s*$""".r
-
-  /** Rewrite `txnlog.\`/p\` VERSION AS OF n` / `TIMESTAMP AS OF ts`
-    * references into the path-suffix form (`txnlog.\`/p@vn\``) the
-    * batch relation provider peels back off — SQL time travel lowered
-    * onto the existing versionAsOf/timestampAsOf reader options. Only
-    * txnlog path references rewrite; time travel on anything else
-    * stays the delegate's problem. */
-  private val TravelVersionRe =
-    """(?is)(txnlog\.`[^`]+)`\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-  private val TravelTimestampRe =
-    """(?is)(txnlog\.`[^`]+)`\s+TIMESTAMP\s+AS\s+OF\s+(?:'([^']+)'|(\d+))""".r
-
-  /** (start, end) spans of every single-quoted string literal in `s`
-    * (backslash-escaped quotes stay inside their literal — the same
-    * convention as the other scanners in this file). Backtick-quoted
-    * identifiers are OPAQUE: a stray apostrophe inside a quoted path
-    * must not open a phantom literal that swallows the rest of the
-    * statement. */
-  private[sources] def literalSpans(s: String): Seq[(Int, Int)] = {
-    val out = Seq.newBuilder[(Int, Int)]
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '`') {
-        val close = s.indexOf('`', i + 1)
-        i = if (close < 0) s.length else close + 1
-      } else if (c == '\'') {
-        val start = i; i += 1
-        var open = true
-        while (i < s.length && open) {
-          val d = s.charAt(i)
-          if (d == '\\') i += 2
-          else if (d == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'')
-            i += 2 // SQL doubled-quote escape: stays inside the literal
-          else { if (d == '\'') open = false; i += 1 }
-        }
-        out += ((start, math.min(i, s.length)))
-      } else i += 1
-    }
-    out.result()
-  }
-
-  /** The time-travel rewrite runs only over OUT-OF-QUOTE regions: a
-    * string literal that happens to contain
-    * ``txnlog.`/p` VERSION AS OF 3`` (a logged message, a doc row)
-    * must survive an INSERT verbatim instead of being folded into the
-    * `@v` suffix form before the delegate ever parses. */
-  private[sources] def rewriteTimeTravel(sql: String): String = {
-    import scala.util.matching.Regex.quoteReplacement
-    def sub(re: scala.util.matching.Regex, s: String,
-        f: scala.util.matching.Regex.Match => String): String = {
-      val lits = literalSpans(s)
-      re.replaceAllIn(s, m =>
-        quoteReplacement(
-          if (lits.exists { case (a, b) => m.start >= a && m.start < b })
-            m.matched
-          else f(m)))
-    }
-    val v = sub(TravelVersionRe, sql,
-      m => s"${m.group(1)}@v${m.group(2)}`")
-    sub(TravelTimestampRe, v, m => {
-      val ts = Option(m.group(2)).getOrElse(m.group(3))
-      s"${m.group(1)}@ts$ts`"
-    })
-  }
-
-  /** Statement recognition is TEXTUAL and must stay permissive: the
-    * target may turn out not to be a txnlog table, in which case the
-    * statement belongs to Spark's native DML path untouched. So
-    * NOTHING inside the statement (WHEN clauses, SET lists) parses
-    * here — each command carries the raw pieces and parses them in
-    * run(), AFTER tryResolveTable confirms the target is ours, so a
-    * vanilla-Spark MERGE/UPDATE against a v2 table never trips on
-    * this library's grammar subset. */
-  private[graft] def parseDml(sqlText: String,
-      delegate: ParserInterface): Option[LogicalPlan] =
-    sqlText match {
-      case DeleteRe(tbl, alias, where) =>
-        Some(TxnLogDeleteCommand(tbl, Option(alias), Option(where),
-          () => delegate.parsePlan(sqlText)))
-      case InsertRe(mode, tbl, cols, query) =>
-        Some(TxnLogInsertCommand(tbl,
-          mode.equalsIgnoreCase("OVERWRITE"), Option(cols),
-          query.trim, () => delegate.parsePlan(sqlText)))
-      case UpdateRe(tbl, alias, rest) =>
-        // the SET / WHERE boundary is found by the quote-aware
-        // scanner — a SET expression containing the word ' WHERE '
-        // inside a string literal must not fracture the statement
-        val (sets, where) = splitAtKeyword(rest, "WHERE") match {
-          case Some((s0, w)) => (s0, Some(w))
-          case None          => (rest.trim, None)
-        }
-        Some(TxnLogUpdateCommand(tbl, Option(alias), sets, where,
-          () => delegate.parsePlan(sqlText)))
-      case OptimizeRe(tbl, where, zcols) =>
-        Some(TxnLogOptimizeCommand(tbl, Option(where),
-          Option(zcols).map(_.split(',').map(_.trim).toSeq)))
-      case VacuumRe(tbl, hours, dry) =>
-        Some(TxnLogVacuumCommand(tbl, Option(hours).map(_.toLong),
-          dryRun = dry != null))
-      case HistoryRe(tbl, limit) =>
-        Some(TxnLogHistoryCommand(tbl, Option(limit).map(_.toInt)))
-      case DetailRe(tbl) =>
-        Some(TxnLogDetailCommand(tbl))
-      case RestoreRe(tbl, ver, tsQ, tsN) =>
-        Some(TxnLogRestoreCommand(tbl, Option(ver).map(_.toLong),
-          Option(tsQ).orElse(Option(tsN))))
-      case ShowPartsRe(tbl) =>
-        Some(TxnLogShowPartitionsCommand(tbl,
-          () => delegate.parsePlan(sqlText)))
-      case AlterSetPropsRe(tbl, pairs) =>
-        Some(TxnLogPropertiesCommand(tbl, set = true, pairs,
-          () => delegate.parsePlan(sqlText)))
-      case AlterUnsetPropsRe(tbl, keys) =>
-        Some(TxnLogPropertiesCommand(tbl, set = false, keys,
-          () => delegate.parsePlan(sqlText)))
-      case ShowPropsRe(tbl) =>
-        Some(TxnLogShowPropertiesCommand(tbl,
-          () => delegate.parsePlan(sqlText)))
-      case AlterAddRe(tbl, rest) =>
-        val end = balancedParen(rest, 0)
-        if (end < 0 ||
-            rest.substring(end).trim.stripSuffix(";").trim.nonEmpty)
-          None
-        else Some(TxnLogAddColumnsCommand(tbl,
-          rest.substring(1, end - 1).trim,
-          () => delegate.parsePlan(sqlText)))
-      case AlterColTypeRe(tbl, colName, dt) =>
-        Some(TxnLogWidenCommand(tbl, colName, dt.trim,
-          () => delegate.parsePlan(sqlText)))
-      case AlterRenameColRe(tbl, from, to) =>
-        Some(TxnLogColumnCommand(tbl, Some(from), to,
-          () => delegate.parsePlan(sqlText)))
-      case AlterDropColRe(tbl, colName) =>
-        Some(TxnLogColumnCommand(tbl, None, colName,
-          () => delegate.parsePlan(sqlText)))
-      case AlterAddCheckRe(tbl, name, check) =>
-        Some(TxnLogConstraintCommand(tbl, "add_check", name,
-          Some(check.trim), () => delegate.parsePlan(sqlText)))
-      case AlterDropConstraintRe(tbl, name) =>
-        Some(TxnLogConstraintCommand(tbl, "drop", name, None,
-          () => delegate.parsePlan(sqlText)))
-      case AlterNotNullRe(tbl, colName, mode) =>
-        Some(TxnLogConstraintCommand(tbl,
-          if (mode.equalsIgnoreCase("SET")) "add_notnull" else "drop_notnull",
-          colName, None, () => delegate.parsePlan(sqlText)))
-      case CloneRe(ine, dst, srcT, ver, ts, loc) =>
-        Some(TxnLogCloneCommand(dst, ine != null, srcT,
-          Option(ver).map(_.toLong), Option(ts), Option(loc),
-          () => delegate.parsePlan(sqlText)))
-      case CreateHeadRe(ine, tbl, rest) =>
-        // DDL-first CREATE TABLE ... USING txnlog: register the
-        // declared schema (+ PARTITIONED BY layout) as version 0
-        // EXPLICITLY — the read path no longer mints table metadata
-        // as a side effect, so the CREATE statement must
-        val end = balancedParen(rest, 0)
-        if (end < 0 ||
-            CreateUsingRe.findFirstIn(rest.substring(end)).isEmpty) None
-        else {
-          val tail = rest.substring(end)
-          val partCols = findOutsideLiterals(PartitionedByRe, tail)
-            .map(_.group(1).split(',').toSeq
-              .map(_.trim.stripPrefix("`").stripSuffix("`"))
-              .filter(_.nonEmpty))
-            .getOrElse(Nil)
-          // the path key is searched ONLY inside the OPTIONS(...)
-          // balanced span — never in TBLPROPERTIES or comments
-          val optSpan = findOutsideLiterals(OptionsHeadRe, tail)
-            .flatMap { m =>
-              val open = m.end - 1
-              val close = balancedParen(tail, open)
-              if (close < 0) None
-              else Some(tail.substring(open, close))
-            }
-          // outside-literals INSIDE the span too: a quoted OPTION
-          // value containing "path'...'" (doubled-quote escapes) must
-          // not hijack the location
-          val path = optSpan
-            .flatMap(sp => findOutsideLiterals(OptPathRe, sp)
-              .map(_.group(1)))
-            .orElse(findOutsideLiterals(LocationRe, tail)
-              .map(_.group(1)))
-          // CREATE-time TBLPROPERTIES land in the v0 commit (the log
-          // is the properties' source of truth); pairs parse with the
-          // same quote-escape grammar as ALTER ... SET TBLPROPERTIES
-          val props = findOutsideLiterals(TblPropsHeadRe, tail)
-            .flatMap { m =>
-              val open = m.end - 1
-              val close = balancedParen(tail, open)
-              if (close < 0) None
-              else Some(tail.substring(open + 1, close - 1))
-            }
-            .map(sp => splitTopLevel(sp, ',').map {
-              case PropPairRe(q, b, v) =>
-                Option(q).map(unescapeProp).getOrElse(b) ->
-                  unescapeProp(v)
-              case bad => throw new IllegalArgumentException(
-                s"cannot parse TBLPROPERTIES pair: $bad (expected " +
-                  "'key' = 'value')")
-            }.toMap)
-            .getOrElse(Map.empty[String, String])
-          Some(TxnLogCreateTableCommand(tbl, ine != null,
-            rest.substring(1, end - 1), partCols, path,
-            () => delegate.parsePlan(sqlText), props))
-        }
-      case MergeHeadRe(evolve, tbl, tAlias, tail) =>
-        // the USING source is a balanced-paren subquery (any nesting
-        // depth) or an identifier; then [AS] [alias] ON <cond> WHEN…
-        // — the ON-condition / first-WHEN boundary found by the same
-        // quote/paren-aware scanner the clause splitter uses, so a
-        // string literal containing 'WHEN MATCHED' inside the ON
-        // condition is not a boundary. Any piece failing to parse
-        // means the statement isn't a MERGE we (or Spark) can run on
-        // this grammar; delegate.
-        val trimmed = tail.trim
-        val srcSplit: Option[(String, String)] =
-          if (trimmed.startsWith("(")) {
-            val end = balancedParen(trimmed, 0)
-            if (end < 0) None
-            else Some((trimmed.substring(0, end),
-              trimmed.substring(end)))
-          } else trimmed match {
-            case MergeSrcIdentRe(ident, after) => Some((ident, after))
-            case _                             => None
-          }
-        for {
-          (src, after) <- srcSplit
-          m <- MergeAfterSrcRe.findFirstMatchIn(after)
-          rest = m.group(2)
-          b <- whenBounds(rest).headOption
-        } yield TxnLogMergeCommand(tbl, Option(tAlias), src.trim,
-          Option(m.group(1)), rest.substring(0, b).trim,
-          rest.substring(b),
-          () => delegate.parsePlan(sqlText), evolve = evolve != null)
+  /** The path of a `txnlog.\`/p\`` name (two parts, the second
+    * path-shaped: every real path has a '/', so a genuine database
+    * named txnlog keeps its catalog resolution). */
+  private[sources] def txnlogPath(nameParts: Seq[String]): Option[String] =
+    nameParts match {
+      case Seq(db, p) if db.equalsIgnoreCase("txnlog") && p.contains('/') =>
+        Some(p)
       case _ => None
     }
 
-  /** Index just past the close paren matching the open paren at
-    * `start` (which must be '('), honoring string literals and
-    * backtick identifiers; -1 when unbalanced. */
-  private[sources] def balancedParen(s: String, start: Int): Int = {
-    var depth = 0; var i = start; var inQuote = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1
-        else if (c == '\'') inQuote = false
-      }
-      else if (c == '\'') inQuote = true
-      else if (c == '`') {
-        val close = s.indexOf('`', i + 1)
-        i = if (close < 0) s.length else close
-      }
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i + 1 }
-      i += 1
-    }
-    -1
+  /** A session-catalog table identifier for a 1-, 2- or
+    * spark_catalog-prefixed 3-part name. */
+  private[sources] def catalogIdent(nameParts: Seq[String])
+      : Option[TableIdentifier] = nameParts match {
+    case Seq(c, db, tb) if c.equalsIgnoreCase("spark_catalog") =>
+      Some(TableIdentifier(tb, Some(db)))
+    case Seq(db, tb) => Some(TableIdentifier(tb, Some(db)))
+    case Seq(tb)     => Some(TableIdentifier(tb))
+    case _           => None
   }
 
-  /** One WHEN clause as raw text pieces: (kind, condition,
-    * assignment list) — resolved against the live frames at run. */
-  private[sources] final case class ClauseText(kind: String,
-      cond: Option[String], sets: Seq[(String, String)])
-
-  /** Clause boundaries found by the same depth/quote scanner the SET
-    * splitter uses: each offset of a `WHEN` keyword at parenthesis
-    * depth zero outside string literals, followed by MATCHED / NOT
-    * MATCHED. A CASE WHEN inside an expression sits behind no such
-    * lookahead; a string literal containing the words 'WHEN MATCHED'
-    * never fractures the statement (the raw-regex-split failure
-    * mode). Shared by the ON/WHEN statement split and the clause
-    * list split. */
-  private def whenBounds(s: String): Seq[Int] = {
-    def wordAt(i: Int, w: String): Boolean =
-      s.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) &&
-          s.charAt(i - 1) != '_') &&
-        (i + w.length == s.length ||
-          !Character.isLetterOrDigit(s.charAt(i + w.length)) &&
-            s.charAt(i + w.length) != '_')
-    def skipWs(i: Int): Int = {
-      var j = i; while (j < s.length && s.charAt(j).isWhitespace) j += 1; j
+  /** The node a lowerable statement writes or describes: the target
+    * relation of DELETE/UPDATE/MERGE/INSERT, the table of an ALTER
+    * TABLE or SHOW statement. It is never substituted by
+    * [[resolveTxnlogPaths]] — a write target resolved to the read
+    * relation would reach Spark's file-insert path and write data
+    * BEHIND the commit log. */
+  private[sources] def statementTarget(plan: LogicalPlan)
+      : Option[LogicalPlan] = {
+    def unwrap(p: LogicalPlan): LogicalPlan = p match {
+      case SubqueryAlias(_, child) => unwrap(child)
+      case Filter(_, child)        => unwrap(child) // ADD CONSTRAINT's check
+      case other                   => other
     }
-    def clauseStart(i: Int): Boolean = wordAt(i, "WHEN") && {
-      val j = skipWs(i + 4)
-      wordAt(j, "MATCHED") ||
-        (wordAt(j, "NOT") && wordAt(skipWs(j + 3), "MATCHED"))
-    }
-    val bounds = Seq.newBuilder[Int]
-    var depth = 0; var inQuote = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        // backslash-escaped quotes stay inside the literal (Spark's
-        // default string grammar); doubled quotes toggle out and
-        // straight back in, which is equivalent
-        if (c == '\\') i += 2
-        else { if (c == '\'') inQuote = false; i += 1 }
-      }
-      else if (c == '\'') { inQuote = true; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && (c == 'w' || c == 'W') && clauseStart(i)) {
-        bounds += i; i += 4
-      } else i += 1
-    }
-    bounds.result()
+    (plan match {
+      case d: DeleteFromTable     => Some(d.table)
+      case u: UpdateTable         => Some(u.table)
+      case m: MergeIntoTable      => Some(m.targetTable)
+      case i: InsertIntoStatement => Some(i.table)
+      case a: AddCheckConstraint  => Some(a.child)
+      case a: AlterTableCommand   => Some(a.table)
+      case s: ShowPartitions      => Some(s.table)
+      case s: ShowTableProperties => Some(s.table)
+      case _                      => None
+    }).map(unwrap(_))
   }
 
-  /** Split `s` at the FIRST depth-zero, out-of-quote occurrence of
-    * keyword `kw` (a whole word, case-insensitive): Some((before,
-    * after)) or None when the keyword never appears at top level —
-    * the SET/WHERE statement boundary, found the same way the MERGE
-    * clause boundaries are. */
-  private[sources] def splitAtKeyword(s: String,
-      kw: String): Option[(String, String)] = {
-    def wordAt(i: Int): Boolean =
-      s.regionMatches(true, i, kw, 0, kw.length) &&
-        (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) &&
-          s.charAt(i - 1) != '_') &&
-        (i + kw.length == s.length ||
-          !Character.isLetterOrDigit(s.charAt(i + kw.length)) &&
-            s.charAt(i + kw.length) != '_')
-    var depth = 0; var inQuote = false; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 2
-        else { if (c == '\'') inQuote = false; i += 1 }
-      }
-      else if (c == '\'') { inQuote = true; i += 1 }
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && wordAt(i))
-        return Some((s.substring(0, i).trim,
-          s.substring(i + kw.length).trim))
-      else i += 1
+  /** The name parts of an unresolved table reference. */
+  private[sources] def nameParts(p: LogicalPlan): Option[Seq[String]] =
+    p match {
+      case u: UnresolvedRelation    => Some(u.multipartIdentifier)
+      case u: UnresolvedTable       => Some(u.multipartIdentifier)
+      case u: UnresolvedTableOrView => Some(u.multipartIdentifier)
+      case u: UnresolvedIdentifier  => Some(u.nameParts)
+      case _                        => None
     }
-    None
-  }
 
-  /** Split `s` at EVERY depth-zero, out-of-quote occurrence of `kw` —
-    * the conjunct splitter ([[splitAtKeyword]] folded to a list): an
-    * ON condition like `t.k = s.k AND t.tag = 'x AND y'` splits at
-    * the first AND only, keeping the literal whole. */
-  private[sources] def splitAtKeywordAll(s: String, kw: String): Seq[String] = {
-    // a plain loop, not recursion: a pathological conjunction with
-    // thousands of top-level terms must reach its refusal message,
-    // not overflow the stack first
-    val out = Seq.newBuilder[String]
-    var rest = s
-    var more = true
-    while (more) splitAtKeyword(rest, kw) match {
-      case Some((before, after)) => out += before; rest = after
-      case None                  => out += rest.trim; more = false
-    }
-    out.result()
-  }
-
-  /** The WHEN-clause pieces of a MERGE tail (text AFTER each WHEN
-    * keyword), split at [[whenBounds]]. */
-  private def splitWhenClauses(s: String): Seq[String] = {
-    val bs = whenBounds(s)
-    bs.zipAll(bs.drop(1), 0, s.length).map { case (b, e) =>
-      s.substring(b + 4, e).trim // drop the WHEN keyword itself
-    }.filter(_.nonEmpty)
-  }
-
-  private[sources] def parseWhenClauses(whenText: String): Seq[ClauseText] = {
-    val pieces = splitWhenClauses(whenText)
-    require(pieces.nonEmpty, "MERGE needs at least one WHEN clause")
-    pieces.map {
-      // SET * before the generic SET list: the list parser would
-      // otherwise choke on the bare star
-      case MatchedUpdateStarRe(cond) =>
-        ClauseText("update_star", Option(cond).map(_.trim), Nil)
-      case MatchedUpdateRe(cond, sets) =>
-        ClauseText("update", Option(cond).map(_.trim),
-          parseAssignments(sets))
-      case MatchedDeleteRe(cond) =>
-        ClauseText("delete", Option(cond).map(_.trim), Nil)
-      // BY SOURCE forms before the plain NOT MATCHED insert
-      case BySourceUpdateRe(cond, sets) =>
-        ClauseText("bysource_update", Option(cond).map(_.trim),
-          parseAssignments(sets))
-      case BySourceDeleteRe(cond) =>
-        ClauseText("bysource_delete", Option(cond).map(_.trim), Nil)
-      // the column-list insert: (cols) pairs positionally with the
-      // VALUES expressions; unlisted columns NULL-fill at run
-      case NotMatchedInsertColsRe(cond, colsRaw, valsRaw) =>
-        val cols = colsRaw.split(',').map(
-          _.trim.stripPrefix("`").stripSuffix("`")).toIndexedSeq
-          .filter(_.nonEmpty)
-        val vals = splitTopLevel(valsRaw, ',')
-        require(cols.nonEmpty, "empty MERGE INSERT column list")
-        require(cols.distinct.length == cols.length,
-          s"duplicate column(s) in MERGE INSERT list: " +
-            cols.diff(cols.distinct).mkString(", "))
-        require(cols.length == vals.length,
-          s"MERGE INSERT lists ${cols.length} column(s) but " +
-            s"${vals.length} VALUES expression(s)")
-        ClauseText("insert_cols", Option(cond).map(_.trim),
-          cols.zip(vals))
-      case NotMatchedInsertRe(cond) =>
-        ClauseText("insert", Option(cond).map(_.trim), Nil)
-      case bad => throw new IllegalArgumentException(
-        s"cannot parse MERGE clause: WHEN $bad (supported: " +
-          "WHEN MATCHED [AND c] THEN UPDATE SET a = e, ... | " +
-          "WHEN MATCHED [AND c] THEN UPDATE SET * | " +
-          "WHEN MATCHED [AND c] THEN DELETE | " +
-          "WHEN NOT MATCHED [AND c] THEN INSERT * | " +
-          "WHEN NOT MATCHED [AND c] THEN INSERT (cols) VALUES (...) | " +
-          "WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET ... | " +
-          "WHEN NOT MATCHED BY SOURCE [AND c] THEN DELETE)")
-    }
-  }
-
-  /** Substitute `txnlog.\`/path\`` references in QUERIES
-    * (SELECT/INSERT sources) with a txnlog relation. Spark's own
+  /** Substitute `txnlog.\`/path\`` references in QUERIES (SELECT and
+    * statement sources) with a txnlog relation. Spark's own
     * SQL-on-files rule admits only FileFormat sources — a DSv1
     * relation provider would fail analysis with
     * UNSUPPORTED_DATASOURCE_FOR_DIRECT_QUERY — so the substitution
     * happens at the parser seam, giving SQL-first users the same
-    * direct-path syntax Delta tables get. UN-suffixed references get
-    * the LIVE relation ([[TxnLogLiveRelation]]): the snapshot
-    * resolves per scan, so a temp view created over the path serves
-    * fresh data after later commits instead of pinning its
-    * creation-time file list — the reference's per-query resolution.
-    * Time travel (`VERSION AS OF` rewritten to a `@v<n>`/`@ts<…>`
-    * path suffix) resolves EAGERLY through the relation provider: a
-    * pinned version is immutable, nothing to re-resolve. Catalog
-    * tables created `USING txnlog` already resolve natively. */
+    * direct-path syntax Delta tables get. Plain references get the
+    * LIVE relation ([[TxnLogLiveRelation]]): the snapshot resolves per
+    * scan, so a temp view created over the path serves fresh data
+    * after later commits instead of pinning its creation-time file
+    * list. A `VERSION AS OF` / `TIMESTAMP AS OF` reference (Spark's
+    * RelationTimeTravel) resolves EAGERLY through the relation
+    * provider's versionAsOf/timestampAsOf options: a pinned version
+    * is immutable, nothing to re-resolve. Catalog tables created
+    * `USING txnlog` resolve natively (and travel through
+    * [[TxnLogCatalog]]). Statement targets stay unresolved for
+    * [[TxnLogStatementRule]]; an INSERT form it does not lower keeps
+    * its UnresolvedRelation and fails loudly as table-not-found. */
   private[sources] def resolveTxnlogPaths(spark: SparkSession,
       plan: LogicalPlan): LogicalPlan = {
-    // NEVER substitute a write target: an InsertIntoStatement whose
-    // table resolved to the read relation would reach Spark's
-    // parquet-insert path and write data files BEHIND the commit log
-    // (invisible rows or worse). Supported INSERT forms lower through
-    // TxnLogInsertCommand before this runs; exotic ones (PARTITION
-    // specs, BY NAME) keep their UnresolvedRelation and fail loudly
-    // as table-not-found instead of silently bypassing the log.
-    val writeTargets = plan.collect {
-      case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement =>
-        i.table
+    val targets = plan.flatMap(statementTarget(_))
+    def pathRef(p: LogicalPlan): Option[String] = p match {
+      case u: UnresolvedRelation if !targets.exists(_ eq u) =>
+        txnlogPath(u.multipartIdentifier)
+      case _ => None
     }
-    plan.transformUp {
-      case u: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-        // only PATH-shaped identifiers substitute ('/': every real
-        // path has one) — a genuine database named txnlog keeps its
-        // catalog resolution
-        if u.multipartIdentifier.length == 2 &&
-          u.multipartIdentifier.head.equalsIgnoreCase("txnlog") &&
-          u.multipartIdentifier(1).contains('/') &&
-          !writeTargets.exists(_ eq u) =>
-        val raw = u.multipartIdentifier(1)
+    // top-down: a time-travel node must match before its child
+    // reference would be substituted by the live relation
+    plan.transformDown {
+      case RelationTimeTravel(u, ts, version) if pathRef(u).isDefined =>
         org.apache.spark.sql.execution.datasources.LogicalRelation(
-          raw match {
-            case PathTravel(_, _, _) => // pinned: eager resolution
-              new TxnLogStreamProvider().createRelation(spark.sqlContext,
-                Map("path" -> raw))
-            case _ => // live: the snapshot resolves per scan
-              TxnLogLiveRelation.of(spark.sqlContext, raw)
-          })
+          new TxnLogStreamProvider().createRelation(spark.sqlContext,
+            Map("path" -> pathRef(u).get) ++
+              version.map("versionAsOf" -> _) ++
+              ts.map(e => "timestampAsOf" -> timestampText(e))))
+      case u: UnresolvedRelation if pathRef(u).isDefined =>
+        org.apache.spark.sql.execution.datasources.LogicalRelation(
+          TxnLogLiveRelation.of(spark.sqlContext, pathRef(u).get))
     }
   }
 
-  /** Execute a statement's captured NATIVE plan (the not-ours
-    * fallback every DML command shares) — with the txnlog.`/path`
-    * READ substitution applied, so a non-txnlog INSERT/MERGE reading
-    * FROM a txnlog path still resolves its source. */
-  private[sources] def runNative(spark: SparkSession,
-      native: () => LogicalPlan): Seq[Row] =
-    org.apache.spark.sql.graftshim.Shim.ofRows(spark,
-      resolveTxnlogPaths(spark, native())).collect().toSeq
-
-  /** A SET assignment list as (column, rhs-SQL) pairs; the left side
-    * may be alias-qualified (stripped). */
-  private[sources] def parseAssignments(sets: String): Seq[(String, String)] =
-    splitTopLevel(sets, ',').map {
-      case AssignRe(col, rhs) => (col.split('.').last, rhs)
-      case bad => throw new IllegalArgumentException(
-        s"cannot parse SET assignment: $bad")
-    }
-
-  /** Split on `sep` at parenthesis/quote depth zero
-    * (backslash-escaped quotes stay inside their literal). */
-  private[sources] def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var inQuote = false; var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1
-        else if (c == '\'') inQuote = false
-      }
-      else if (c == '\'') inQuote = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == sep && depth == 0) {
-        out += s.substring(start, i); start = i + 1
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
+  /** A `TIMESTAMP AS OF` constant as the reader's timestampAsOf text
+    * (epoch millis or an ISO-8601 instant, see [[TxnLog.tsMillis]]). */
+  private def timestampText(e: Expression): String = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    require(e.resolved && e.foldable &&
+      Seq(StringType, IntegerType, LongType).contains(e.dataType),
+      s"txnlog TIMESTAMP AS OF takes a string or epoch-millis literal, " +
+        s"got: ${e.sql}")
+    String.valueOf(e.eval())
   }
 
-  /** Resolve a DML target when it IS ours: a `txnlog.\`/path\``
-    * literal, or a catalog table whose provider is txnlog. None for
-    * anything else (unknown names, temp views, other providers) — the
-    * caller hands those statements back to Spark's native DML path,
-    * so v2 catalogs keep working in sessions with this parser. */
+  /** Resolve a statement target when it IS ours: a `txnlog.\`/path\``
+    * name, or a catalog table whose provider is txnlog. None for
+    * anything else (unknown names, temp views, other providers) —
+    * such statements keep Spark's own plan, so other catalogs keep
+    * working in sessions with this parser. */
   private[graft] def tryResolveTable(spark: SparkSession,
-      ident: String): Option[TxnLog.Table] =
-    ident.trim match {
-      case PathIdent(p) => Some(TxnLog.Table(TxnLog.pathOf(p)))
-      case name =>
-        val tid = spark.sessionState.sqlParser
-          .parseMultipartIdentifier(name) match {
-          case Seq(tb)     => Some(TableIdentifier(tb))
-          case Seq(db, tb) => Some(TableIdentifier(tb, Some(db)))
-          case _           => None
-        }
-        for {
-          id <- tid
-          meta <- scala.util.Try(
-            spark.sessionState.catalog.getTableMetadata(id)).toOption
-          if meta.provider.exists(_.equalsIgnoreCase("txnlog"))
-          path <- meta.storage.properties.get("path")
-            .orElse(meta.storage.locationUri.map(_.getPath))
-        } yield TxnLog.Table(TxnLog.pathOf(path))
-    }
+      nameParts: Seq[String]): Option[TxnLog.Table] =
+    txnlogPath(nameParts).orElse(for {
+      id <- catalogIdent(nameParts)
+      meta <- scala.util.Try(
+        spark.sessionState.catalog.getTableMetadata(id)).toOption
+      if meta.provider.exists(_.equalsIgnoreCase("txnlog"))
+      path <- meta.storage.properties.get("path")
+        .orElse(meta.storage.locationUri.map(_.getPath))
+    } yield path).map(p => TxnLog.Table(TxnLog.pathOf(p)))
 
   /** [[tryResolveTable]] that refuses instead of deferring — for the
-    * statements only this library defines (OPTIMIZE/VACUUM/DESCRIBE
-    * HISTORY), where there is no native path to fall back to. */
+    * statements only this library defines (OPTIMIZE/VACUUM/DESCRIBE/
+    * RESTORE), where there is no native path to fall back to. */
   private[sources] def resolveTable(spark: SparkSession,
                                     ident: String): TxnLog.Table =
-    tryResolveTable(spark, ident).getOrElse(
-      throw new IllegalArgumentException(
+    tryResolveTable(spark,
+      spark.sessionState.sqlParser.parseMultipartIdentifier(ident))
+      .getOrElse(throw new IllegalArgumentException(
         s"$ident is not a txnlog table; this statement applies to " +
           "USING txnlog tables or txnlog.`/path` targets"))
 
-  /** A MERGE source: `txnlog.\`/path\`` (optionally time-traveled
-    * through the `@v<n>`/`@ts<…>` suffix the statement rewrite
-    * produces — sync against yesterday's snapshot), a (subquery), or
-    * any catalog/temp-view name. */
-  private val PathTravel = """(?s)^(.+)@(?:v(\d+)|ts([\d.:TZ+\- ]+))$""".r
-  private[sources] def resolveSource(spark: SparkSession,
-                                     src: String): DataFrame =
-    src.trim match {
-      case PathIdent(PathTravel(p, v, ts)) =>
-        val t = TxnLog.Table(TxnLog.pathOf(p))
-        val asOf = Option(v).map(_.toLong).getOrElse(
-          TxnLog.versionAt(t, TxnLog.tsMillis(ts)))
-        TxnLog.read(spark, t, Some(asOf))
-      case PathIdent(p) =>
-        TxnLog.read(spark, TxnLog.Table(TxnLog.pathOf(p)))
-      case s if s.startsWith("(") && s.endsWith(")") =>
-        spark.sql(s.substring(1, s.length - 1))
-      case name => spark.table(name)
+  private[sources] def aliasOf(target: LogicalPlan): Option[String] =
+    target match {
+      case SubqueryAlias(id, _) => Some(id.name)
+      case _                    => None
     }
+
+  private[sources] def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other     => Seq(other)
+  }
+
+  /** An assignment's target column (an alias qualifier is dropped). */
+  private[sources] def columnOf(key: Expression): String = key match {
+    case a: UnresolvedAttribute => a.nameParts.last
+    case other => throw new IllegalArgumentException(
+      s"cannot assign to ${other.sql}: expected a column name")
+  }
+
+  private[sources] def assignments(as: Seq[Assignment])
+      : Map[String, org.apache.spark.sql.Column] =
+    as.map(a => columnOf(a.key) -> Shim.toColumn(a.value)).toMap
 }
 
-/** `DELETE FROM <txnlog table> [AS] [x] [WHERE cond]` →
-  * [[TxnLog.delete]] (no WHERE = delete everything, the SQL
-  * contract); an optional alias qualifies WHERE references. */
-final case class TxnLogDeleteCommand(table: String,
-    alias: Option[String], where: Option[String],
-    native: () => LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        val pred = where.map(expr).getOrElse(lit(true))
-        // graft.enableDeletionVectors routes the statement through
-        // the merge-on-read path — the SQL user's switch to stop
-        // rewriting whole files for trickle deletes. ONE snapshot
-        // serves the property check AND the op itself.
-        val snap = TxnLog.snapshot(t)
-        if (GraftSqlParser.dvEnabled(snap))
-          TxnLog.deleteDv(spark, t, pred, alias, snap0 = Some(snap))
-        else TxnLog.delete(spark, t, pred, alias, snap0 = Some(snap))
-        Seq.empty
-      case None => // not ours: run Spark's own DELETE plan (v2 tables)
-        GraftSqlParser.runNative(spark, native)
+/** Analysis rule (injected in the HINTS batch, which runs BEFORE the
+  * main Resolution batch — Spark's own ResolveSessionCatalog would
+  * otherwise claim these statements, refusing REPLACE TABLE for V1
+  * providers by name) owning one question for every parsed statement
+  * form: is it ours? DELETE/UPDATE/MERGE/INSERT, ALTER TABLE and SHOW
+  * statements are ours when their target is a txnlog path or a
+  * `USING txnlog` catalog table; CREATE [OR REPLACE] TABLE (column
+  * list and CTAS replace forms, and `df.writeTo(t).createOrReplace()`
+  * / `.replace()`) when the spec names the txnlog provider, explicitly
+  * or through the existing catalog entry. The statement's root is
+  * rewritten onto the txnlog command; anything else — another
+  * provider, or a form the commands do not cover (INSERT ... PARTITION
+  * / BY NAME, multi-column ALTER forms, SHOW ... PARTITION, a
+  * non-identity PARTITIONED BY) — keeps Spark's plan. Root-only match,
+  * O(1) per pass. Refusals wait for the commands' run(): an exception
+  * thrown here would surface as an analyzer internal error. */
+final case class TxnLogStatementRule(spark: SparkSession)
+  extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+  import org.apache.spark.sql.catalyst.analysis.UnresolvedFieldName
+  import org.apache.spark.sql.connector.expressions.Transform
+  import GraftSqlParser.{nameParts, statementTarget, tryResolveTable}
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case c: CreateTable if c.columns.nonEmpty =>
+      define(c.name, c.tableSpec, c.partitioning, c.columns, None,
+        replace = false, lenient = c.ignoreIfExists).getOrElse(plan)
+    case r: ReplaceTable =>
+      define(r.name, r.tableSpec, r.partitioning, r.columns, None,
+        replace = true, lenient = r.orCreate).getOrElse(plan)
+    case r: ReplaceTableAsSelect =>
+      define(r.name, r.tableSpec, r.partitioning, Nil, Some(r.query),
+        replace = true, lenient = r.orCreate).getOrElse(plan)
+    case _ =>
+      statementTarget(plan).flatMap(nameParts)
+        .flatMap(tryResolveTable(spark, _))
+        .flatMap(lower(plan, _)).getOrElse(plan)
+  }
+
+  private def lower(plan: LogicalPlan, t: TxnLog.Table)
+      : Option[LogicalPlan] = plan match {
+    case d: DeleteFromTable => Some(TxnLogDeleteCommand(t, d))
+    case u: UpdateTable     => Some(TxnLogUpdateCommand(t, u))
+    case m: MergeIntoTable  => Some(TxnLogMergeCommand(t, m))
+    case i: InsertIntoStatement
+      if i.partitionSpec.isEmpty && !i.ifPartitionNotExists && !i.byName =>
+      Some(TxnLogInsertCommand(t, i))
+    case AddColumns(_, cols) if cols.forall(c =>
+        c.path.isEmpty && c.position.isEmpty) =>
+      Some(TxnLogAddColumnsCommand(t, StructType(cols.map { c =>
+        val f = StructField(c.colName, c.dataType, c.nullable)
+        val commented = c.comment.map(f.withComment).getOrElse(f)
+        c.default.map(d => commented.copy(metadata =
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(commented.metadata)
+            .putString("CURRENT_DEFAULT", d.originalSQL).build()))
+          .getOrElse(commented)
+      })))
+    case DropColumns(_, Seq(UnresolvedFieldName(Seq(c))), false) =>
+      Some(TxnLogColumnCommand(t, None, c))
+    case RenameColumn(_, UnresolvedFieldName(Seq(from)), to) =>
+      Some(TxnLogColumnCommand(t, Some(from), to))
+    case AlterColumns(_, Seq(spec)) => spec.column match {
+      case UnresolvedFieldName(Seq(c)) if spec.newComment.isEmpty &&
+          spec.newPosition.isEmpty && spec.newDefaultExpression.isEmpty &&
+          !spec.dropDefault =>
+        (spec.newDataType, spec.newNullability) match {
+          case (Some(dt), None) => Some(TxnLogWidenCommand(t, c, dt))
+          case (None, Some(nullable)) =>
+            Some(TxnLogConstraintCommand(t,
+              if (nullable) "drop_notnull" else "add_notnull", c, None))
+          case _ => None
+        }
+      case _ => None
     }
+    case AddCheckConstraint(_, c) =>
+      Some(TxnLogConstraintCommand(t, "add_check", c.name,
+        Some(c.condition)))
+    case DropConstraint(_, name, false, false) =>
+      Some(TxnLogConstraintCommand(t, "drop", name, None))
+    case SetTableProperties(_, props) =>
+      Some(TxnLogPropertiesCommand(t, props, Nil))
+    case UnsetTableProperties(_, keys, _) =>
+      Some(TxnLogPropertiesCommand(t, Map.empty, keys))
+    case ShowPartitions(_, None, _)      => Some(TxnLogShowPartitionsCommand(t))
+    case ShowTableProperties(_, None, _) => Some(TxnLogShowPropertiesCommand(t))
+    case _ => None
+  }
+
+  /** CREATE / REPLACE with the txnlog provider → the one definition
+    * command, with (properties, explicit location) read off the spec —
+    * OPTIONS values are literal expressions at this stage, evaluated
+    * here for the `path` key. */
+  private def define(name: LogicalPlan, spec: TableSpecBase,
+      partitioning: Seq[Transform], columns: Seq[ColumnDefinition],
+      query: Option[LogicalPlan], replace: Boolean,
+      lenient: Boolean): Option[LogicalPlan] = {
+    val parts = nameParts(name).getOrElse(Nil)
+    def provided(p: Option[String]): Boolean =
+      p.exists(_.equalsIgnoreCase("txnlog")) ||
+        // `writeTo(t).createOrReplace()` with no .using(): the
+        // EXISTING entry's provider decides whose replace this is
+        (p.isEmpty && replace && existingProvider(parts)
+          .exists(_.equalsIgnoreCase("txnlog")))
+    val propsAndLoc = spec match {
+      case u: UnresolvedTableSpec if provided(u.provider) =>
+        val opts = u.optionExpression.options.flatMap { case (k, e) =>
+          if (e.foldable) Option(e.eval()).map(v => k -> v.toString)
+          else None
+        }
+        Some((u.properties, u.location.orElse(opts.collectFirst {
+          case (k, v) if k.equalsIgnoreCase("path") => v })))
+      case ts: TableSpec if provided(ts.provider) =>
+        Some((ts.properties, ts.location.orElse(ts.options.collectFirst {
+          case (k, v) if k.equalsIgnoreCase("path") => v })))
+      case _ => None
+    }
+    for {
+      (props, loc) <- propsAndLoc if parts.nonEmpty
+      partCols <- identityCols(partitioning)
+    } yield TxnLogDefineTableCommand(parts,
+      if (query.isEmpty) Some(StructType(columns.map(_.toV1Column)))
+      else None,
+      partCols, props, loc, query, replace, lenient)
+  }
+
+  private def existingProvider(parts: Seq[String]): Option[String] = {
+    val cat = spark.sessionState.catalog
+    GraftSqlParser.catalogIdent(parts).filter(cat.tableExists)
+      .flatMap(id => cat.getTableMetadata(id).provider)
+  }
+
+  /** PARTITIONED BY columns; None for any other transform (bucket,
+    * days, ...), which txnlog tables do not support. */
+  private def identityCols(parts: Seq[Transform]): Option[Seq[String]] = {
+    val cols = parts.collect { case tr if tr.name == "identity" &&
+        tr.references.length == 1 &&
+        tr.references.head.fieldNames.length == 1 =>
+      tr.references.head.fieldNames.head
+    }
+    if (cols.length == parts.length) Some(cols) else None
+  }
+}
+
+/** `DELETE FROM <txnlog table> [[AS] x] [WHERE cond]` →
+  * [[TxnLog.delete]] (no WHERE = delete everything, the SQL contract);
+  * an alias qualifies WHERE references. */
+final case class TxnLogDeleteCommand(t: TxnLog.Table,
+    delete: DeleteFromTable) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    val pred = Shim.toColumn(delete.condition)
+    val alias = GraftSqlParser.aliasOf(delete.table)
+    // graft.enableDeletionVectors routes the statement through the
+    // merge-on-read path — the SQL user's switch to stop rewriting
+    // whole files for trickle deletes. ONE snapshot serves the
+    // property check AND the op itself.
+    val snap = TxnLog.snapshot(t)
+    if (GraftSqlParser.dvEnabled(snap))
+      TxnLog.deleteDv(spark, t, pred, alias, snap0 = Some(snap))
+    else TxnLog.delete(spark, t, pred, alias, snap0 = Some(snap))
+    Seq.empty
+  }
+}
+
+/** `UPDATE <txnlog table> [[AS] x] SET a = e, ... [WHERE cond]` →
+  * [[TxnLog.update]] (no WHERE = update every row, the SQL contract).
+  * An alias qualifies SET/WHERE references
+  * (`UPDATE t x SET v = x.v + 1 WHERE x.k > 3`). */
+final case class TxnLogUpdateCommand(t: TxnLog.Table,
+    update: UpdateTable) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    val sets = GraftSqlParser.assignments(update.assignments)
+    val pred = Shim.toColumn(update.condition.getOrElse(Literal(true)))
+    val alias = GraftSqlParser.aliasOf(update.table)
+    val snap = TxnLog.snapshot(t) // one snapshot: check + op
+    if (GraftSqlParser.dvEnabled(snap)) // merge-on-read switch
+      TxnLog.updateDv(spark, t, sets, pred, alias, snap0 = Some(snap))
+    else TxnLog.update(spark, t, sets, pred, alias, snap0 = Some(snap))
+    Seq.empty
+  }
 }
 
 /** `OPTIMIZE <table> [WHERE <partition spec>] [ZORDER BY (a, b…)]` →
@@ -1053,12 +632,13 @@ final case class TxnLogOptimizeCommand(table: String,
   override def run(spark: SparkSession): Seq[Row] = {
     val t = GraftSqlParser.resolveTable(spark, table)
     val spec = where.map { w =>
-      GraftSqlParser.splitAtKeywordAll(w, "AND").map {
-        case GraftSqlParser.PartEqRe(c, q, b) =>
-          c -> Option(q).getOrElse(b)
+      GraftSqlParser.conjuncts(
+        spark.sessionState.sqlParser.parseExpression(w)).map {
+        case EqualTo(UnresolvedAttribute(Seq(c)), v: Literal) if v.value != null =>
+          c -> v.value.toString
         case other => throw new IllegalArgumentException(
           s"OPTIMIZE WHERE must be a conjunction of <partition col> " +
-            s"= <literal> terms, got: $other")
+            s"= <literal> terms, got: ${other.sql}")
       }.toMap
     }
     (spec, zorder) match {
@@ -1077,63 +657,45 @@ final case class TxnLogOptimizeCommand(table: String,
   }
 }
 
-/** `ALTER TABLE <txnlog table> ADD COLUMNS (a BIGINT, b STRING)` →
-  * [[TxnLog.addColumns]]: additive schema evolution as one
-  * metadata-only `schema` commit — old files null-fill on read,
-  * time travel keeps the old shape, idempotent re-adds no-op. The
-  * column list parses with Spark's own DDL parser at run time, and
-  * a non-txnlog target runs Spark's own ALTER plan untouched. */
-final case class TxnLogAddColumnsCommand(table: String, colsDdl: String,
-    native: () => LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        TxnLog.addColumns(t,
-          GraftSqlParser.parseColsWithDefaults(spark, colsDdl))
-        Seq.empty
-      case None => // not ours: Spark's own ALTER TABLE plan
-        GraftSqlParser.runNative(spark, native)
-    }
+/** `ALTER TABLE <txnlog table> ADD COLUMNS (a BIGINT, b STRING
+  * DEFAULT 'x')` → [[TxnLog.addColumns]]: additive schema evolution
+  * as one metadata-only `schema` commit — old files null-fill (or
+  * read the frozen DEFAULT), time travel keeps the old shape,
+  * idempotent re-adds no-op. */
+final case class TxnLogAddColumnsCommand(t: TxnLog.Table,
+    cols: StructType) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    TxnLog.addColumns(t, GraftSqlParser.revalidateDefaults(spark, cols))
+    Seq.empty
+  }
 }
 
 /** `ALTER TABLE t ALTER COLUMN c TYPE <dt>` → [[TxnLog.widenColumn]]
   * — lossless TYPE WIDENING as one metadata commit (old files keep
   * their narrow physical type; the pinned read schema promotes them
-  * in-scan). Non-txnlog targets run Spark's own ALTER plan. */
-final case class TxnLogWidenCommand(table: String, col: String,
-    typeDdl: String,
-    native: () => LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        TxnLog.widenColumn(t, col,
-          spark.sessionState.sqlParser.parseDataType(typeDdl))
-        Seq.empty
-      case None => // not ours: Spark's own ALTER plan
-        GraftSqlParser.runNative(spark, native)
-    }
+  * in-scan). */
+final case class TxnLogWidenCommand(t: TxnLog.Table, col: String,
+    to: DataType) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    TxnLog.widenColumn(t, col, to)
+    Seq.empty
+  }
 }
 
 /** `ALTER TABLE t RENAME COLUMN a TO b` / `ALTER TABLE t DROP
   * COLUMN a` → [[TxnLog.renameColumn]]/[[TxnLog.dropColumn]]: column
   * mapping makes both ONE metadata commit — old files keep their
   * physical names and read through the mapping; DROP tombstones the
-  * physical name against resurrection. `rename` None = drop.
-  * Non-txnlog targets run Spark's own ALTER plan. */
-final case class TxnLogColumnCommand(table: String,
-    rename: Option[String], col: String,
-    native: () => LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        rename match {
-          case Some(from) => TxnLog.renameColumn(t, from, col)
-          case None       => TxnLog.dropColumn(t, col)
-        }
-        Seq.empty
-      case None => // not ours: Spark's own ALTER plan
-        GraftSqlParser.runNative(spark, native)
+  * physical name against resurrection. `rename` None = drop. */
+final case class TxnLogColumnCommand(t: TxnLog.Table,
+    rename: Option[String], col: String) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    rename match {
+      case Some(from) => TxnLog.renameColumn(t, from, col)
+      case None       => TxnLog.dropColumn(t, col)
     }
+    Seq.empty
+  }
 }
 
 /** The constraint DDL family:
@@ -1142,124 +704,67 @@ final case class TxnLogColumnCommand(table: String,
   * `ALTER TABLE t ALTER COLUMN c SET|DROP NOT NULL` —
   * each one metadata commit ([[TxnLog.addCheck]]/[[TxnLog.addNotNull]]
   * /[[TxnLog.dropConstraint]]); declaration validates existing rows,
-  * and every later write refuses atomically on violation. Non-txnlog
-  * targets run Spark's own plan for the statement (or its native
-  * parse error — Spark has no ADD CONSTRAINT grammar). */
-final case class TxnLogConstraintCommand(table: String, kind: String,
-    name: String, check: Option[String],
-    native: () => LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        kind match {
-          case "add_check"    => TxnLog.addCheck(spark, t, name, check.get)
-          case "add_notnull"  => TxnLog.addNotNull(spark, t, name)
-          case "drop_notnull" =>
-            require(TxnLog.constraintsOf(t).notNull.contains(name),
-              s"column $name has no NOT NULL constraint on $table")
-            TxnLog.dropConstraint(t, name)
-          case _              => TxnLog.dropConstraint(t, name)
-        }
-        Seq.empty
-      case None => // not ours: Spark's own ALTER plan (or parse error)
-        GraftSqlParser.runNative(spark, native)
+  * and every later write refuses atomically on violation. */
+final case class TxnLogConstraintCommand(t: TxnLog.Table, kind: String,
+    name: String, check: Option[String]) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    kind match {
+      case "add_check"    => TxnLog.addCheck(spark, t, name, check.get)
+      case "add_notnull"  => TxnLog.addNotNull(spark, t, name)
+      case "drop_notnull" =>
+        require(TxnLog.constraintsOf(t).notNull.contains(name),
+          s"column $name has no NOT NULL constraint on ${t.root}")
+        TxnLog.dropConstraint(t, name)
+      case _              => TxnLog.dropConstraint(t, name)
     }
+    Seq.empty
+  }
 }
 
 /** `SHOW PARTITIONS <txnlog table>` — the hive statement resolved
   * from the MANIFEST alone (no directory listing, no data file):
   * one row per distinct recorded partition spec with its live file
-  * count. A non-txnlog target runs Spark's own SHOW PARTITIONS. */
-final case class TxnLogShowPartitionsCommand(table: String,
-    native: () => LogicalPlan) extends LeafRunnableCommand {
+  * count. */
+final case class TxnLogShowPartitionsCommand(t: TxnLog.Table)
+  extends LeafRunnableCommand {
   override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =
     org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "partition STRING, n_files BIGINT"))
+      StructType.fromDDL("partition STRING, n_files BIGINT"))
   override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        TxnLog.snapshot(t).filePartitions.values
-          .groupBy(spec => spec.toSeq.sortBy(_._1)
-            .map { case (c, v) => s"$c=$v" }.mkString("/"))
-          .toSeq.sortBy(_._1)
-          .map { case (spec, files) => Row(spec, files.size.toLong) }
-      case None => // not ours: Spark's own SHOW PARTITIONS plan,
-        // projected into this command's (partition, n_files) shape
-        // (catalog partitions carry no manifest file count)
-        GraftSqlParser.runNative(spark, native)
-          .map(r => Row(r.getString(0), null))
-    }
+    TxnLog.snapshot(t).filePartitions.values
+      .groupBy(spec => spec.toSeq.sortBy(_._1)
+        .map { case (c, v) => s"$c=$v" }.mkString("/"))
+      .toSeq.sortBy(_._1)
+      .map { case (spec, files) => Row(spec, files.size.toLong) }
 }
 
 /** `ALTER TABLE t SET TBLPROPERTIES ('k' = 'v', …)` /
   * `UNSET TBLPROPERTIES [IF EXISTS] ('k', …)` — last-write-wins
-  * table metadata as one commit each. Properties are behavior
-  * toggles: `graft.enableDeletionVectors = true` routes SQL
-  * DELETE/UPDATE through the merge-on-read path. Pairs parse in
-  * run(), after the target resolves as ours; non-txnlog targets run
-  * Spark's own ALTER plan. */
-final case class TxnLogPropertiesCommand(table: String, set: Boolean,
-    raw: String, native: () => LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        if (set) {
-          val pairs = GraftSqlParser.splitTopLevel(raw, ',').map {
-            case GraftSqlParser.PropPairRe(q, b, v) =>
-              Option(q).map(GraftSqlParser.unescapeProp).getOrElse(b) ->
-                GraftSqlParser.unescapeProp(v)
-            case bad => throw new IllegalArgumentException(
-              s"cannot parse TBLPROPERTIES pair: $bad (expected " +
-                "'key' = 'value')")
-          }.toMap
-          TxnLog.setProperties(t, pairs)
-        } else {
-          val keys = GraftSqlParser.splitTopLevel(raw, ',').map {
-            case GraftSqlParser.PropKeyRe(q, b) =>
-              Option(q).map(GraftSqlParser.unescapeProp).getOrElse(b)
-            case bad => throw new IllegalArgumentException(
-              s"cannot parse TBLPROPERTIES key: $bad")
-          }
-          TxnLog.unsetProperties(t, keys)
-        }
-        Seq.empty
-      case None => // not ours: Spark's own ALTER plan
-        GraftSqlParser.runNative(spark, native)
-    }
+  * table metadata as one commit each (`unset` empty = SET). Properties
+  * are behavior toggles: `graft.enableDeletionVectors = true` routes
+  * SQL DELETE/UPDATE through the merge-on-read path. */
+final case class TxnLogPropertiesCommand(t: TxnLog.Table,
+    set: Map[String, String], unset: Seq[String])
+  extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    if (unset.isEmpty) TxnLog.setProperties(t, set)
+    else TxnLog.unsetProperties(t, unset)
+    Seq.empty
+  }
 }
 
 /** `SHOW TBLPROPERTIES <table>` — the registered properties as a
-  * (key, value) result set; non-txnlog targets run Spark's own
-  * statement (same output shape). */
-final case class TxnLogShowPropertiesCommand(table: String,
-    native: () => LogicalPlan) extends LeafRunnableCommand {
+  * (key, value) result set. */
+final case class TxnLogShowPropertiesCommand(t: TxnLog.Table)
+  extends LeafRunnableCommand {
   override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =
     org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "key STRING, value STRING"))
+      StructType.fromDDL("key STRING, value STRING"))
   override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        TxnLog.propertiesOf(t).toSeq.sortBy(_._1)
-          .map { case (k, v) => Row(k, v) }
-      case None => GraftSqlParser.runNative(spark, native)
-    }
+    TxnLog.propertiesOf(t).toSeq.sortBy(_._1)
+      .map { case (k, v) => Row(k, v) }
 }
 
-/** `CREATE TABLE [IF NOT EXISTS] t (cols) USING txnlog
-  * [PARTITIONED BY (p, ...)] [OPTIONS (path '...') | LOCATION '...']`
-  * — the DDL-first table definition: the declared schema AND
-  * partition layout register as version 0 BEFORE any data commit, so
-  * the table is queryable (zero rows), constrainable, and every
-  * future write stages through the declared layout (a mismatched
-  * explicit layout refuses — the first writer no longer decides the
-  * table's physical shape). The registration is explicit here
-  * because a DSv1 provider cannot distinguish CREATE from a probing
-  * schema-carrying read — reads no longer mint metadata. A catalog
-  * name also runs Spark's native CREATE (the catalog entry);
-  * `txnlog.\`/path\`` targets are purely path-addressed. Non-txnlog
-  * providers never reach this command (the USING check). */
 /** `CREATE TABLE dst SHALLOW CLONE src [VERSION AS OF n |
   * TIMESTAMP AS OF 'ts'] [LOCATION '...']` — the SQL face of
   * [[TxnLog.shallowClone]]: a zero-copy fork whose v0 references the
@@ -1271,31 +776,19 @@ final case class TxnLogShowPropertiesCommand(table: String,
   * the restore-into-a-fork idiom. */
 final case class TxnLogCloneCommand(dst: String, ifNotExists: Boolean,
     src: String, version: Option[Long], timestamp: Option[String],
-    location: Option[String],
-    native: () => LogicalPlan) extends LeafRunnableCommand {
+    location: Option[String]) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     val cat = spark.sessionState.catalog
-    // a path-addressed source arrives with its time travel already
-    // lowered onto the @v / @ts suffix (the parser's rewrite runs
-    // before statement recognition) — peel it back off here
-    val Travel = """(?s)^(.+)@(?:v(\d+)|ts([\d.:TZ+\- ]+))$""".r
-    val (srcT, sfxVer, sfxTs) =
-      GraftSqlParser.pathIdentOf(src) match {
-        case Some(Travel(p, v, ts)) =>
-          (TxnLog.Table(TxnLog.pathOf(p)),
-            Option(v).map(_.toLong), Option(ts))
-        case Some(p) => (TxnLog.Table(TxnLog.pathOf(p)), None, None)
-        case None =>
-          (GraftSqlParser.tryResolveTable(spark, src).getOrElse(
-            throw new IllegalArgumentException(
-              s"SHALLOW CLONE source $src is neither a txnlog path " +
-                "reference nor a catalog table USING txnlog")),
-            None, None)
-      }
-    val asOf = version.orElse(sfxVer).orElse(
-      timestamp.orElse(sfxTs).map(ts =>
-        TxnLog.versionAt(srcT, TxnLog.tsMillis(ts))))
-    val dstPath = GraftSqlParser.pathIdentOf(dst)
+    val parser = spark.sessionState.sqlParser
+    val srcT = GraftSqlParser.tryResolveTable(spark,
+      parser.parseMultipartIdentifier(src)).getOrElse(
+      throw new IllegalArgumentException(
+        s"SHALLOW CLONE source $src is neither a txnlog path " +
+          "reference nor a catalog table USING txnlog"))
+    val asOf = version.orElse(timestamp.map(ts =>
+      TxnLog.versionAt(srcT, TxnLog.tsMillis(ts))))
+    val dstParts = parser.parseMultipartIdentifier(dst)
+    val dstPath = GraftSqlParser.txnlogPath(dstParts)
     // a path-addressed destination IS the location: a contradicting
     // explicit LOCATION must refuse, not silently win
     require(dstPath.isEmpty || location.forall(l =>
@@ -1305,20 +798,9 @@ final case class TxnLogCloneCommand(dst: String, ifNotExists: Boolean,
         s"LOCATION clause (${location.getOrElse("")}) contradicts it")
     val dstId: Option[TableIdentifier] =
       if (dstPath.isDefined) None
-      else spark.sessionState.sqlParser
-        .parseMultipartIdentifier(dst) match {
-        case Seq(c, rest @ _*)
-          if c.equalsIgnoreCase("spark_catalog") && rest.nonEmpty &&
-            rest.length <= 2 =>
-          rest.toSeq match {
-            case Seq(tb)     => Some(TableIdentifier(tb))
-            case Seq(db, tb) => Some(TableIdentifier(tb, Some(db)))
-          }
-        case Seq(tb)     => Some(TableIdentifier(tb))
-        case Seq(db, tb) => Some(TableIdentifier(tb, Some(db)))
-        case _ => throw new IllegalArgumentException(
-          s"cannot resolve clone destination: $dst")
-      }
+      else Some(GraftSqlParser.catalogIdent(dstParts).getOrElse(
+        throw new IllegalArgumentException(
+          s"cannot resolve clone destination: $dst")))
     if (dstId.exists(cat.tableExists)) {
       if (ifNotExists) return Seq.empty
       throw new IllegalArgumentException(
@@ -1336,8 +818,7 @@ final case class TxnLogCloneCommand(dst: String, ifNotExists: Boolean,
       cat.createTable(
         TxnLogCatalogEntry(i, loc, location.isDefined,
           snap.schemaJson
-            .map(js => org.apache.spark.sql.types.DataType.fromJson(js)
-              .asInstanceOf[StructType])
+            .map(js => DataType.fromJson(js).asInstanceOf[StructType])
             .getOrElse(new StructType()),
           snap.partCols, snap.properties),
         ignoreIfExists = ifNotExists, validateLocation = false)
@@ -1346,110 +827,11 @@ final case class TxnLogCloneCommand(dst: String, ifNotExists: Boolean,
   }
 }
 
-/** Resolution rule (injected in the HINTS batch — it must fire
-  * BEFORE the main Resolution batch, where Spark's own
-  * ResolveSessionCatalog refuses REPLACE TABLE for V1 providers by
-  * name): `CREATE OR REPLACE TABLE ... USING txnlog` (column-list
-  * and CTAS forms) and `df.writeTo(t).createOrReplace()/replace()`
-  * all parse to ReplaceTable/ReplaceTableAsSelect at the plan root —
-  * rewritten here onto [[TxnLogReplaceTableCommand]], which lands
-  * the whole redefinition as ONE atomic log commit
-  * ([[TxnLog.replaceDefinition]]). Root-only match, O(1) per pass;
-  * a spec without the txnlog provider (explicit or via the existing
-  * catalog entry) is left for Spark's native handling. */
-final case class TxnLogReplaceTableRule(spark: SparkSession)
-  extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.analysis.UnresolvedIdentifier
-  import org.apache.spark.sql.catalyst.plans.logical.{ReplaceTable,
-    ReplaceTableAsSelect, TableSpec, UnresolvedTableSpec}
-  import org.apache.spark.sql.connector.expressions.Transform
-
-  /** (properties, explicit location) when the spec names the txnlog
-    * provider — OPTIONS values are literal expressions at this
-    * stage, evaluated here for the `path` key. */
-  private def txnlogSpec(spec: Any, nameParts: Seq[String])
-      : Option[(Map[String, String], Option[String])] = {
-    def provided(p: Option[String]): Boolean =
-      p.exists(_.equalsIgnoreCase("txnlog")) ||
-        // `writeTo(t).createOrReplace()` with no .using(): the
-        // EXISTING entry's provider decides whose replace this is
-        (p.isEmpty && existingProvider(nameParts)
-          .exists(_.equalsIgnoreCase("txnlog")))
-    spec match {
-      case u: UnresolvedTableSpec if provided(u.provider) =>
-        val opts = u.optionExpression.options.flatMap { case (k, e) =>
-          if (e.foldable) Option(e.eval()).map(v => k -> v.toString)
-          else None
-        }.toMap
-        Some((u.properties,
-          u.location.orElse(opts.collectFirst {
-            case (k, v) if k.equalsIgnoreCase("path") => v })))
-      case ts: TableSpec if provided(ts.provider) =>
-        Some((ts.properties,
-          ts.location.orElse(ts.options.collectFirst {
-            case (k, v) if k.equalsIgnoreCase("path") => v })))
-      case _ => None
-    }
-  }
-
-  private def existingProvider(nameParts: Seq[String]): Option[String] = {
-    val cat = spark.sessionState.catalog
-    // the command strips a leading spark_catalog the same way — a
-    // 3-part spelling of the session-catalog name must route alike
-    val parts = nameParts match {
-      case Seq(c, rest @ _*)
-        if c.equalsIgnoreCase("spark_catalog") && rest.nonEmpty =>
-        rest.toSeq
-      case other => other
-    }
-    (parts match {
-      case Seq(tb)     => Some(TableIdentifier(tb))
-      case Seq(db, tb) => Some(TableIdentifier(tb, Some(db)))
-      case _           => None
-    }).filter(cat.tableExists)
-      .flatMap(id => cat.getTableMetadata(id).provider)
-  }
-
-  private def identityCols(parts: Seq[Transform]): Seq[String] =
-    parts.map { tr =>
-      require(tr.name == "identity" && tr.references.length == 1 &&
-        tr.references.head.fieldNames.length == 1,
-        s"txnlog REPLACE TABLE supports identity PARTITIONED BY " +
-          s"columns only, got: $tr")
-      tr.references.head.fieldNames.head
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
-    case r: ReplaceTable =>
-      (r.name, txnlogSpec(r.tableSpec, nameOf(r.name))) match {
-        case (u: UnresolvedIdentifier, Some((props, loc))) =>
-          TxnLogReplaceTableCommand(u.nameParts,
-            Some(StructType(r.columns.map(_.toV1Column))),
-            identityCols(r.partitioning), props, loc, None, r.orCreate)
-        case _ => plan
-      }
-    case r: ReplaceTableAsSelect =>
-      (r.name, txnlogSpec(r.tableSpec, nameOf(r.name))) match {
-        case (u: UnresolvedIdentifier, Some((props, loc))) =>
-          TxnLogReplaceTableCommand(u.nameParts, None,
-            identityCols(r.partitioning), props, loc, Some(r.query),
-            r.orCreate)
-        case _ => plan
-      }
-    case _ => plan
-  }
-
-  private def nameOf(name: LogicalPlan): Seq[String] = name match {
-    case u: UnresolvedIdentifier => u.nameParts
-    case _                       => Nil
-  }
-}
-
 /** The metastore entry mirroring a txnlog log — ONE builder for the
-  * commands that mint entries (REPLACE TABLE's create half, SHALLOW
-  * CLONE's destination), so the hive partition-cols-last schema
-  * convention and the EXTERNAL-iff-explicit-location rule can never
-  * drift between them. */
+  * commands that mint entries (CREATE / REPLACE TABLE's create half,
+  * SHALLOW CLONE's destination), so the hive partition-cols-last
+  * schema convention and the EXTERNAL-iff-explicit-location rule can
+  * never drift between them. */
 private[sources] object TxnLogCatalogEntry {
   def apply(i: TableIdentifier, loc: String, explicitLoc: Boolean,
       schema: StructType, partCols: Seq[String],
@@ -1474,47 +856,58 @@ private[sources] object TxnLogCatalogEntry {
   }
 }
 
-/** The executable half of CREATE OR REPLACE TABLE / writeTo
-  * .createOrReplace(): resolves the location (explicit OPTIONS path /
-  * LOCATION, the existing entry's location — a replace keeps the
-  * table where it lives — or the catalog default), runs
-  * [[TxnLog.replaceDefinition]]'s one atomic commit, and brings the
-  * metastore entry in line (altered when present, created when
-  * absent). `REPLACE TABLE` without OR CREATE refuses on a missing
-  * table (SQL's contract); OR REPLACE creates. History is retained —
+/** The executable half of CREATE TABLE (column list), CREATE OR
+  * REPLACE / REPLACE TABLE (column list or CTAS) and
+  * `df.writeTo(t).createOrReplace()/replace()` for txnlog tables: one
+  * code path resolves the location (explicit OPTIONS path / LOCATION,
+  * the path of a `txnlog.\`/p\`` name, the existing entry's location —
+  * a replace keeps the table where it lives — or the catalog
+  * default), routes column DEFAULTs through [[GraftSqlParser.frozenDefault]],
+  * writes the log and brings the metastore entry in line.
+  *
+  * CREATE (`replace` false; `lenient` = IF NOT EXISTS) is DDL-first:
+  * the declared schema, partition layout and properties register as
+  * version 0 BEFORE any data commit, so the table is queryable (zero
+  * rows), constrainable, and every later write stages through the
+  * declared layout. An existing catalog name or an occupied location
+  * refuses (or no-ops under IF NOT EXISTS) before anything is written;
+  * the one exception is an ORPHAN metadata-only v0 (a catalog CREATE
+  * whose entry creation failed after registering), which an IDENTICAL
+  * re-CREATE adopts.
+  *
+  * REPLACE (`replace` true; `lenient` = OR CREATE) lands the whole
+  * redefinition as ONE atomic log commit ([[TxnLog.replaceDefinition]]);
+  * plain REPLACE refuses on a missing table. History is retained —
   * RESTORE can cross the replace. */
-final case class TxnLogReplaceTableCommand(
+final case class TxnLogDefineTableCommand(
     nameParts: Seq[String],
     cols: Option[StructType],
     partCols: Seq[String],
     props: Map[String, String],
     optLocation: Option[String],
     query: Option[LogicalPlan],
-    orCreate: Boolean) extends LeafRunnableCommand {
+    replace: Boolean,
+    lenient: Boolean) extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = query.toSeq
   override def run(spark: SparkSession): Seq[Row] = {
     val cat = spark.sessionState.catalog
-    val parts = nameParts match {
-      case Seq(c, rest @ _*)
-        if c.equalsIgnoreCase("spark_catalog") && rest.nonEmpty =>
-        rest.toSeq
-      case other => other
-    }
-    val pathIdent: Option[String] = parts match {
-      case Seq(p, rest) if p.equalsIgnoreCase("txnlog") &&
-        rest.contains('/') => Some(rest)
-      case _ => None
-    }
+    val name = nameParts.mkString(".")
+    val pathIdent = GraftSqlParser.txnlogPath(nameParts)
     val id: Option[TableIdentifier] =
       if (pathIdent.isDefined) None
-      else parts match {
-        case Seq(tb)     => Some(TableIdentifier(tb))
-        case Seq(db, tb) => Some(TableIdentifier(tb, Some(db)))
-        case _ => throw new IllegalArgumentException(
-          s"cannot resolve table name ${nameParts.mkString(".")}")
-      }
+      else Some(GraftSqlParser.catalogIdent(nameParts).getOrElse(
+        throw new IllegalArgumentException(
+          s"cannot resolve table name $name")))
     val existing = id.filter(cat.tableExists).map(cat.getTableMetadata)
     existing.foreach { meta =>
+      // a CATALOG name that already exists fails (or no-ops under IF
+      // NOT EXISTS) BEFORE any log is minted — registering first
+      // would plant a v0 log inside the existing table's directory
+      if (!replace) {
+        if (lenient) return Seq.empty
+        throw new org.apache.spark.sql.catalyst.analysis
+          .TableAlreadyExistsException(meta.identifier.nameParts)
+      }
       require(meta.provider.exists(_.equalsIgnoreCase("txnlog")),
         s"REPLACE TABLE ... USING txnlog cannot redefine " +
           s"${meta.identifier} (provider: " +
@@ -1529,24 +922,40 @@ final case class TxnLogReplaceTableCommand(
               "engine resolves txnlog logs on the local filesystem only")
           uri.getPath
         })))
-      .getOrElse(id.map(i =>
-        cat.defaultTablePath(i).getPath).getOrElse(
-        throw new IllegalArgumentException(
-          "REPLACE TABLE needs a location")))
+      .getOrElse(cat.defaultTablePath(id.get).getPath)
     val t = TxnLog.Table(TxnLog.pathOf(loc))
-    val exists = existing.isDefined || TxnLog.latestVersion(t) >= 0
-    if (!exists && !orCreate)
-      throw new IllegalArgumentException(
-        s"REPLACE TABLE: ${nameParts.mkString(".")} does not exist — " +
-          "use CREATE OR REPLACE TABLE to create-or-redefine")
-    val df = query.map(q =>
-      org.apache.spark.sql.graftglue.StreamShim.ofRows(spark, q))
-    // natively-parsed column lists carry Spark's raw DEFAULT text —
-    // route them through the same freeze/validate gate as CREATE
-    val schema = cols.map(sc =>
-      GraftSqlParser.revalidateDefaults(spark, sc))
+    val df = query.map(Shim.ofRows(spark, _))
+    val schema = cols.map(GraftSqlParser.revalidateDefaults(spark, _))
       .getOrElse(df.get.schema)
-    TxnLog.replaceDefinition(spark, t, schema, partCols, props, df)
+    if (replace) {
+      if (existing.isEmpty && TxnLog.latestVersion(t) < 0 && !lenient)
+        throw new IllegalArgumentException(
+          s"REPLACE TABLE: $name does not exist — use CREATE OR " +
+            "REPLACE TABLE to create-or-redefine")
+      TxnLog.replaceDefinition(spark, t, schema, partCols, props, df)
+    } else if (TxnLog.latestVersion(t) >= 0) {
+      // the location already holds a table: a plain CREATE must not
+      // silently succeed with its schema/layout ignored. An ORPHAN
+      // metadata-only v0 (detectable because the catalog entry is
+      // absent while the v0 exists) is ADOPTED by an IDENTICAL
+      // catalog re-CREATE — deleting the orphan at failure time raced
+      // concurrent writers (a v1 built on our v0 would lose its schema
+      // lines from under it). PATH-addressed targets never adopt:
+      // their registration IS the create, so a metadata-only v0 there
+      // is a successfully created empty table. A differing
+      // declaration — nullability included — still refuses.
+      val adoptable = id.isDefined && TxnLog.metadataOnlyV0(t) &&
+        TxnLog.registeredSchema(t).exists(reg =>
+          reg.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq ==
+            schema.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq) &&
+        TxnLog.declaredPartCols(t) == partCols &&
+        TxnLog.propertiesOf(t) == props
+      require(lenient || adoptable,
+        s"table at $loc already exists (version " +
+          s"${TxnLog.latestVersion(t)}); CREATE TABLE cannot " +
+          "redefine it — use CREATE TABLE IF NOT EXISTS to no-op, " +
+          "or REPLACE/DROP it first")
+    } else { TxnLog.registerSchema(t, schema, partCols, props); () }
     id.foreach { i =>
       val entry = TxnLogCatalogEntry(i, loc, optLocation.isDefined,
         schema, partCols, props)
@@ -1555,85 +964,11 @@ final case class TxnLogReplaceTableCommand(
           cat.alterTable(meta.copy(schema = entry.schema,
             partitionColumnNames = partCols, properties = props))
         case None =>
-          cat.createTable(entry, ignoreIfExists = false,
+          cat.createTable(entry, ignoreIfExists = lenient,
             validateLocation = false)
       }
     }
     Seq.empty
-  }
-}
-
-final case class TxnLogCreateTableCommand(table: String,
-    ifNotExists: Boolean, colsDdl: String,
-    partCols: Seq[String], path: Option[String],
-    native: () => LogicalPlan,
-    props: Map[String, String] = Map.empty) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val schema = GraftSqlParser.parseColsWithDefaults(spark, colsDdl)
-    val isPath = GraftSqlParser.pathIdentOf(table).isDefined
-    val loc: Option[String] = path
-      .orElse(GraftSqlParser.pathIdentOf(table))
-      .orElse {
-        // no OPTIONS path / LOCATION: the catalog's default location,
-        // the same place the native CREATE resolves to
-        val id = spark.sessionState.sqlParser
-          .parseMultipartIdentifier(table) match {
-          case Seq(tb)     => Some(TableIdentifier(tb))
-          case Seq(db, tb) => Some(TableIdentifier(tb, Some(db)))
-          case _           => None
-        }
-        id.map(i =>
-          spark.sessionState.catalog.defaultTablePath(i).getPath)
-      }
-    // a CATALOG name that already exists must fail through Spark's
-    // own CREATE (or no-op under IF NOT EXISTS) BEFORE any log is
-    // minted — registering first would plant a v0 _txnlog inside the
-    // existing table's directory as a side effect of a failed DDL
-    val catalogExists = !isPath && {
-      val id = spark.sessionState.sqlParser
-        .parseMultipartIdentifier(table) match {
-        case Seq(tb)     => Some(TableIdentifier(tb))
-        case Seq(db, tb) => Some(TableIdentifier(tb, Some(db)))
-        case _           => None
-      }
-      id.exists(spark.sessionState.catalog.tableExists)
-    }
-    if (!catalogExists) loc.foreach { p =>
-      val t = TxnLog.Table(TxnLog.pathOf(p))
-      if (TxnLog.latestVersion(t) >= 0) {
-        // the location already holds a table: a plain CREATE must not
-        // silently succeed with its schema/layout ignored — SQL's
-        // contract is refuse, or no-op under IF NOT EXISTS. ONE
-        // exception: an ORPHAN metadata-only v0 (a prior CATALOG
-        // CREATE that minted but failed natively — detectable because
-        // the catalog entry is absent while the v0 exists) is ADOPTED
-        // by an IDENTICAL re-CREATE — deleting the orphan at failure
-        // time raced concurrent writers (a v1 built on our v0 would
-        // lose its schema lines from under it), so the log stays and
-        // the retry tolerates it instead. PATH-addressed targets
-        // never adopt: their registration IS the create (no native
-        // half to fail), so a metadata-only v0 there is a
-        // successfully created empty table and a duplicate CREATE
-        // must refuse like any other. A differing declaration —
-        // including nullability — still refuses: adopting it would
-        // silently redefine whatever minted the v0.
-        val adoptable = !isPath && TxnLog.metadataOnlyV0(t) &&
-          TxnLog.registeredSchema(t).exists(reg =>
-            reg.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq ==
-              schema.fields.map(f =>
-                (f.name, f.dataType, f.nullable)).toSeq) &&
-          TxnLog.declaredPartCols(t) == partCols &&
-          TxnLog.propertiesOf(t) == props
-        require(ifNotExists || adoptable,
-          s"table at $p already exists (version " +
-            s"${TxnLog.latestVersion(t)}); CREATE TABLE cannot " +
-            "redefine it — use CREATE TABLE IF NOT EXISTS to no-op, " +
-            "or REPLACE/DROP it first")
-      }
-      else { TxnLog.registerSchema(t, schema, partCols, props); () }
-    }
-    if (isPath) Seq.empty // path-addressed: the registration IS the create
-    else GraftSqlParser.runNative(spark, native)
   }
 }
 
@@ -1682,7 +1017,7 @@ final case class TxnLogPartitionedCtasCommand(table:
           s"${TxnLog.latestVersion(t)}); CREATE TABLE AS SELECT " +
           "cannot redefine it")
     }
-    val df0 = org.apache.spark.sql.graftglue.StreamShim.ofRows(spark, query)
+    val df0 = Shim.ofRows(spark, query)
     val df = if (outputColumnNames.nonEmpty &&
         outputColumnNames != df0.columns.toSeq)
       df0.toDF(outputColumnNames: _*) else df0
@@ -1753,99 +1088,82 @@ final case class TxnLogCtasLayoutRule(spark: SparkSession)
   }
 }
 
-/** `INSERT INTO | OVERWRITE <txnlog table> <query>` — the SQL write
-  * path: INTO is one append commit, OVERWRITE one atomic REPLACE.
-  * The source query is any SELECT/VALUES/WITH/FROM/TABLE statement;
-  * columns align BY POSITION against the registered schema and cast
-  * to it (SQL INSERT semantics), so `VALUES (1, 2)`'s default column
-  * names and integer literals land correctly in a (bigint, bigint)
-  * table. A PARTITIONED table's inserts restage through its layout
-  * (appendPartitioned) — the SQL path must not erode what every
+/** `INSERT INTO | OVERWRITE <txnlog table> [(cols)] <query>` — the
+  * SQL write path: INTO is one append commit, OVERWRITE one atomic
+  * REPLACE. Columns align BY POSITION against the registered schema
+  * and cast to it (SQL INSERT semantics), so `VALUES (1, 2)`'s default
+  * column names and integer literals land correctly in a (bigint,
+  * bigint) table. A PARTITIONED table's inserts restage through its
+  * layout (appendPartitioned) — the SQL path must not erode what every
   * other op preserves. An explicit column list aligns the source BY
-  * NAME against the registered schema and NULL-fills the unnamed
-  * columns (the standard SQL contract; a first write has no schema
-  * to align against, so a column list there refuses). Non-txnlog
-  * targets run Spark's own INSERT plan untouched. */
-final case class TxnLogInsertCommand(table: String, overwrite: Boolean,
-    columnList: Option[String], query: String,
-    native: () => LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        import org.apache.spark.sql.functions.col
-        // `INSERT INTO t (SELECT ...)`: when the parens span the
-        // whole query text they are grouping, not a column list —
-        // strip them (a leading paren that closes early, e.g. a
-        // UNION of two parenthesized branches, passes through whole)
-        val qText =
-          if (query.startsWith("(") &&
-              GraftSqlParser.balancedParen(query, 0) == query.length)
-            query.substring(1, query.length - 1)
-          else query
-        val src = spark.sql(qText)
-        val aligned = (TxnLog.registeredSchema(t), columnList) match {
-          case (Some(schema), Some(colsRaw)) =>
-            // named-subset insert: listed columns align by name (and
-            // source position), every other schema column NULL-fills
-            val names = colsRaw.stripPrefix("(").stripSuffix(")")
-              .split(',').map(_.trim.stripPrefix("`").stripSuffix("`"))
-              .toIndexedSeq.filter(_.nonEmpty)
-            require(names.nonEmpty, "empty INSERT column list")
-            require(names.distinct.length == names.length,
-              s"duplicate column(s) in INSERT list: " +
-                names.diff(names.distinct).mkString(", "))
-            val unknown = names.filterNot(schema.fieldNames.contains)
-            require(unknown.isEmpty,
-              s"INSERT column list names unknown column(s): " +
-                s"${unknown.mkString(", ")} (table $table has " +
-                s"${schema.fieldNames.mkString(", ")})")
-            require(src.schema.length == names.length,
-              s"INSERT source has ${src.schema.length} column(s); " +
-                s"the column list names ${names.length}")
-            src.toDF(names: _*).select(schema.fields.toIndexedSeq.map {
-              f =>
-                if (names.contains(f.name))
-                  col(f.name).cast(f.dataType).as(f.name)
-                else TxnLog.defaultSql(f) // SQL: omitted = DEFAULT
-                  .map(d => expr(d).cast(f.dataType).as(f.name))
-                  .getOrElse(lit(null).cast(f.dataType).as(f.name))
-            }: _*)
-          case (None, Some(_)) =>
-            throw new IllegalArgumentException(
-              s"INSERT with a column list needs a registered schema; " +
-                s"table $table has no commits yet — the first write " +
-                "defines the schema, so insert all columns")
-          case (Some(schema), None) =>
-            require(src.schema.length == schema.length,
-              s"INSERT source has ${src.schema.length} column(s); " +
-                s"table $table has ${schema.length}")
-            src.toDF(schema.fieldNames.toIndexedSeq: _*)
-              .select(schema.fields.toIndexedSeq.map(f =>
-                col(f.name).cast(f.dataType).as(f.name)): _*)
-          case (None, None) => src // first write: the source defines it
-        }
-        // either statement keeps a partitioned target's layout: the
-        // append restages through it, the overwrite carries it into
-        // the replacing commit
-        val partCols =
-          if (TxnLog.latestVersion(t) < 0) Nil
-          else TxnLog.snapshot(t).partCols
-        // Spark's partitionOverwriteMode contract: under `dynamic` an
-        // INSERT OVERWRITE on a PARTITIONED table replaces only the
-        // partitions present in the incoming rows; `static` (the
-        // default) keeps the whole-table atomic REPLACE
-        val dynamicMode = overwrite && partCols.nonEmpty &&
-          spark.sessionState.conf.getConfString(
-            "spark.sql.sources.partitionOverwriteMode", "static")
-            .equalsIgnoreCase("dynamic")
-        if (dynamicMode) TxnLog.replaceDynamic(spark, t, aligned)
-        else if (overwrite) TxnLog.replace(spark, t, aligned, partCols)
-        else if (partCols.isEmpty) TxnLog.append(spark, t, aligned)
-        else TxnLog.appendPartitioned(spark, t, aligned, partCols)
-        Seq.empty
-      case None => // not ours: run Spark's own INSERT plan
-        GraftSqlParser.runNative(spark, native)
+  * NAME against the registered schema and fills the unnamed columns
+  * with their DEFAULT or NULL (the standard SQL contract; a first
+  * write has no schema to align against, so a column list there
+  * refuses). */
+final case class TxnLogInsertCommand(t: TxnLog.Table,
+    insert: InsertIntoStatement) extends LeafRunnableCommand {
+  override def innerChildren: Seq[LogicalPlan] = Seq(insert.query)
+  override def run(spark: SparkSession): Seq[Row] = {
+    import org.apache.spark.sql.functions.{col, expr, lit}
+    val src = Shim.ofRows(spark, insert.query)
+    val names = insert.userSpecifiedCols
+    val aligned = TxnLog.registeredSchema(t) match {
+      case Some(schema) if names.nonEmpty =>
+        // named-subset insert: listed columns align by name (and
+        // source position), every other schema column takes its
+        // DEFAULT or NULL
+        require(names.distinct.length == names.length,
+          s"duplicate column(s) in INSERT list: " +
+            names.diff(names.distinct).mkString(", "))
+        val unknown = names.filterNot(schema.fieldNames.contains)
+        require(unknown.isEmpty,
+          s"INSERT column list names unknown column(s): " +
+            s"${unknown.mkString(", ")} (table ${t.root} has " +
+            s"${schema.fieldNames.mkString(", ")})")
+        require(src.schema.length == names.length,
+          s"INSERT source has ${src.schema.length} column(s); " +
+            s"the column list names ${names.length}")
+        src.toDF(names: _*).select(schema.fields.toIndexedSeq.map { f =>
+          if (names.contains(f.name))
+            col(f.name).cast(f.dataType).as(f.name)
+          else TxnLog.defaultSql(f) // SQL: omitted = DEFAULT
+            .map(d => expr(d).cast(f.dataType).as(f.name))
+            .getOrElse(lit(null).cast(f.dataType).as(f.name))
+        }: _*)
+      case None if names.nonEmpty =>
+        throw new IllegalArgumentException(
+          s"INSERT with a column list needs a registered schema; " +
+            s"table ${t.root} has no commits yet — the first write " +
+            "defines the schema, so insert all columns")
+      case Some(schema) =>
+        require(src.schema.length == schema.length,
+          s"INSERT source has ${src.schema.length} column(s); " +
+            s"table ${t.root} has ${schema.length}")
+        src.toDF(schema.fieldNames.toIndexedSeq: _*)
+          .select(schema.fields.toIndexedSeq.map(f =>
+            col(f.name).cast(f.dataType).as(f.name)): _*)
+      case None => src // first write: the source defines it
     }
+    // either statement keeps a partitioned target's layout: the
+    // append restages through it, the overwrite carries it into
+    // the replacing commit
+    val partCols =
+      if (TxnLog.latestVersion(t) < 0) Nil
+      else TxnLog.snapshot(t).partCols
+    // Spark's partitionOverwriteMode contract: under `dynamic` an
+    // INSERT OVERWRITE on a PARTITIONED table replaces only the
+    // partitions present in the incoming rows; `static` (the
+    // default) keeps the whole-table atomic REPLACE
+    val dynamicMode = insert.overwrite && partCols.nonEmpty &&
+      spark.sessionState.conf.getConfString(
+        "spark.sql.sources.partitionOverwriteMode", "static")
+        .equalsIgnoreCase("dynamic")
+    if (dynamicMode) TxnLog.replaceDynamic(spark, t, aligned)
+    else if (insert.overwrite) TxnLog.replace(spark, t, aligned, partCols)
+    else if (partCols.isEmpty) TxnLog.append(spark, t, aligned)
+    else TxnLog.appendPartitioned(spark, t, aligned, partCols)
+    Seq.empty
+  }
 }
 
 /** `RESTORE TABLE <table> TO VERSION AS OF n | TO TIMESTAMP AS OF ts`
@@ -1866,35 +1184,6 @@ final case class TxnLogRestoreCommand(table: String,
     TxnLog.restore(spark, t, v)
     Seq.empty
   }
-}
-
-/** `UPDATE <txnlog table> [AS] [x] SET a = e, ... [WHERE cond]` →
-  * [[TxnLog.update]] (no WHERE = update every row, the SQL
-  * contract). An optional table alias qualifies SET/WHERE references
-  * (`UPDATE t x SET v = x.v + 1 WHERE x.k > 3`). Assignments parse
-  * in run(), after the target resolves as ours — a non-txnlog UPDATE
-  * executes Spark's own plan for the statement untouched, whatever
-  * its SET grammar. */
-final case class TxnLogUpdateCommand(table: String,
-    alias: Option[String], setText: String,
-    where: Option[String],
-    native: () => LogicalPlan) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] =
-    GraftSqlParser.tryResolveTable(spark, table) match {
-      case Some(t) =>
-        val sets = GraftSqlParser.parseAssignments(setText)
-          .map { case (c, rhs) => c -> expr(rhs) }.toMap
-        val pred = where.map(expr).getOrElse(lit(true))
-        val snap = TxnLog.snapshot(t) // one snapshot: check + op
-        if (GraftSqlParser.dvEnabled(snap)) // merge-on-read switch
-          TxnLog.updateDv(spark, t, sets, pred, alias,
-            snap0 = Some(snap))
-        else TxnLog.update(spark, t, sets, pred, alias,
-          snap0 = Some(snap))
-        Seq.empty
-      case None => // not ours: run Spark's own UPDATE plan (v2 tables)
-        GraftSqlParser.runNative(spark, native)
-    }
 }
 
 /** `VACUUM <table> [RETAIN n HOURS] [DRY RUN]` → [[TxnLog.vacuum]]
@@ -1971,45 +1260,34 @@ final case class TxnLogHistoryCommand(table: String,
   }
 }
 
-/** `MERGE INTO tgt t USING src s ON t.k = s.k [AND t.k2 = s.k2 ...]
-  * WHEN ...` → [[TxnLog.mergeIntoKeys]] with the SQL aliases as the
-  * clause qualifiers. The ON condition must be an equi conjunction
-  * with the same column name on both sides of every term — the
-  * (composite) key the Scala API merges on. */
-final case class TxnLogMergeCommand(table: String,
-    tAlias: Option[String], source: String, sAlias: Option[String],
-    onCond: String,
-    whenText: String,
-    native: () => LogicalPlan,
-    evolve: Boolean = false) extends LeafRunnableCommand {
+/** `MERGE [WITH SCHEMA EVOLUTION] INTO tgt t USING src s ON t.k = s.k
+  * [AND t.k2 = s.k2 ...] WHEN ...` → [[TxnLog.mergeIntoKeys]] with the
+  * SQL aliases as the clause qualifiers. The ON condition must be an
+  * equi conjunction with the same column name on both sides of every
+  * term — the (composite) key the Scala API merges on. The source is
+  * the statement's parsed source plan. */
+final case class TxnLogMergeCommand(t: TxnLog.Table,
+    merge: MergeIntoTable) extends LeafRunnableCommand {
+  override def innerChildren: Seq[LogicalPlan] = Seq(merge.sourceTable)
   override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftSqlParser.tryResolveTable(spark, table).getOrElse {
-      // not ours: run Spark's own MERGE plan (v2 tables) — reached
-      // BEFORE any clause parsing, so standard MERGE grammar outside
-      // this library's subset (UPDATE SET *, INSERT (cols) VALUES)
-      // never trips on it
-      return GraftSqlParser.runNative(spark, native)
-    }
-    val clauses = GraftSqlParser.parseWhenClauses(whenText)
-    val src = GraftSqlParser.resolveSource(spark, source)
-    val ta = tAlias.getOrElse("t")
-    val sa = sAlias.getOrElse("s")
-    // ON is an equi conjunction: t.a = s.a [AND t.b = s.b ...] with
-    // the same column name on both sides of every conjunct — split by
-    // the quote-aware scanner, so an AND inside a string literal
-    // surfaces the intended equi-conjunction error, not a fragment
-    val keys = GraftSqlParser.splitAtKeywordAll(onCond, "AND").map {
-      case GraftSqlParser.OnKeyRe(q1, c1, q2, c2)
+    import TxnLog.MergeClause
+    val ta = GraftSqlParser.aliasOf(merge.targetTable).getOrElse("t")
+    val sa = GraftSqlParser.aliasOf(merge.sourceTable).getOrElse("s")
+    val src = Shim.ofRows(spark, merge.sourceTable)
+    val keys = GraftSqlParser.conjuncts(merge.mergeCondition).map {
+      case EqualTo(UnresolvedAttribute(Seq(q1, c1)),
+          UnresolvedAttribute(Seq(q2, c2)))
         if c1 == c2 && Set(q1, q2) == Set(ta, sa) => c1
       case other => throw new IllegalArgumentException(
         s"MERGE ON must be a conjunction of $ta.<col> = $sa.<col> " +
-          s"terms with the same column name on both sides, got: $other")
+          s"terms with the same column name on both sides, got: " +
+          other.sql)
     }
-    val mcs = clauses.map {
-      case GraftSqlParser.ClauseText("update", cond, sets) =>
-        TxnLog.MergeClause.Update(cond.map(expr),
-          sets.map { case (c, rhs) => c -> expr(rhs) }.toMap)
-      case GraftSqlParser.ClauseText("update_star", cond, _) =>
+    def cond(c: Option[Expression]) = c.map(Shim.toColumn)
+    val matched = merge.matchedActions.map {
+      case UpdateAction(c, sets, _) =>
+        MergeClause.Update(cond(c), GraftSqlParser.assignments(sets))
+      case UpdateStarAction(c) =>
         // SET * = one assignment per TARGET column from the source's
         // same-named column (the Delta expansion) — so the source
         // must carry every target column, checked here by name
@@ -2023,7 +1301,7 @@ final case class TxnLogMergeCommand(table: String,
             "MERGE ... UPDATE SET * needs a log-registered table " +
               "schema to expand the star against"))
         val starCols =
-          if (evolve) src.columns.toIndexedSeq
+          if (merge.withSchemaEvolution) src.columns.toIndexedSeq
           else {
             val missing = reg.fieldNames.filterNot(src.columns.contains)
             require(missing.isEmpty,
@@ -2032,21 +1310,31 @@ final case class TxnLogMergeCommand(table: String,
                 "(or use MERGE WITH SCHEMA EVOLUTION INTO)")
             reg.fieldNames.toIndexedSeq
           }
-        TxnLog.MergeClause.Update(cond.map(expr),
-          starCols.map(c => c -> org.apache.spark.sql.functions
-              .col(s"$sa.$c")).toMap)
-      case GraftSqlParser.ClauseText("insert_cols", cond, sets) =>
-        TxnLog.MergeClause.InsertExpr(cond.map(expr),
-          sets.map { case (c, rhs) => c -> expr(rhs) }.toMap)
-      case GraftSqlParser.ClauseText("delete", cond, _) =>
-        TxnLog.MergeClause.Delete(cond.map(expr))
-      case GraftSqlParser.ClauseText("bysource_update", cond, sets) =>
-        TxnLog.MergeClause.BySourceUpdate(cond.map(expr),
-          sets.map { case (c, rhs) => c -> expr(rhs) }.toMap)
-      case GraftSqlParser.ClauseText("bysource_delete", cond, _) =>
-        TxnLog.MergeClause.BySourceDelete(cond.map(expr))
-      case GraftSqlParser.ClauseText(_, cond, _) =>
-        TxnLog.MergeClause.Insert(cond.map(expr))
+        MergeClause.Update(cond(c), starCols.map(c =>
+          c -> org.apache.spark.sql.functions.col(s"$sa.$c")).toMap)
+      case DeleteAction(c) => MergeClause.Delete(cond(c))
+      case other => throw new IllegalArgumentException(
+        s"unsupported MERGE WHEN MATCHED action: ${other.sql}")
+    }
+    val notMatched = merge.notMatchedActions.map {
+      case InsertStarAction(c) => MergeClause.Insert(cond(c))
+      case InsertAction(c, values) =>
+        // the column-list insert: (cols) pairs positionally with the
+        // VALUES expressions; unlisted columns NULL-fill
+        val cols = values.map(a => GraftSqlParser.columnOf(a.key))
+        require(cols.distinct.length == cols.length,
+          s"duplicate column(s) in MERGE INSERT list: " +
+            cols.diff(cols.distinct).mkString(", "))
+        MergeClause.InsertExpr(cond(c), GraftSqlParser.assignments(values))
+      case other => throw new IllegalArgumentException(
+        s"unsupported MERGE WHEN NOT MATCHED action: ${other.sql}")
+    }
+    val bySource = merge.notMatchedBySourceActions.map {
+      case UpdateAction(c, sets, _) =>
+        MergeClause.BySourceUpdate(cond(c), GraftSqlParser.assignments(sets))
+      case DeleteAction(c) => MergeClause.BySourceDelete(cond(c))
+      case other => throw new IllegalArgumentException(
+        s"unsupported MERGE WHEN NOT MATCHED BY SOURCE action: ${other.sql}")
     }
     // graft.enableDeletionVectors routes the statement merge-on-read:
     // matched UPDATE/DELETE clauses dead-list old positions via `dv`
@@ -2055,11 +1343,12 @@ final case class TxnLogMergeCommand(table: String,
     // ONE snapshot serves the property check AND the merge itself.
     val snap =
       if (TxnLog.latestVersion(t) < 0) None else Some(TxnLog.snapshot(t))
-    TxnLog.mergeIntoKeys(spark, t, src, keys, mcs,
+    TxnLog.mergeIntoKeys(spark, t, src, keys,
+      matched ++ notMatched ++ bySource,
       targetAlias = ta, sourceAlias = sa, snap0 = snap,
       dvCaps = if (snap.exists(GraftSqlParser.dvEnabled))
         Some((TxnLog.DefaultDvRowCap, TxnLog.DefaultDvByteCap))
-      else None, evolveSchema = evolve)
+      else None, evolveSchema = merge.withSchemaEvolution)
     Seq.empty
   }
 }

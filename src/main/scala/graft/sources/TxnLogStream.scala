@@ -190,33 +190,14 @@ class TxnLogStreamProvider extends StreamSourceProvider
       schema: StructType): BaseRelation =
     relationOf(sqlContext, parameters, Some(schema))
 
-  /** Delta's path-embedded time-travel convention: a batch-read path
-    * may end in `@v<version>` or `@ts<millis-or-ISO-8601>`, which
-    * peel off into the versionAsOf/timestampAsOf options. This is
-    * what SQL `SELECT … FROM txnlog.\`/p\` VERSION AS OF n` lowers
-    * onto (GraftSqlParser rewrites the reference into the suffix
-    * form — the table identifier is the only channel a pure SQL text
-    * has). Explicit options win over a suffix; streams never see it
-    * (time travel is a batch concept). */
-  private val TravelSuffix = """(?s)^(.+)@(?:v(\d+)|ts([\d.:TZ+\- ]+))$""".r
-
   private def relationOf(sqlContext: SQLContext,
-      rawParameters: Map[String, String],
+      parameters: Map[String, String],
       userSchema: Option[StructType]): BaseRelation = {
-    val parameters = rawParameters.get("path") match {
-      case Some(TravelSuffix(p, v, ts))
-        if !rawParameters.contains("versionAsOf") &&
-          !rawParameters.contains("timestampAsOf") =>
-        rawParameters + ("path" -> p) ++
-          Option(v).map("versionAsOf" -> _) ++
-          Option(ts).map("timestampAsOf" -> _)
-      case _ => rawParameters
-    }
     val t = tableOf(parameters)
     // a SCHEMA-DEFINING first touch (version-0 schema commit on an
     // empty location) happens only under the EXPLICIT createIfAbsent
     // option — set by the SQL CREATE TABLE path (the parser's
-    // TxnLogCreateTableCommand registers directly) or a programmatic
+    // TxnLogDefineTableCommand registers directly) or a programmatic
     // caller that means it. A probing READ with a schema must never
     // mint table metadata as a side effect: a later CREATE with a
     // different schema would merge into the accident instead of
@@ -543,9 +524,10 @@ private[graft] class TxnLogPartitionedRelation(
   * this relation serves fresh data after later commits — the
   * reference's per-query snapshot resolution, where an eagerly
   * resolved relation would pin its creation-time file list forever
-  * (and break after vacuum). Time-traveled references (`@v`/`@ts`
-  * suffix) stay EAGER: a pinned version is immutable, so there is
-  * nothing to re-resolve. The relation's SCHEMA is captured at parse
+  * (and break after vacuum). Time-traveled references (SQL
+  * `VERSION AS OF` / `TIMESTAMP AS OF`) stay EAGER: a pinned version
+  * is immutable, so there is nothing to re-resolve. The relation's
+  * SCHEMA is captured at parse
   * time (analysis needs fixed output attributes); additive evolution
   * after view creation keeps working — buildScan projects the
   * captured columns out of the wider live snapshot — and a view

@@ -500,7 +500,7 @@ final case class TxnLogV2ReadRewrite(spark: SparkSession)
         // loadTable overloads, so tt.asOf already carries the pin
         // (spec-pinned end-to-end)
         val rel = tt.asOf match {
-          case Some(v) => // pinned: eager resolution, like @v suffixes
+          case Some(v) => // pinned: eager resolution, like SQL time travel
             new TxnLogStreamProvider().createRelation(spark.sqlContext,
               Map("path" -> tt.t.root.toString,
                 "versionAsOf" -> v.toString))
@@ -552,7 +552,7 @@ final case class TxnLogDynamicOverwriteCommand(t: TxnLog.Table,
   override def run(spark: SparkSession)
       : Seq[org.apache.spark.sql.Row] = {
     TxnLog.replaceDynamic(spark, t,
-      org.apache.spark.sql.graftglue.StreamShim.ofRows(spark, query),
+      org.apache.spark.sql.graftshim.Shim.ofRows(spark, query),
       allowWiden)
     Seq.empty
   }

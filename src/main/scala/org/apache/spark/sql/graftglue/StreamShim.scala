@@ -40,16 +40,6 @@ object StreamShim {
       isStreaming = false)
   }
 
-  /** A DataFrame over an analyzed logical plan — `Dataset.ofRows` is
-    * private[sql]; a command that must execute a CTAS query plan
-    * itself (to stage it through a partition layout) crosses the
-    * line here. */
-  def ofRows(session: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : DataFrame =
-    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
-      plan)
-
   /** Build the V1 `StreamingRelation` a path-addressed
     * `readStream.format(...)` plans, over an explicit option map and
     * PRESERVED output attributes — what the catalog-name streaming

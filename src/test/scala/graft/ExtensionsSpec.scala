@@ -1669,4 +1669,130 @@ class ExtensionsSpec extends AnyFunSuite {
     } finally Seq("ctas_flat", "ctas_part", "ctas_wt", "ctas_wtp")
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
   }
+
+  test("statements parse with Spark's grammar: comments, double-quoted literals, a parenthesized ON") {
+    import spark.implicits._
+    import graft.sources.TxnLog
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-sqlgram-").resolve("t")
+    val t = TxnLog.Table(root)
+    val p = root.toString
+    TxnLog.append(spark, t,
+      Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "v", "s").coalesce(1))
+    def rows(): Seq[(Long, Long, String)] = TxnLog.read(spark, t).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    // a WHERE inside a comment is not a clause: every row updates
+    spark.sql(s"UPDATE txnlog.`$p` SET s = 'c' /* WHERE k = 1 */")
+    assert(rows() === Seq((1L, 10L, "c"), (2L, 20L, "c")))
+    // a double-quoted literal holding WHERE and AND stays one literal
+    spark.sql(
+      s"""UPDATE txnlog.`$p` SET s = "x WHERE y AND z" WHERE k = 1""")
+    assert(rows() === Seq((1L, 10L, "x WHERE y AND z"), (2L, 20L, "c")))
+    // a parenthesized ON condition is the same equi-join
+    Seq((2L, 200L, "m"), (3L, 30L, "n")).toDF("k", "v", "s")
+      .createOrReplaceTempView("gram_src")
+    spark.sql(
+      s"""MERGE INTO txnlog.`$p` t USING gram_src s ON (t.k = s.k)
+         |WHEN MATCHED THEN UPDATE SET v = s.v
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(rows() ===
+      Seq((1L, 10L, "x WHERE y AND z"), (2L, 200L, "c"), (3L, 30L, "n")))
+    // a comment spelling a WHEN clause is not a clause
+    Seq((1L, 11L, "o")).toDF("k", "v", "s")
+      .createOrReplaceTempView("gram_src2")
+    spark.sql(
+      s"""MERGE INTO txnlog.`$p` t USING gram_src2 s ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET v = s.v
+         |  /* WHEN MATCHED THEN DELETE */
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(rows() ===
+      Seq((1L, 11L, "x WHERE y AND z"), (2L, 200L, "c"), (3L, 30L, "n")))
+  }
+
+  test("statement lowering routes by target: txnlog paths and USING txnlog tables get graft commands, parquet tables keep Spark's plan") {
+    import spark.implicits._
+    import graft.sources.TxnLog
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-route-").resolve("t")
+    val p = root.toString
+    TxnLog.append(spark, TxnLog.Table(root),
+      Seq((1L, 10L, "a")).toDF("k", "v", "s").coalesce(1))
+    Seq((1L, 5L, "b")).toDF("k", "v", "s")
+      .createOrReplaceTempView("route_src")
+    spark.sql("DROP TABLE IF EXISTS route_txn")
+    spark.sql("DROP TABLE IF EXISTS route_pq")
+    spark.sql(s"CREATE TABLE route_txn USING txnlog OPTIONS (path '$p')")
+    spark.sql("CREATE TABLE route_pq (k BIGINT, v BIGINT, s STRING) " +
+      "USING parquet")
+    // %T is the target; %P the provider of the defining statements
+    val forms = Seq(
+      "DELETE FROM %T WHERE k = 1",
+      "UPDATE %T SET s = 'WHERE' WHERE k = 1",
+      "INSERT INTO %T VALUES (2, 20, 'c')",
+      "INSERT OVERWRITE %T SELECT * FROM route_src",
+      "INSERT INTO %T (k, s) VALUES (3, 'd')",
+      """MERGE INTO %T t USING (SELECT * FROM route_src
+        |  WHERE s != 'WHEN MATCHED') s ON t.k = s.k
+        |WHEN MATCHED THEN DELETE""".stripMargin,
+      "MERGE INTO %T t USING route_src s ON t.k = s.k " +
+        "WHEN MATCHED THEN UPDATE SET *",
+      "MERGE INTO %T t USING route_src s ON t.k = s.k " +
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)",
+      "MERGE INTO %T t USING route_src s ON t.k = s.k " +
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 0",
+      "MERGE INTO %T t USING route_src s ON t.k = s.k " +
+        "WHEN NOT MATCHED BY SOURCE AND t.v > 1 THEN DELETE",
+      "MERGE WITH SCHEMA EVOLUTION INTO %T t USING route_src s " +
+        "ON t.k = s.k WHEN NOT MATCHED THEN INSERT *",
+      "ALTER TABLE %T ADD COLUMNS (q INT DEFAULT 7, d DECIMAL(10,2))",
+      "ALTER TABLE %T DROP COLUMN s",
+      "ALTER TABLE %T RENAME COLUMN s TO s2",
+      "ALTER TABLE %T ALTER COLUMN v TYPE DOUBLE",
+      "ALTER TABLE %T ALTER COLUMN s SET NOT NULL",
+      "ALTER TABLE %T ALTER COLUMN s DROP NOT NULL",
+      "ALTER TABLE %T ADD CONSTRAINT v_pos CHECK (v > 0)",
+      "ALTER TABLE %T DROP CONSTRAINT v_pos",
+      "ALTER TABLE %T SET TBLPROPERTIES ('a.b' = 'c')",
+      "ALTER TABLE %T UNSET TBLPROPERTIES ('a.b')",
+      "SHOW PARTITIONS %T",
+      "SHOW TBLPROPERTIES %T",
+      "CREATE TABLE %N (k BIGINT DEFAULT 1) USING %P PARTITIONED BY (k)",
+      "CREATE OR REPLACE TABLE %N (k BIGINT) USING %P")
+    def analyzed(sql: String): scala.util.Try[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] =
+      scala.util.Try(spark.sessionState.executePlan(
+        spark.sessionState.sqlParser.parsePlan(sql)).analyzed)
+    def isGraft(plan: org.apache.spark.sql.catalyst.plans.logical
+        .LogicalPlan): Boolean =
+      plan.getClass.getName.startsWith("graft.sources.TxnLog")
+    val ours = Seq(("txnlog.`" + p + "`", s"txnlog.`$p/new`"),
+      ("route_txn", "route_new"))
+    for (form <- forms; (target, fresh) <- ours) {
+      val sql = form.replace("%T", target).replace("%N", fresh)
+        .replace("%P", "txnlog")
+      val plan = analyzed(sql)
+      assert(plan.isSuccess && isGraft(plan.get),
+        s"$sql was not lowered: $plan")
+    }
+    for (form <- forms) {
+      val sql = form.replace("%T", "route_pq").replace("%N", "route_pq2")
+        .replace("%P", "parquet")
+      analyzed(sql) match {
+        case scala.util.Success(plan) =>
+          assert(!isGraft(plan), s"$sql was lowered onto $plan")
+        case scala.util.Failure(e) =>
+          assert(e.isInstanceOf[org.apache.spark.SparkThrowable],
+            s"$sql: not Spark's own refusal: $e")
+      }
+    }
+    // time travel lowers onto the pinned relation for a path; a parquet
+    // table keeps Spark's refusal
+    assert(spark.sql(s"SELECT count(*) FROM txnlog.`$p` VERSION AS OF 0")
+      .head().getLong(0) === 1L)
+    assert(spark.sql(s"SELECT count(*) FROM txnlog.`$p` TIMESTAMP AS OF " +
+      "'2099-01-01'").head().getLong(0) === 1L)
+    assert(analyzed("SELECT * FROM route_pq VERSION AS OF 0").isFailure)
+    spark.sql("DROP TABLE IF EXISTS route_txn")
+    spark.sql("DROP TABLE IF EXISTS route_pq")
+  }
 }

@@ -230,6 +230,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(Similarity.knnIvfPq(spark, dir).collect().isEmpty)
   }
 
+  test("PQ packed argmin refuses squared distances past its headroom") {
+    import spark.implicits._
+    // one vector whose components are all 2.0 (2,000,000 micro-units)
+    // and a two-cell book per subspace: cell 1 sits on the vector, cell
+    // 0 opposite it, where d2 · 2^16 no longer fits a long
+    val comps = (0L until 64L).map(i => (7L, i / 16, i, 2000000L))
+      .toDF("vec_id", "ss", "i", "x")
+    val book = (for (i <- 0L until 64L; cell <- Seq(0L, 1L))
+      yield (i / 16, i, cell, if (cell == 1L) 2000000L else -2000000L))
+      .toDF("ss", "i", "cell", "c")
+    // without ANSI arithmetic the packed value would wrap silently and
+    // pick cell 0; either way the refusal must name the headroom
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try for (mode <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      val e = intercept[Exception] {
+        Similarity.pqCodesPivoted(comps, book).collect()
+      }
+      assert(e.getMessage.contains("headroom"), s"ansi=$mode: $e")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    // inside the headroom the winner is the nearest cell
+    val near = Similarity.pqCodesPivoted(
+      comps.withColumn("x", ($"x" / 1000).cast("long")),
+      book.withColumn("c", ($"c" / 1000).cast("long"))).head()
+    assert((1 to 4).forall(i => near.getLong(i) % 65536L == 1L))
+  }
+
   test("range search returns exactly the above-threshold pairs") {
     import org.apache.spark.sql.functions.col
     val vecs = graft.sources.Tables.embeddings(spark, sf)

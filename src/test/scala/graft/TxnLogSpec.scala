@@ -4358,4 +4358,37 @@ class TxnLogSpec extends AnyFunSuite {
     assert(n === 2, s"light dv DELETE ran $n jobs (want locate + cdc write)")
     assert(TxnLog.read(spark, t3).count() === 99L)
   }
+
+  test("txnlog: restore drops a CHECK whose backtick-quoted column the restored schema lacks") {
+    import spark.implicits._
+    val t = freshTable()
+    TxnLog.append(spark, t, Seq((1L, 10L)).toDF("k", "v").coalesce(1))
+    val v0 = TxnLog.latestVersion(t)
+    TxnLog.addColumns(t, new org.apache.spark.sql.types.StructType()
+      .add("my col", org.apache.spark.sql.types.LongType))
+    TxnLog.addCheck(spark, t, "my_pos", "(`my col` > 0)")
+    TxnLog.addCheck(spark, t, "v_pos", "v > 0 AND 'my col' != ''")
+    TxnLog.restore(t, v0)
+    // `my col` is one name, gone below its ADD: its CHECK goes too; the
+    // words inside a string literal are no column reference
+    assert(TxnLog.snapshot(t).checks.keySet === Set("v_pos"))
+  }
+
+  test("txnlog: appendSlices refuses slices whose schemas differ, naming the slice") {
+    import spark.implicits._
+    val t = freshTable()
+    val e = intercept[IllegalArgumentException] {
+      TxnLog.appendSlices(spark, t, Seq(
+        Seq((1L, 10L)).toDF("k", "v"),
+        Seq((2L, 20L)).toDF("k", "v"),
+        Seq((3L, "x")).toDF("k", "w")))
+    }
+    assert(e.getMessage.contains("slice 2"), e.getMessage)
+    assert(TxnLog.latestVersion(t) === -1L, "a slice committed anyway")
+    // one frame's filters share its schema (nullability aside)
+    val df = Seq((1L, Option(10L)), (2L, None)).toDF("k", "v")
+    TxnLog.appendSlices(spark, t,
+      Seq(df.filter($"v".isNotNull), df.filter($"v".isNull)))
+    assert(TxnLog.read(spark, t).count() === 2L)
+  }
 }
