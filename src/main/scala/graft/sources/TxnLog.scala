@@ -2651,13 +2651,15 @@ object TxnLog {
     * are interrupted and awaited, and the Spark jobs they started are
     * cancelled, before the failure rethrows: the caller's seal() must
     * not remove a stage's .inflight marker while a sibling still
-    * writes into it. */
+    * writes into it. At most 8 thunks run at once (the widest wave a
+    * caller issues today: 8 skipping slices; DML stages at most 4),
+    * so an N-slice append does not start N threads; the rest queue. */
   private[graft] def stagedPar[A](s: SparkSession,
       thunks: Seq[() => A]): Seq[A] = {
     if (thunks.length <= 1) return thunks.map(_())
     val tag = s"graft-staged-${UUID.randomUUID()}"
-    val pool =
-      java.util.concurrent.Executors.newFixedThreadPool(thunks.length)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(thunks.length, 8))
     try {
       val futs = thunks.map(th => pool.submit(
         new java.util.concurrent.Callable[A] {
@@ -2733,165 +2735,32 @@ object TxnLog {
     * nothing matched). */
   def delete(s: SparkSession, t: Table, predicate: Column,
              alias: Option[String] = None,
-             snap0: Option[Snapshot] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name,
-      lit, not}
-    def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
-    val cond = coalesce(predicate, lit(false))
-    val snap = snap0.getOrElse(snapshot(t))
-    val statsCols = liveStatsCols(snap)
-    // manifest pruning BEFORE the locating scan: a selective delete on
-    // a stats-tracked column opens only the sliver whose (min, max)
-    // intersects the predicate's ranges — at 100 TB the difference
-    // between touching a few files and scanning the table once per
-    // delete. Untranslatable predicates fall back to the full scan.
-    val candidates = {
-      val box = dmlBox(predicate)
-      if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-    }
-    if (candidates.isEmpty) return snap.version
-    val affectedRel = relsOf(t, snap,
-      al(readRels(s, t, snap, candidates)
-          .withColumn("_f", input_file_name()))
-        .filter(cond)
-        .select(col("_f")).distinct()
-        .collect() // file-count scale: one row per affected file
-        .map(_.getString(0)).toSeq)
-    if (affectedRel.isEmpty) return snap.version
-    val affected = al(readRels(s, t, snap, affectedRel))
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // survivors restage THROUGH the partition layout (stageAdds),
-      // so a delete never flattens files out of partition discipline;
-      // the change files stay flat (they are the feed, not the table).
-      // The survivor restage and the change-file write are
-      // independent sliver-scale jobs — overlapped (stagedPar, §2.6)
-      val partCols = snap.partCols
-      val staged = stagedPar(s, Seq(
-        () => stageAdds(s, t, affected.filter(not(cond)), stage,
-          partCols, statsCols, snap.schemaJson),
-        () => {
-          toPhysical(affected.filter(cond),
-            snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString)
-          stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-        }))
-      val adds = staged(0)
-      val cdcLines = staged(1)
-      // auto-retry past file-disjoint interlopers (a blind append
-      // commutes with this delete at write-serializable isolation);
-      // the read set is every file the locating scan OPENED, so an
-      // intervening rewrite of any scanned file still refuses
-      commit(t, snap.version, adds = Nil, removes = affectedRel,
-        extra = adds ++ cdcLines, reconcileDisjoint = true,
-        readSet = candidates.toSet)
-    } finally seal(t, stage, cdcStage)
-  }
+             snap0: Option[Snapshot] = None): Long =
+    rewriteWhere(s, t, predicate, None, alias, snap0, dvCaps = None)
 
   /** Row-level UPDATE: rewrite every row matching `predicate` with
     * the `set` assignments applied (unlisted columns keep their
     * values; assignment expressions may reference any table column
     * and cast back to the column's type — parquet schema stability
-    * over arbitrary SET expressions). The most-typed DML statement
-    * after DELETE gets the same plan shape: stats-pruned locate
-    * (manifest box BEFORE the locating scan), only files that CONTAIN
-    * matching rows rewrite, survivors and new images restage THROUGH
-    * the partition layout (stageAdds — updating a partition column
-    * moves the row to its new partition directory), and the change
-    * feed carries old images as `cdc delete` change files plus the
-    * new-image data files as `cdc insert` — the (delete old, insert
-    * new) event pair [[changes]] resolves from the log, exactly a
-    * self-merge's CDF without the self-join a merge would pay. A
-    * predicate that evaluates to NULL updates NOTHING for that row
-    * (SQL's "condition is true" contract — `coalesce(pred, false)`).
+    * over arbitrary SET expressions). Same plan shape as [[delete]]
+    * — stats-pruned locate, only files that CONTAIN matching rows
+    * rewrite — and survivors and new images restage THROUGH the
+    * partition layout (updating a partition column moves the row to
+    * its new partition directory). The change feed carries old
+    * images as `cdc delete` change files plus the new-image data
+    * files as `cdc insert` — the (delete old, insert new) event pair
+    * [[changes]] resolves from the log, exactly a self-merge's CDF
+    * without the self-join a merge would pay. A predicate that
+    * evaluates to NULL updates NOTHING for that row (SQL's
+    * "condition is true" contract — `coalesce(pred, false)`).
     * `alias` names the table frame for qualified references in the
-    * predicate/SET expressions (the SQL `UPDATE t x SET …` form);
-    * alias-qualified predicates skip manifest box pruning (the
-    * conjunct extractor sees only bare names) but stay correct —
-    * they locate over the full live set. Returns the committed
-    * version (unchanged when nothing matched). */
+    * predicate/SET expressions (the SQL `UPDATE t x SET …` form).
+    * Returns the committed version (unchanged when nothing
+    * matched). */
   def update(s: SparkSession, t: Table, set: Map[String, Column],
              predicate: Column, alias: Option[String] = None,
-             snap0: Option[Snapshot] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name,
-      lit, not}
-    require(set.nonEmpty, "update needs at least one SET assignment")
-    val cond = coalesce(predicate, lit(false))
-    val snap = snap0.getOrElse(snapshot(t))
-    // validate SET targets BEFORE the no-match early returns: a
-    // typo'd column must fail on an empty partition too, not only
-    // once rows happen to match (migration scripts dry-run empty)
-    snap.schemaJson.map(parseSchema).foreach { schema =>
-      val bad = set.keySet.diff(schema.fieldNames.toSet)
-      require(bad.isEmpty,
-        s"UPDATE SET targets unknown column(s): ${bad.mkString(", ")}")
-    }
-    val statsCols = liveStatsCols(snap)
-    val candidates = {
-      val box = dmlBox(predicate)
-      if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-    }
-    if (candidates.isEmpty) return snap.version
-    // the alias (if any) sits ON TOP of each frame, so both bare and
-    // alias-qualified references resolve in cond and the SET rhs
-    def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
-    val affectedRel = relsOf(t, snap,
-      al(readRels(s, t, snap, candidates)
-          .withColumn("_f", input_file_name()))
-        .filter(cond)
-        .select(col("_f")).distinct()
-        .collect() // file-count scale: one row per affected file
-        .map(_.getString(0)).toSeq)
-    if (affectedRel.isEmpty) return snap.version
-    val affected = al(readRels(s, t, snap, affectedRel))
-    val tCols = affected.columns.toSeq
-    val badSets = set.keySet.diff(tCols.toSet)
-    require(badSets.isEmpty,
-      s"UPDATE SET targets unknown column(s): ${badSets.mkString(", ")}")
-    val newImages = affected.filter(cond).select(tCols.map { c =>
-      set.get(c).map(_.cast(affected.schema(c).dataType).as(c))
-        .getOrElse(col(c))
-    }: _*)
-    val partCols = snap.partCols
-    val survivorStage = newStage(t, t.dataDir)
-    val updatedStage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // the survivor restage, the new-image restage (+ its constraint
-      // check — only NEW images can violate; survivors are rewritten
-      // byte-identical and already satisfied the declaration's
-      // validating scan) and the old-image change-file write are
-      // three independent sliver-scale jobs — overlapped (stagedPar,
-      // §2.6). A constraint refusal still throws before anything
-      // commits; concurrently staged garbage is sealed for vacuum,
-      // exactly as the sequential shape left it.
-      val staged = stagedPar(s, Seq(
-        () => stageAdds(s, t, affected.filter(not(cond)), survivorStage,
-          partCols, statsCols, snap.schemaJson),
-        () => {
-          val a = stageAdds(s, t, newImages, updatedStage, partCols,
-            statsCols, snap.schemaJson)
-          enforceStaged(s, t, Seq(updatedStage), snap.constraints)
-          a
-        },
-        () => {
-          toPhysical(affected.filter(cond),
-            snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString) // old images
-          stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-        }))
-      val adds = staged(0) ++ staged(1)
-      val cdcLines =
-        staged(2) ++
-        stagedFiles(t, updatedStage).map(r => s"cdc\t$r\tinsert")
-      // same write-serializable reconciliation as delete: rebase past
-      // append-only interlopers, refuse when any SCANNED file moved
-      commit(t, snap.version, adds = Nil, removes = affectedRel,
-        extra = adds ++ cdcLines, reconcileDisjoint = true,
-        readSet = candidates.toSet)
-    } finally seal(t, survivorStage, updatedStage, cdcStage)
-  }
+             snap0: Option[Snapshot] = None): Long =
+    rewriteWhere(s, t, predicate, Some(set), alias, snap0, dvCaps = None)
 
   /** Merge-on-read DELETE — the deletion-vector path: files whose
     * matching rows number at most `maxDvRowsPerFile` are NOT
@@ -2919,9 +2788,8 @@ object TxnLog {
                maxDvRowsPerFile: Long = DefaultDvRowCap,
                snap0: Option[Snapshot] = None,
                maxDvBytesPerFile: Long = DefaultDvByteCap): Long =
-    dvRewrite(s, t, predicate, alias, maxDvRowsPerFile,
-      set = Map.empty, snap0 = snap0,
-      maxDvBytesPerFile = maxDvBytesPerFile)
+    rewriteWhere(s, t, predicate, None, alias, snap0,
+      Some((maxDvRowsPerFile, maxDvBytesPerFile)))
 
   /** Merge-on-read UPDATE: the matched rows' OLD positions go dead
     * via deletion vectors (or a copy-on-write rewrite above the
@@ -2934,10 +2802,65 @@ object TxnLog {
                predicate: Column, alias: Option[String] = None,
                maxDvRowsPerFile: Long = DefaultDvRowCap,
                snap0: Option[Snapshot] = None,
-               maxDvBytesPerFile: Long = DefaultDvByteCap): Long = {
-    require(set.nonEmpty, "updateDv needs at least one SET assignment")
-    dvRewrite(s, t, predicate, alias, maxDvRowsPerFile, set, snap0,
-      maxDvBytesPerFile)
+               maxDvBytesPerFile: Long = DefaultDvByteCap): Long =
+    rewriteWhere(s, t, predicate, Some(set), alias, snap0,
+      Some((maxDvRowsPerFile, maxDvBytesPerFile)))
+
+  /** Default per-file light-vector thresholds for merge-on-read DML
+    * (rows dead per statement; bytes of the MERGED encoded vector) —
+    * past either, the file rewrites copy-on-write. */
+  private val DefaultDvRowCap = 100000L
+  private val DefaultDvByteCap = 65536L
+
+  /** How row-level DML on the table at `snap` retires old rows: the
+    * default deletion-vector caps when its `graft.enableDeletionVectors`
+    * property is true, else None (copy-on-write). The one place that
+    * decides — SQL DELETE, UPDATE and MERGE and the streaming upsert
+    * sink all ask here, with the statement's own snapshot (no second
+    * log replay). */
+  private[sources] def dvCapsOf(snap: Snapshot): Option[(Long, Long)] =
+    if (snap.properties.get("graft.enableDeletionVectors")
+        .exists(_.equalsIgnoreCase("true")))
+      Some((DefaultDvRowCap, DefaultDvByteCap))
+    else None
+
+  /** DELETE (`set` None) and UPDATE by predicate, either retirement
+    * mode: the split is `coalesce(predicate, false)` over the files
+    * the predicate's manifest box keeps ([[dmlBox]]; untranslatable
+    * predicates open every live file). SET targets are checked
+    * against the registered schema BEFORE the no-match return — a
+    * typo'd column must fail on an empty partition too, not only once
+    * rows happen to match (migration scripts dry-run empty). The
+    * alias (if any) sits ON TOP of each frame, so both bare and
+    * alias-qualified references resolve in the predicate and the SET
+    * right-hand sides. */
+  private[sources] def rewriteWhere(s: SparkSession, t: Table,
+      predicate: Column, set: Option[Map[String, Column]],
+      alias: Option[String], snap0: Option[Snapshot],
+      dvCaps: Option[(Long, Long)]): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    require(set.forall(_.nonEmpty), "UPDATE needs at least one SET assignment")
+    val snap = snap0.getOrElse(snapshot(t))
+    def checkTargets(have: Seq[String]): Unit = set.foreach { m =>
+      val bad = m.keySet.diff(have.toSet)
+      require(bad.isEmpty,
+        s"UPDATE SET targets unknown column(s): ${bad.mkString(", ")}")
+    }
+    snap.schemaJson.foreach(js => checkTargets(parseSchema(js).fieldNames))
+    val cond = coalesce(predicate, lit(false))
+    def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
+    val box = dmlBox(predicate)
+    rewriteRows(s, t, snap,
+      if (box.isEmpty) snap.liveFiles else pruneBox(snap, box),
+      touched = df => al(df).filter(cond),
+      kept = df => al(df).filter(not(cond)),
+      newRows = set.map(m => (old: DataFrame) => {
+        checkTargets(old.columns)
+        old.select(old.columns.toSeq.map(c =>
+          m.get(c).map(_.cast(old.schema(c).dataType).as(c))
+            .getOrElse(col(c))): _*)
+      }),
+      dvCaps).getOrElse(snap.version)
   }
 
   /** ONE locating job for DV writers: per-file dead sets come back
@@ -2948,7 +2871,9 @@ object TxnLog {
     * caps what it emits per file (ranges AND rows) at the light-file
     * thresholds and signals overflow with a (-1, -1) sentinel — a
     * file past either cap is heavy (copy-on-write) and needs no
-    * exact dead set at all. */
+    * exact dead set at all. Out-of-order input stays correct: it only
+    * splits runs, which the per-file range merge rejoins (or a range
+    * overflow sends the file copy-on-write). */
   private def runLengthDeadSets(
       ds: org.apache.spark.sql.Dataset[(String, Long)],
       capRanges: Long, maxRows: Long): Array[(String, Long, Long)] =
@@ -2987,30 +2912,34 @@ object TxnLog {
       org.apache.spark.sql.Encoders.scalaLong,
       org.apache.spark.sql.Encoders.scalaLong)).collect()
 
-  /** Default per-file light-vector thresholds for merge-on-read DML
-    * (rows dead per statement; bytes of the MERGED encoded vector) —
-    * past either, the file rewrites copy-on-write. */
-  private[sources] val DefaultDvRowCap = 100000L
-  private[sources] val DefaultDvByteCap = 65536L
-
-  /** Partition located dead sets into LIGHT vectors and HEAVY files —
-    * the ONE routing decision deleteDv/updateDv and merge-on-read
-    * MERGE share, so the cap semantics can never silently diverge:
-    * per-partition overflow sentinels (past the ROW cap) are heavy
-    * outright; each surviving file's statement ranges merge with its
-    * EXISTING vector and ride INLINE when the merged encoding fits
-    * the byte cap — past it the vector lands as a SIDECAR file
-    * ([[writeDvSidecar]]) referenced by an `@<rel>` token, so an
-    * adversarial scattered delete stamps a ~50-byte reference instead
-    * of either a megabyte log line or (the old fallback) a full
+  /** Route a statement's touched row `positions` (`_g_fp`, `_g_ri`
+    * over files in `rels`) into LIGHT vectors and HEAVY files — the
+    * ONE routing decision every deletion-vector writer shares
+    * ([[rewriteRows]] and merge-on-read [[mergeIntoKeys]]), so the
+    * cap semantics can never silently diverge. The positions fold
+    * into per-file runs in one job ([[runLengthDeadSets]]; ranges per
+    * file are bounded by the row cap, each range holding at least one
+    * row). Per-partition overflow sentinels (past the ROW cap) are
+    * heavy outright; each surviving file's statement ranges merge
+    * with its EXISTING vector and ride INLINE when the merged
+    * encoding fits the byte cap — past it the vector lands as a
+    * SIDECAR file ([[writeDvSidecar]]) referenced by an `@<rel>`
+    * token, so an adversarial scattered delete stamps a ~50-byte
+    * reference instead of either a megabyte log line or a full
     * copy-on-write rewrite of the data file. Only the row cap routes
-    * copy-on-write now: it bounds the READ-side anti-join work per
-    * file, which a sidecar would not. Returns (dv action lines,
-    * heavy abs-path set). */
-  private def dvLightHeavy(t: Table, runRows: Array[(String, Long, Long)],
-      relOfAbs: Map[String, String], existing: Map[String, String],
-      rowCap: Long, byteCap: Long): (Seq[String], Set[String]) = {
-    val byFile = runRows.groupBy(_._1)
+    * copy-on-write: it bounds the READ-side anti-join work per file,
+    * which a sidecar would not. Returns (dv action lines, heavy
+    * relative paths, sorted). */
+  private def dvLightHeavy(t: Table, snap: Snapshot, positions: DataFrame,
+      rels: Seq[String], caps: (Long, Long)): (Seq[String], Seq[String]) = {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.functions.col
+    val (rowCap, byteCap) = caps
+    val relOfAbs = rels.map(r => encodedAbs(t, r) -> r).toMap
+    val byFile = runLengthDeadSets(
+      positions.select(col("_g_fp"), col("_g_ri")).as[(String, Long)](
+        Encoders.tuple(Encoders.STRING, Encoders.scalaLong)),
+      math.max(16L, rowCap), rowCap).groupBy(_._1)
     val overflow = byFile.collect {
       case (f, rs) if rs.exists(_._2 < 0L) => f }.toSet
     val stmtRanges: Map[String, Seq[(Long, Long)]] =
@@ -3032,7 +2961,7 @@ object TxnLog {
     val resolved: Seq[(String, Either[String, String])] =
       rowLight.flatMap { abs =>
         val ranges = mergeRanges(
-          existing.get(relOfAbs(abs)).map(dvRanges(t, _))
+          snap.dvs.get(relOfAbs(abs)).map(dvRanges(t, _))
             .getOrElse(Nil) ++ stmtRanges(abs))
         // the row cap bounds the MERGED vector, not just this
         // statement's slice: trickle deletes ACCUMULATE per file, and
@@ -3057,220 +2986,216 @@ object TxnLog {
         s"dv\t${relOfAbs(abs)}\t@${sidecarRels.next()}"
     }
     (dvLines,
-      (rowHeavy0 ++ heavyExtra ++ overflow.toSeq).toSet)
+      (rowHeavy0 ++ heavyExtra ++ overflow.toSeq).distinct.map(relOfAbs).sorted)
   }
 
-  private def dvRewrite(s: SparkSession, t: Table, predicate: Column,
-      alias: Option[String], maxDvRowsPerFile: Long,
-      set: Map[String, Column],
-      snap0: Option[Snapshot] = None,
-      maxDvBytesPerFile: Long = DefaultDvByteCap): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    val cond = coalesce(predicate, lit(false))
-    val snap = snap0.getOrElse(snapshot(t))
-    // validate SET targets before the no-match early returns (the
-    // empty-partition dry-run contract, same as update)
-    snap.schemaJson.map(parseSchema).foreach { schema =>
-      val bad = set.keySet.diff(schema.fieldNames.toSet)
-      require(bad.isEmpty,
-        s"UPDATE SET targets unknown column(s): ${bad.mkString(", ")}")
-    }
-    val statsCols = liveStatsCols(snap)
-    def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
-    val candidates = {
-      val box = dmlBox(predicate)
-      if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-    }
-    if (candidates.isEmpty) return snap.version
-    val relOfAbs = candidates
-      .map(rel => encodedAbs(t, rel) -> rel).toMap
-    // the locating scan reads THROUGH existing vectors (already-dead
-    // rows never match again) and exposes (file, row index). It
-    // PERSISTS: the cdc old-image write and an update's new-image
-    // staging re-read the matched rows from cache instead of
-    // re-running the predicate scan, so one DV statement pays the
-    // locate cost once.
-    val hits = al(readRels(s, t, snap, candidates, withPos = true))
-      .filter(cond)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** The one row-level rewrite behind DELETE, UPDATE and whole-row
+    * MERGE, copy-on-write and deletion-vector alike — Delta's DML
+    * shape: locate the touched files, split their rows, restage,
+    * commit once. The caller passes the statement's snapshot and its
+    * pruned `candidates`, the split (`touched` / `kept` map a scan of
+    * table files to the rows the statement retires / leaves alone),
+    * the rows it stages in their place (`newRows` of the touched
+    * rows: UPDATE's SET images, MERGE's source; None for DELETE) and
+    * `dvCaps`.
+    *
+    * Copy-on-write (`dvCaps` None): one file-count-scale distinct
+    * over input_file_name finds the files holding touched rows; they
+    * are removed and their kept rows restage. Deletion vectors: the
+    * locating scan reads THROUGH existing vectors with row positions
+    * and PERSISTS, so the old images and new rows re-read the touched
+    * rows from cache and one statement pays the locate once; the
+    * positions route per file ([[dvLightHeavy]]) — light files gain a
+    * `dv` line and stay live, heavy files rewrite copy-on-write in
+    * the same commit. A split that reorders rows (a join) costs only
+    * run compression there, never correctness.
+    *
+    * Either way the kept-row restage, the new rows (plus their
+    * constraint check — kept rows are byte-identical rewrites and
+    * already satisfied the declaration's validating scan) and the
+    * old-image change files are independent sliver-scale writes,
+    * overlapped ([[stagedPar]]); a refusal still throws before
+    * anything commits, and concurrently staged garbage is sealed for
+    * vacuum. Table rows restage THROUGH the partition layout
+    * ([[stageAdds]]); change files stay flat (they are the feed, not
+    * the table). New rows are also `cdc insert` references (change
+    * files may point at live data files; nothing is written twice),
+    * so the feed is exactly (delete old images, insert new rows).
+    * The commit reconciles past file-disjoint interlopers (a blind
+    * append commutes at write-serializable isolation) and refuses
+    * when any candidate file moved. `schemaLines` is evaluated after
+    * staging. Returns None when no candidate row is touched (the
+    * caller's no-match result applies), else the committed version. */
+  private def rewriteRows(s: SparkSession, t: Table, snap: Snapshot,
+      candidates: Seq[String],
+      touched: DataFrame => DataFrame, kept: DataFrame => DataFrame,
+      newRows: Option[DataFrame => DataFrame],
+      dvCaps: Option[(Long, Long)],
+      schemaLines: => Seq[String] = Nil): Option[Long] = {
+    import org.apache.spark.sql.functions.{col, input_file_name}
+    if (candidates.isEmpty) return None
+    val hits = dvCaps.map(caps => caps ->
+      touched(readRels(s, t, snap, candidates, withPos = true))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
-    // ONE locating job ([[runLengthDeadSets]]): a scan partition's
-    // matched row indices arrive ascending per file, so the runs fold
-    // map-side with no extra shuffle
-    // ranges per file are bounded by the ROW cap (each range holds at
-    // least one row); the byte cap no longer routes copy-on-write —
-    // an over-cap encoding lands as a sidecar — so the collector must
-    // not overflow-sentinel below the row cap
-    val capRanges = math.max(16L, maxDvRowsPerFile)
-    val runRows: Array[(String, Long, Long)] = {
-      import s.implicits._
-      runLengthDeadSets(
-        hits.select(col("_g_fp"), col("_g_ri")).as[(String, Long)],
-        capRanges, maxDvRowsPerFile)
-    }
-    if (runRows.isEmpty) return snap.version
-    // light-vs-heavy routing is the SHARED decision ([[dvLightHeavy]])
-    // — the action SETS the complete dead set (existing vector merged
-    // in), and a scattered delete whose merged encoding outgrows the
-    // byte cap rewrites its file instead of stamping a megabyte-scale
-    // `dv` line into every later checkpoint
-    val (dvLines, heavyAbs) = dvLightHeavy(t, runRows, relOfAbs,
-      snap.dvs, maxDvRowsPerFile, maxDvBytesPerFile)
-    val heavyRels = heavyAbs.toSeq.map(relOfAbs).sorted
-    val partCols = snap.partCols
-    val matched = hits.drop(PosCols: _*)
-    val survivorStage = newStage(t, t.dataDir)
-    val newImageStage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      val survivorAdds =
-        if (heavyRels.isEmpty) Nil
-        else stageAdds(s, t,
-          al(readRels(s, t, snap, heavyRels)).filter(not(cond)),
-          survivorStage, partCols, statsCols, snap.schemaJson)
-      val newImages: Option[DataFrame] =
-        if (set.isEmpty) None
-        else {
-          val tCols = matched.columns.toSeq
-          Some(matched.select(tCols.map { c =>
-            set.get(c).map(_.cast(matched.schema(c).dataType).as(c))
-              .getOrElse(col(c))
-          }: _*))
-        }
-      val newAdds = newImages.toSeq.flatMap(
-        stageAdds(s, t, _, newImageStage, partCols, statsCols,
-          snap.schemaJson))
-      // only the new images can violate (a pure delete stages none)
-      enforceStaged(s, t, Seq(newImageStage), snap.constraints)
-      toPhysical(matched, snap.schemaJson.map(parseSchema))
-        .write.parquet(cdcStage.toString) // old images
-      val cdcLines =
-        stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete") ++
-        stagedFiles(t, newImageStage).map(r => s"cdc\t$r\tinsert")
-      // deletion vectors change read semantics: an older reader
-      // would serve the dead rows — bump the protocol floor in the
-      // same commit (only when a vector is actually stamped)
+      // (files removed, dv lines, old images, kept rows to restage)
+      val (removes, dvLines, old, survivors) = hits match {
+        case Some((caps, h)) =>
+          val (dvLines, heavyRels) =
+            dvLightHeavy(t, snap, h, candidates, caps)
+          if (dvLines.isEmpty && heavyRels.isEmpty) return None
+          (heavyRels, dvLines, h.drop(PosCols: _*),
+            if (heavyRels.isEmpty) None
+            else Some(kept(readRels(s, t, snap, heavyRels))))
+        case None =>
+          val affectedRel = relsOf(t, snap,
+            touched(readRels(s, t, snap, candidates)
+                .withColumn("_f", input_file_name()))
+              .select(col("_f")).distinct()
+              .collect() // file-count scale: one row per affected file
+              .map(_.getString(0)).toSeq)
+          if (affectedRel.isEmpty) return None
+          val affected = readRels(s, t, snap, affectedRel)
+          (affectedRel, Nil, touched(affected), Some(kept(affected)))
+      }
+      val fresh = newRows.map(_(old))
+      val statsCols = liveStatsCols(snap)
+      val survivorStage = newStage(t, t.dataDir)
+      val freshStage = newStage(t, t.dataDir)
+      val cdcStage = newStage(t, t.cdcDir)
+      try {
+        val staged = stagedPar(s, Seq(
+          () => survivors.toSeq.flatMap(stageAdds(s, t, _, survivorStage,
+            snap.partCols, statsCols, snap.schemaJson)),
+          () => fresh.toSeq.flatMap { df =>
+            val a = stageAdds(s, t, df, freshStage, snap.partCols,
+              statsCols, snap.schemaJson)
+            enforceStaged(s, t, Seq(freshStage), snap.constraints)
+            a
+          },
+          () => {
+            toPhysical(old, snap.schemaJson.map(parseSchema))
+              .write.parquet(cdcStage.toString)
+            stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
+          }))
+        val cdc = staged(2) ++
+          stagedFiles(t, freshStage).map(r => s"cdc\t$r\tinsert")
+        Some(commitRowLevel(t, snap, removes, dvLines,
+          schemaLines ++ staged(0) ++ staged(1), cdc, candidates.toSet))
+      } finally seal(t, survivorStage, freshStage, cdcStage)
+    } finally hits.foreach(_._2.unpersist())
+  }
+
+  /** The row-level DML commit tail ([[rewriteRows]], [[mergeIntoKeys]]).
+    * A statement that removes files or stamps vectors commits
+    * `lines` (schema + adds), `dvLines` and the `cdc` references
+    * claiming exactly base+1 — the nonempty `readSet` keeps a
+    * vector-only commit on rewrite claim semantics, since a `dv` line
+    * changes row state without a remove — and reconciles past
+    * file-disjoint interlopers unless FENCED: commit()'s rebase-retry
+    * never re-checks a txn marker, so a fenced merge (the streaming
+    * upsert sink) retries through upsertBatch's outer loop, which
+    * re-checks the fence before every recompute. Vectors raise the
+    * protocol floor in the same commit (an older reader would serve
+    * the dead rows): V3 when any rides a sidecar reference, else V2.
+    * An outcome with neither (only inserts landed) is a plain insert
+    * wave: its adds auto-count in the change feed, so the cdc
+    * references drop (they would deliver every inserted row twice);
+    * under a fence it publishes through [[publishFenced]], and with
+    * nothing to write it commits nothing. `tail` (a txn marker) rides
+    * last. */
+  private def commitRowLevel(t: Table, snap: Snapshot,
+      removes: Seq[String], dvLines: Seq[String], lines: Seq[String],
+      cdc: Seq[String], readSet: Set[String],
+      fence: Option[(String, Long)] = None,
+      tail: Seq[String] = Nil): Long =
+    if (removes.nonEmpty || dvLines.nonEmpty) {
       val proto =
         if (dvLines.exists(_.split('\t')(2).startsWith("@")))
-          Seq(ProtocolV3Line) // sidecar refs demand a v3 reader
+          Seq(ProtocolV3Line)
         else if (dvLines.nonEmpty) Seq(ProtocolV2Line)
         else Nil
-      val extra = proto ++ survivorAdds ++ newAdds ++ dvLines ++ cdcLines
-      // both shapes reconcile past file-disjoint interlopers: the
-      // nonempty readSet keeps the dv-only commit on rewrite claim
-      // semantics (exactly base+1, then rebase-or-refuse) — a dv
-      // line changes row state without a remove line
-      if (heavyRels.nonEmpty)
-        commit(t, snap.version, adds = Nil, removes = heavyRels,
-          extra = extra, reconcileDisjoint = true,
-          readSet = candidates.toSet)
-      else
-        commit(t, snap.version, adds = Nil, removes = Nil,
-          extra = extra, reconcileDisjoint = true,
-          readSet = candidates.toSet)
-    } finally seal(t, survivorStage, newImageStage, cdcStage)
-    } finally hits.unpersist()
+      commit(t, snap.version, adds = Nil, removes = removes,
+        extra = proto ++ lines ++ dvLines ++ cdc ++ tail,
+        reconcileDisjoint = fence.isEmpty, readSet = readSet)
+    } else (lines ++ tail, fence) match {
+      case (all, _) if all.isEmpty => snap.version
+      case (all, Some((app, bid))) => publishFenced(t, app, bid, all)
+      case (all, None) => commit(t, snap.version, adds = Nil, extra = all)
+    }
+
+  /** Publish `lines` into exactly the next free slot unless the
+    * fence (`app`, `bid`) already holds — re-checked before every
+    * attempt, so a replayed twin that landed the batch first is
+    * detected, never re-applied (a blind append's slot walk never
+    * re-checks the marker). Returns the version holding the batch. */
+  @annotation.tailrec
+  private def publishFenced(t: Table, app: String, bid: Long,
+      lines: Seq[String]): Long = {
+    val base = latestVersion(t)
+    if (lastBatch(t, app).exists(_ >= bid)) base
+    else if (tryPublish(t, base + 1, lines)) base + 1
+    else publishFenced(t, app, bid, lines)
   }
 
-  /** MERGE (upsert): for every `source` row, REPLACE the table row
-    * matching on `keyCol` or INSERT it when absent — the whole-row
-    * upsert a CDC-fed lakehouse table runs every sync (callers dedup
-    * the source to one row per key first). Only files that actually
-    * CONTAIN matched keys are rewritten (located with one
-    * left-semi-join + file-count-scale distinct over
-    * input_file_name); survivors restage with recomputed stats, the
-    * OLD images of matched rows come out as `cdc delete` change
-    * files, and the source rows — updates' new images and fresh
-    * inserts alike — stage as new data files that the commit ALSO
-    * references as `cdc insert` actions (change files may point at
-    * live data files; nothing is written twice). So the change feed
-    * of a merge is exactly (delete old images, insert new images),
-    * and [[changes]]/the streaming source resolve it from the log.
-    * A source with no matched key degrades to a plain append. At
-    * 100 TB the cost is one key join over the table plus a rewrite
-    * of the touched sliver. Returns the committed version. */
+  /** MERGE (upsert) by KEY-GROUP REPLACEMENT: every table row whose
+    * `keyCol` value occurs in `source` is removed, and every `source`
+    * row is inserted — the whole-row upsert a CDC-fed lakehouse table
+    * runs every sync. A source with several rows for one key is
+    * well-defined here (all of them land; the key's old rows all
+    * go), unlike the clause form [[mergeIntoKeys]], which must refuse
+    * it because its per-row clauses would depend on join order. Only
+    * files that actually CONTAIN matched keys are rewritten (one
+    * left-semi-join locate over the files the source's key range
+    * keeps, when the key is stats-tracked); survivors restage with
+    * recomputed stats, the OLD images of matched rows come out as
+    * `cdc delete` change files, and the source rows stage as new data
+    * files that the commit ALSO references as `cdc insert` actions —
+    * [[rewriteRows]], whose feed is exactly (delete old images,
+    * insert new images). A source with no matched key degrades to a
+    * plain append; new source columns register in the same commit.
+    * The source is materialized once (a recomputed non-deterministic
+    * source could disagree with itself between the locate and the
+    * staging; its blocks are released at the end). At 100 TB the
+    * cost is one key join over the table plus a rewrite of the
+    * touched sliver. Returns the committed version. */
   def merge(s: SparkSession, t: Table, source: DataFrame,
             keyCol: String): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+    import org.apache.spark.sql.functions.{col, max, min}
     val snap = snapshot(t)
-    val statsCols = liveStatsCols(snap)
-    // one materialization: the upsert reads its source from several
-    // angles; a recomputed non-deterministic source could disagree
-    // with itself between them (blocks released in the finally — a
-    // long-lived session's repeated merges must not accumulate
-    // checkpointed storage for the JVM lifetime)
     val src = source.localCheckpoint()
     try {
-    val keys = src.select(col(keyCol)).distinct()
-    // manifest pruning BEFORE the locating join: when the key column
-    // is stats-tracked, one source-scale min/max aggregate bounds the
-    // key range and only files whose (min, max) intersect it are
-    // opened to find matches — the CDC-sync posture at 100 TB (the
-    // source is sync-sized; the table is not).
-    val candidates =
-      if (!snap.fileStats.values.exists(_.contains(keyCol))) snap.liveFiles
-      else keys.agg(min(col(keyCol)), max(col(keyCol))).head() match {
-        case r if r.isNullAt(0) => Nil // empty source: nothing matches
-        case r => (r.get(0), r.get(1)) match {
-          case (lo: Long, hi: Long) => pruneBox(snap, Seq((keyCol, lo, hi)))
-          case _ => snap.liveFiles // non-long key: cannot prune
+      val keys = src.select(col(keyCol)).distinct()
+      // manifest pruning BEFORE the locating join: when the key column
+      // is stats-tracked, one source-scale min/max aggregate bounds the
+      // key range and only files whose (min, max) intersect it are
+      // opened — the CDC-sync posture at 100 TB (the source is
+      // sync-sized; the table is not)
+      val candidates =
+        if (!snap.fileStats.values.exists(_.contains(keyCol))) snap.liveFiles
+        else keys.agg(min(col(keyCol)), max(col(keyCol))).head() match {
+          case r if r.isNullAt(0) => Nil // empty source: nothing matches
+          case r => (r.get(0), r.get(1)) match {
+            case (lo: Long, hi: Long) => pruneBox(snap, Seq((keyCol, lo, hi)))
+            case _ => snap.liveFiles // non-long key: cannot prune
+          }
         }
+      rewriteRows(s, t, snap, candidates,
+        touched = _.join(keys, Seq(keyCol), "left_semi"),
+        kept = _.join(keys, Seq(keyCol), "left_anti"),
+        newRows = Some((_: DataFrame) => src), dvCaps = None,
+        schemaLines = {
+          val (schema, changed, _) =
+            mergedSchema(t, registeredSchema(t), src.schema)
+          if (changed) Seq(s"schema\t${schema.json}") else Nil
+        }).getOrElse {
+        val statsCols = liveStatsCols(snap)
+        val partCols = snap.partCols
+        if (partCols.isEmpty)
+          appendLines(s, t, src, extraLines = Nil, statsCols = statsCols)
+        else appendPartitioned(s, t, src, partCols,
+          statsCols.filterNot(partCols.contains))
       }
-    val affectedRel = if (candidates.isEmpty) Nil else relsOf(t, snap,
-      readRels(s, t, snap, candidates)
-        .withColumn("_f", input_file_name())
-        .join(keys, Seq(keyCol), "left_semi")
-        .select(col("_f")).distinct()
-        .collect() // file-count scale: one row per affected file
-        .map(_.getString(0)).toSeq)
-    // a partitioned table's survivors AND new images restage THROUGH
-    // its layout — a merge must not erode the partition metadata
-    // dropPartition and pruning depend on (same rule as delete)
-    val partCols = snap.partCols
-    if (affectedRel.isEmpty)
-      return if (partCols.isEmpty)
-        appendLines(s, t, src, extraLines = Nil, statsCols = statsCols)
-      else appendPartitioned(s, t, src, partCols,
-        statsCols.filterNot(partCols.contains))
-    val affected = readRels(s, t, snap, affectedRel)
-    val survivorStage = newStage(t, t.dataDir)
-    val sourceStage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // survivor restage, source restage (+ its constraint check —
-      // only the source's new images/inserts can violate; survivors
-      // are byte-identical rewrites) and the old-image change-file
-      // write are independent sliver-scale jobs — overlapped
-      // (stagedPar, §2.6); refusals still throw before the commit
-      val staged = stagedPar(s, Seq(
-        () => stageAdds(s, t,
-          affected.join(keys, Seq(keyCol), "left_anti"),
-          survivorStage, partCols, statsCols, snap.schemaJson),
-        () => {
-          val a = stageAdds(s, t, src, sourceStage, partCols, statsCols,
-            snap.schemaJson)
-          enforceStaged(s, t, Seq(sourceStage), snap.constraints)
-          a
-        },
-        () => {
-          toPhysical(affected.join(keys, Seq(keyCol), "left_semi"),
-              snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString) // old images, matched rows
-          stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-        }))
-      val adds = staged(0) ++ staged(1)
-      val (schema, changed, _) = mergedSchema(t, registeredSchema(t),
-        src.schema)
-      val cdcLines =
-        staged(2) ++
-        stagedFiles(t, sourceStage).map(r => s"cdc\t$r\tinsert")
-      val schemaLine = if (changed) Seq(s"schema\t${schema.json}") else Nil
-      // reconcile past append-only interlopers; the read set is the
-      // candidate files the locating join opened
-      commit(t, snap.version, adds = Nil, removes = affectedRel,
-        extra = schemaLine ++ adds ++ cdcLines,
-        reconcileDisjoint = true, readSet = candidates.toSet)
-    } finally seal(t, survivorStage, sourceStage, cdcStage)
     } finally org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(src)
   }
 
@@ -3323,8 +3248,9 @@ object TxnLog {
     *
     * A source with more than one row per key is REFUSED loudly (one
     * source-scale aggregate): two source rows hitting the same target
-    * row would make the result depend on join order — the silent
-    * contract [[merge] documents becomes a checked one here.
+    * row would make the result depend on join order. (The whole-row
+    * [[merge]] has no such ambiguity: it replaces each matched key's
+    * rows with ALL of that key's source rows.)
     *
     * Plan shape at 100 TB: the same stats-pruned locate as [[merge]]
     * (source key range → manifest box → candidate files → one semi
@@ -3552,14 +3478,7 @@ object TxnLog {
             allowWiden = evolveSchema)
           latestVersion(t)
         case (None, Some((app, bid))) =>
-          var v = -1L
-          while (v < 0) {
-            val base = latestVersion(t)
-            if (lastBatch(t, app).exists(_ >= bid)) v = base
-            else if (tryPublish(t, base + 1, Seq(s"txn\t$app\t$bid")))
-              v = base + 1
-          }
-          v
+          publishFenced(t, app, bid, Seq(s"txn\t$app\t$bid"))
         case (Some(rows), None) if partCols.nonEmpty =>
           appendPartitioned(s, t, rows, partCols,
             statsCols.filterNot(partCols.contains), extraLines,
@@ -3624,8 +3543,8 @@ object TxnLog {
     // merge-on-read evaluates the clause join one extra time (the
     // locate collect) on top of the survivor/old-image/new-image
     // stages — persist it so the touched-sliver scan and join run
-    // once per statement, the same reasoning as dvRewrite's hits
-    // cache (released in the finally)
+    // once per statement, the same reasoning as [[rewriteRows]]'
+    // persisted hits (released in the finally)
     val withIdx0 = joined.withColumn("_clause", idx)
     val withIdx =
       if (dvCaps.isEmpty) withIdx0
@@ -3637,38 +3556,23 @@ object TxnLog {
       bySource.zipWithIndex.collect {
         case (_: MergeClause.BySourceUpdate, i) => -(i + 1) }
     val tSel = tCols.map(c => col(s"$ta.$c").as(c))
-    // MERGE-ON-READ routing (dvCaps set — the graft.enableDeletionVectors
-    // SQL switch): every touched row's OLD position goes dead via a
-    // `dv` line for files under the light thresholds, copy-on-write
-    // for heavy ones — a one-row matched MERGE on a multi-file table
-    // rewrites NO data file, the CDC-upsert cost model at 100 TB.
-    // Computed BEFORE staging (one extra job over the touched sliver):
-    // the heavy set decides which survivors restage at all. The join
-    // scrambles scan order, so the positions shuffle back to per-file
-    // ascending — sync-sized rows of (path, index), nothing
-    // corpus-scale — before the same run-length collector the
-    // DELETE/UPDATE path uses. Returns (dv lines, heavy abs set,
-    // heavy rel list).
-    val dvInfo: Option[(Seq[String], Set[String], Seq[String])] =
-      dvCaps.map { case (rowCap, byteCap) =>
-        val relOfAbs = affectedRel.map(r => encodedAbs(t, r) -> r).toMap
-        val touchedPos = withIdx.filter(col("_clause") =!= 0)
+    // MERGE-ON-READ routing (dvCaps set — see [[dvCapsOf]]): every
+    // touched row's OLD position goes dead via a `dv` line for files
+    // under the light thresholds, copy-on-write for heavy ones — a
+    // one-row matched MERGE on a multi-file table rewrites NO data
+    // file, the CDC-upsert cost model at 100 TB. Computed BEFORE
+    // staging (one extra job over the touched sliver): the heavy set
+    // decides which survivors restage at all. The join scrambles scan
+    // order, so the positions shuffle back to per-file ascending —
+    // sync-sized rows of (path, index), nothing corpus-scale — before
+    // the shared routing ([[dvLightHeavy]]). (dv lines, heavy rels).
+    val dvInfo: Option[(Seq[String], Seq[String])] =
+      dvCaps.map(caps => dvLightHeavy(t, snap,
+        withIdx.filter(col("_clause") =!= 0)
           .select(col("_g_fp"), col("_g_ri"))
           .repartition(col("_g_fp"))
-          .sortWithinPartitions(col("_g_fp"), col("_g_ri"))
-          .as[(String, Long)](org.apache.spark.sql.Encoders.tuple(
-            org.apache.spark.sql.Encoders.STRING,
-            org.apache.spark.sql.Encoders.scalaLong))
-        val capRanges = math.max(16L, rowCap) // see dvRewrite: the
-        // row cap alone bounds ranges; over-cap encodings ride sidecars
-        val runRows = runLengthDeadSets(touchedPos, capRanges, rowCap)
-        // light-vs-heavy routing is the SHARED decision with
-        // deleteDv/updateDv ([[dvLightHeavy]]) — same caps, same
-        // merged-encoding semantics, by construction
-        val (dvLines, heavyAbs) = dvLightHeavy(t, runRows, relOfAbs,
-          snap.dvs, rowCap, byteCap)
-        (dvLines, heavyAbs, heavyAbs.toSeq.map(relOfAbs).sorted)
-      }
+          .sortWithinPartitions(col("_g_fp"), col("_g_ri")),
+        affectedRel, caps))
     // rows the merge leaves alone: no clause fired. Under merge-on-
     // read only HEAVY files restage their untouched rows — light
     // files stay in place (their dead set is the vector), untouched
@@ -3677,10 +3581,10 @@ object TxnLog {
     val survivors: Option[DataFrame] = dvInfo match {
       case None =>
         Some(withIdx.filter(col("_clause") === 0).select(tSel: _*))
-      case Some((_, heavyAbs, _)) if heavyAbs.isEmpty => None
-      case Some((_, heavyAbs, _)) =>
-        Some(withIdx.filter(col("_clause") === 0 &&
-          col("_g_fp").isInCollection(heavyAbs)).select(tSel: _*))
+      case Some((_, heavyRels)) if heavyRels.isEmpty => None
+      case Some((_, heavyRels)) =>
+        Some(withIdx.filter(col("_clause") === 0 && col("_g_fp")
+          .isInCollection(heavyRels.map(encodedAbs(t, _)))).select(tSel: _*))
     }
     // old images of every row an update/delete clause touched
     val oldImages = withIdx.filter(col("_clause") =!= 0).select(tSel: _*)
@@ -3759,65 +3663,13 @@ object TxnLog {
       val schemaLine =
         (if (widenedAny) Seq(ProtocolV2Line) else Nil) ++
         (if (changed) Seq(s"schema\t${schema.json}") else Nil)
-      // reconciliation is UNFENCED-only: commit()'s rebase-retry
-      // never re-checks a txn marker, and a fenced merge (the
-      // streaming upsert sink) retries through upsertBatch's outer
-      // loop, which re-checks the fence before every recompute — a
-      // replayed twin's batch must be detected, not re-applied
-      val reconcile = fence.isEmpty
-      val mergeReadSet =
-        (if (bySource.nonEmpty) snap.liveFiles else candidates).toSet
-      dvInfo match {
-        case None => // copy-on-write: every affected file rewrites
-          commit(t, snap.version, adds = Nil, removes = affectedRel,
-            extra = schemaLine ++ adds ++ cdcLines ++ extraLines,
-            reconcileDisjoint = reconcile, readSet = mergeReadSet)
-        case Some((dvLines, _, heavyRels)) =>
-          val proto =
-            if (dvLines.exists(_.split('\t')(2).startsWith("@")))
-              Seq(ProtocolV3Line) // sidecar refs demand a v3 reader
-            else if (dvLines.nonEmpty) Seq(ProtocolV2Line)
-            else Nil
-          // a NO-dv, NO-remove outcome (no clause fired on any row;
-          // only inserts landed) is a plain insert wave: its adds
-          // auto-count in the change feed, so cdc refs would deliver
-          // every inserted row twice
-          val cdcAll =
-            if (dvLines.nonEmpty || heavyRels.nonEmpty) cdcLines else Nil
-          val extraAll = proto ++ schemaLine ++ adds ++ dvLines ++
-            cdcAll ++ extraLines
-          if (heavyRels.nonEmpty)
-            // the remove-bearing commit claims base+1, then
-            // reconciles (unfenced) or refuses (fenced) on conflict
-            commit(t, snap.version, adds = Nil, removes = heavyRels,
-              extra = extraAll, reconcileDisjoint = reconcile,
-              readSet = mergeReadSet)
-          else if (dvLines.nonEmpty) {
-            // nonempty readSet keeps rewrite claim semantics on the
-            // dv-only commit even with no removes
-            commit(t, snap.version, adds = Nil, removes = Nil,
-              extra = extraAll, reconcileDisjoint = reconcile,
-              readSet = mergeReadSet)
-          } else if (extraAll.isEmpty) snap.version
-          else fence match {
-            // a NO-dv NO-remove outcome under a FENCE must not
-            // blind-append: commit()'s slot walk never re-checks the
-            // txn marker, so a replayed twin that also passed the
-            // entry fence could land the same insert wave twice —
-            // the same reason the degraded path routes through
-            // appendBatch's fence-rechecking loop
-            case Some((app, bid)) =>
-              var v = -1L
-              while (v < 0) {
-                val base = latestVersion(t)
-                if (lastBatch(t, app).exists(_ >= bid)) v = base
-                else if (tryPublish(t, base + 1, extraAll)) v = base + 1
-              }
-              v
-            case None =>
-              commit(t, snap.version, adds = Nil, extra = extraAll)
-          }
-      }
+      // copy-on-write removes every affected file; merge-on-read only
+      // the heavy ones (light files carry their vector)
+      val (dvLines, removes) = dvInfo.getOrElse((Nil, affectedRel))
+      commitRowLevel(t, snap, removes, dvLines, schemaLine ++ adds,
+        cdcLines,
+        (if (bySource.nonEmpty) snap.liveFiles else candidates).toSet,
+        fence, tail = extraLines)
     } finally seal(t, survivorStage, updatedStage, insertStage, cdcStage)
     } finally { if (dvCaps.nonEmpty) withIdx.unpersist(); () }
     } finally org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(src)
@@ -3870,8 +3722,7 @@ object TxnLog {
         mergeIntoKeys(s, t, df, keyCols, clauses,
           extraLines = Seq(marker), fence = Some((appId, batchId)),
           snap0 = Some(snap),
-          dvCaps = if (GraftSqlParser.dvEnabled(snap))
-            Some((DefaultDvRowCap, DefaultDvByteCap)) else None,
+          dvCaps = dvCapsOf(snap),
           evolveSchema = allowWiden)
         return true
       } catch {

@@ -272,13 +272,6 @@ object GraftSqlParser {
       }
     })
 
-  /** Does the snapshot opt SQL DML into the merge-on-read path?
-    * Takes the statement's OWN snapshot — the property check must
-    * not pay a second full log replay per statement. */
-  private[sources] def dvEnabled(snap: TxnLog.Snapshot): Boolean =
-    snap.properties.get("graft.enableDeletionVectors")
-      .exists(_.equalsIgnoreCase("true"))
-
   /** The path of a `txnlog.\`/p\`` name (two parts, the second
     * path-shaped: every real path has a '/', so a genuine database
     * named txnlog keeps its catalog resolution). */
@@ -582,39 +575,34 @@ final case class TxnLogStatementRule(spark: SparkSession)
 }
 
 /** `DELETE FROM <txnlog table> [[AS] x] [WHERE cond]` →
-  * [[TxnLog.delete]] (no WHERE = delete everything, the SQL contract);
+  * [[TxnLog.delete]], or [[TxnLog.deleteDv]] when the table enables
+  * deletion vectors (no WHERE = delete everything, the SQL contract);
   * an alias qualifies WHERE references. */
 final case class TxnLogDeleteCommand(t: TxnLog.Table,
     delete: DeleteFromTable) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val pred = Shim.toColumn(delete.condition)
-    val alias = GraftSqlParser.aliasOf(delete.table)
-    // graft.enableDeletionVectors routes the statement through the
-    // merge-on-read path — the SQL user's switch to stop rewriting
-    // whole files for trickle deletes. ONE snapshot serves the
-    // property check AND the op itself.
+    // the table's graft.enableDeletionVectors property picks how old
+    // rows retire (TxnLog.dvCapsOf); one snapshot serves both
     val snap = TxnLog.snapshot(t)
-    if (GraftSqlParser.dvEnabled(snap))
-      TxnLog.deleteDv(spark, t, pred, alias, snap0 = Some(snap))
-    else TxnLog.delete(spark, t, pred, alias, snap0 = Some(snap))
+    TxnLog.rewriteWhere(spark, t, Shim.toColumn(delete.condition), None,
+      GraftSqlParser.aliasOf(delete.table), Some(snap), TxnLog.dvCapsOf(snap))
     Seq.empty
   }
 }
 
 /** `UPDATE <txnlog table> [[AS] x] SET a = e, ... [WHERE cond]` →
-  * [[TxnLog.update]] (no WHERE = update every row, the SQL contract).
+  * [[TxnLog.update]] or [[TxnLog.updateDv]], as DELETE (no WHERE =
+  * update every row, the SQL contract).
   * An alias qualifies SET/WHERE references
   * (`UPDATE t x SET v = x.v + 1 WHERE x.k > 3`). */
 final case class TxnLogUpdateCommand(t: TxnLog.Table,
     update: UpdateTable) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    val sets = GraftSqlParser.assignments(update.assignments)
-    val pred = Shim.toColumn(update.condition.getOrElse(Literal(true)))
-    val alias = GraftSqlParser.aliasOf(update.table)
-    val snap = TxnLog.snapshot(t) // one snapshot: check + op
-    if (GraftSqlParser.dvEnabled(snap)) // merge-on-read switch
-      TxnLog.updateDv(spark, t, sets, pred, alias, snap0 = Some(snap))
-    else TxnLog.update(spark, t, sets, pred, alias, snap0 = Some(snap))
+    val snap = TxnLog.snapshot(t) // as DELETE: one snapshot, dvCapsOf
+    TxnLog.rewriteWhere(spark, t,
+      Shim.toColumn(update.condition.getOrElse(Literal(true))),
+      Some(GraftSqlParser.assignments(update.assignments)),
+      GraftSqlParser.aliasOf(update.table), Some(snap), TxnLog.dvCapsOf(snap))
     Seq.empty
   }
 }
@@ -1336,19 +1324,18 @@ final case class TxnLogMergeCommand(t: TxnLog.Table,
       case other => throw new IllegalArgumentException(
         s"unsupported MERGE WHEN NOT MATCHED BY SOURCE action: ${other.sql}")
     }
-    // graft.enableDeletionVectors routes the statement merge-on-read:
-    // matched UPDATE/DELETE clauses dead-list old positions via `dv`
-    // lines (per-file copy-on-write fallback past the light caps),
-    // inserts append as today — CDC upserts stop rewriting files.
-    // ONE snapshot serves the property check AND the merge itself.
+    // graft.enableDeletionVectors routes the statement merge-on-read
+    // (TxnLog.dvCapsOf): matched UPDATE/DELETE clauses dead-list old
+    // positions via `dv` lines (per-file copy-on-write fallback past
+    // the light caps), inserts append as today. ONE snapshot serves
+    // the property check AND the merge itself.
     val snap =
       if (TxnLog.latestVersion(t) < 0) None else Some(TxnLog.snapshot(t))
     TxnLog.mergeIntoKeys(spark, t, src, keys,
       matched ++ notMatched ++ bySource,
       targetAlias = ta, sourceAlias = sa, snap0 = snap,
-      dvCaps = if (snap.exists(GraftSqlParser.dvEnabled))
-        Some((TxnLog.DefaultDvRowCap, TxnLog.DefaultDvByteCap))
-      else None, evolveSchema = merge.withSchemaEvolution)
+      dvCaps = snap.flatMap(TxnLog.dvCapsOf),
+      evolveSchema = merge.withSchemaEvolution)
     Seq.empty
   }
 }

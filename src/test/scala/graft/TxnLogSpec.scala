@@ -55,6 +55,24 @@ class TxnLogSpec extends AnyFunSuite {
     assert(sc.statusTracker.getActiveStageIds.isEmpty)
   }
 
+  test("txnlog: stagedPar runs at most 8 thunks at once and keeps input order") {
+    // 12 thunks, each counting itself in and waiting (up to 1 s) for
+    // all 12 to arrive: a pool of one thread per thunk lets every
+    // thunk in at once, a capped pool holds the last 4 back
+    val all = new java.util.concurrent.CountDownLatch(12)
+    val running = new java.util.concurrent.atomic.AtomicInteger(0)
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    val out = TxnLog.stagedPar(spark, (0 until 12).map(i => () => {
+      peak.accumulateAndGet(running.incrementAndGet(), math.max(_, _))
+      all.countDown()
+      all.await(1, java.util.concurrent.TimeUnit.SECONDS)
+      running.decrementAndGet()
+      i
+    }))
+    assert(out === (0 until 12))
+    assert(peak.get() <= 8, s"${peak.get()} staging thunks ran at once")
+  }
+
   test("txnlog: staged data and tmp log files are invisible until the version links") {
     val t = freshTable()
     TxnLog.append(spark, t, oneRowDf(1))
@@ -4067,6 +4085,63 @@ class TxnLogSpec extends AnyFunSuite {
       "mdvapp", 0L), "replayed batch was not fenced")
     assert(TxnLog.read(spark, mor).filter($"k" === 150L)
       .head().getLong(1) === 5L)
+  }
+
+  test("txnlog: DELETE and UPDATE agree across copy-on-write and deletion vectors") {
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    // twin 3-file tables with stats on k; row 155 is already gone —
+    // by a rewrite in the reference twin, by a vector in the other
+    def seed(dv: Boolean): TxnLog.Table = {
+      val t = freshTable()
+      for (g <- 0 until 3)
+        TxnLog.appendWithStats(spark, t,
+          (g * 100 until (g + 1) * 100).map(i => (i.toLong, i.toLong * 10))
+            .toDF("k", "v").coalesce(1), Seq("k"))
+      if (dv) TxnLog.deleteDv(spark, t, col("k") === 155L)
+      else TxnLog.delete(spark, t, col("k") === 155L)
+      t
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def outcome(t: TxnLog.Table, pre: Long) = {
+      val (ins, del) = TxnLog.changes(spark, t, pre, TxnLog.latestVersion(t))
+      (rows(TxnLog.read(spark, t)), rows(ins), rows(del))
+    }
+    type Run = (TxnLog.Table, Option[Map[String, Column]], Column) => Long
+    // the row cap of 20 keeps the 10-row slices light and sends the
+    // 25- and 55-row slices of the last file copy-on-write
+    val forms: Seq[(String, Run)] = Seq(
+      "delete/update" -> ((t, set, p) => set.fold(TxnLog.delete(spark, t, p))(
+        TxnLog.update(spark, t, _, p))),
+      "deleteDv/updateDv" -> ((t, set, p) => set.fold(
+        TxnLog.deleteDv(spark, t, p))(TxnLog.updateDv(spark, t, _, p))),
+      "deleteDv/updateDv, row cap 20" -> ((t, set, p) => set.fold(
+        TxnLog.deleteDv(spark, t, p, maxDvRowsPerFile = 20L))(
+        TxnLog.updateDv(spark, t, _, p, maxDvRowsPerFile = 20L))))
+    val statements: Seq[(String, Option[Map[String, Column]], Column)] = Seq(
+      ("DELETE", None, col("k") % 10 === 3L || col("k") >= 250L),
+      ("UPDATE", Some(Map("v" -> (col("v") * 100 + 1))),
+        col("k") >= 150L && col("k") % 4 === 1L))
+    for ((stmt, set, pred) <- statements) {
+      val ref = seed(dv = false)
+      val refPre = TxnLog.latestVersion(ref)
+      forms.head._2(ref, set, pred)
+      val want = outcome(ref, refPre)
+      assert(want._3.nonEmpty, s"$stmt touched no row")
+      for ((form, run) <- forms) {
+        val t = seed(dv = true)
+        assert(TxnLog.snapshot(t).dvs.size === 1)
+        val pre = TxnLog.latestVersion(t)
+        val live = TxnLog.snapshot(t).liveFiles.toSet
+        run(t, set, pred)
+        assert(outcome(t, pre) === want, s"$stmt via $form")
+        val after = TxnLog.snapshot(t)
+        if (form.contains("row cap"))
+          assert(after.dvs.nonEmpty && !live.subsetOf(after.liveFiles.toSet),
+            s"$stmt via $form: expected light vectors and a heavy rewrite")
+      }
+    }
   }
 
   test("txnlog: dv split scan — the clean file scans bare with pushdown; only the dv file pays the anti-join") {
