@@ -2651,8 +2651,8 @@ object TxnLog {
     * are interrupted and awaited, and the Spark jobs they started are
     * cancelled, before the failure rethrows: the caller's seal() must
     * not remove a stage's .inflight marker while a sibling still
-    * writes into it. At most 8 thunks run at once (the widest wave a
-    * caller issues today: 8 skipping slices; DML stages at most 4),
+    * writes into it. At most 8 thunks run at once (the widest wave any
+    * caller stages today: 8 skipping slices; DML stages at most 4),
     * so an N-slice append does not start N threads; the rest queue. */
   private[graft] def stagedPar[A](s: SparkSession,
       thunks: Seq[() => A]): Seq[A] = {
