@@ -959,12 +959,8 @@ object TxnLog {
   def appendWithStats(s: SparkSession, t: Table, df: DataFrame,
                       statsCols: Seq[String],
                       allowWiden: Boolean = false): Long = {
-    val declared = declaredPartCols(t)
-    if (declared.isEmpty)
-      appendLines(s, t, df, extraLines = Nil, statsCols = statsCols,
-        allowWiden = allowWiden)
-    else appendPartitionedChecked(s, t, df, declared, // one header read
-      statsCols.filterNot(declared.contains), Nil, allowWiden)
+    appendStaged(s, t, df, declaredPartCols(t), statsCols,
+      allowWiden = allowWiden)
   }
 
   /** Append a sequence of INDEPENDENT slices as consecutive commits:
@@ -1006,30 +1002,32 @@ object TxnLog {
         "routes through appendPartitioned per slice")
     val stages = slices.map(_ => newStage(t, t.dataDir))
     try {
-      val reg = registeredSchema(t)
-      val lineSets = stagedPar(s, slices.zip(stages).map {
-        case (df, stg) => () => {
-          toPhysical(df, reg).write.parquet(stg.toString)
-          addLinesFor(s, t, stg, statsCols)
-        }
+      val reg = registeredSchema(t).map(_.json)
+      val staged = stagedPar(s, slices.zip(stages).map {
+        case (df, stg) => () => stageAdds(s, t, df, stg, Nil, statsCols, reg)
       })
-      slices.indices.map { i =>
+      staged.map { st =>
         val enforcedAt = latestVersion(t)
-        enforceStaged(s, t, Seq(stages(i)), constraintsOf(t))
-        commitRegistering(t, slices(i).schema, lineSets(i),
-          () => enforceStaged(s, t, Seq(stages(i)), constraintsOf(t)),
-          enforcedAt)
+        enforceStaged(s, t, st, constraintsOf(t))
+        commitRegistering(t, st.schema, st.adds,
+          () => enforceStaged(s, t, st, constraintsOf(t)), enforcedAt)
       }
     } finally seal(t, stages: _*)
   }
 
-  private def appendLines(s: SparkSession, t: Table, df: DataFrame,
-                          extraLines: Seq[String],
-                          statsCols: Seq[String],
-                          allowWiden: Boolean = false): Long = {
+  /** The one append body: stage `df` through `partCols` (flat when
+    * empty), enforce the table's constraints on the staged rows and
+    * publish the add lines plus `extraLines` through
+    * [[commitRegistering]]. Under a `fence` (a streaming batch's
+    * `(appId, batchId)`) it returns -1 when the batch already holds. */
+  private def appendStaged(s: SparkSession, t: Table, df: DataFrame,
+      partCols: Seq[String], statsCols: Seq[String],
+      extraLines: Seq[String] = Nil, allowWiden: Boolean = false,
+      fence: Option[(String, Long)] = None): Long = {
     val stage = newStage(t, t.dataDir)
     try {
-      toPhysical(df, registeredSchema(t)).write.parquet(stage.toString)
+      val st = stageAdds(s, t, df, stage, partCols, statsCols,
+        registeredSchema(t).map(_.json))
       // the enforcement's validity horizon is captured BEFORE the
       // check runs: a constraint declared between this read and the
       // first publish attempt moves latestVersion past it, which
@@ -1037,11 +1035,10 @@ object TxnLog {
       // the first iteration — a constraint landing mid-staging can
       // never be skipped by a first-attempt win
       val enforcedAt = latestVersion(t)
-      enforceStaged(s, t, Seq(stage), constraintsOf(t))
-      commitRegistering(t, df.schema,
-        addLinesFor(s, t, stage, statsCols) ++ extraLines,
-        () => enforceStaged(s, t, Seq(stage), constraintsOf(t)),
-        enforcedAt, allowWiden)
+      enforceStaged(s, t, st, constraintsOf(t))
+      commitRegistering(t, df.schema, st.adds ++ extraLines,
+        () => enforceStaged(s, t, st, constraintsOf(t)),
+        enforcedAt, allowWiden, fence)
     } finally seal(t, stage)
   }
 
@@ -1059,16 +1056,24 @@ object TxnLog {
     * base — a first-attempt interloper included, not just a lost
     * slot — re-runs `onSlotLoss` before publishing, closing the
     * window where rows staged before ADD CONSTRAINT could commit
-    * after it unchecked. */
+    * after it unchecked.
+    *
+    * A `fence` (`appId`, `batchId`) is re-checked before every
+    * attempt, first of all: when that app's txn marker already holds
+    * the batch (a replayed twin won the slot), nothing publishes and
+    * the result is -1. */
   private def commitRegistering(t: Table, incoming: StructType,
                                 lines0: Seq[String],
                                 onSlotLoss: () => Unit = () => (),
                                 enforcedAt: Long = Long.MaxValue,
-                                allowWiden: Boolean = false): Long = {
+                                allowWiden: Boolean = false,
+                                fence: Option[(String, Long)] = None): Long = {
     var committed = -1L
     var cleanAt = enforcedAt
     while (committed < 0) {
       val base = latestVersion(t)
+      if (fence.exists { case (app, bid) =>
+          lastBatch(t, app).exists(_ >= bid) }) return -1L
       if (cleanAt != Long.MaxValue && base != cleanAt) {
         onSlotLoss() // something landed since the last enforcement —
         cleanAt = base // a constraint declaration among the options
@@ -1116,26 +1121,7 @@ object TxnLog {
         s"(${declared.mkString(", ")}); this write partitions by " +
         s"(${partCols.mkString(", ")}) — stage through the declared " +
         "layout")
-    appendPartitionedChecked(s, t, df, partCols, statsCols, extraLines,
-      allowWiden)
-  }
-
-  /** [[appendPartitioned]]'s body, for callers that already resolved
-    * the layout against the declaration (no second header read). */
-  private def appendPartitionedChecked(s: SparkSession, t: Table,
-      df: DataFrame, partCols: Seq[String], statsCols: Seq[String],
-      extraLines: Seq[String], allowWiden: Boolean = false): Long = {
-    val stage = newStage(t, t.dataDir)
-    try {
-      toPhysical(df, registeredSchema(t))
-        .write.partitionBy(partCols: _*).parquet(stage.toString)
-      val enforcedAt = latestVersion(t) // see appendLines
-      enforceStaged(s, t, Seq(stage), constraintsOf(t))
-      commitRegistering(t, df.schema,
-        partitionedAddLines(s, t, stage, statsCols) ++ extraLines,
-        () => enforceStaged(s, t, Seq(stage), constraintsOf(t)),
-        enforcedAt, allowWiden)
-    } finally seal(t, stage)
+    appendStaged(s, t, df, partCols, statsCols, extraLines, allowWiden)
   }
 
   /** Splice `part=` tokens into an add-action line (right after the
@@ -1460,45 +1446,14 @@ object TxnLog {
         s"(${declared.mkString(", ")}); this batch partitions by " +
         s"(${partCols0.mkString(", ")}) — stage through the declared " +
         "layout")
-    val partCols = if (partCols0.nonEmpty) partCols0 else declared
-    val stage = newStage(t, t.dataDir)
-    try {
-      // a partitioned table's streaming batches stage THROUGH its
-      // layout (tokens recorded) — same rule as every other write op
-      val out = toPhysical(df, registeredSchema(t))
-      val adds =
-        if (partCols.isEmpty) {
-          out.write.parquet(stage.toString)
-          addLinesFor(s, t, stage, Nil)
-        } else {
-          out.write.partitionBy(partCols: _*).parquet(stage.toString)
-          partitionedAddLines(s, t, stage, Nil)
-        }
-      // BEFORE the marker loop: a refused batch leaves only staged
-      // garbage and never advances the txn high-water mark, so a
-      // retried batch with fixed data still lands. cleanAt captures
-      // the version the enforcement was valid against: any divergence
-      // — a first-attempt interloper included — re-enforces, so a
-      // constraint landing mid-staging is never blind-walked past
-      var cleanAt = latestVersion(t)
-      enforceStaged(s, t, Seq(stage), constraintsOf(t))
-      val marker = s"txn\t$appId\t$batchId"
-      while (true) {
-        val base = latestVersion(t)
-        if (lastBatch(t, appId).exists(_ >= batchId)) return false
-        if (base != cleanAt) {
-          enforceStaged(s, t, Seq(stage), constraintsOf(t))
-          cleanAt = base
-        }
-        val (schema, changed, widened) =
-          mergedSchema(t, registeredSchema(t), df.schema, allowWiden)
-        val lines = (if (widened) Seq(ProtocolV2Line) else Nil) ++
-          (if (changed || base < 0)
-            Seq(s"schema\t${schema.json}") else Nil) ++ adds :+ marker
-        if (tryPublish(t, base + 1, lines)) return true
-      }
-      throw new IllegalStateException("unreachable")
-    } finally seal(t, stage)
+    // a partitioned table's streaming batches stage THROUGH its
+    // layout (tokens recorded) — same rule as every other write op.
+    // The constraint check runs before the first publish attempt: a
+    // refused batch leaves only staged garbage and never advances the
+    // txn high-water mark, so a retried batch with fixed data lands
+    appendStaged(s, t, df, if (partCols0.nonEmpty) partCols0 else declared,
+      Nil, Seq(s"txn\t$appId\t$batchId"), allowWiden,
+      fence = Some((appId, batchId))) >= 0
   }
 
   // ---------------------------------------------------------------
@@ -1785,24 +1740,14 @@ object TxnLog {
     * fails rather than resurrecting its rows. */
   def compact(s: SparkSession, t: Table, targetFiles: Int = 1): Long = {
     val snap = snapshot(t)
-    val partCols = snap.partCols
-    val statsCols = liveStatsCols(snap).filterNot(partCols.contains)
     val stage = newStage(t, t.dataDir)
     try {
-      val df = toPhysical(
-        readRels(s, t, snap, snap.liveFiles).coalesce(targetFiles),
-        snap.schemaJson.map(parseSchema))
       // a partitioned table compacts THROUGH its layout (tokens
       // re-emitted) — OPTIMIZE must never silently flatten the
       // metadata dropPartition and partition pruning depend on
-      val adds =
-        if (partCols.isEmpty) {
-          df.write.parquet(stage.toString)
-          addLinesFor(s, t, stage, statsCols)
-        } else {
-          df.write.partitionBy(partCols: _*).parquet(stage.toString)
-          partitionedAddLines(s, t, stage, statsCols)
-        }
+      val adds = stageAdds(s, t,
+        readRels(s, t, snap, snap.liveFiles).coalesce(targetFiles),
+        stage, snap.partCols, liveStatsCols(snap), snap.schemaJson).adds
       commit(t, snap.version, adds = Nil, removes = snap.liveFiles,
         extra = adds ++ noopRewriteLines, reconcileDisjoint = true)
     } finally seal(t, stage)
@@ -1883,10 +1828,8 @@ object TxnLog {
                 files, snap.dvs, withPos = false),
                 dataFields)
             }
-          toPhysical(df.coalesce(targetFiles), schema)
-            .write.parquet(stage.toString)
-          val lines = addLinesFor(s, t, stage,
-            statsCols.filterNot(spec.contains))
+          val lines = stageAdds(s, t, df.coalesce(targetFiles), stage,
+            Nil, statsCols.filterNot(spec.contains), snap.schemaJson).adds
           val pTok = spec.toSeq.sortBy(_._1)
             .map { case (c, v) => s"part=${escapePart(c)}=${escapePart(v)}" }
           val decorated =
@@ -1979,7 +1922,6 @@ object TxnLog {
         s"(${partCols.mkString(", ")}) — the layout already clusters " +
         "on those")
     val statsCols = (liveStatsCols(snap) ++ keys).distinct.sorted
-      .filterNot(partCols.contains)
     val stage = newStage(t, t.dataDir)
     try {
       val clustered = readRels(s, t, snap, snap.liveFiles)
@@ -1989,16 +1931,8 @@ object TxnLog {
         .drop("_z")
       // a partitioned table z-clusters WITHIN its layout (tokens
       // re-emitted) — same no-silent-flattening rule as compact
-      val out = toPhysical(clustered, snap.schemaJson.map(parseSchema))
-      val adds =
-        if (partCols.isEmpty) {
-          out.write.parquet(stage.toString)
-          addLinesFor(s, t, stage, statsCols)
-        } else {
-          out.write.partitionBy(partCols: _*)
-            .parquet(stage.toString)
-          partitionedAddLines(s, t, stage, statsCols)
-        }
+      val adds = stageAdds(s, t, clustered, stage, partCols, statsCols,
+        snap.schemaJson).adds
       commit(t, snap.version, adds = Nil, removes = snap.liveFiles,
         extra = adds ++ noopRewriteLines, reconcileDisjoint = true)
     } finally seal(t, stage)
@@ -2057,8 +1991,9 @@ object TxnLog {
     * files may point at data files; the old ones stay on disk until
     * vacuum, the same horizon as time travel). A replace RESETS the
     * registered schema to `df`'s — the table's new truth — while
-    * historical versions keep theirs. An empty table degrades to a
-    * plain first append. */
+    * historical versions keep theirs. On an empty table or a fresh
+    * location the replace still claims exactly its slot: a writer
+    * that lands first makes it refuse, never vanish under it. */
   def replace(s: SparkSession, t: Table, df: DataFrame,
               partCols0: Seq[String] = Nil): Long = {
     // an overwrite resets the DATA, not a DECLARED layout: the
@@ -2075,62 +2010,18 @@ object TxnLog {
         s"(${declared.mkString(", ")}); this overwrite partitions by " +
         s"(${partCols0.mkString(", ")}) — stage through the declared " +
         "layout")
-    val partCols = if (partCols0.nonEmpty) partCols0 else declared
-    if (latestVersion(t) < 0) {
-      if (partCols.nonEmpty) return appendPartitioned(s, t, df, partCols)
-      return appendLines(s, t, df, extraLines = Nil, statsCols = Nil)
-    }
-    val snap = snapshot(t)
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // a replace may carry a partition layout forward (the SQL
-      // INSERT OVERWRITE / Complete-mode sink contract: no write op
-      // silently flattens a partitioned table)
-      val addLines =
-        if (partCols.isEmpty) {
-          df.write.parquet(stage.toString)
-          addLinesFor(s, t, stage, Nil)
-        } else {
-          df.write.partitionBy(partCols: _*).parquet(stage.toString)
-          partitionedAddLines(s, t, stage, Nil)
-        }
-      enforceStaged(s, t, Seq(stage), snap.constraints)
-      val rels = stagedFiles(t, stage)
-      val schemaLine =
-        if (snap.schemaJson.contains(df.schema.json)) Nil
-        else Seq(s"schema\t${df.schema.json}")
-      // a no-removes commit's adds auto-count as the insert wave:
-      // cdc refs there would deliver every staged row twice (the
-      // empty-live-set overwrite — e.g. after a delete-all)
-      val cdc =
-        if (snap.liveFiles.isEmpty) Nil
-        else replaceVictimCdc(s, t, snap, snap.liveFiles, cdcStage) ++
-          rels.map(r => s"cdc\t$r\tinsert")
-      commit(t, snap.version, adds = Nil,
-        removes = snap.liveFiles,
-        extra = schemaLine ++ addLines ++ cdc)
-    } finally seal(t, stage, cdcStage)
-  }
-
-  /** Victim-side CDF for a whole-set replace: vector-FREE victims
-    * ride zero-copy `cdc delete` refs; a victim CARRYING a deletion
-    * vector stages its LIVE rows as a change file instead — a raw
-    * ref would re-deliver its dead rows (the same rule the scoped
-    * replaces apply). */
-  private def replaceVictimCdc(s: SparkSession, t: Table,
-      snap: Snapshot, victims: Seq[String], cdcStage: Path)
-      : Seq[String] = {
-    val (dvVictims, plainVictims) = victims.partition(snap.dvs.contains)
-    val dvCdc =
-      if (dvVictims.isEmpty) Nil
-      else {
-        toPhysical(readRels(s, t, snap, dvVictims),
-          snap.schemaJson.map(parseSchema))
-          .write.parquet(cdcStage.toString)
-        stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-      }
-    plainVictims.map(r => s"cdc\t$r\tdelete") ++ dvCdc
+    val snap = if (latestVersion(t) < 0) None else Some(snapshot(t))
+    // a replace may carry a partition layout forward (the SQL INSERT
+    // OVERWRITE / Complete-mode sink contract: no write op silently
+    // flattens a partitioned table); the staged files hold the new
+    // schema's own names, and no stats are stamped
+    overwrite(s, t, snap, Some(df),
+      if (partCols0.nonEmpty) partCols0 else declared, statsCols = Nil,
+      mapping = None, snap.fold(NoConstraints)(_.constraints),
+      header =
+        if (snap.exists(_.schemaJson.contains(df.schema.json))) Nil
+        else Seq(s"schema\t${df.schema.json}"),
+      victims = _ => Some(snap.fold(Seq.empty[String])(_.liveFiles)))
   }
 
   /** Partition-scoped OVERWRITE — Delta's `replaceWhere` / SQL
@@ -2185,34 +2076,30 @@ object TxnLog {
     require(missing.isEmpty,
       s"replaceWhere input is missing scoped partition column(s): " +
         missing.toSeq.sorted.mkString(", "))
-    val victims = snap.liveFiles.filter { rel =>
-      val p = snap.filePartitions.getOrElse(rel, Map.empty)
-      spec.forall { case (c, v) => p.get(c).contains(v) }
-    }
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      val addLines = stageAdds(s, t, df, stage, partCols,
-        liveStatsCols(snap), snap.schemaJson)
-      // Delta's scope validation, on the STAGED OUTPUT rather than a
-      // separate pass over the input plan — a nondeterministic source
-      // could satisfy a pre-staging check and then stage DIFFERENT
-      // rows, landing data the overwrite never claimed to touch; the
-      // staged partition tokens are what will actually commit, and
-      // checking them costs zero extra jobs
-      val strays = addLines.flatMap { line =>
-        val toks = addLineParts(line)
-        spec.collectFirst { case (c, v) if !toks.get(c).contains(v) =>
-          s"$c=${toks.getOrElse(c, "<none>")}"
+    overwrite(s, t, Some(snap), Some(df), partCols, liveStatsCols(snap),
+      snap.schemaJson, snap.constraints,
+      schemaHeader(t, snap, df.schema, allowWiden),
+      victims = adds => {
+        // Delta's scope validation, on the STAGED OUTPUT rather than a
+        // separate pass over the input plan — a nondeterministic
+        // source could satisfy a pre-staging check and then stage
+        // DIFFERENT rows; the staged partition tokens are what will
+        // actually commit, and checking them costs zero extra jobs
+        val strays = adds.flatMap { line =>
+          val toks = addLineParts(line)
+          spec.collectFirst { case (c, v) if !toks.get(c).contains(v) =>
+            s"$c=${toks.getOrElse(c, "<none>")}"
+          }
         }
-      }
-      require(strays.isEmpty,
-        s"replaceWhere(${spec.map { case (c, v) => s"$c=$v" }
-          .mkString(", ")}) received row(s) outside the scoped " +
-          s"partition(s): ${strays.distinct.take(3).mkString(", ")}")
-      replaceScopedCommit(s, t, snap, victims, stage, cdcStage,
-        addLines, df.schema, allowWiden)
-    } finally seal(t, stage, cdcStage)
+        require(strays.isEmpty,
+          s"replaceWhere(${spec.map { case (c, v) => s"$c=$v" }
+            .mkString(", ")}) received row(s) outside the scoped " +
+            s"partition(s): ${strays.distinct.take(3).mkString(", ")}")
+        Some(snap.liveFiles.filter { rel =>
+          val p = snap.filePartitions.getOrElse(rel, Map.empty)
+          spec.forall { case (c, v) => p.get(c).contains(v) }
+        })
+      })
   }
 
   /** DYNAMIC partition overwrite — `writeTo(t).overwritePartitions()`
@@ -2246,25 +2133,23 @@ object TxnLog {
         s"(${partCols.mkString(", ")}) " +
         s"(e.g. ${blind.take(2).mkString(", ")}); compact the table " +
         "back into partition discipline first")
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      val addLines = stageAdds(s, t, df, stage, partCols,
-        liveStatsCols(snap), snap.schemaJson)
-      if (addLines.isEmpty) return snap.version // empty input: no-op
-      val stagedSpecs: Set[Map[String, String]] = addLines.map { l =>
-        val toks = addLineParts(l)
-        partCols.map(c => c -> toks.getOrElse(c,
-          throw new IllegalStateException(
-            s"staged file missing partition token for $c"))).toMap
-      }.toSet
-      val victims = snap.liveFiles.filter { rel =>
-        val p = snap.filePartitions.getOrElse(rel, Map.empty)
-        stagedSpecs.contains(partCols.map(c => c -> p(c)).toMap)
-      }
-      replaceScopedCommit(s, t, snap, victims, stage, cdcStage,
-        addLines, df.schema, allowWiden)
-    } finally seal(t, stage, cdcStage)
+    overwrite(s, t, Some(snap), Some(df), partCols, liveStatsCols(snap),
+      snap.schemaJson, snap.constraints,
+      schemaHeader(t, snap, df.schema, allowWiden),
+      victims = adds =>
+        if (adds.isEmpty) None // empty input: no-op
+        else {
+          val stagedSpecs: Set[Map[String, String]] = adds.map { l =>
+            val toks = addLineParts(l)
+            partCols.map(c => c -> toks.getOrElse(c,
+              throw new IllegalStateException(
+                s"staged file missing partition token for $c"))).toMap
+          }.toSet
+          Some(snap.liveFiles.filter { rel =>
+            val p = snap.filePartitions.getOrElse(rel, Map.empty)
+            stagedSpecs.contains(partCols.map(c => c -> p(c)).toMap)
+          })
+        })
   }
 
   /** SHALLOW CLONE — a ZERO-COPY table fork (Delta's CLONE, the
@@ -2380,47 +2265,34 @@ object TxnLog {
       s"bad property key: '$k'"))
     val snap =
       if (latestVersion(t) < 0) None else Some(snapshot(t))
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // the staged data routes through the NEW layout and the NEW
-      // schema (a replace has no mapping/constraints to honor — it
-      // defines them)
-      val addLines = data.toSeq.flatMap(df =>
-        stageAdds(s, t, df, stage, partCols, Nil, None))
-      val removes = snap.map(_.liveFiles).getOrElse(Nil)
-      val oldProps = snap.map(_.properties).getOrElse(Map.empty)
-      val propLines =
-        oldProps.keySet.diff(props.keySet).toSeq.sorted
-          .map(k => s"unsetproperty\t$k") ++
-        props.toSeq.sortBy(_._1).map { case (k, v) =>
-          s"property\t$k\t${escapePart(v)}" }
-      val consLines = snap.toSeq.flatMap(sn =>
+    val oldProps = snap.map(_.properties).getOrElse(Map.empty)
+    // the partcols line is ALWAYS emitted (empty clears a previous
+    // declaration) — the layout is part of the definition
+    val header =
+      (if (schema.fields.exists(_.metadata.contains(ExistsDefaultKey)))
+        Seq(ProtocolV4Line)
+       else Nil) ++
+      Seq(s"schema\t${schema.json}",
+        "partcols\t" + partCols.map(escapePart).mkString(",")) ++
+      // the old definition is fully superseded: no live file holds
+      // a dropped column's bytes anymore, so the tombstones lift —
+      // a post-replace ADD COLUMNS of a once-dropped name is safe
+      (if (snap.isEmpty) Nil else Seq("cleardropped")) ++
+      oldProps.keySet.diff(props.keySet).toSeq.sorted
+        .map(k => s"unsetproperty\t$k") ++
+      props.toSeq.sortBy(_._1).map { case (k, v) =>
+        s"property\t$k\t${escapePart(v)}" } ++
+      snap.toSeq.flatMap(sn =>
         sn.notNull.toSeq.sorted.map(c => s"dropconstraint\tnotnull\t$c") ++
         sn.checks.keys.toSeq.sorted.map(n => s"dropconstraint\tcheck\t$n"))
-      val cdc =
-        if (removes.isEmpty) Nil
-        else replaceVictimCdc(s, t, snap.get, removes, cdcStage) ++
-          stagedFiles(t, stage).map(r => s"cdc\t$r\tinsert")
-      // the partcols line is ALWAYS emitted (empty clears a previous
-      // declaration) — the layout is part of the definition
-      val header =
-        (if (schema.fields.exists(_.metadata.contains(ExistsDefaultKey)))
-          Seq(ProtocolV4Line)
-         else Nil) ++
-        Seq(s"schema\t${schema.json}",
-          "partcols\t" + partCols.map(escapePart).mkString(",")) ++
-        // the old definition is fully superseded: no live file holds
-        // a dropped column's bytes anymore, so the tombstones lift —
-        // a post-replace ADD COLUMNS of a once-dropped name is safe
-        (if (snap.isEmpty) Nil else Seq("cleardropped"))
-      val v = commit(t, snap.map(_.version).getOrElse(-1L), adds = Nil,
-        removes = removes,
-        extra = header ++ propLines ++ consLines ++ addLines ++ cdc,
-        forceClaim = true)
-      checkpoint(t, v) // republish the header: see scaladoc
-      v
-    } finally seal(t, stage, cdcStage)
+    // the staged data routes through the NEW layout and the NEW
+    // schema (a replace has no mapping/constraints to honor — it
+    // defines them)
+    val v = overwrite(s, t, snap, data, partCols, statsCols = Nil,
+      mapping = None, NoConstraints, header,
+      victims = _ => Some(snap.fold(Seq.empty[String])(_.liveFiles)))
+    checkpoint(t, v) // republish the header: see scaladoc
+    v
   }
 
   /** ARBITRARY-PREDICATE overwrite — Delta ≥1.1's general
@@ -2429,18 +2301,18 @@ object TxnLog {
     * hand-composed DELETE + INSERT is two commits with a
     * reader-visible gap. The partition-equality form keeps its
     * metadata-only fast path ([[replaceWhere]] — no data file read);
-    * this general form pays a row-level rewrite of exactly the files
-    * that CONTAIN matching rows (stats-pruned locate, same plan
-    * shape as [[delete]]) plus the incoming staging.
+    * this general form is [[delete]]'s copy-on-write rewrite
+    * ([[rewriteRows]]: stats-pruned locate, only files that CONTAIN
+    * matching rows rewrite) with the incoming rows as its new rows.
     *
     * Contracts: every INCOMING row must satisfy `pred` — validated
     * on the STAGED OUTPUT (a nondeterministic source cannot sneak
     * rows past a pre-staging check), refusing loudly. Survivor rows
     * of touched files restage through the partition layout; CDF
     * stays exact (matched rows ride as `cdc delete` change files,
-    * the staged adds as `cdc insert` refs — or as a plain insert
-    * wave when nothing matched). The commit CLAIMS its slot
-    * (forceClaim): a concurrent writer landing rows in the
+    * the staged adds as `cdc insert` refs — or, when nothing
+    * matched, the commit is [[overwrite]]'s plain insert wave). The
+    * commit CLAIMS its slot: a concurrent writer landing rows in the
     * predicate's scope must refuse, not silently survive — the same
     * strictness as the partition-scoped form. At 100 TB: untouched
     * files are never read; the locate opens only the stats-pruned
@@ -2449,113 +2321,25 @@ object TxnLog {
                        pred: Column,
                        snap0: Option[Snapshot] = None,
                        allowWiden: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col,
-      input_file_name, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
     val snap = snap0.getOrElse(snapshot(t))
-    // see replaceScopedCommit: unknown columns register in the same
-    // commit (additive), wider types need the mergeSchema opt-in
-    val (mergedReg, regChanged, widened) =
-      mergedSchema(t, snap.schemaJson.map(parseSchema), df.schema,
-        allowWiden)
-    val schemaLine =
-      (if (widened) Seq(ProtocolV2Line) else Nil) ++
-      (if (regChanged) Seq(s"schema\t${mergedReg.json}") else Nil)
-    val partCols = snap.partCols
-    val statsCols = liveStatsCols(snap)
+    val header = schemaHeader(t, snap, df.schema, allowWiden)
     val cond = coalesce(pred, lit(false))
-    val stage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    val survivorStage = newStage(t, t.dataDir)
-    try {
-      val addLines = stageAdds(s, t, df, stage, partCols, statsCols,
-        snap.schemaJson)
-      // scope validation on what will actually commit: read the
-      // staged files back (physical → logical under a mapping) and
-      // refuse on the first out-of-scope row — one bounded job.
-      // Partition values would otherwise come back through Spark's
-      // partition-TYPE INFERENCE (r20 verdict: a STRING partition
-      // column whose tokens look numeric — "0012" — reads back as an
-      // integer, mis-evaluating the stray-row probe and corrupting
-      // leading zeros): pin an EXPLICIT read schema — the staged data
-      // columns as written plus every partition column as STRING (the
-      // uninferred token) — and re-assert each partition column's
-      // REGISTERED type below. (r21 verdict item: the old shape
-      // toggled partitionColumnTypeInference on the shared session
-      // conf around the read, which is unsafe the moment two
-      // statements share the session concurrently — Bench's staging
-      // pool introduced exactly that; an explicit schema touches no
-      // session state.)
-      if (addLines.nonEmpty) {
-        val dataFields = toPhysical(df, snap.schemaJson.map(parseSchema))
-          .schema.fields.filterNot(f => partCols.contains(f.name))
-        val probeSchema = StructType(dataFields ++ partCols.map(pc =>
-          org.apache.spark.sql.types.StructField(pc,
-            org.apache.spark.sql.types.StringType)))
-        val raw = s.read.schema(probeSchema).parquet(stage.toString)
-        val stagedDf = snap.schemaJson.map(parseSchema) match {
-          case Some(sc) if hasMapping(sc) =>
-            val m = sc.fields.map(f => physicalName(f) -> f.name).toMap
-            raw.select(raw.columns.toIndexedSeq.map(c =>
-              col(c).as(m.getOrElse(c, c))): _*)
-          case _ => raw
-        }
-        val declType = mergedReg.fields.map(f => f.name -> f.dataType).toMap
-        val typed = partCols.foldLeft(stagedDf)((acc, pc) =>
-          declType.get(pc)
-            .map(dt => acc.withColumn(pc, col(pc).cast(dt)))
-            .getOrElse(acc))
-        val stray = typed.filter(not(cond)).limit(1).collect()
-        require(stray.isEmpty,
-          s"replaceWhere received row(s) outside the predicate's " +
-            s"scope, e.g.: ${stray.headOption.getOrElse("")} — every " +
-            "incoming row must satisfy the replaceWhere condition")
-      }
-      // victims: only files that CONTAIN matching rows rewrite
-      val candidates = {
-        val box = dmlBox(pred)
-        if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-      }
-      val affectedRel =
-        if (candidates.isEmpty) Nil
-        else relsOf(t, snap,
-          readRels(s, t, snap, candidates)
-            .withColumn("_f", input_file_name())
-            .filter(cond)
-            .select(col("_f")).distinct()
-            .collect() // file-count scale: one row per affected file
-            .map(_.getString(0)).toSeq)
-      if (addLines.isEmpty && affectedRel.isEmpty) return snap.version
-      val affected =
-        if (affectedRel.isEmpty) None
-        else Some(readRels(s, t, snap, affectedRel))
-      // survivor restage, incoming-stage constraint check and the
-      // old-image change-file write are independent sliver-scale jobs
-      // — overlapped (stagedPar, §2.6); refusals still precede commit
-      val stagedOut = stagedPar(s, Seq(
-        () => affected.toSeq.flatMap(a =>
-          stageAdds(s, t, a.filter(not(cond)), survivorStage, partCols,
-            statsCols, snap.schemaJson)),
-        () => {
-          enforceStaged(s, t, Seq(stage), snap.constraints)
-          Seq.empty[String]
-        },
-        () => affected.toSeq.flatMap { a =>
-          toPhysical(a.filter(cond), snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString)
-          stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
-        }))
-      val survivorAdds = stagedOut(0)
-      val deleteCdc = stagedOut(2)
-      // an insert-only outcome (nothing matched) is a plain insert
-      // wave: its adds auto-count in the feed, cdc refs would double
-      val insertCdc =
-        if (affectedRel.isEmpty) Nil
-        else stagedFiles(t, stage).map(r => s"cdc\t$r\tinsert")
-      commit(t, snap.version, adds = Nil, removes = affectedRel,
-        extra = schemaLine ++ addLines ++ survivorAdds ++ deleteCdc ++
-          insertCdc,
-        forceClaim = true)
-    } finally seal(t, stage, cdcStage, survivorStage)
+    def inScope(st: Staged): Unit = if (st.adds.nonEmpty) {
+      val stray = readStaged(s, st).filter(not(cond)).limit(1).collect()
+      require(stray.isEmpty,
+        s"replaceWhere received row(s) outside the predicate's " +
+          s"scope, e.g.: ${stray.headOption.getOrElse("")} — every " +
+          "incoming row must satisfy the replaceWhere condition")
+    }
+    rewriteRows(s, t, snap, dmlCandidates(snap, pred),
+      touched = _.filter(cond), kept = _.filter(not(cond)),
+      newRows = Some(_ => df), dvCaps = None, schemaLines = header,
+      claim = true, admit = inScope).getOrElse(
+      overwrite(s, t, Some(snap), Some(df), snap.partCols,
+        liveStatsCols(snap), snap.schemaJson, snap.constraints, header,
+        victims = adds => if (adds.isEmpty) None else Some(Nil),
+        admit = inScope))
   }
 
   /** Partition tokens of a decorated add line, DECODED (the form
@@ -2567,47 +2351,78 @@ object TxnLog {
         case _           => None
       }).toMap
 
-  /** The scoped-replace commit tail [[replaceWhere]] and
-    * [[replaceDynamic]] share: constraint enforcement on the staged
-    * files, exact CDF (zero-copy refs for clean victims, staged live
-    * rows for dv carriers, NO cdc refs on an insert-only backfill —
-    * its adds auto-count), and a slot-claiming commit (forceClaim:
-    * even with zero victims, a concurrent insert into a replaced
-    * partition must refuse, not silently survive). */
-  private def replaceScopedCommit(s: SparkSession, t: Table,
-      snap: Snapshot, victims: Seq[String], stage: Path,
-      cdcStage: Path, addLines: Seq[String],
-      incoming: StructType, allowWiden: Boolean): Long = {
-    enforceStaged(s, t, Seq(stage), snap.constraints)
-    // the incoming shape must merge against the registered schema —
-    // an unknown column would otherwise land in the files but never
-    // register (silently dropped by every pinned read), and a wider
-    // type would poison pinned-narrow scans; additive columns
-    // register in the SAME commit, widening needs the mergeSchema
-    // opt-in like every other write
-    val (mergedReg, regChanged, widened) =
-      mergedSchema(t, snap.schemaJson.map(parseSchema), incoming,
-        allowWiden)
-    val schemaLine =
-      (if (widened) Seq(ProtocolV2Line) else Nil) ++
-      (if (regChanged) Seq(s"schema\t${mergedReg.json}") else Nil)
-    val rels = stagedFiles(t, stage)
-    val (dvVictims, plainVictims) =
-      victims.partition(snap.dvs.contains)
-    val dvCdc =
-      if (dvVictims.isEmpty) Nil
-      else {
-        toPhysical(readRels(s, t, snap, dvVictims),
-          snap.schemaJson.map(parseSchema))
-          .write.parquet(cdcStage.toString)
-        stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
+  /** The schema lines a scoped overwrite commits: the incoming shape
+    * must merge against the registered schema — an unknown column
+    * would otherwise land in the files but never register (silently
+    * dropped by every pinned read), and a wider type would poison
+    * pinned-narrow scans; additive columns register in the SAME
+    * commit, widening needs the mergeSchema opt-in like every other
+    * write. */
+  private def schemaHeader(t: Table, snap: Snapshot, incoming: StructType,
+      allowWiden: Boolean): Seq[String] = {
+    val (merged, changed, widened) = mergedSchema(t,
+      snap.schemaJson.map(parseSchema), incoming, allowWiden)
+    (if (widened) Seq(ProtocolV2Line) else Nil) ++
+      (if (changed) Seq(s"schema\t${merged.json}") else Nil)
+  }
+
+  /** The one staged-replace transaction behind every file-scoped
+    * overwrite — [[replace]], [[replaceWhere]], [[replaceDynamic]],
+    * [[replaceDefinition]], and [[replaceWhereExpr]] when its
+    * predicate matches no row. Delta's overwrite shape: stage the
+    * incoming rows, choose the files they replace, commit adds and
+    * removes together; only the choice differs per form. The caller
+    * passes the statement's snapshot (None on a fresh location), the
+    * incoming frame with its staging arguments (layout, stats
+    * columns, the schema whose column mapping the files follow), the
+    * constraints the staged rows must satisfy, the `header` lines
+    * (schema, layout, properties; evaluated after the checks) and
+    * the `victims` rule: from the staged add lines, the live files
+    * the overwrite removes — or None to commit nothing. `admit` may
+    * refuse the staged rows before anything commits.
+    *
+    * The change feed is exact: a vector-free victim rides a zero-copy
+    * `cdc delete` reference; a victim carrying a deletion vector
+    * stages its LIVE rows as a change file instead (a raw reference
+    * would re-deliver its dead rows). The staged files become `cdc
+    * insert` references only when there are victims: an insert-only
+    * commit's adds auto-count in the feed, and references would
+    * deliver every row twice. The commit claims exactly base+1
+    * (forceClaim): even with zero victims, a concurrent insert into
+    * the replaced scope must refuse, not silently survive. */
+  private def overwrite(s: SparkSession, t: Table, snap: Option[Snapshot],
+      data: Option[DataFrame], partCols: Seq[String],
+      statsCols: Seq[String], mapping: Option[String],
+      constraints: Constraints, header: => Seq[String],
+      victims: Seq[String] => Option[Seq[String]],
+      admit: Staged => Unit = _ => ()): Long = {
+    val base = snap.fold(-1L)(_.version)
+    val stage = newStage(t, t.dataDir)
+    val cdcStage = newStage(t, t.cdcDir)
+    try {
+      val staged = data.map(stageAdds(s, t, _, stage, partCols,
+        statsCols, mapping))
+      val adds = staged.toSeq.flatMap(_.adds)
+      victims(adds).fold(base) { removes =>
+        staged.foreach { st =>
+          admit(st)
+          enforceStaged(s, t, st, constraints)
+        }
+        val head = header
+        val cdc = snap match {
+          case Some(sn) if removes.nonEmpty =>
+            val (dvVictims, plain) = removes.partition(sn.dvs.contains)
+            if (dvVictims.nonEmpty)
+              toPhysical(readRels(s, t, sn, dvVictims),
+                sn.schemaJson.map(parseSchema)).write.parquet(cdcStage.toString)
+            (plain ++ stagedFiles(t, cdcStage)).map(r => s"cdc\t$r\tdelete") ++
+              stagedFiles(t, stage).map(r => s"cdc\t$r\tinsert")
+          case _ => Nil
+        }
+        commit(t, base, adds = Nil, removes = removes,
+          extra = head ++ adds ++ cdc, forceClaim = true)
       }
-    val cdc =
-      if (victims.isEmpty) Nil
-      else plainVictims.map(r => s"cdc\t$r\tdelete") ++ dvCdc ++
-        rels.map(r => s"cdc\t$r\tinsert")
-    commit(t, snap.version, adds = Nil, removes = victims,
-      extra = schemaLine ++ addLines ++ cdc, forceClaim = true)
+    } finally seal(t, stage, cdcStage)
   }
 
   /** The manifest box a DML predicate implies: its top-level AND
@@ -2628,13 +2443,19 @@ object TxnLog {
       case _ => None
     }
 
+  /** The live files a predicate statement's locating scan opens:
+    * those its [[dmlBox]] keeps (every live file when the predicate
+    * implies no box). */
+  private def dmlCandidates(snap: Snapshot, pred: Column): Seq[String] = {
+    val box = dmlBox(pred)
+    if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
+  }
+
   /** (candidate files the DML locating scan would open, files live)
     * for `predicate` — the stats-pruned DML audit, data-free. */
   def plannedFilesDml(t: Table, predicate: Column): (Int, Int) = {
     val snap = snapshot(t)
-    val box = dmlBox(predicate)
-    val cand = if (box.isEmpty) snap.liveFiles else pruneBox(snap, box)
-    (cand.length, snap.liveFiles.length)
+    (dmlCandidates(snap, predicate).length, snap.liveFiles.length)
   }
 
   /** Run a statement's INDEPENDENT staging writes concurrently
@@ -2681,27 +2502,61 @@ object TxnLog {
     } finally pool.shutdown()
   }
 
-  /** Stage `df` under `stage` and return its add-action lines,
-    * THROUGH the partition layout when the table has one — the one
-    * staging shape every rewrite op (delete, update, merge,
-    * mergeInto) shares, so none of them can silently flatten files
-    * out of partition discipline. Partitioned stats drop the
-    * partition columns (they are not in the data files). */
+  /** A table stage [[stageAdds]] wrote: its directory, its add-action
+    * lines, and what [[readStaged]] needs to read its rows back — the
+    * staged frame's (logical) schema, the partition columns it was
+    * laid out by, and each column's name in the files. */
+  private final case class Staged(dir: Path, adds: Seq[String],
+      schema: StructType, partCols: Seq[String],
+      physical: Map[String, String])
+
+  /** Stage `df` under `stage` and return it with its add-action
+    * lines, THROUGH the partition layout when `partCols` is nonempty
+    * — the one writer of table stages (appends, overwrites,
+    * compaction, row-level rewrites), so no write op can silently
+    * flatten files out of partition discipline. The files hold the
+    * physical names of `schemaJson`'s column mapping. Partitioned
+    * stats drop the partition columns (they are not in the data
+    * files). */
   private def stageAdds(s: SparkSession, t: Table, df: DataFrame,
       stage: Path, partCols: Seq[String],
       statsCols: Seq[String],
-      schemaJson: Option[String] = None): Seq[String] = {
+      schemaJson: Option[String] = None): Staged = {
     // the files hold PHYSICAL names (no-op without a mapping);
     // partition columns never map, so partitionBy stays logical
     val out = toPhysical(df, schemaJson.map(parseSchema))
-    if (partCols.isEmpty) {
-      out.write.parquet(stage.toString)
-      addLinesFor(s, t, stage, statsCols)
-    } else {
-      out.write.partitionBy(partCols: _*).parquet(stage.toString)
-      partitionedAddLines(s, t, stage,
-        statsCols.filterNot(partCols.contains))
-    }
+    val adds =
+      if (partCols.isEmpty) {
+        out.write.parquet(stage.toString)
+        addLinesFor(s, t, stage, statsCols)
+      } else {
+        out.write.partitionBy(partCols: _*).parquet(stage.toString)
+        partitionedAddLines(s, t, stage,
+          statsCols.filterNot(partCols.contains))
+      }
+    Staged(stage, adds, df.schema, partCols,
+      df.columns.zip(out.columns).toMap)
+  }
+
+  /** Read a [[Staged]] stage back as the rows it holds, under logical
+    * names: data columns with the types they were written with,
+    * partition columns read as their directory tokens (STRING) and
+    * cast to their written type — the type the commit registers.
+    * Spark's partition-type INFERENCE would otherwise read a STRING
+    * token that looks numeric ("0013") as an integer, so a CHECK or a
+    * scope predicate would see 13. The explicit read schema touches
+    * no session state and needs no footer read. */
+  private def readStaged(s: SparkSession, st: Staged): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{StringType, StructField}
+    val (part, data) = st.schema.fields.partition(f =>
+      st.partCols.contains(f.name))
+    val raw = s.read.schema(StructType(
+      data.map(f => StructField(st.physical(f.name), f.dataType)) ++
+      part.map(f => StructField(f.name, StringType))))
+      .parquet(st.dir.toString)
+    raw.select((data.map(f => col(st.physical(f.name)).as(f.name)) ++
+      part.map(f => col(f.name).cast(f.dataType).as(f.name))).toIndexedSeq: _*)
   }
 
   /** Map input_file_name URIs back to the snapshot's relative live
@@ -2849,9 +2704,7 @@ object TxnLog {
     snap.schemaJson.foreach(js => checkTargets(parseSchema(js).fieldNames))
     val cond = coalesce(predicate, lit(false))
     def al(df: DataFrame): DataFrame = alias.map(df.as(_)).getOrElse(df)
-    val box = dmlBox(predicate)
-    rewriteRows(s, t, snap,
-      if (box.isEmpty) snap.liveFiles else pruneBox(snap, box),
+    rewriteRows(s, t, snap, dmlCandidates(snap, predicate),
       touched = df => al(df).filter(cond),
       kept = df => al(df).filter(not(cond)),
       newRows = set.map(m => (old: DataFrame) => {
@@ -3023,15 +2876,20 @@ object TxnLog {
     * so the feed is exactly (delete old images, insert new rows).
     * The commit reconciles past file-disjoint interlopers (a blind
     * append commutes at write-serializable isolation) and refuses
-    * when any candidate file moved. `schemaLines` is evaluated after
-    * staging. Returns None when no candidate row is touched (the
-    * caller's no-match result applies), else the committed version. */
+    * when any candidate file moved — or, under `claim` (an
+    * overwrite), refuses whenever its slot is taken. `admit` may
+    * refuse the staged new rows before anything commits;
+    * `schemaLines` is evaluated after staging. Returns None when no
+    * candidate row is touched (the caller's no-match result applies),
+    * else the committed version. */
   private def rewriteRows(s: SparkSession, t: Table, snap: Snapshot,
       candidates: Seq[String],
       touched: DataFrame => DataFrame, kept: DataFrame => DataFrame,
       newRows: Option[DataFrame => DataFrame],
       dvCaps: Option[(Long, Long)],
-      schemaLines: => Seq[String] = Nil): Option[Long] = {
+      schemaLines: => Seq[String] = Nil,
+      claim: Boolean = false,
+      admit: Staged => Unit = _ => ()): Option[Long] = {
     import org.apache.spark.sql.functions.{col, input_file_name}
     if (candidates.isEmpty) return None
     val hits = dvCaps.map(caps => caps ->
@@ -3066,12 +2924,13 @@ object TxnLog {
       try {
         val staged = stagedPar(s, Seq(
           () => survivors.toSeq.flatMap(stageAdds(s, t, _, survivorStage,
-            snap.partCols, statsCols, snap.schemaJson)),
+            snap.partCols, statsCols, snap.schemaJson).adds),
           () => fresh.toSeq.flatMap { df =>
-            val a = stageAdds(s, t, df, freshStage, snap.partCols,
+            val st = stageAdds(s, t, df, freshStage, snap.partCols,
               statsCols, snap.schemaJson)
-            enforceStaged(s, t, Seq(freshStage), snap.constraints)
-            a
+            admit(st)
+            enforceStaged(s, t, st, snap.constraints)
+            st.adds
           },
           () => {
             toPhysical(old, snap.schemaJson.map(parseSchema))
@@ -3081,7 +2940,8 @@ object TxnLog {
         val cdc = staged(2) ++
           stagedFiles(t, freshStage).map(r => s"cdc\t$r\tinsert")
         Some(commitRowLevel(t, snap, removes, dvLines,
-          schemaLines ++ staged(0) ++ staged(1), cdc, candidates.toSet))
+          schemaLines ++ staged(0) ++ staged(1), cdc, candidates.toSet,
+          claim = claim))
       } finally seal(t, survivorStage, freshStage, cdcStage)
     } finally hits.foreach(_._2.unpersist())
   }
@@ -3092,10 +2952,12 @@ object TxnLog {
     * claiming exactly base+1 — the nonempty `readSet` keeps a
     * vector-only commit on rewrite claim semantics, since a `dv` line
     * changes row state without a remove — and reconciles past
-    * file-disjoint interlopers unless FENCED: commit()'s rebase-retry
-    * never re-checks a txn marker, so a fenced merge (the streaming
-    * upsert sink) retries through upsertBatch's outer loop, which
-    * re-checks the fence before every recompute. Vectors raise the
+    * file-disjoint interlopers unless FENCED or told to `claim`.
+    * commit()'s rebase-retry never re-checks a txn marker, so a
+    * fenced merge (the streaming upsert sink) retries through
+    * upsertBatch's outer loop, which re-checks the fence before every
+    * recompute; an overwrite must refuse even a blind append into its
+    * scope, so it never reconciles. Vectors raise the
     * protocol floor in the same commit (an older reader would serve
     * the dead rows): V3 when any rides a sidecar reference, else V2.
     * An outcome with neither (only inserts landed) is a plain insert
@@ -3108,7 +2970,7 @@ object TxnLog {
       removes: Seq[String], dvLines: Seq[String], lines: Seq[String],
       cdc: Seq[String], readSet: Set[String],
       fence: Option[(String, Long)] = None,
-      tail: Seq[String] = Nil): Long =
+      tail: Seq[String] = Nil, claim: Boolean = false): Long =
     if (removes.nonEmpty || dvLines.nonEmpty) {
       val proto =
         if (dvLines.exists(_.split('\t')(2).startsWith("@")))
@@ -3117,7 +2979,7 @@ object TxnLog {
         else Nil
       commit(t, snap.version, adds = Nil, removes = removes,
         extra = proto ++ lines ++ dvLines ++ cdc ++ tail,
-        reconcileDisjoint = fence.isEmpty, readSet = readSet)
+        reconcileDisjoint = fence.isEmpty && !claim, readSet = readSet)
     } else (lines ++ tail, fence) match {
       case (all, _) if all.isEmpty => snap.version
       case (all, Some((app, bid))) => publishFenced(t, app, bid, all)
@@ -3188,14 +3050,8 @@ object TxnLog {
           val (schema, changed, _) =
             mergedSchema(t, registeredSchema(t), src.schema)
           if (changed) Seq(s"schema\t${schema.json}") else Nil
-        }).getOrElse {
-        val statsCols = liveStatsCols(snap)
-        val partCols = snap.partCols
-        if (partCols.isEmpty)
-          appendLines(s, t, src, extraLines = Nil, statsCols = statsCols)
-        else appendPartitioned(s, t, src, partCols,
-          statsCols.filterNot(partCols.contains))
-      }
+        }).getOrElse(
+        appendStaged(s, t, src, snap.partCols, liveStatsCols(snap)))
     } finally org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(src)
   }
 
@@ -3467,11 +3323,11 @@ object TxnLog {
     if (affectedRel.isEmpty) {
       // nothing matched: the merge degrades to the insert clauses.
       // UNDER A FENCE (a sink's exactly-once batch) the degraded path
-      // must not blind-append — appendLines' slot-walk never re-checks
-      // the txn marker, so a racing replayed twin could land the same
-      // batch twice; route through appendBatch's fence-rechecking
-      // exact-slot loop instead (a no-insert batch publishes a
-      // marker-only commit through the same loop shape).
+      // must re-check the txn marker before every publish attempt,
+      // or a racing replayed twin could land the same batch twice;
+      // route through appendBatch's fence-rechecking exact-slot loop
+      // (a no-insert batch publishes a marker-only commit through
+      // publishFenced).
       return (insertable(src.alias(sa)), fence) match {
         case (Some(rows), Some((app, bid))) =>
           appendBatch(s, t, rows, app, bid, partCols,
@@ -3479,13 +3335,9 @@ object TxnLog {
           latestVersion(t)
         case (None, Some((app, bid))) =>
           publishFenced(t, app, bid, Seq(s"txn\t$app\t$bid"))
-        case (Some(rows), None) if partCols.nonEmpty =>
-          appendPartitioned(s, t, rows, partCols,
-            statsCols.filterNot(partCols.contains), extraLines,
-            allowWiden = evolveSchema)
         case (Some(rows), None) =>
-          appendLines(s, t, rows, extraLines = extraLines,
-            statsCols = statsCols, allowWiden = evolveSchema)
+          appendStaged(s, t, rows, partCols, statsCols, extraLines,
+            allowWiden = evolveSchema)
         case (None, None) =>
           if (extraLines.isEmpty) snap.version
           else commit(t, snap.version, adds = Nil, extra = extraLines)
@@ -3627,23 +3479,23 @@ object TxnLog {
       // new images + accepted inserts can violate; survivors are
       // byte-identical rewrites) still throws before the commit
       val stagedOut = stagedPar(s, Seq(
-        () => survivors.toSeq.flatMap(
+        () => survivors.toSeq.map(
           stageAdds(s, t, _, survivorStage, partCols, statsCols,
             snap.schemaJson)),
-        () => updatedNew.toSeq.flatMap(
+        () => updatedNew.toSeq.map(
           stageAdds(s, t, _, updatedStage, partCols, statsCols,
             snap.schemaJson)),
-        () => inserted.toSeq.flatMap(
+        () => inserted.toSeq.map(
           stageAdds(s, t, _, insertStage, partCols, statsCols,
             snap.schemaJson)),
         () => {
           toPhysical(oldImages, snap.schemaJson.map(parseSchema))
             .write.parquet(cdcStage.toString)
-          Seq.empty[String]
+          Seq.empty[Staged]
         }))
-      val adds = stagedOut(0) ++ stagedOut(1) ++ stagedOut(2)
-      enforceStaged(s, t, Seq(updatedStage, insertStage),
-        snap.constraints)
+      val adds = stagedOut.flatten.flatMap(_.adds)
+      (stagedOut(1) ++ stagedOut(2)).foreach(
+        enforceStaged(s, t, _, snap.constraints))
       val (schema, changed, widenedAny) = evolvedTo match {
         // WITH SCHEMA EVOLUTION: the pre-computed merged shape lands
         // with the data in this one commit, insert path or not
@@ -4392,12 +4244,14 @@ object TxnLog {
     def isEmpty: Boolean = notNull.isEmpty && checks.isEmpty
   }
 
+  private val NoConstraints = Constraints(Set.empty, Map.empty)
+
   /** Constraints registered in the log (replay-accumulated —
     * checkpoint-bounded like every other metadata read; ops that
     * already hold a [[Snapshot]] read `snap.constraints` instead of
     * paying this second replay). */
   def constraintsOf(t: Table): Constraints =
-    if (latestVersion(t) < 0) Constraints(Set.empty, Map.empty)
+    if (latestVersion(t) < 0) NoConstraints
     else snapshot(t).constraints
 
   /** Declare `col NOT NULL` in one metadata commit — enforced on
@@ -4478,61 +4332,49 @@ object TxnLog {
   }
 
   /** Enforce the table's constraints over a STAGED write before its
-    * commit — reading the staged files back (not the input frame: a
-    * non-deterministic source re-evaluated for the check could
-    * disagree with what was actually written), so a refusal leaves
+    * commit — reading the staged files back through [[readStaged]]
+    * (not the input frame: a non-deterministic source re-evaluated
+    * for the check could disagree with what was actually written;
+    * partition columns at their written types), so a refusal leaves
     * only invisible staged garbage for vacuum and the commit — txn
     * marker included — never lands: the atomic-refusal contract. One
     * local batch-sized scan; zero cost when no constraints are
     * declared. A staged write that OMITS a NOT NULL column entirely
     * (schema-divergent writer whose rows would null-fill on read)
     * refuses too. */
-  private def enforceStaged(s: SparkSession, t: Table,
-                            stages: Seq[Path], c: Constraints): Unit = {
+  private def enforceStaged(s: SparkSession, t: Table, st: Staged,
+                            c: Constraints): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not,
       sum, when}
-    if (c.isEmpty) return
-    // one read per stage root (partition discovery reconstitutes each
-    // stage's own <col>=<val> layout — including the null sentinel —
-    // and two roots with different layouts cannot share one scan)
+    if (c.isEmpty || st.adds.isEmpty) return
     val reg = registeredSchema(t)
-    for (stg <- stages if stagedFiles(t, stg).nonEmpty) {
-      // staged files hold PHYSICAL names; constraints reference
-      // logical ones — alias back before checking
-      val raw = s.read.parquet(stg.toString)
-      val df = reg match {
-        case Some(sc) if sc.fields.exists(f => physicalName(f) != f.name) =>
-          val logOf = sc.fields.map(f => physicalName(f) -> f.name).toMap
-          raw.select(raw.columns.toIndexedSeq.map(cn =>
-            col(cn).as(logOf.getOrElse(cn, cn))): _*)
-        case _ => raw
-      }
-      val have = df.columns.toSet
-      // an omitted column with a NON-NULL default satisfies NOT NULL
-      // (reads serve the default); a DEFAULT NULL column does not —
-      // the backfill would be the very NULL the constraint forbids
-      c.notNull.foreach(cn => require(have.contains(cn) ||
-        reg.flatMap(_.fields.find(_.name == cn))
-          .flatMap(defaultSql).exists(!_.equalsIgnoreCase("NULL")),
-        s"constraint violation: NOT NULL $cn — this write omits the " +
-          "column entirely (it would null-fill on read); nothing was " +
-          "committed"))
-      val viols: Seq[(String, org.apache.spark.sql.Column)] =
-        c.notNull.toSeq.sorted.map(cn =>
-          s"NOT NULL $cn" -> col(cn).isNull) ++
-        c.checks.toSeq.sortBy(_._1).map { case (n, sql) =>
-          // SQL CHECK semantics: TRUE or UNKNOWN satisfies — only a
-          // provably FALSE row violates (a NULL-filled column passes)
-          s"CHECK $n ($sql)" -> not(coalesce(expr(sql), lit(true))) }
-      val aggs = viols.zipWithIndex.map { case ((_, v), i) =>
-        sum(when(v, 1L).otherwise(0L)).as(s"_c$i") }
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      viols.zipWithIndex.foreach { case ((label, _), i) =>
-        val n = if (row.isNullAt(i)) 0L else row.getLong(i)
-        require(n == 0L,
-          s"constraint violation: $label — $n row(s) in this write " +
-            "violate it; nothing was committed")
-      }
+    // logical names, partition columns at their written types
+    val df = readStaged(s, st)
+    val have = df.columns.toSet
+    // an omitted column with a NON-NULL default satisfies NOT NULL
+    // (reads serve the default); a DEFAULT NULL column does not —
+    // the backfill would be the very NULL the constraint forbids
+    c.notNull.foreach(cn => require(have.contains(cn) ||
+      reg.flatMap(_.fields.find(_.name == cn))
+        .flatMap(defaultSql).exists(!_.equalsIgnoreCase("NULL")),
+      s"constraint violation: NOT NULL $cn — this write omits the " +
+        "column entirely (it would null-fill on read); nothing was " +
+        "committed"))
+    val viols: Seq[(String, org.apache.spark.sql.Column)] =
+      c.notNull.toSeq.sorted.map(cn =>
+        s"NOT NULL $cn" -> col(cn).isNull) ++
+      c.checks.toSeq.sortBy(_._1).map { case (n, sql) =>
+        // SQL CHECK semantics: TRUE or UNKNOWN satisfies — only a
+        // provably FALSE row violates (a NULL-filled column passes)
+        s"CHECK $n ($sql)" -> not(coalesce(expr(sql), lit(true))) }
+    val aggs = viols.zipWithIndex.map { case ((_, v), i) =>
+      sum(when(v, 1L).otherwise(0L)).as(s"_c$i") }
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    viols.zipWithIndex.foreach { case ((label, _), i) =>
+      val n = if (row.isNullAt(i)) 0L else row.getLong(i)
+      require(n == 0L,
+        s"constraint violation: $label — $n row(s) in this write " +
+          "violate it; nothing was committed")
     }
   }
 

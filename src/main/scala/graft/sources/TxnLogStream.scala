@@ -349,55 +349,48 @@ class TxnLogStreamProvider extends StreamSourceProvider
 }
 
 private[graft] object TxnLogStreamProvider {
-  /** Parse the `replaceWhere` writer option: a conjunction of
-    * `col = value` equalities (values optionally single- or
-    * double-quoted). The AND split is QUOTE-AWARE — a partition
-    * value containing the word AND must not split the expression —
-    * and a column named twice refuses (silently last-winning on a
-    * contradictory spec would replace the wrong partition). Anything
-    * richer refuses by name — the scoped overwrite is
-    * partition-granular by design; row-scoped rewrites are
-    * DELETE + INSERT. */
+  /** Parse the `replaceWhere` writer option with Spark's expression
+    * parser: a conjunction of `col = literal` equalities, each value
+    * rendered as the recorded partition token its literal's Scala
+    * value gives ([[TxnLogV2WriteBuilder.partToken]]: `k = 07` scopes
+    * `k=7`, a DATE literal scopes `yyyy-MM-dd`). A column named twice
+    * refuses (silently last-winning on a contradictory spec would
+    * replace the wrong partition). Anything richer refuses by name
+    * with IllegalArgumentException — the scoped overwrite is
+    * partition-granular by design; the caller routes such predicates
+    * to the general row-level form. */
   private[graft] def parseReplaceWhere(expr: String)
       : Map[String, String] = {
-    // split on top-level AND tokens (word-bounded, outside quotes)
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var quote: Char = 0
-    var i = 0
-    while (i < expr.length) {
-      val ch = expr.charAt(i)
-      if (quote != 0) {
-        cur += ch
-        if (ch == quote) quote = 0
-        i += 1
-      } else if (ch == '\'' || ch == '"') {
-        quote = ch; cur += ch; i += 1
-      } else if ((ch == 'a' || ch == 'A') && i + 3 <= expr.length &&
-          expr.regionMatches(true, i, "AND", 0, 3) &&
-          (i == 0 || !Character.isLetterOrDigit(expr.charAt(i - 1))) &&
-          (i + 3 == expr.length ||
-            !Character.isLetterOrDigit(expr.charAt(i + 3)))) {
-        parts += cur.toString; cur.clear(); i += 3
-      } else { cur += ch; i += 1 }
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{And, EqualTo,
+      Expression}
+    def refuse(): Nothing = throw new IllegalArgumentException(
+      s"replaceWhere accepts a conjunction of partition-column " +
+        s"equalities (k = 7 AND d = '2020-01-01'); cannot parse: '$expr'")
+    // a constant's Scala value (null and non-constants have none)
+    def value(e: Expression): Option[Any] =
+      if (!e.foldable) None
+      else scala.util.Try(Option(e.eval())).toOption.flatten
+        .map(CatalystTypeConverters.convertToScala(_, e.dataType))
+    def pairs(e: Expression): Seq[(String, String)] = e match {
+      case And(l, r) => pairs(l) ++ pairs(r)
+      case EqualTo(UnresolvedAttribute(Seq(c)), v) =>
+        Seq(c -> TxnLogV2WriteBuilder.partToken(value(v).getOrElse(refuse())))
+      case _ => refuse()
     }
-    parts += cur.toString
-    val Pair = """\s*([A-Za-z_][A-Za-z0-9_]*)\s*=\s*(?:'([^']*)'|"([^"]*)"|([^\s'"]+))\s*""".r
-    val pairs = parts.toSeq.map {
-      case Pair(c, sq, dq, bare) =>
-        c -> Seq(Option(sq), Option(dq), Option(bare)).flatten.head
-      case other =>
-        throw new IllegalArgumentException(
-          s"replaceWhere accepts a conjunction of partition-column " +
-            s"equalities (k = 7 AND d = '2020-01-01'); cannot parse: " +
-            s"'${other.trim}'")
-    }
-    val dup = pairs.groupBy(_._1).collect {
+    val parsed =
+      try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+        .parseExpression(expr)
+      catch { case e: org.apache.spark.sql.catalyst.parser.ParseException =>
+        throw new IllegalArgumentException(e.getMessage, e) }
+    val ps = pairs(parsed)
+    val dup = ps.groupBy(_._1).collect {
       case (c, vs) if vs.length > 1 => c }
     require(dup.isEmpty,
       s"replaceWhere names column(s) more than once: " +
         s"${dup.toSeq.sorted.mkString(", ")}")
-    pairs.toMap
+    ps.toMap
   }
 }
 

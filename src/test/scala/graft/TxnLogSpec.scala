@@ -4466,4 +4466,97 @@ class TxnLogSpec extends AnyFunSuite {
       Seq(df.filter($"v".isNotNull), df.filter($"v".isNull)))
     assert(TxnLog.read(spark, t).count() === 2L)
   }
+
+  test("txnlog: constraint checks read staged STRING partition values as written") {
+    import spark.implicits._
+    val t = freshTable()
+    TxnLog.appendPartitioned(spark, t,
+      Seq((1L, "0012")).toDF("id", "p"), Seq("p"))
+    TxnLog.addCheck(spark, t, "p4", "length(p) = 4")
+    // "0013" has four characters; inferred from its directory token
+    // it would read back as the integer 13
+    TxnLog.appendPartitioned(spark, t,
+      Seq((2L, "0013")).toDF("id", "p"), Seq("p"))
+    assert(TxnLog.read(spark, t).filter(col("id") === 2L)
+      .head().getString(1) === "0013")
+    val bad = intercept[IllegalArgumentException] {
+      TxnLog.appendPartitioned(spark, t,
+        Seq((3L, "13")).toDF("id", "p"), Seq("p"))
+    }
+    assert(bad.getMessage.contains("CHECK p4"), bad.getMessage)
+  }
+
+  test("txnlog: the replaceWhere writer option reads its values as SQL literals") {
+    import spark.implicits._
+    import graft.sources.TxnLogStreamProvider.parseReplaceWhere
+    val t = freshTable()
+    TxnLog.appendPartitioned(spark, t,
+      Seq((1L, 7), (2L, 8)).toDF("v", "k"), Seq("k"))
+    // the integer literal 07 scopes the recorded token k=7
+    Seq((10L, 7)).toDF("v", "k").write.format("txnlog").mode("overwrite")
+      .option("replaceWhere", "k = 07").option("path", t.root.toString)
+      .save()
+    assert(TxnLog.read(spark, t).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq ===
+      Seq((2L, 8), (10L, 7)))
+    assert(parseReplaceWhere("d = DATE '2020-01-02' AND s = \"a AND b\"") ===
+      Map("d" -> "2020-01-02", "s" -> "a AND b"))
+    for (bad <- Seq("k > 1", "k = 1 OR k = 2", "k = v", "k = NULL", "k ="))
+      intercept[IllegalArgumentException](parseReplaceWhere(bad))
+  }
+
+  test("txnlog: every overwrite form writes the same change feed") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    // partition a spans two files, one of which already carries a
+    // deletion vector (row 2 is dead); partition b holds row 5
+    def seed(): TxnLog.Table = {
+      val t = freshTable()
+      TxnLog.appendPartitioned(spark, t,
+        Seq((1L, "a"), (2L, "a"), (3L, "a")).toDF("k", "p").coalesce(1),
+        Seq("p"))
+      TxnLog.appendPartitioned(spark, t,
+        Seq((4L, "a"), (5L, "b")).toDF("k", "p").coalesce(1), Seq("p"))
+      TxnLog.deleteDv(spark, t, col("k") === 2L)
+      assert(TxnLog.snapshot(t).dvs.size === 1)
+      t
+    }
+    def rows(df: DataFrame) = df.select("k", "p").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    // (form, replaces the whole table, run on (table, rows, partition))
+    val forms: Seq[(String, Boolean, (TxnLog.Table, DataFrame, String) => Long)] = Seq(
+      ("replace", true, (t, df, _) => TxnLog.replace(spark, t, df)),
+      ("replaceDefinition", true, (t, df, _) => TxnLog.replaceDefinition(
+        spark, t, df.schema, Seq("p"), Map.empty, Some(df))),
+      ("replaceWhere", false,
+        (t, df, p) => TxnLog.replaceWhere(spark, t, df, Map("p" -> p))),
+      ("replaceDynamic", false,
+        (t, df, _) => TxnLog.replaceDynamic(spark, t, df)),
+      ("replaceWhereExpr", false,
+        (t, df, p) => TxnLog.replaceWhereExpr(spark, t, df, col("p") === p)))
+    def feed(t: TxnLog.Table, run: => Long) = {
+      val pre = TxnLog.latestVersion(t)
+      val v = run
+      assert(v === pre + 1, "not one commit")
+      val (ins, del) = TxnLog.changes(spark, t, pre, v)
+      (rows(ins), rows(del))
+    }
+    for ((form, whole, run) <- forms) {
+      val t = seed()
+      val live = rows(TxnLog.read(spark, t))
+      assert(live === Seq((1L, "a"), (3L, "a"), (4L, "a"), (5L, "b")))
+      val incoming = Seq((10L, "a"), (11L, "a")).toDF("k", "p")
+      // victims: their live rows delete, the dead row 2 never does
+      assert(feed(t, run(t, incoming, "a")) ===
+        ((rows(incoming), if (whole) live else live.filter(_._2 == "a"))),
+        form)
+      // no victims (an emptied table, or a partition nothing holds):
+      // a plain insert wave, each incoming row delivered once
+      val empty = seed()
+      if (whole) TxnLog.delete(spark, empty, lit(true))
+      val fresh = Seq((20L, "z"), (21L, "z")).toDF("k", "p")
+      assert(feed(empty, run(empty, fresh, "z")) === ((rows(fresh), Nil)),
+        s"$form without victims")
+    }
+  }
 }
