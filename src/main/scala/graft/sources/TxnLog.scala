@@ -824,15 +824,6 @@ object TxnLog {
       case _ => df
     }
 
-  /** Select a physically-named frame back to logical names, in
-    * `fields` order — the read half of the mapping. */
-  private def toLogical(df: DataFrame,
-      fields: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    df.select(fields.map(f =>
-      col(physicalName(f)).as(f.name)).toIndexedSeq: _*)
-  }
-
   /** PHYSICAL names tombstoned by DROP COLUMN — replay-accumulated
     * (read only on schema-registering commits, which are rare). */
   private def droppedPhysicals(t: Table): Set[String] =
@@ -1086,6 +1077,7 @@ object TxnLog {
       val lines = (if (widened) Seq(ProtocolV2Line) else Nil) ++
         (if (schemaLine)
           Seq(s"schema\t${schema.json}") else Nil) ++ lines0
+      if (lines.isEmpty) return base // an empty write: nothing to publish
       if (tryPublish(t, base + 1, lines)) committed = base + 1
     }
     committed
@@ -1124,29 +1116,23 @@ object TxnLog {
     appendStaged(s, t, df, partCols, statsCols, extraLines, allowWiden)
   }
 
-  /** Splice `part=` tokens into an add-action line (right after the
-    * path, before any stats triples) — the ONE place the decorated
-    * add grammar is produced. */
-  private def decorateAdd(line: String, pTok: Seq[String]): String = {
-    val arr = line.split('\t')
-    (arr.take(2) ++ pTok ++ arr.drop(2)).mkString("\t")
-  }
-
   /** Add-action lines for a partitionBy-written stage: each file's
-    * `<col>=<val>` path segments become `part=` tokens. */
+    * `<col>=<val>` path segments become `part=` tokens, spliced in
+    * right after the path, before any stats triples — the ONE place
+    * the decorated add grammar is produced. */
   private def partitionedAddLines(s: SparkSession, t: Table, stage: Path,
                                   statsCols: Seq[String]): Seq[String] = {
     val stageRel = t.root.relativize(stage).toString
     addLinesFor(s, t, stage, statsCols).map { line =>
-      val rel = line.split('\t')(1)
-      val segs = rel.stripPrefix(stageRel + "/").split('/').dropRight(1)
-      decorateAdd(line, segs.toIndexedSeq.map { seg =>
+      val arr = line.split('\t')
+      val segs = arr(1).stripPrefix(stageRel + "/").split('/').dropRight(1)
+      (arr.take(2) ++ segs.map { seg =>
         seg.split("=", 2) match {
           case Array(c, v) if c.nonEmpty => s"part=$c=$v"
           case _ => throw new IllegalStateException(
-            s"staged file $rel is not under a <col>=<val> layout")
+            s"staged file ${arr(1)} is not under a <col>=<val> layout")
         }
-      })
+      } ++ arr.drop(2)).mkString("\t")
     }
   }
 
@@ -1221,43 +1207,51 @@ object TxnLog {
     case x => x.longValue
   }
 
-  /** Per-file (min, max) bounds for `physCols`, read from the staged
-    * files' PARQUET FOOTERS on the driver — the metadata a
+  /** Per staged file, its row count and (min, max) bounds for
+    * `physCols`, read from the staged files' PARQUET FOOTERS on the
+    * driver — the metadata a
     * stats-collecting writer already produced during the write —
     * instead of re-SCANNING every staged byte through a Spark
     * aggregate job (guide §1.2 step 1: the read-back was a second
     * full pass over the write's data; at 100 TB that is the
     * difference between O(files) metadata reads and re-reading the
-    * whole commit). Returns None whenever ANY footer lacks exact,
-    * provably-equivalent stats for a requested column — statistics
+    * whole commit). The bounds are None for a file whose footer lacks
+    * exact, provably-equivalent stats for a requested column — statistics
     * absent or unreadable, a NaN-dropped float/double min/max, a
     * physical type outside {INT32, INT64, FLOAT, DOUBLE}, a decimal/
     * date/timestamp logical annotation, or an unknown null count —
-    * and the caller falls back to the aggregate scan, so this path
-    * can only ever emit the IDENTICAL bounds the aggregate would
+    * and the caller then falls back to the aggregate scan, so this
+    * path can only ever emit the IDENTICAL bounds the aggregate would
     * (floor/ceil are monotone, so per-row-group outward rounding
-    * composes to the global statBound). Inner map: rel ->
-    * Some(bounds, physCols order) for files with stats, None for
-    * files with zero non-null values in some column (added stat-less
-    * — the aggregate path's null-aggregate contract). Footers read
-    * from a small driver-side pool: file-count-scale metadata I/O. */
-  private def footerBounds(s: SparkSession, t: Table, rels: Seq[String],
-      physCols: Seq[String]): Option[Map[String, Option[Seq[(Long, Long)]]]] = {
+    * composes to the global statBound). Usable bounds are
+    * Some(bounds, physCols order) for files with stats, Some(None)
+    * for files with zero non-null values in some column (added
+    * stat-less — the aggregate path's null-aggregate contract). An
+    * unreadable footer gives row count -1. Footers read from a small
+    * driver-side pool: file-count-scale metadata I/O. */
+  private def footers(s: SparkSession, t: Table, rels: Seq[String],
+      physCols: Seq[String])
+      : Seq[(String, Long, Option[Option[Seq[(Long, Long)]]])] = {
     import org.apache.parquet.column.statistics.{DoubleStatistics,
       FloatStatistics, IntStatistics, LongStatistics}
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val conf = s.sparkContext.hadoopConfiguration
-    // per file: None = footer unusable (forces global fallback);
-    // Some(None) = no stats for this file; Some(bounds) = usable
-    def boundsOf(rel: String): Option[Option[Seq[(Long, Long)]]] = try {
+    // one set of read options for every footer: open(file) builds a
+    // set per file, which cost 10-25 ms each on a 4-core host
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
+    // per file: (rows, bounds), bounds None = footer unusable (forces
+    // the global fallback); Some(None) = no stats for this file
+    def footerOf(rel: String)
+        : (Long, Option[Option[Seq[(Long, Long)]]]) = try {
       val hp = new org.apache.hadoop.fs.Path(
         t.root.resolve(rel).toString)
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf),
+        opts)
       try {
-        val blocks = rd.getFooter.getBlocks.asScala.toSeq
-          .filter(_.getRowCount > 0)
+        val all = rd.getFooter.getBlocks.asScala.toSeq
+        val blocks = all.filter(_.getRowCount > 0)
         val perCol: Seq[Option[Option[(Long, Long)]]] = physCols.map { c =>
           var lo = Long.MaxValue
           var hi = Long.MinValue
@@ -1306,21 +1300,23 @@ object TxnLog {
           else if (!seen) Some(None) // zero non-null values in file
           else Some(Some((lo, hi)))
         }
-        if (perCol.exists(_.isEmpty)) None
-        else if (perCol.exists(_.contains(None))) Some(None)
-        else Some(Some(perCol.map(_.get.get)))
+        (all.map(_.getRowCount).sum,
+          if (perCol.exists(_.isEmpty)) None
+          else if (perCol.exists(_.contains(None))) Some(None)
+          else Some(Some(perCol.map(_.get.get))))
       } finally rd.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch { case scala.util.control.NonFatal(_) => (-1L, None) }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(8, rels.length)))
     try {
-      val futs = rels.map(rel => rel -> pool.submit(
-        new java.util.concurrent.Callable[Option[Option[Seq[(Long, Long)]]]] {
-          def call() = boundsOf(rel)
-        }))
-      val res = futs.map { case (rel, f) => rel -> f.get() }
-      if (res.exists(_._2.isEmpty)) None
-      else Some(res.map { case (rel, r) => rel -> r.get }.toMap)
+      rels.map(rel => rel -> pool.submit(
+        new java.util.concurrent.Callable[
+            (Long, Option[Option[Seq[(Long, Long)]]])] {
+          def call() = footerOf(rel)
+        })).map { case (rel, f) =>
+        val (rows, bounds) = f.get()
+        (rel, rows, bounds)
+      }
     } finally pool.shutdown()
   }
 
@@ -1328,35 +1324,34 @@ object TxnLog {
     * size stamped as a `size=` token (one stat per STAGED file, at
     * write time — never per live file at read time) and (min, max)
     * triples for `statsCols` read from the staged parquet FOOTERS
-    * (driver-side metadata, zero Spark jobs — see [[footerBounds]]),
+    * (driver-side metadata, zero Spark jobs — see [[footers]]),
     * falling back to ONE file-count-scale aggregate over the staged
-    * files whenever a footer cannot prove the identical bounds. */
+    * files whenever a footer cannot prove the identical bounds. A
+    * file whose footer counts zero rows (Spark writes one for an
+    * empty frame) gets no add line: it stays in the sealed stage for
+    * vacuum, and an empty write commits no data file. */
   private def addLinesFor(s: SparkSession, t: Table, stage: Path,
                           statsCols: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val rels = stagedFiles(t, stage)
     def sized(rel: String): String =
       s"add\t$rel\tsize=${Files.size(t.root.resolve(rel))}"
-    if (statsCols.isEmpty || rels.isEmpty) return rels.map(sized)
     // staged files hold PHYSICAL names; manifest stats stay keyed by
     // the LOGICAL name (pruneBox matches user predicates) — aggregate
     // the physical column under the logical label
-    val physOf: Map[String, String] = registeredSchema(t) match {
+    lazy val physOf: Map[String, String] = registeredSchema(t) match {
       case Some(sc) if hasMapping(sc) =>
         sc.fields.map(f => f.name -> physicalName(f)).toMap
       case _ => Map.empty
     }
     def pn(c: String): String = physOf.getOrElse(c, c)
-    footerBounds(s, t, rels, statsCols.map(pn)).foreach { byRel =>
-      return rels.map { rel =>
-        byRel.get(rel).flatten match {
-          case Some(bounds) =>
-            (sized(rel) +: statsCols.zip(bounds).map { case (c, (lo, hi)) =>
-              s"$c:$lo:$hi" }).mkString("\t")
-          case None => sized(rel)
-        }
+    val foot = footers(s, t, stagedFiles(t, stage), statsCols.map(pn))
+      .filter(_._2 != 0)
+    val rels = foot.map(_._1)
+    if (statsCols.isEmpty || foot.forall(_._3.isDefined))
+      return foot.map { case (rel, _, bounds) =>
+        (sized(rel) +: bounds.flatten.toSeq.flatMap(statsCols.zip(_).map {
+          case (c, (lo, hi)) => s"$c:$lo:$hi" })).mkString("\t")
       }
-    }
     val aggs = statsCols.flatMap(c =>
       Seq(min(col(pn(c))).as(s"lo_$c"), max(col(pn(c))).as(s"hi_$c")))
     val byPath = s.read.parquet(stage.toString)
@@ -1728,30 +1723,43 @@ object TxnLog {
 
   /** OPTIMIZE: rewrite the current live files into `targetFiles`
     * compacted ones in one remove+add commit — logically a no-op,
-    * physically fewer files. The commit carries a `cdc none` marker
-    * (dataChange=false), so a change-feed consumer resolves the range
-    * FROM THE LOG and never rescans the table, and the rewritten
-    * files KEEP per-file (min, max) for every column the old manifest
-    * had stats on — compaction no longer costs the skipping index.
-    * Conflict handling is FILE-GRANULAR: blind appends landing
-    * between snapshot and publish commute (the rewrite rebases and
-    * retries — steady ingest cannot starve OPTIMIZE), while any
-    * concurrent commit that rewrote one of the compacted files still
-    * fails rather than resurrecting its rows. */
+    * physically fewer files ([[rewriteFiles]]). */
   def compact(s: SparkSession, t: Table, targetFiles: Int = 1): Long = {
     val snap = snapshot(t)
-    val stage = newStage(t, t.dataDir)
-    try {
-      // a partitioned table compacts THROUGH its layout (tokens
-      // re-emitted) — OPTIMIZE must never silently flatten the
-      // metadata dropPartition and partition pruning depend on
-      val adds = stageAdds(s, t,
-        readRels(s, t, snap, snap.liveFiles).coalesce(targetFiles),
-        stage, snap.partCols, liveStatsCols(snap), snap.schemaJson).adds
-      commit(t, snap.version, adds = Nil, removes = snap.liveFiles,
-        extra = adds ++ noopRewriteLines, reconcileDisjoint = true)
-    } finally seal(t, stage)
+    rewriteFiles(s, t, snap, snap.liveFiles, _.coalesce(targetFiles),
+      liveStatsCols(snap))
   }
+
+  /** The one compaction body: read the `victims` (through their
+    * deletion vectors, so a rewrite materializes the vectors away —
+    * dead rows dropped, the remove clears the dv entry), apply
+    * `arrange`, restage THROUGH the partition layout (tokens
+    * re-emitted — OPTIMIZE must never silently flatten the metadata
+    * dropPartition and partition pruning depend on) with (min, max)
+    * for `statsCols`, and commit once: the victims removed, the
+    * staged files added. The commit carries a `cdc none` marker
+    * (dataChange=false), so a change-feed consumer resolves the range
+    * FROM THE LOG and never rescans the table. Conflict handling is
+    * FILE-GRANULAR: blind appends landing between snapshot and
+    * publish commute (the rewrite rebases and retries — steady ingest
+    * cannot starve OPTIMIZE), while any concurrent commit that
+    * rewrote one of the victims still fails rather than resurrecting
+    * its rows. The OPTIMIZE forms differ only in the victims they
+    * pick and the arrangement they ask for. Returns the committed
+    * version (unchanged when there are no victims). */
+  private def rewriteFiles(s: SparkSession, t: Table, snap: Snapshot,
+      victims: Seq[String], arrange: DataFrame => DataFrame,
+      statsCols: Seq[String]): Long =
+    if (victims.isEmpty) snap.version
+    else {
+      val stage = newStage(t, t.dataDir)
+      try {
+        val adds = stageAdds(s, t, arrange(readRels(s, t, snap, victims)),
+          stage, snap.partCols, statsCols, snap.schemaJson).adds
+        commit(t, snap.version, adds = Nil, removes = victims,
+          extra = adds ++ noopRewriteLines, reconcileDisjoint = true)
+      } finally seal(t, stage)
+    }
 
   /** Incremental OPTIMIZE — the steady-state maintenance shape: only
     * live files SMALLER than `minFileBytes` compact; right-sized
@@ -1759,18 +1767,16 @@ object TxnLog {
     * latest small appends and never the whole history. Victims are
     * found from the MANIFEST's recorded sizes (zero FS calls for
     * files whose add actions carry `size=`; one stat only as the
-    * legacy fallback), grouped by partition spec and compacted WITHIN
-    * each partition (tokens re-emitted, the hive maintenance op —
-    * one write job per partition group that holds ≥2 small files,
-    * all published in ONE atomic dataChange=false commit). A lone
-    * small file gains nothing and stays. Combined with the
-    * file-disjoint reconciliation, appends landing mid-compaction
-    * commute. Returns the committed version (unchanged when there is
-    * nothing to do). */
+    * legacy fallback), grouped by partition spec; a partition holding
+    * one small file gains nothing and keeps it. The victims rewrite
+    * into at most `targetFiles` files per partition in ONE
+    * dataChange=false commit ([[rewriteFiles]]); appends landing
+    * mid-compaction commute. Returns the committed version (unchanged
+    * when there is nothing to do). */
   def compactSmall(s: SparkSession, t: Table, minFileBytes: Long,
                    targetFiles: Int = 1): Long = {
     val snap = snapshot(t)
-    val bySpec = snap.liveFiles
+    val victims = snap.liveFiles
       .filter { rel =>
         // a DV-carrying file is always a victim regardless of size:
         // incremental maintenance is where deletion vectors get
@@ -1785,77 +1791,23 @@ object TxnLog {
       .groupBy(rel => snap.filePartitions.getOrElse(rel, Map.empty))
       // a lone small file gains nothing — unless it carries a DV,
       // which the rewrite purges
-      .filter(g => g._2.length >= 2 || g._2.exists(snap.dvs.contains))
-    if (bySpec.isEmpty) return snap.version
-    compactGroups(s, t, snap, bySpec, targetFiles)
-  }
-
-  /** The shared group-rewrite body of [[compactSmall]] and
-    * [[compactPartition]]: each (partition spec -> files) group
-    * rewrites into `targetFiles` compacted files WITHIN its layout
-    * (partitioned victims read with the data schema — physical names
-    * under a mapping, aliased back — and re-emit their tokens; flat
-    * groups read through the registered schema), all published in
-    * ONE atomic dataChange=false commit with the file-disjoint
-    * reconciliation, so concurrent appends commute. */
-  private def compactGroups(s: SparkSession, t: Table, snap: Snapshot,
-      bySpec: Map[Map[String, String], Seq[String]],
-      targetFiles: Int): Long = {
-    val statsCols = liveStatsCols(snap)
-    val schema = snap.schemaJson.map(parseSchema)
-    val stages = scala.collection.mutable.ArrayBuffer.empty[Path]
-    try {
-      val groups = bySpec.toSeq.sortBy(_._1.toSeq.sorted.mkString(","))
-        .map { case (spec, files) =>
-          val stage = newStage(t, t.dataDir)
-          stages += stage
-          // dv-aware reads: compacting a DV-carrying file
-          // MATERIALIZES the vector away (dead rows dropped in the
-          // rewrite; the remove clears the dv entry at replay)
-          val df =
-            if (spec.isEmpty)
-              readFiles(s, t, files, snap.schemaJson, dvs = snap.dvs)
-            else {
-              val sc = schema.getOrElse(
-                throw new IllegalStateException(
-                  "partitioned compaction needs a registered schema"))
-              val dataFields = sc.fields
-                .filterNot(f => spec.contains(f.name)).toIndexedSeq
-              toLogical(dvAware(s, t,
-                fs => s.read
-                  .schema(physicalSchema(StructType(dataFields)))
-                  .parquet(fs.map(r => t.root.resolve(r).toString): _*),
-                files, snap.dvs, withPos = false),
-                dataFields)
-            }
-          val lines = stageAdds(s, t, df.coalesce(targetFiles), stage,
-            Nil, statsCols.filterNot(spec.contains), snap.schemaJson).adds
-          val pTok = spec.toSeq.sortBy(_._1)
-            .map { case (c, v) => s"part=${escapePart(c)}=${escapePart(v)}" }
-          val decorated =
-            if (spec.isEmpty) lines
-            else lines.map(decorateAdd(_, pTok))
-          (files, decorated)
-        }
-      commit(t, snap.version, adds = Nil,
-        removes = groups.flatMap(_._1),
-        extra = groups.flatMap(_._2) ++ noopRewriteLines,
-        reconcileDisjoint = true)
-    } finally seal(t, stages.toSeq: _*)
+      .values.filter(g => g.length >= 2 || g.exists(snap.dvs.contains))
+      .flatten.toSeq.sorted
+    rewriteFiles(s, t, snap, victims, _.coalesce(targetFiles),
+      liveStatsCols(snap))
   }
 
   /** PARTITION-SCOPED OPTIMIZE — `OPTIMIZE t WHERE day = 'd1'`: only
     * live files whose recorded partition values match `spec` (all of
-    * its columns) compact, each matching partition group rewritten
-    * WITHIN the layout into `targetFiles` files, everything else
-    * untouched — the maintenance shape a 100 TB table actually runs
-    * (compact yesterday's partition; never rewrite the whole table).
-    * Spec columns must be partition columns (a data-column WHERE
-    * would silently scope nothing — refused loudly); groups with one
-    * file gain nothing and stay; all groups publish in ONE atomic
-    * dataChange=false commit with [[compact]]'s file-disjoint
-    * reconciliation, so concurrent appends commute. Returns the
-    * committed version (unchanged when nothing qualifies). */
+    * its columns) compact, into at most `targetFiles` files per
+    * partition, everything else untouched — the maintenance shape a
+    * 100 TB table actually runs (compact yesterday's partition; never
+    * rewrite the whole table). Spec columns must be partition columns
+    * (a data-column WHERE would silently scope nothing — refused
+    * loudly); a partition with one file gains nothing and stays; the
+    * rest publish in ONE dataChange=false commit ([[rewriteFiles]]).
+    * Returns the committed version (unchanged when nothing
+    * qualifies). */
   def compactPartition(s: SparkSession, t: Table,
                        spec: Map[String, String],
                        targetFiles: Int = 1): Long = {
@@ -1868,15 +1820,15 @@ object TxnLog {
         s"${bad.mkString(", ")} (partition columns: " +
         s"${partCols.mkString(", ")}) — scoped compaction keys on " +
         "the layout")
-    val bySpec = snap.liveFiles
+    val victims = snap.liveFiles
       .filter { rel =>
         val p = snap.filePartitions.getOrElse(rel, Map.empty)
         spec.forall { case (c, v) => p.get(c).contains(v) }
       }
       .groupBy(rel => snap.filePartitions.getOrElse(rel, Map.empty))
-      .filter(_._2.length >= 2)
-    if (bySpec.isEmpty) return snap.version
-    compactGroups(s, t, snap, bySpec, targetFiles)
+      .values.filter(_.length >= 2).flatten.toSeq.sorted
+    rewriteFiles(s, t, snap, victims, _.coalesce(targetFiles),
+      liveStatsCols(snap))
   }
 
   /** OPTIMIZE ZORDER BY (colA, colB): [[compact]]'s clustered form —
@@ -1896,7 +1848,8 @@ object TxnLog {
     * (tenant, date, id) are routine; each key gets 62/n interleave
     * bits (round-robin, [[graft.functions.ZOrder.zValueN]]), so an
     * n-dimensional box probe still prunes every dimension from the
-    * manifest alone. */
+    * manifest alone. A partitioned table z-clusters WITHIN its
+    * layout. */
   def compactZorderKeys(s: SparkSession, t: Table, keys: Seq[String],
                         targetFiles: Int = 8): Long = {
     import org.apache.spark.sql.functions.col
@@ -1921,21 +1874,12 @@ object TxnLog {
       s"zorder keys must be data columns, not partition columns " +
         s"(${partCols.mkString(", ")}) — the layout already clusters " +
         "on those")
-    val statsCols = (liveStatsCols(snap) ++ keys).distinct.sorted
-    val stage = newStage(t, t.dataDir)
-    try {
-      val clustered = readRels(s, t, snap, snap.liveFiles)
-        .withColumn("_z", graft.functions.ZOrder.zValueN(keys))
+    rewriteFiles(s, t, snap, snap.liveFiles,
+      _.withColumn("_z", graft.functions.ZOrder.zValueN(keys))
         .repartitionByRange(targetFiles, col("_z"))
         .sortWithinPartitions(col("_z"))
-        .drop("_z")
-      // a partitioned table z-clusters WITHIN its layout (tokens
-      // re-emitted) — same no-silent-flattening rule as compact
-      val adds = stageAdds(s, t, clustered, stage, partCols, statsCols,
-        snap.schemaJson).adds
-      commit(t, snap.version, adds = Nil, removes = snap.liveFiles,
-        extra = adds ++ noopRewriteLines, reconcileDisjoint = true)
-    } finally seal(t, stage)
+        .drop("_z"),
+      (liveStatsCols(snap) ++ keys).distinct.sorted)
   }
 
   /** [[readPruned]] for a conjunction of range predicates — the box
@@ -2011,6 +1955,21 @@ object TxnLog {
         s"(${partCols0.mkString(", ")}) — stage through the declared " +
         "layout")
     val snap = if (latestVersion(t) < 0) None else Some(snapshot(t))
+    // constraints are table identity too: one that reads a column the
+    // new schema drops could never be evaluated again, so the replace
+    // refuses rather than dropping it silently
+    snap.foreach { sn =>
+      val fields = sn.schemaJson.fold(Set.empty[String])(
+        parseSchema(_).fieldNames.toSet)
+      val stale = sn.notNull.diff(df.columns.toSet).toSeq.sorted
+        .map(c => s"NOT NULL $c") ++
+        sn.checks.toSeq.sorted.collect { case (n, sql) if !checkRefs(sql)
+          .intersect(fields).subsetOf(df.columns.toSet) => s"CHECK $n" }
+      require(stale.isEmpty,
+        s"replace drops column(s) that constraint(s) " +
+          s"${stale.mkString(", ")} reference — drop the constraint(s) " +
+          "first (TxnLog.dropConstraint / ALTER TABLE ... DROP CONSTRAINT)")
+    }
     // a replace may carry a partition layout forward (the SQL INSERT
     // OVERWRITE / Complete-mode sink contract: no write op silently
     // flattens a partitioned table); the staged files hold the new
@@ -2416,7 +2375,7 @@ object TxnLog {
               toPhysical(readRels(s, t, sn, dvVictims),
                 sn.schemaJson.map(parseSchema)).write.parquet(cdcStage.toString)
             (plain ++ stagedFiles(t, cdcStage)).map(r => s"cdc\t$r\tdelete") ++
-              stagedFiles(t, stage).map(r => s"cdc\t$r\tinsert")
+              adds.map(a => s"cdc\t${a.split('\t')(1)}\tinsert")
           case _ => Nil
         }
         commit(t, base, adds = Nil, removes = removes,
@@ -2473,7 +2432,7 @@ object TxnLog {
     * cancelled, before the failure rethrows: the caller's seal() must
     * not remove a stage's .inflight marker while a sibling still
     * writes into it. At most 8 thunks run at once (the widest wave any
-    * caller stages today: 8 skipping slices; DML stages at most 4),
+    * caller stages today: 8 skipping slices; DML stages at most 3),
     * so an N-slice append does not start N threads; the rest queue. */
   private[graft] def stagedPar[A](s: SparkSession,
       thunks: Seq[() => A]): Seq[A] = {
@@ -2718,15 +2677,16 @@ object TxnLog {
 
   /** ONE locating job for DV writers: per-file dead sets come back
     * as RUN-LENGTH RANGES compressed map-side — input (file, index)
-    * pairs must arrive ascending per file WITHIN each partition (a
-    * scan's natural order; post-join callers repartition+sort
-    * first). The driver never holds row-scale state: each partition
-    * caps what it emits per file (ranges AND rows) at the light-file
-    * thresholds and signals overflow with a (-1, -1) sentinel — a
-    * file past either cap is heavy (copy-on-write) and needs no
-    * exact dead set at all. Out-of-order input stays correct: it only
-    * splits runs, which the per-file range merge rejoins (or a range
-    * overflow sends the file copy-on-write). */
+    * pairs that arrive ascending per file within a partition (a
+    * scan's natural order) fold into few runs. The driver never holds
+    * row-scale state: each partition caps what it emits per file
+    * (ranges AND rows) at the light-file thresholds and signals
+    * overflow with a (-1, -1) sentinel — a file past either cap is
+    * heavy (copy-on-write) and needs no exact dead set at all.
+    * Out-of-order input (a join's) gives the same vectors: it only
+    * splits runs, which the per-file range merge rejoins, and since
+    * every range holds a row, a range overflow is a row overflow
+    * whatever the order. */
   private def runLengthDeadSets(
       ds: org.apache.spark.sql.Dataset[(String, Long)],
       capRanges: Long, maxRows: Long): Array[(String, Long, Long)] =
@@ -2768,21 +2728,20 @@ object TxnLog {
   /** Route a statement's touched row `positions` (`_g_fp`, `_g_ri`
     * over files in `rels`) into LIGHT vectors and HEAVY files — the
     * ONE routing decision every deletion-vector writer shares
-    * ([[rewriteRows]] and merge-on-read [[mergeIntoKeys]]), so the
-    * cap semantics can never silently diverge. The positions fold
-    * into per-file runs in one job ([[runLengthDeadSets]]; ranges per
-    * file are bounded by the row cap, each range holding at least one
-    * row). Per-partition overflow sentinels (past the ROW cap) are
-    * heavy outright; each surviving file's statement ranges merge
-    * with its EXISTING vector and ride INLINE when the merged
-    * encoding fits the byte cap — past it the vector lands as a
-    * SIDECAR file ([[writeDvSidecar]]) referenced by an `@<rel>`
-    * token, so an adversarial scattered delete stamps a ~50-byte
-    * reference instead of either a megabyte log line or a full
-    * copy-on-write rewrite of the data file. Only the row cap routes
-    * copy-on-write: it bounds the READ-side anti-join work per file,
-    * which a sidecar would not. Returns (dv action lines, heavy
-    * relative paths, sorted). */
+    * (through [[rewriteRows]]), so the cap semantics can never
+    * silently diverge. The positions fold into per-file runs in one
+    * job ([[runLengthDeadSets]]; ranges per file are bounded by the
+    * row cap, each range holding at least one row). Per-partition
+    * overflow sentinels (past the ROW cap) are heavy outright; each
+    * surviving file's statement ranges merge with its EXISTING vector
+    * and ride INLINE when the merged encoding fits the byte cap — past
+    * it the vector lands as a SIDECAR file ([[writeDvSidecar]])
+    * referenced by an `@<rel>` token, so an adversarial scattered
+    * delete stamps a ~50-byte reference instead of either a megabyte
+    * log line or a full copy-on-write rewrite of the data file. Only
+    * the row cap routes copy-on-write: it bounds the READ-side
+    * anti-join work per file, which a sidecar would not. Returns (dv
+    * action lines, heavy relative paths, sorted). */
   private def dvLightHeavy(t: Table, snap: Snapshot, positions: DataFrame,
       rels: Seq[String], caps: (Long, Long)): (Seq[String], Seq[String]) = {
     import org.apache.spark.sql.Encoders
@@ -2842,15 +2801,17 @@ object TxnLog {
       (rowHeavy0 ++ heavyExtra ++ overflow.toSeq).distinct.map(relOfAbs).sorted)
   }
 
-  /** The one row-level rewrite behind DELETE, UPDATE and whole-row
-    * MERGE, copy-on-write and deletion-vector alike — Delta's DML
+  /** The one row-level rewrite behind DELETE, UPDATE and MERGE (both
+    * forms), copy-on-write and deletion-vector alike — Delta's DML
     * shape: locate the touched files, split their rows, restage,
     * commit once. The caller passes the statement's snapshot and its
     * pruned `candidates`, the split (`touched` / `kept` map a scan of
     * table files to the rows the statement retires / leaves alone),
     * the rows it stages in their place (`newRows` of the touched
-    * rows: UPDATE's SET images, MERGE's source; None for DELETE) and
-    * `dvCaps`.
+    * rows: UPDATE's SET images, MERGE's new images and inserts; None
+    * for DELETE) and `dvCaps`. `touched` keeps every scanned column
+    * and may add `helpers` (columns `newRows` reads); they are dropped
+    * from the old images, like the position columns.
     *
     * Copy-on-write (`dvCaps` None): one file-count-scale distinct
     * over input_file_name finds the files holding touched rows; they
@@ -2874,14 +2835,24 @@ object TxnLog {
     * the table). New rows are also `cdc insert` references (change
     * files may point at live data files; nothing is written twice),
     * so the feed is exactly (delete old images, insert new rows).
-    * The commit reconciles past file-disjoint interlopers (a blind
-    * append commutes at write-serializable isolation) and refuses
-    * when any candidate file moved — or, under `claim` (an
-    * overwrite), refuses whenever its slot is taken. `admit` may
-    * refuse the staged new rows before anything commits;
-    * `schemaLines` is evaluated after staging. Returns None when no
-    * candidate row is touched (the caller's no-match result applies),
-    * else the committed version. */
+    *
+    * The commit claims exactly base+1 — the nonempty read set keeps a
+    * vector-only commit on rewrite claim semantics, since a `dv` line
+    * changes row state without a remove — and reconciles past
+    * file-disjoint interlopers (a blind append commutes at
+    * write-serializable isolation), refusing when any candidate file
+    * moved. It never reconciles under `claim` (an overwrite must
+    * refuse even a blind append into its scope) or under a `fence`
+    * (the streaming upsert sink's batch, whose `txn` marker rides
+    * last): commit()'s rebase-retry never re-checks a marker, so a
+    * fenced statement retries through upsertBatch's loop, which
+    * re-checks the fence first. Vectors raise the protocol floor in
+    * the same commit (an older reader would serve the dead rows): V3
+    * when any rides a sidecar reference, else V2. `admit` may refuse
+    * the staged new rows before anything commits; `schemaLines` is
+    * evaluated after staging. Returns None when no candidate row is
+    * touched (the caller's no-match result applies), else the
+    * committed version. */
   private def rewriteRows(s: SparkSession, t: Table, snap: Snapshot,
       candidates: Seq[String],
       touched: DataFrame => DataFrame, kept: DataFrame => DataFrame,
@@ -2889,15 +2860,17 @@ object TxnLog {
       dvCaps: Option[(Long, Long)],
       schemaLines: => Seq[String] = Nil,
       claim: Boolean = false,
-      admit: Staged => Unit = _ => ()): Option[Long] = {
+      admit: Staged => Unit = _ => (),
+      helpers: Seq[String] = Nil,
+      fence: Option[(String, Long)] = None): Option[Long] = {
     import org.apache.spark.sql.functions.{col, input_file_name}
     if (candidates.isEmpty) return None
     val hits = dvCaps.map(caps => caps ->
       touched(readRels(s, t, snap, candidates, withPos = true))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     try {
-      // (files removed, dv lines, old images, kept rows to restage)
-      val (removes, dvLines, old, survivors) = hits match {
+      // (files removed, dv lines, touched rows, kept rows to restage)
+      val (removes, dvLines, hit, survivors) = hits match {
         case Some((caps, h)) =>
           val (dvLines, heavyRels) =
             dvLightHeavy(t, snap, h, candidates, caps)
@@ -2916,7 +2889,7 @@ object TxnLog {
           val affected = readRels(s, t, snap, affectedRel)
           (affectedRel, Nil, touched(affected), Some(kept(affected)))
       }
-      val fresh = newRows.map(_(old))
+      val fresh = newRows.map(_(hit))
       val statsCols = liveStatsCols(snap)
       val survivorStage = newStage(t, t.dataDir)
       val freshStage = newStage(t, t.dataDir)
@@ -2933,58 +2906,25 @@ object TxnLog {
             st.adds
           },
           () => {
-            toPhysical(old, snap.schemaJson.map(parseSchema))
+            toPhysical(hit.drop(helpers: _*), snap.schemaJson.map(parseSchema))
               .write.parquet(cdcStage.toString)
             stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete")
           }))
-        val cdc = staged(2) ++
-          stagedFiles(t, freshStage).map(r => s"cdc\t$r\tinsert")
-        Some(commitRowLevel(t, snap, removes, dvLines,
-          schemaLines ++ staged(0) ++ staged(1), cdc, candidates.toSet,
-          claim = claim))
+        val proto =
+          if (dvLines.exists(_.split('\t')(2).startsWith("@")))
+            Seq(ProtocolV3Line)
+          else if (dvLines.nonEmpty) Seq(ProtocolV2Line)
+          else Nil
+        Some(commit(t, snap.version, adds = Nil, removes = removes,
+          extra = proto ++ schemaLines ++ staged(0) ++ staged(1) ++
+            dvLines ++ staged(2) ++
+            staged(1).map(a => s"cdc\t${a.split('\t')(1)}\tinsert") ++
+            fence.map { case (app, bid) => s"txn\t$app\t$bid" },
+          reconcileDisjoint = fence.isEmpty && !claim,
+          readSet = candidates.toSet))
       } finally seal(t, survivorStage, freshStage, cdcStage)
     } finally hits.foreach(_._2.unpersist())
   }
-
-  /** The row-level DML commit tail ([[rewriteRows]], [[mergeIntoKeys]]).
-    * A statement that removes files or stamps vectors commits
-    * `lines` (schema + adds), `dvLines` and the `cdc` references
-    * claiming exactly base+1 — the nonempty `readSet` keeps a
-    * vector-only commit on rewrite claim semantics, since a `dv` line
-    * changes row state without a remove — and reconciles past
-    * file-disjoint interlopers unless FENCED or told to `claim`.
-    * commit()'s rebase-retry never re-checks a txn marker, so a
-    * fenced merge (the streaming upsert sink) retries through
-    * upsertBatch's outer loop, which re-checks the fence before every
-    * recompute; an overwrite must refuse even a blind append into its
-    * scope, so it never reconciles. Vectors raise the
-    * protocol floor in the same commit (an older reader would serve
-    * the dead rows): V3 when any rides a sidecar reference, else V2.
-    * An outcome with neither (only inserts landed) is a plain insert
-    * wave: its adds auto-count in the change feed, so the cdc
-    * references drop (they would deliver every inserted row twice);
-    * under a fence it publishes through [[publishFenced]], and with
-    * nothing to write it commits nothing. `tail` (a txn marker) rides
-    * last. */
-  private def commitRowLevel(t: Table, snap: Snapshot,
-      removes: Seq[String], dvLines: Seq[String], lines: Seq[String],
-      cdc: Seq[String], readSet: Set[String],
-      fence: Option[(String, Long)] = None,
-      tail: Seq[String] = Nil, claim: Boolean = false): Long =
-    if (removes.nonEmpty || dvLines.nonEmpty) {
-      val proto =
-        if (dvLines.exists(_.split('\t')(2).startsWith("@")))
-          Seq(ProtocolV3Line)
-        else if (dvLines.nonEmpty) Seq(ProtocolV2Line)
-        else Nil
-      commit(t, snap.version, adds = Nil, removes = removes,
-        extra = proto ++ lines ++ dvLines ++ cdc ++ tail,
-        reconcileDisjoint = fence.isEmpty && !claim, readSet = readSet)
-    } else (lines ++ tail, fence) match {
-      case (all, _) if all.isEmpty => snap.version
-      case (all, Some((app, bid))) => publishFenced(t, app, bid, all)
-      case (all, None) => commit(t, snap.version, adds = Nil, extra = all)
-    }
 
   /** Publish `lines` into exactly the next free slot unless the
     * fence (`app`, `bid`) already holds — re-checked before every
@@ -3092,14 +3032,15 @@ object TxnLog {
     * case): for every target row with a source match, the FIRST
     * matched clause whose condition holds applies (UPDATE SET with
     * column-level assignments, or DELETE); a matched row no clause
-    * accepts stays untouched — it is rewritten byte-identical and
-    * does NOT enter the change feed. Source rows matching nothing
-    * insert when some not-matched clause accepts them, else drop.
+    * accepts stays untouched — it does NOT enter the change feed,
+    * and a file holding no touched row stays in place. Source rows
+    * matching nothing insert when some not-matched clause accepts
+    * them, else drop.
     * WHEN NOT MATCHED BY SOURCE clauses (UPDATE SET / DELETE,
     * conditions over target columns only) complete the triad: target
     * rows absent from the source route through them — the full-sync
     * reconciliation a snapshot-mirroring feed runs; their presence
-    * puts EVERY live file in the rewrite set, because such rows can
+    * puts EVERY live file in the read set, because such rows can
     * live anywhere (the read is the table, by definition).
     *
     * A source with more than one row per key is REFUSED loudly (one
@@ -3108,15 +3049,16 @@ object TxnLog {
     * [[merge]] has no such ambiguity: it replaces each matched key's
     * rows with ALL of that key's source rows.)
     *
-    * Plan shape at 100 TB: the same stats-pruned locate as [[merge]]
-    * (source key range → manifest box → candidate files → one semi
-    * join), then ONE left-outer join of the touched sliver against
-    * the sync-sized source evaluates every clause; old images of
-    * updated+deleted rows become `cdc delete` change files and
-    * updated new images + accepted inserts stage as data files the
-    * commit also references as `cdc insert` — the exact
-    * (delete old, insert new) event feed [[changes]] resolves from
-    * the log. Returns the committed version. */
+    * Plan shape at 100 TB: the same stats-pruned candidates as
+    * [[merge]] (source key range → manifest box), then
+    * [[rewriteRows]] over ONE left-outer join of the candidates
+    * against the sync-sized source, which evaluates every clause:
+    * the touched rows are those some clause fires on; their old
+    * images become `cdc delete` change files, and updated new images
+    * + accepted inserts stage in one write the commit also references
+    * as `cdc insert` — the exact (delete old, insert new) event feed
+    * [[changes]] resolves from the log. Returns the committed
+    * version. */
   def mergeInto(s: SparkSession, t: Table, source: DataFrame,
       keyCol: String, clauses: Seq[MergeClause],
       targetAlias: String = "t", sourceAlias: String = "s"): Long =
@@ -3132,17 +3074,18 @@ object TxnLog {
     * contract verbatim. `dvCaps` (row cap, encoded-byte cap) opts the
     * statement into MERGE-ON-READ: touched rows' old positions
     * dead-list via deletion vectors with a per-file copy-on-write
-    * fallback past either cap; see the dvInfo block. */
+    * fallback past either cap ([[rewriteRows]]). Under a `fence` (the
+    * streaming upsert sink's `(appId, batchId)`) the commit carries
+    * the batch's `txn` marker. */
   def mergeIntoKeys(s: SparkSession, t: Table, source: DataFrame,
       keyCols: Seq[String], clauses: Seq[MergeClause],
       targetAlias: String = "t", sourceAlias: String = "s",
-      extraLines: Seq[String] = Nil,
       fence: Option[(String, Long)] = None,
       snap0: Option[Snapshot] = None,
       dvCaps: Option[(Long, Long)] = None,
       evolveSchema: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name,
-      lit, max, min, when}
+    import org.apache.spark.sql.functions.{col, count, expr, lit, max,
+      min, when}
     require(keyCols.nonEmpty, "mergeIntoKeys needs at least one key column")
     require(clauses.nonEmpty, "mergeInto needs at least one WHEN clause")
     val matched = clauses.collect {
@@ -3221,7 +3164,6 @@ object TxnLog {
             mergedSchema(t, Some(cur), src.schema, allowWiden = true)
           if (changed) Some((m, widenedAny)) else None
       }
-    val keys = src.select(keyCols.map(col): _*).distinct()
     val candidates =
       if (trackedKeys.isEmpty) snap.liveFiles
       else if (fused.isNullAt(1)) Nil // empty source: nothing matches
@@ -3234,16 +3176,6 @@ object TxnLog {
         }
         if (preds.isEmpty) snap.liveFiles else pruneBox(snap, preds)
       }
-    val affectedRel =
-      if (bySource.nonEmpty) snap.liveFiles
-      else if (candidates.isEmpty) Nil
-      else relsOf(t, snap,
-        readRels(s, t, snap, candidates)
-          .withColumn("_f", input_file_name())
-          .join(keys, keyCols, "left_semi")
-          .select(col("_f")).distinct()
-          .collect() // file-count scale: one row per affected file
-          .map(_.getString(0)).toSeq)
 
     // the column-list insert aligns against the REGISTERED schema —
     // a raw-commit table has nothing to align to (and no NULL-fill
@@ -3264,6 +3196,10 @@ object TxnLog {
           s"${bad.mkString(", ")} (table has " +
           s"${targetFields.map(_.name).mkString(", ")})")
     }
+    // an unlisted target column takes its declared DEFAULT (SQL
+    // INSERT's contract); NULL only when none is declared
+    def fill(f: org.apache.spark.sql.types.StructField): Column =
+      defaultSql(f).map(expr).getOrElse(lit(null))
 
     def insertCond(cl: MergeClause): Column = (cl match {
       case x: MergeClause.Insert     => x.cond
@@ -3271,7 +3207,7 @@ object TxnLog {
       case _                         => None
     }).getOrElse(lit(true))
 
-    def insertable(unmatched: DataFrame): Option[DataFrame] =
+    def insertable(unmatched: => DataFrame): Option[DataFrame] =
       if (insertsAll.isEmpty) None
       else if (!hasInsertExpr)
         // whole-row inserts all stage the same row: the OR of the
@@ -3294,20 +3230,15 @@ object TxnLog {
         val routed = unmatched.withColumn("_graft_ic", ichain)
           .filter(col("_graft_ic") =!= 0)
         Some(routed.select(targetFields.map { f =>
-          // an unlisted target column takes its declared DEFAULT
-          // (SQL INSERT's contract); NULL only when none is declared
-          def fill: Column = defaultSql(f)
-            .map(d => org.apache.spark.sql.functions.expr(d))
-            .getOrElse(lit(null))
           insertsAll.zipWithIndex
             .foldRight(lit(null).cast(f.dataType): Column) {
               case ((cl, i), acc) =>
                 val v: Column = cl match {
                   case _: MergeClause.Insert =>
                     if (srcCols.contains(f.name)) col(s"$sa.${f.name}")
-                    else fill
+                    else fill(f)
                   case x: MergeClause.InsertExpr =>
-                    x.values.getOrElse(f.name, fill)
+                    x.values.getOrElse(f.name, fill(f))
                   case _ => lit(null)
                 }
                 when(col("_graft_ic") === (i + 1), v.cast(f.dataType))
@@ -3315,66 +3246,30 @@ object TxnLog {
             }.as(f.name)
         }.toIndexedSeq: _*))
       }
-
-    // a partitioned table restages survivors, updated images AND
-    // inserts THROUGH its layout (same rule as delete) — a CDC-synced
-    // partitioned table must keep metadata-only dropPartition working
-    val partCols = snap.partCols
-    if (affectedRel.isEmpty) {
-      // nothing matched: the merge degrades to the insert clauses.
-      // UNDER A FENCE (a sink's exactly-once batch) the degraded path
-      // must re-check the txn marker before every publish attempt,
-      // or a racing replayed twin could land the same batch twice;
-      // route through appendBatch's fence-rechecking exact-slot loop
-      // (a no-insert batch publishes a marker-only commit through
-      // publishFenced).
-      return (insertable(src.alias(sa)), fence) match {
-        case (Some(rows), Some((app, bid))) =>
-          appendBatch(s, t, rows, app, bid, partCols,
-            allowWiden = evolveSchema)
-          latestVersion(t)
-        case (None, Some((app, bid))) =>
-          publishFenced(t, app, bid, Seq(s"txn\t$app\t$bid"))
-        case (Some(rows), None) =>
-          appendStaged(s, t, rows, partCols, statsCols, extraLines,
-            allowWiden = evolveSchema)
-        case (None, None) =>
-          if (extraLines.isEmpty) snap.version
-          else commit(t, snap.version, adds = Nil, extra = extraLines)
+    // accepted inserts: source rows whose key no candidate file holds
+    // (a key outside the source's range is in no candidate, and a
+    // matched row no clause touches must not insert a second time)
+    val inserted = insertable(
+      if (candidates.isEmpty) src.alias(sa)
+      else src.alias(sa).join(readRels(s, t, snap, candidates)
+          .select(keyCols.map(k => col(k).as(s"_tk_$k")): _*),
+        keyCols.map(k => col(s"$sa.$k") === col(s"_tk_$k")).reduce(_ && _),
+        "left_anti"))
+    // decided before staging, so an incompatible source refuses first:
+    // WITH SCHEMA EVOLUTION lands the pre-computed merged shape; else
+    // only the whole-row insert path evolves the schema (the
+    // column-list projection already IS the registered shape)
+    val schemaLines = {
+      val (schema, changed, widenedAny) = evolvedTo match {
+        case Some((m, w)) => (m, true, w)
+        case None if inserted.nonEmpty && !hasInsertExpr =>
+          mergedSchema(t, snap.schemaJson.map(parseSchema), src.schema)
+        case None => (src.schema, false, false)
       }
+      (if (widenedAny) Seq(ProtocolV2Line) else Nil) ++
+        (if (changed) Seq(s"schema\t${schema.json}") else Nil)
     }
 
-    // merge-on-read (dvCaps set) reads WITH positions: the touched
-    // rows' (file, index) pairs feed the per-file dead sets
-    val affected0 = readRels(s, t, snap, affectedRel,
-      withPos = dvCaps.isDefined)
-    // the evolved target frame: new columns null-fill (pre-evolution
-    // rows have no value), widened shared columns cast up — in place,
-    // so column positions and the helper PosCols survive
-    val affected = evolvedTo match {
-      case None => affected0
-      case Some((m, _)) =>
-        val curNames = affected0.columns.toSet
-        m.fields.foldLeft(affected0) { (df, f) =>
-          if (!curNames.contains(f.name))
-            df.withColumn(f.name, lit(null).cast(f.dataType))
-          else if (df.schema(f.name).dataType != f.dataType)
-            df.withColumn(f.name, col(f.name).cast(f.dataType))
-          else df
-        }
-    }
-    val tCols = affected.columns.toSeq.filterNot(PosCols.contains)
-    val badSets = (matched.collect { case u: MergeClause.Update =>
-      u.set.keySet.diff(tCols.toSet) } ++
-      bySource.collect { case u: MergeClause.BySourceUpdate =>
-        u.set.keySet.diff(tCols.toSet) }).flatten
-    require(badSets.isEmpty,
-      s"UPDATE SET targets unknown column(s): ${badSets.mkString(", ")}")
-
-    val joined = affected.alias(ta)
-      .join(src.withColumn("_graft_m", lit(true)).alias(sa),
-        keyCols.map(k => col(s"$ta.$k") === col(s"$sa.$k"))
-          .reduce(_ && _), "left_outer")
     // first-match clause index: i >= 1 the i-th MATCHED clause
     // applies, -j <= -1 the j-th NOT-MATCHED-BY-SOURCE clause
     // applies, 0 no clause fires (row untouched, absent from CDF)
@@ -3392,138 +3287,89 @@ object TxnLog {
       }
     val idx = when(col(s"$sa._graft_m").isNull, chain(bySource, -1))
       .otherwise(chain(matched, 1))
-    // merge-on-read evaluates the clause join one extra time (the
-    // locate collect) on top of the survivor/old-image/new-image
-    // stages — persist it so the touched-sliver scan and join run
-    // once per statement, the same reasoning as [[rewriteRows]]'
-    // persisted hits (released in the finally)
-    val withIdx0 = joined.withColumn("_clause", idx)
-    val withIdx =
-      if (dvCaps.isEmpty) withIdx0
-      else withIdx0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val updateIdx = matched.zipWithIndex.collect {
-      case (_: MergeClause.Update, i) => i + 1 } ++
+    // (clause index, SET assignments) of every UPDATE clause
+    val updates: Seq[(Int, Map[String, Column])] =
+      matched.zipWithIndex.collect {
+        case (u: MergeClause.Update, i) => (i + 1, u.set) } ++
       bySource.zipWithIndex.collect {
-        case (_: MergeClause.BySourceUpdate, i) => -(i + 1) }
-    val tSel = tCols.map(c => col(s"$ta.$c").as(c))
-    // MERGE-ON-READ routing (dvCaps set — see [[dvCapsOf]]): every
-    // touched row's OLD position goes dead via a `dv` line for files
-    // under the light thresholds, copy-on-write for heavy ones — a
-    // one-row matched MERGE on a multi-file table rewrites NO data
-    // file, the CDC-upsert cost model at 100 TB. Computed BEFORE
-    // staging (one extra job over the touched sliver): the heavy set
-    // decides which survivors restage at all. The join scrambles scan
-    // order, so the positions shuffle back to per-file ascending —
-    // sync-sized rows of (path, index), nothing corpus-scale — before
-    // the shared routing ([[dvLightHeavy]]). (dv lines, heavy rels).
-    val dvInfo: Option[(Seq[String], Seq[String])] =
-      dvCaps.map(caps => dvLightHeavy(t, snap,
-        withIdx.filter(col("_clause") =!= 0)
-          .select(col("_g_fp"), col("_g_ri"))
-          .repartition(col("_g_fp"))
-          .sortWithinPartitions(col("_g_fp"), col("_g_ri")),
-        affectedRel, caps))
-    // rows the merge leaves alone: no clause fired. Under merge-on-
-    // read only HEAVY files restage their untouched rows — light
-    // files stay in place (their dead set is the vector), untouched
-    // files are not even removed; with no heavy file at all, NO
-    // survivor stage runs (None — not an empty write job).
-    val survivors: Option[DataFrame] = dvInfo match {
-      case None =>
-        Some(withIdx.filter(col("_clause") === 0).select(tSel: _*))
-      case Some((_, heavyRels)) if heavyRels.isEmpty => None
-      case Some((_, heavyRels)) =>
-        Some(withIdx.filter(col("_clause") === 0 && col("_g_fp")
-          .isInCollection(heavyRels.map(encodedAbs(t, _)))).select(tSel: _*))
-    }
-    // old images of every row an update/delete clause touched
-    val oldImages = withIdx.filter(col("_clause") =!= 0).select(tSel: _*)
-    // new images: target row with the applying clause's SET columns
-    // overridden (cast back to the column's type — parquet schema
-    // stability over arbitrary SET expressions)
-    val updatedNew =
-      if (updateIdx.isEmpty) None
-      else Some(withIdx.filter(col("_clause").isInCollection(updateIdx))
-        .select(tCols.map { c =>
-          val viaMatched = matched.zipWithIndex
-            .foldRight(col(s"$ta.$c")) {
-              case ((u: MergeClause.Update, i), acc) if u.set.contains(c) =>
-                when(col("_clause") === (i + 1),
-                  u.set(c).cast(affected.schema(c).dataType)).otherwise(acc)
-              case (_, acc) => acc
-            }
-          bySource.zipWithIndex.foldRight(viaMatched) {
-            case ((u: MergeClause.BySourceUpdate, i), acc)
-              if u.set.contains(c) =>
-              when(col("_clause") === -(i + 1),
-                u.set(c).cast(affected.schema(c).dataType)).otherwise(acc)
-            case (_, acc) => acc
-          }.as(c)
-        }: _*))
-    val affKeys = affected.select(
-      keyCols.map(k => col(k).as(s"_tk_$k")): _*)
-    val inserted = insertable(src.alias(sa)
-      .join(affKeys, keyCols.map(k =>
-        col(s"$sa.$k") === col(s"_tk_$k")).reduce(_ && _), "left_anti"))
-
-    val survivorStage = newStage(t, t.dataDir)
-    val updatedStage = newStage(t, t.dataDir)
-    val insertStage = newStage(t, t.dataDir)
-    val cdcStage = newStage(t, t.cdcDir)
-    try {
-      // survivor / updated-new-image / insert restages and the
-      // old-image change-file write are independent sliver-scale jobs
-      // — overlapped (stagedPar, §2.6); the constraint check (updated
-      // new images + accepted inserts can violate; survivors are
-      // byte-identical rewrites) still throws before the commit
-      val stagedOut = stagedPar(s, Seq(
-        () => survivors.toSeq.map(
-          stageAdds(s, t, _, survivorStage, partCols, statsCols,
-            snap.schemaJson)),
-        () => updatedNew.toSeq.map(
-          stageAdds(s, t, _, updatedStage, partCols, statsCols,
-            snap.schemaJson)),
-        () => inserted.toSeq.map(
-          stageAdds(s, t, _, insertStage, partCols, statsCols,
-            snap.schemaJson)),
-        () => {
-          toPhysical(oldImages, snap.schemaJson.map(parseSchema))
-            .write.parquet(cdcStage.toString)
-          Seq.empty[Staged]
-        }))
-      val adds = stagedOut.flatten.flatMap(_.adds)
-      (stagedOut(1) ++ stagedOut(2)).foreach(
-        enforceStaged(s, t, _, snap.constraints))
-      val (schema, changed, widenedAny) = evolvedTo match {
-        // WITH SCHEMA EVOLUTION: the pre-computed merged shape lands
-        // with the data in this one commit, insert path or not
-        case Some((m, w)) => (m, true, w)
-        case None => inserted match {
-          // only the whole-row insert path evolves the schema; the
-          // column-list projection already IS the registered shape
-          case Some(_) if !hasInsertExpr =>
-            mergedSchema(t, registeredSchema(t), src.schema)
-          case _ => (affected.schema, false, false)
+        case (u: MergeClause.BySourceUpdate, i) => (-(i + 1), u.set) }
+    val setCols = updates.flatMap(_._2.keys).distinct
+    val helpers = "_graft_clause" +: setCols.map(c => s"_graft_new_$c")
+    // the clause join over a scan of target files: every scanned
+    // column (file and position helpers included), the clause index,
+    // and each SET target's value under the applying UPDATE clause
+    // (cast back to the column's type — parquet schema stability over
+    // arbitrary SET expressions). Under WITH SCHEMA EVOLUTION the
+    // target first takes the evolved shape: new columns null-fill
+    // (pre-evolution rows have no value), widened ones cast up.
+    def clauseJoin(df: DataFrame): DataFrame = {
+      val tgt = evolvedTo.fold(df) { case (m, _) =>
+        m.fields.foldLeft(df) { (d, f) =>
+          if (!d.columns.contains(f.name))
+            d.withColumn(f.name, lit(null).cast(f.dataType))
+          else if (d.schema(f.name).dataType != f.dataType)
+            d.withColumn(f.name, col(f.name).cast(f.dataType))
+          else d
         }
       }
-      val cdcLines =
-        stagedFiles(t, cdcStage).map(r => s"cdc\t$r\tdelete") ++
-        (stagedFiles(t, updatedStage) ++ stagedFiles(t, insertStage))
-          .map(r => s"cdc\t$r\tinsert")
-      val schemaLine =
-        (if (widenedAny) Seq(ProtocolV2Line) else Nil) ++
-        (if (changed) Seq(s"schema\t${schema.json}") else Nil)
-      // copy-on-write removes every affected file; merge-on-read only
-      // the heavy ones (light files carry their vector)
-      val (dvLines, removes) = dvInfo.getOrElse((Nil, affectedRel))
-      commitRowLevel(t, snap, removes, dvLines, schemaLine ++ adds,
-        cdcLines,
-        (if (bySource.nonEmpty) snap.liveFiles else candidates).toSet,
-        fence, tail = extraLines)
-    } finally seal(t, survivorStage, updatedStage, insertStage, cdcStage)
-    } finally { if (dvCaps.nonEmpty) withIdx.unpersist(); () }
+      val bad = setCols.diff(tgt.columns)
+      require(bad.isEmpty,
+        s"UPDATE SET targets unknown column(s): ${bad.mkString(", ")}")
+      tgt.alias(ta)
+        .join(src.withColumn("_graft_m", lit(true)).alias(sa),
+          keyCols.map(k => col(s"$ta.$k") === col(s"$sa.$k"))
+            .reduce(_ && _), "left_outer")
+        .withColumn("_graft_clause", idx)
+        .select(tgt.columns.toSeq.map(c => col(s"$ta.$c").as(c)) ++
+          (col("_graft_clause") +: setCols.map(c => updates.foldRight(
+            col(s"$ta.$c")) { case ((i, set), acc) =>
+              set.get(c).fold(acc)(v => when(col("_graft_clause") === i,
+                v.cast(tgt.schema(c).dataType)).otherwise(acc))
+            }.as(s"_graft_new_$c"))): _*)
+    }
+    // new images of updated rows, then the accepted inserts in the
+    // same write (aligned by name: columns only the images carry take
+    // the declared DEFAULT, as the column-list INSERT does; columns
+    // only the source carries null-fill the images, as a read would)
+    val newRows: Option[DataFrame => DataFrame] =
+      if (updates.isEmpty) inserted.map(rows => (_: DataFrame) => rows)
+      else Some { hit =>
+        val images = hit.filter(col("_graft_clause")
+            .isInCollection(updates.map(_._1)))
+          .select(hit.columns.toSeq.filterNot(helpers.contains).map(c =>
+            if (setCols.contains(c)) col(s"_graft_new_$c").as(c)
+            else col(c)): _*)
+        inserted.fold(images) { rows =>
+          val defaults = snap.schemaJson.fold(Map.empty[String, Column])(
+            parseSchema(_).fields.map(f => f.name -> fill(f)).toMap)
+          images.unionByName(rows.select(rows.columns.toSeq.map(col) ++
+            images.schema.fields.filterNot(f => rows.columns.contains(f.name))
+              .map(f => defaults.getOrElse(f.name, lit(null))
+                .cast(f.dataType).as(f.name)): _*),
+            allowMissingColumns = true)
+        }
+      }
+
+    // a partitioned table restages survivors, updated images AND
+    // inserts THROUGH its layout (same rule as delete) — a CDC-synced
+    // partitioned table must keep metadata-only dropPartition working.
+    // BY SOURCE clauses make every live file a candidate and the read
+    // set. With no touched row the merge is its inserts: an append
+    // (fenced for the sink, whose no-insert batch publishes its marker
+    // alone), or nothing at all.
+    val marker = fence.toSeq.map { case (app, bid) => s"txn\t$app\t$bid" }
+    rewriteRows(s, t, snap,
+      if (bySource.nonEmpty) snap.liveFiles else candidates,
+      touched = clauseJoin(_).filter(col("_graft_clause") =!= 0),
+      kept = clauseJoin(_).filter(col("_graft_clause") === 0)
+        .drop(helpers: _*),
+      newRows, dvCaps, schemaLines, helpers = helpers, fence = fence)
+      .getOrElse(inserted match {
+        case Some(rows) => appendStaged(s, t, rows, snap.partCols,
+          statsCols, marker, allowWiden = evolveSchema, fence = fence)
+        case None => fence.fold(snap.version) { case (app, bid) =>
+          publishFenced(t, app, bid, marker) }
+      })
     } finally org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(src)
   }
 
@@ -3548,7 +3394,6 @@ object TxnLog {
     import org.apache.spark.sql.functions.col
     require(appId.matches("[A-Za-z0-9_-]+"), s"bad app id: $appId")
     require(keyCols.nonEmpty, "upsertBatch needs key columns")
-    val marker = s"txn\t$appId\t$batchId"
     while (true) {
       if (lastBatch(t, appId).exists(_ >= batchId)) return false
       // first batch on an empty table: nothing to merge into (the
@@ -3572,8 +3417,7 @@ object TxnLog {
       val snap = snapshot(t)
       try {
         mergeIntoKeys(s, t, df, keyCols, clauses,
-          extraLines = Seq(marker), fence = Some((appId, batchId)),
-          snap0 = Some(snap),
+          fence = Some((appId, batchId)), snap0 = Some(snap),
           dvCaps = dvCapsOf(snap),
           evolveSchema = allowWiden)
         return true
@@ -4246,6 +4090,16 @@ object TxnLog {
 
   private val NoConstraints = Constraints(Set.empty, Map.empty)
 
+  /** A CHECK's column references, read by Spark's expression parser
+    * (no session needed): words inside string literals are not
+    * references, and a backtick-quoted name stays one name. */
+  private def checkRefs(sql: String): Set[String] =
+    org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+      .parseExpression(sql).collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+          a.nameParts.head
+      }.toSet
+
   /** Constraints registered in the log (replay-accumulated —
     * checkpoint-bounded like every other metadata read; ops that
     * already hold a [[Snapshot]] read `snap.constraints` instead of
@@ -4502,15 +4356,7 @@ object TxnLog {
       .map(parseSchema(_).fieldNames.toSet)
     val curFields = cur.schemaJson
       .map(parseSchema(_).fieldNames.toSet).getOrElse(Set.empty)
-    // the CHECK's column references, read by Spark's expression
-    // parser (no session needed): words inside string literals are not
-    // references, and a backtick-quoted name stays one name
-    def refs(sql: String): Set[String] =
-      org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-        .parseExpression(sql).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-            a.nameParts.head
-        }.toSet.intersect(curFields)
+    def refs(sql: String): Set[String] = checkRefs(sql).intersect(curFields)
     val keptNotNull =
       cur.notNull.filter(c => restoredFields.forall(_.contains(c)))
     val keptChecks = cur.checks.filter { case (_, sql) =>

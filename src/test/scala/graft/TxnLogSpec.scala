@@ -4559,4 +4559,114 @@ class TxnLogSpec extends AnyFunSuite {
         s"$form without victims")
     }
   }
+
+  test("txnlog: replace refuses a new schema that strands a constraint's column") {
+    import spark.implicits._
+    val t = freshTable()
+    TxnLog.append(spark, t, Seq((1L, 5L)).toDF("k", "v"))
+    TxnLog.addCheck(spark, t, "v_pos", "v > 0")
+    TxnLog.addNotNull(spark, t, "k")
+    val v0 = TxnLog.latestVersion(t)
+    val e = intercept[IllegalArgumentException] {
+      TxnLog.replace(spark, t, Seq((2L, 7L)).toDF("k", "w"))
+    }
+    assert(e.getMessage.contains("CHECK v_pos") &&
+      e.getMessage.contains("drop the constraint"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      TxnLog.replace(spark, t, Seq(7L).toDF("v"))
+    }
+    assert(e2.getMessage.contains("NOT NULL k"), e2.getMessage)
+    assert(TxnLog.latestVersion(t) === v0)
+    // once the stranded constraint is dropped the reset lands, and a
+    // constraint whose column survives keeps enforcing
+    TxnLog.dropConstraint(t, "v_pos")
+    TxnLog.replace(spark, t, Seq((2L, 7L)).toDF("k", "w"))
+    assert(TxnLog.read(spark, t).as[(Long, Long)].collect().toSeq ===
+      Seq((2L, 7L)))
+    val e3 = intercept[IllegalArgumentException] {
+      TxnLog.replace(spark, t,
+        Seq((Option.empty[Long], 1L)).toDF("k", "w"))
+    }
+    assert(e3.getMessage.contains("NOT NULL k"), e3.getMessage)
+  }
+
+  test("txnlog: an empty write commits no data file") {
+    import spark.implicits._
+    val t = freshTable()
+    val empty = Seq.empty[(Long, Long)].toDF("k", "v")
+    def rowsOf(rel: String): Long =
+      spark.read.parquet(t.root.resolve(rel).toString).count()
+    def assertNoEmptyFile(after: String): Unit =
+      assert(!TxnLog.snapshot(t).liveFiles.exists(rowsOf(_) == 0L),
+        s"a zero-row data file is live after $after")
+    // a first empty append still registers its schema
+    TxnLog.append(spark, t, empty)
+    assert(TxnLog.registeredSchema(t).map(_.fieldNames.toSeq) ===
+      Some(Seq("k", "v")))
+    assert(TxnLog.snapshot(t).liveFiles.isEmpty)
+    TxnLog.append(spark, t, Seq((1L, 1L), (2L, 2L)).toDF("k", "v").coalesce(1))
+    TxnLog.append(spark, t, Seq((3L, 3L)).toDF("k", "v").coalesce(1))
+    // an empty batch still commits its txn marker
+    assert(TxnLog.appendBatch(spark, t, empty, "empty-batch", 0L))
+    assert(TxnLog.lastBatch(t, "empty-batch") === Some(0L))
+    assertNoEmptyFile("an empty append and batch")
+    // a DELETE that empties a whole file restages no survivor file
+    TxnLog.delete(spark, t, col("k") === 3L)
+    assertNoEmptyFile("a DELETE emptied a file")
+    assert(TxnLog.snapshot(t).liveFiles.length === 1)
+    assert(TxnLog.read(spark, t).count() === 2L)
+    // an empty replace still removes the old files: a truncate
+    TxnLog.replace(spark, t, empty)
+    assert(TxnLog.snapshot(t).liveFiles.isEmpty)
+    assert(TxnLog.read(spark, t).count() === 0L)
+  }
+
+  test("txnlog: a clause MERGE leaves files whose matched rows no clause touches in place, on both retirement modes") {
+    import spark.implicits._
+    // three single-file appends: file A holds k 0-9, B 10-19, C 20-29
+    def seed(): (TxnLog.Table, Seq[String]) = {
+      val t = freshTable()
+      val files = (0 until 3).map { f =>
+        TxnLog.append(spark, t, (f * 10L until f * 10L + 10)
+          .map(k => (k, k)).toDF("k", "v").coalesce(1))
+        TxnLog.snapshot(t).liveFiles
+      }
+      (t, files.zip(Seq.empty[String] +: files).map { case (now, before) =>
+        now.diff(before).head })
+    }
+    // matches k 5 and 7 (file A, touched) and 15 (file B, no clause
+    // fires on it); 100 and 101 match nothing and insert
+    Seq((5L, 500L), (7L, -1L), (15L, 1500L), (100L, 1L), (101L, 2L))
+      .toDF("k", "v").createOrReplaceTempView("merge_shape_src")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v").as[(Long, Long)].collect().sorted.toSeq
+    val results = Seq(false, true).map { dv =>
+      val (t, Seq(fileA, fileB, fileC)) = seed()
+      if (dv) TxnLog.setProperties(t,
+        Map("graft.enableDeletionVectors" -> "true"))
+      val before = TxnLog.latestVersion(t)
+      spark.sql(
+        s"""MERGE INTO txnlog.`${t.root}` t USING merge_shape_src s
+           |ON t.k = s.k
+           |WHEN MATCHED AND s.v < 0 THEN DELETE
+           |WHEN MATCHED AND t.k < 10 THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      val after = TxnLog.latestVersion(t)
+      assert(after === before + 1, s"dv=$dv: not one commit")
+      val live = TxnLog.snapshot(t).liveFiles
+      assert(live.contains(fileB) && live.contains(fileC),
+        s"dv=$dv: an untouched file was rewritten: $live")
+      assert(live.contains(fileA) === dv, s"dv=$dv: $live")
+      val read = rows(TxnLog.read(spark, t))
+      // no key of file B inserts a second time
+      assert(read.filter(_._1 == 15L) === Seq((15L, 15L)), s"dv=$dv")
+      val (ins, del) = TxnLog.changes(spark, t, before, after)
+      assert(rows(del) === Seq((5L, 5L), (7L, 7L)), s"dv=$dv")
+      assert(rows(ins) === Seq((5L, 500L), (100L, 1L), (101L, 2L)),
+        s"dv=$dv")
+      read
+    }
+    assert(results(0) === results(1))
+    assert(results(0).length === 31)
+  }
 }
