@@ -142,11 +142,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // DSv2 catalog integration (sessions that ALSO set
     // spark.sql.catalog.spark_catalog=graft.sources.TxnLogCatalog):
     // read-position relations over catalog-name txnlog tables rewrite
-    // onto the engine's V1 scan paths — per-query freshness with the
-    // same battle-tested plan shapes. Inert without the catalog (no
+    // into the same txnlog relation SQL path references and
+    // format("txnlog") reads analyze to. Inert without the catalog (no
     // TxnLogTable relations ever appear).
     e.injectResolutionRule(session =>
       graft.sources.TxnLogV2ReadRewrite(session))
+    // every txnlog relation expands into its snapshot's log-indexed
+    // parquet scan — once per execution, after analysis and before
+    // the cache lookup and the optimizer, each table resolved once
+    e.injectPlanNormalizationRule(session =>
+      graft.sources.TxnLogReadExpansion(session))
     // every parsed statement Spark's grammar covers (DML, ALTER,
     // SHOW, CREATE [OR REPLACE]) lowers onto a txnlog command when its
     // target is ours — HINTS batch: the rewrite must beat

@@ -6,6 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftglue.StreamShim
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal ACID commit log for a parquet table directory — the
@@ -245,7 +246,7 @@ object TxnLog {
               // Column NAMES decode too: Spark's partitioned writer
               // escapes them in directory segments the same way, and
               // an escaped name would never match schema fields in
-              // readGrouped/dropPartition otherwise
+              // readRels/dropPartition otherwise
               case Array(c, v) if c.nonEmpty =>
                 unescapePart(c) -> unescapePart(v)
               case _                         => corrupt(src, line)
@@ -794,19 +795,16 @@ object TxnLog {
   private[sources] def hasMapping(schema: StructType): Boolean =
     schema.fields.exists(f => physicalName(f) != f.name)
 
-  /** The schema as the data files hold it: fields renamed to their
-    * physical names, mapping metadata dropped. */
+  /** The schema as the data files hold it: mapped fields renamed to
+    * their physical names, the mapping metadata dropped (everything
+    * else — EXISTS_DEFAULT, which the parquet reader backfills
+    * physically-missing columns from — rides along). */
   private def physicalSchema(schema: StructType): StructType =
-    StructType(schema.fields.map { f =>
-      // EXISTS_DEFAULT survives the physical projection: the parquet
-      // reader backfills physically-missing columns from it
-      val mb = new org.apache.spark.sql.types.MetadataBuilder()
-      if (f.metadata.contains(ExistsDefaultKey))
-        mb.putString(ExistsDefaultKey,
-          f.metadata.getString(ExistsDefaultKey))
-      org.apache.spark.sql.types.StructField(
-        physicalName(f), f.dataType, f.nullable, mb.build())
-    })
+    StructType(schema.fields.map(f =>
+      if (!f.metadata.contains(PhysicalKey)) f
+      else f.copy(name = physicalName(f),
+        metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata).remove(PhysicalKey).build())))
 
   /** Rename a frame's columns LOGICAL -> PHYSICAL before staging —
     * the write half of the mapping (columns outside the registered
@@ -1143,25 +1141,20 @@ object TxnLog {
                       spec: Map[String, String]): Boolean =
     spec.forall { case (c, v) => p.get(c).forall(_ == v) }
 
-  /** Partition-pruned read: plans ONLY the files whose recorded
+  /** Partition-pruned read: [[read]] filtered to `spec`, so the
+    * result is exactly the partition's rows regardless of file
+    * provenance. The file index plans ONLY the files whose recorded
     * partition values admit `spec` (metadata-less files stay — they
-    * may hold anything) and filters residually, so the result is
-    * exactly the partition's rows regardless of file provenance. */
+    * may hold anything, and the filter runs on their rows). */
   def readPartition(s: SparkSession, t: Table, spec: Map[String, String],
                     asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val snap = snapshot(t, asOf)
-    val keep = snap.liveFiles.filter(rel =>
-      mayHold(snap.filePartitions.getOrElse(rel, Map.empty), spec))
-    val df = readRels(s, t, snap,
-      if (keep.nonEmpty) keep else snap.liveFiles)
-    val filtered = spec.foldLeft(df) { case (d, (c, v)) =>
+    spec.foldLeft(read(s, t, asOf)) { case (d, (c, v)) =>
       // null-SAFE equality: the __HIVE_DEFAULT_PARTITION__ sentinel
       // reconstitutes as a null literal, and `=== null` would match
       // nothing — <=> selects the null partition's rows correctly
       d.filter(col(c) <=> partValue(v).cast(d.schema(c).dataType))
     }
-    if (keep.nonEmpty) filtered else filtered.limit(0)
   }
 
   /** (files planned, files live) for a partition probe. */
@@ -1469,22 +1462,69 @@ object TxnLog {
     readRels(s, t, snap, snap.liveFiles, mergeSchema)
   }
 
-  /** Partition-aware file-set read: files carrying `part=` metadata
-    * read WITHOUT their partition columns (the files don't store
-    * them) and get each column reconstituted as a typed literal —
-    * one scan group per distinct partition spec, the hive layout's
-    * plan shape. Metadata-less files (an unpartitioned table, or a
-    * sliver a row-level rewrite flattened) read as-is; both unify
-    * under the registered schema. */
-  private def readRels(s: SparkSession, t: Table, snap: Snapshot,
-                       rels: Seq[String],
-                       mergeSchema: Boolean = false,
-                       withPos: Boolean = false): DataFrame =
-    if (snap.filePartitions.isEmpty || !rels.exists(snap.filePartitions.contains))
-      readFiles(s, t, rels, snap.schemaJson, mergeSchema, snap.dvs,
-        withPos)
-    else readGrouped(s, t, rels, snap.filePartitions, snap.schemaJson,
-      snap.dvs, withPos)
+  /** The schema a read of `snap` binds: the registered one, else (a
+    * raw-commit log) the union of its live files' footers. */
+  private[graft] def schemaOf(s: SparkSession, t: Table,
+                              snap: Snapshot): StructType =
+    snap.schemaJson.map(parseSchema).getOrElse(
+      readRels(s, t, snap, snap.liveFiles, mergeSchema = true).schema)
+
+  /** The one scan entry: `rels` of `snap` as parquet relations over a
+    * [[TxnLogFileIndex]] — no path listing, partition values from the
+    * `part=` tokens, stats-based file skipping for every pushed
+    * filter. Files carrying `part=` tokens read WITHOUT their
+    * partition columns (the files don't store them); files without
+    * them (an unpartitioned table, a sliver a rewrite flattened, a
+    * change file) hold every column — one relation per distinct
+    * partition-column set, so at most two for any table written
+    * through one layout. Data columns scan PHYSICAL and alias back to
+    * logical; `snap.dvs` route through [[dvAware]]. A snapshot with
+    * no registered schema infers one from the files' footers
+    * (`mergeSchema` unions them). */
+  private[sources] def readRels(s: SparkSession, t: Table, snap: Snapshot,
+                                rels: Seq[String],
+                                mergeSchema: Boolean = false,
+                                withPos: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val schema = snap.schemaJson.map(parseSchema).getOrElse {
+      val files = new TxnLogFileIndex(t, snap, rels, StructType(Nil))
+        .listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat().inferSchema(s,
+          Map("mergeSchema" -> mergeSchema.toString), files)
+        .getOrElse(throw new IllegalStateException(
+          s"table at ${t.root} registered no schema and has no file " +
+            "to infer one from"))
+    }
+    def quoted(n: String) = col(s"`${n.replace("`", "``")}`")
+    val groups = rels
+      .groupBy(rel => snap.filePartitions.getOrElse(rel, Map.empty).keySet)
+      .toSeq.sortBy(_._1.toSeq.sorted.mkString(",")) // deterministic plan
+    (if (groups.isEmpty) Seq(Set.empty[String] -> Nil) else groups).map {
+      case (keys, files) =>
+        require(keys.subsetOf(schema.fieldNames.toSet),
+          "partitioned txnlog reads need a log-registered schema")
+        // partition columns never map (rename/drop refuse on them)
+        val (part, data) = schema.fields.partition(f => keys.contains(f.name))
+        val scan = dvAware(s, t,
+          fs => StreamShim.scanOf(s, new TxnLogFileIndex(t, snap, fs,
+            StructType(part)), physicalSchema(StructType(data))),
+          files, snap.dvs, withPos)
+        scan.select(schema.fields.toIndexedSeq.map(f =>
+          if (physicalName(f) == f.name) quoted(f.name)
+          else quoted(physicalName(f)).as(f.name)) ++
+          (if (withPos) PosCols.map(col) else Nil): _*)
+    }.reduce(_.unionByName(_))
+  }
+
+  /** [[readRels]] of files outside any one snapshot — a feed's
+    * change and insert files — under `schemaJson`, partition columns
+    * reconstituted from `parts`. */
+  private[graft] def readFiles(s: SparkSession, t: Table,
+      rels: Seq[String], schemaJson: Option[String],
+      parts: Map[String, Map[String, String]] = Map.empty): DataFrame =
+    readRels(s, t, Snapshot(-1L, rels, schemaJson = schemaJson,
+      filePartitions = parts), rels)
 
   /** The two helper columns a position-exposing read carries: the
     * file's normalized absolute path and the row's 0-based index
@@ -1523,9 +1563,9 @@ object TxnLog {
       .withColumn("_g_fp",
         regexp_replace(col("_metadata.file_path"), "^file:/+", "/"))
       .withColumn("_g_ri", col("_metadata.row_index"))
+    def plain(fs: Seq[String]) = if (withPos) pos(build(fs)) else build(fs)
     val dvd = rels.filter(dvs.contains)
-    if (dvd.isEmpty)
-      return if (withPos) pos(build(rels)) else build(rels)
+    if (dvd.isEmpty) return plain(rels)
     val rows = dvd.flatMap { rel =>
       val abs = encodedAbs(t, rel)
       dvRanges(t, dvs(rel)).map { case (lo, hi) =>
@@ -1545,53 +1585,9 @@ object TxnLog {
         posDirty("_g_ri") >= dead("_g_dlo") &&
         posDirty("_g_ri") <= dead("_g_dhi"),
       "left_anti")
+    val live = if (withPos) dirty else dirty.drop(PosCols: _*)
     val clean = rels.filterNot(dvs.contains)
-    // allowMissingColumns: under a schema-LESS (mergeSchema) read the
-    // two subsets may infer different footers — null-fill like the
-    // single-scan mergeSchema union would; pinned-schema branches
-    // produce identical columns and this is a no-op
-    if (clean.isEmpty) {
-      if (withPos) dirty else dirty.drop(PosCols: _*)
-    } else if (withPos)
-      pos(build(clean)).unionByName(dirty, allowMissingColumns = true)
-    else build(clean).unionByName(dirty.drop(PosCols: _*),
-      allowMissingColumns = true)
-  }
-
-  private def readGrouped(s: SparkSession, t: Table, rels: Seq[String],
-      parts: Map[String, Map[String, String]],
-      schemaJson: Option[String],
-      dvs: Map[String, String] = Map.empty,
-      withPos: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val schema = schemaJson.map(parseSchema).getOrElse(
-      throw new IllegalStateException(
-        "partitioned txnlog reads need a log-registered schema"))
-    if (rels.isEmpty)
-      return s.read.schema(StructType(schema.fields.map(f =>
-        org.apache.spark.sql.types.StructField(f.name, f.dataType,
-          f.nullable)))).parquet()
-    val helper = if (withPos) PosCols.map(col) else Nil
-    val groups = rels.groupBy(rel => parts.getOrElse(rel, Map.empty))
-      .toSeq.sortBy(_._1.toSeq.sorted.mkString(",")) // deterministic plan
-    groups.map { case (spec, files) =>
-      val dataFields = schema.fields.filterNot(f => spec.contains(f.name))
-      // partition columns never map (rename/drop refuse on them);
-      // data columns scan PHYSICAL and alias back to logical
-      val scan = dvAware(s, t,
-        fs => s.read.schema(physicalSchema(StructType(dataFields)))
-          .parquet(fs.map(r => t.root.resolve(r).toString): _*),
-        files, dvs, withPos)
-      val base = scan.select(dataFields.toIndexedSeq.map(f =>
-        col(physicalName(f)).as(f.name)) ++ helper: _*)
-      val full = spec.foldLeft(base) { case (df, (c, v)) =>
-        val dt = schema.fields.find(_.name == c)
-          .map(_.dataType)
-          .getOrElse(org.apache.spark.sql.types.StringType)
-        df.withColumn(c, partValue(v).cast(dt))
-      }
-      full.select(schema.fieldNames.toIndexedSeq.map(col) ++ helper: _*)
-    }.reduce(_.unionByName(_))
+    if (clean.isEmpty) live else plain(clean).unionByName(live)
   }
 
   /** A partition VALUE as a literal: values are stored DECODED in
@@ -1649,62 +1645,21 @@ object TxnLog {
     else v.flatMap(c => if (needs(c)) f"%%${c.toInt}%02X" else c.toString)
   }
 
-  private[graft] def readFiles(s: SparkSession, t: Table,
-                        rels: Seq[String], schemaJson: Option[String],
-                        mergeSchema: Boolean = false,
-                        dvs: Map[String, String] = Map.empty,
-                        withPos: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    def abs(rs: Seq[String]): Seq[String] =
-      rs.map(rel => t.root.resolve(rel).toString)
-    schemaJson match {
-      case Some(js) =>
-        val schema = parseSchema(js)
-        if (!hasMapping(schema))
-          dvAware(s, t,
-            fs => s.read.schema(schema).parquet(abs(fs): _*),
-            rels, dvs, withPos)
-        else { // mapped: scan PHYSICAL names, alias back to logical
-          val raw = dvAware(s, t,
-            fs => s.read.schema(physicalSchema(schema))
-              .parquet(abs(fs): _*),
-            rels, dvs, withPos)
-          raw.select(schema.fields.toIndexedSeq.map(f =>
-            col(physicalName(f)).as(f.name)) ++
-            (if (withPos) PosCols.map(col) else Nil): _*)
-        }
-      case None =>
-        dvAware(s, t,
-          fs => s.read.option("mergeSchema", mergeSchema)
-            .parquet(abs(fs): _*),
-          rels, dvs, withPos)
-    }
-  }
-
-  /** Plan a range probe on `colName` from the MANIFEST: only live
-    * files whose embedded stats intersect [lo, hi] reach the scan —
-    * files without stats are kept (cannot skip, stays correct). At
-    * 100 TB this is the query-planning step that touches no data
-    * file at all. Returns the pruned frame; callers still apply
-    * their own row-level predicate. */
+  /** A range probe on `colName`: [[read]] filtered to [lo, hi]. The
+    * file index plans only the live files whose manifest stats
+    * intersect the range — files without stats are kept (cannot skip,
+    * stays correct). At 100 TB this is the query-planning step that
+    * touches no data file at all. */
   def readPruned(s: SparkSession, t: Table, colName: String,
-                 lo: Long, hi: Long, asOf: Option[Long] = None): DataFrame = {
-    val snap = snapshot(t, asOf)
-    val keep = pruneFiles(snap, colName, lo, hi)
-    val df = readRels(s, t, snap,
-      if (keep.nonEmpty) keep else snap.liveFiles)
-    if (keep.nonEmpty) df else df.limit(0)
-  }
-
-  private def pruneFiles(snap: Snapshot, colName: String,
-                         lo: Long, hi: Long): Seq[String] =
-    pruneBox(snap, Seq((colName, lo, hi)))
+                 lo: Long, hi: Long, asOf: Option[Long] = None): DataFrame =
+    read(s, t, asOf).filter(
+      org.apache.spark.sql.functions.col(colName).between(lo, hi))
 
   /** (files planned, files live) for a probe — the skipping audit. */
   def plannedFiles(t: Table, colName: String, lo: Long,
                    hi: Long): (Int, Int) = {
     val snap = snapshot(t)
-    (pruneFiles(snap, colName, lo, hi).length, snap.liveFiles.length)
+    (pruneBox(snap, Seq((colName, lo, hi))).length, snap.liveFiles.length)
   }
 
   private def stagedFiles(t: Table, stage: Path): Seq[String] =
@@ -1888,13 +1843,9 @@ object TxnLog {
     * kept). */
   def readPrunedBox(s: SparkSession, t: Table,
                     preds: Seq[(String, Long, Long)],
-                    asOf: Option[Long] = None): DataFrame = {
-    val snap = snapshot(t, asOf)
-    val keep = pruneBox(snap, preds)
-    val df = readRels(s, t, snap,
-      if (keep.nonEmpty) keep else snap.liveFiles)
-    if (keep.nonEmpty) df else df.limit(0)
-  }
+                    asOf: Option[Long] = None): DataFrame =
+    preds.foldLeft(read(s, t, asOf)) { case (df, (c, lo, hi)) =>
+      df.filter(org.apache.spark.sql.functions.col(c).between(lo, hi)) }
 
   /** (files planned, files live) for a box probe. */
   def plannedFilesBox(t: Table,
@@ -3789,7 +3740,7 @@ object TxnLog {
     val schema = parseSchema(schemaJson)
     val tsType = org.apache.spark.sql.types.TimestampType
     def empty: DataFrame =
-      readFiles(s, t, Nil, Some(schemaJson))
+      readRels(s, t, snapTo, Nil)
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(0L))
         .withColumn("_commit_timestamp", lit(null).cast(tsType))
@@ -3839,11 +3790,9 @@ object TxnLog {
       // broadcast join attributes it — a file touched by N commits
       // in the range emits its rows once PER commit, the per-commit
       // attribution the union form had
-      val df =
-        if (files.exists(partsAll.contains))
-          readGrouped(s, t, files, partsAll, Some(schemaJson),
-            withPos = true)
-        else readFiles(s, t, files, Some(schemaJson), withPos = true)
+      val df = readRels(s, t,
+        snapTo.copy(filePartitions = partsAll, dvs = Map.empty), files,
+        withPos = true)
       val m = s.createDataFrame(
         pairs.distinct.map { case (rel, v) =>
           org.apache.spark.sql.Row(encodedAbs(t, rel), v, ts(v))
@@ -4580,19 +4529,12 @@ object TxnLog {
     * remove-bearing commit with NO cdc info can never stream. */
   private[graft] def appendFeed(t: Table, from: Long, to: Long,
                                   ignoreDeletes: Boolean,
-                                  ignoreChanges: Boolean = false): Seq[String] = {
-    val range = versionFiles(t)
-      .filter(p => versionOf(p) > from && versionOf(p) <= to)
-    range.headOption.foreach(h => require(versionOf(h) == from + 1,
-      s"stream range v$from..v$to is partially expired: earliest " +
-        s"retained log in range is v${versionOf(h)} — restart the " +
-        "stream from a fresh checkpoint"))
-    range.flatMap { vf =>
-      val a = commitActions(vf)
+                                  ignoreChanges: Boolean = false): Seq[String] =
+    streamRange(t, from, to).flatMap { case (vf, a) =>
       if (!a.rewrites) // dv commits are rewrites: adds ≠ insert wave
         a.adds ++ a.cdcFiles.collect { case (rel, "insert") => rel }
       else if (a.cdcNone) Nil
-      else if (a.cdcFiles.nonEmpty) {
+      else {
         val inserts = a.cdcFiles.collect { case (rel, "insert") => rel }
         val hasDeletes = a.cdcFiles.exists(_._2 == "delete")
         if (!hasDeletes || ignoreChanges) inserts
@@ -4609,9 +4551,27 @@ object TxnLog {
             "ignoreDeletes=true to skip pure-delete commits, " +
             "ignoreChanges=true to also re-emit rewrites' new images, " +
             "or rebuild the downstream from a fresh full snapshot")
-      } else throw new IllegalStateException(
-        s"commit ${vf.getFileName} rewrites files without cdc info; " +
-          "the stream cannot resolve it from the log")
+      }
+    }
+
+  /** The commits in (from, to] with their actions — a stream batch's
+    * range. A range whose oldest commit expired, or holding a rewrite
+    * without cdc info, refuses: a stream can neither skip nor diff. */
+  private def streamRange(t: Table, from: Long,
+      to: Long): Seq[(Path, CommitActions)] = {
+    val range = versionFiles(t)
+      .filter(p => versionOf(p) > from && versionOf(p) <= to)
+    range.headOption.foreach(h => require(versionOf(h) == from + 1,
+      s"stream range v$from..v$to is partially expired: earliest " +
+        s"retained log in range is v${versionOf(h)} — restart the " +
+        "stream from a fresh checkpoint"))
+    range.map { vf =>
+      val a = commitActions(vf)
+      if (a.rewrites && !a.cdcNone && a.cdcFiles.isEmpty)
+        throw new IllegalStateException(
+          s"commit ${vf.getFileName} rewrites files without cdc info; " +
+            "the stream cannot resolve it from the log")
+      vf -> a
     }
   }
 
@@ -4622,19 +4582,7 @@ object TxnLog {
     * incrementally). */
   private[graft] def changeFeedFiles(t: Table, from: Long,
       to: Long): (Seq[String], Seq[String]) = {
-    val range = versionFiles(t)
-      .filter(p => versionOf(p) > from && versionOf(p) <= to)
-    range.headOption.foreach(h => require(versionOf(h) == from + 1,
-      s"stream range v$from..v$to is partially expired: earliest " +
-        s"retained log in range is v${versionOf(h)} — restart the " +
-        "stream from a fresh checkpoint"))
-    val acts = range.map(commitActions)
-    range.zip(acts).foreach { case (vf, a) =>
-      if (a.rewrites && !a.cdcNone && a.cdcFiles.isEmpty)
-        throw new IllegalStateException(
-          s"commit ${vf.getFileName} rewrites files without cdc info; " +
-            "the stream cannot resolve it from the log")
-    }
+    val acts = streamRange(t, from, to).map(_._2)
     (acts.filter(!_.rewrites).flatMap(_.adds) ++
       acts.flatMap(_.cdcFiles).collect { case (rel, "insert") => rel },
       acts.flatMap(_.cdcFiles).collect { case (rel, "delete") => rel })
@@ -4646,9 +4594,7 @@ object TxnLog {
     * unpartitioned tables (the common case pays one map lookup). */
   private def feedPartsMap(t: Table, from: Long,
       to: Long): Map[String, Map[String, String]] = {
-    val rangeParts = versionFiles(t)
-      .filter(p => versionOf(p) > from && versionOf(p) <= to)
-      .flatMap(vf => commitActions(vf).addParts)
+    val rangeParts = streamRange(t, from, to).flatMap(_._2.addParts)
     // a stream may legitimately resume at the version just below the
     // expireLog retention floor (its range is fully retained even
     // though `from` itself is not replayable): fall back to the
@@ -4660,8 +4606,7 @@ object TxnLog {
     val base =
       if (from < 0) Map.empty[String, Map[String, String]]
       else snapshot(t, Some(math.max(from, floor))).filePartitions
-    if (rangeParts.isEmpty && base.isEmpty) Map.empty
-    else base ++ rangeParts
+    base ++ rangeParts
   }
 
   /** One streaming micro-batch of the APPEND feed as a DataFrame,
@@ -4670,11 +4615,8 @@ object TxnLog {
   private[graft] def readFeedBatch(s: SparkSession, t: Table, from: Long,
       to: Long, ignoreDeletes: Boolean, ignoreChanges: Boolean,
       schemaJson: String): DataFrame = {
-    val files = appendFeed(t, from, to, ignoreDeletes, ignoreChanges)
-    val parts = feedPartsMap(t, from, to)
-    if (files.exists(parts.contains))
-      readGrouped(s, t, files, parts, Some(schemaJson))
-    else readFiles(s, t, files, Some(schemaJson))
+    readFiles(s, t, appendFeed(t, from, to, ignoreDeletes, ignoreChanges),
+      Some(schemaJson), feedPartsMap(t, from, to))
   }
 
   /** One CDF micro-batch as (inserts, deletes) DataFrames, partition
@@ -4716,11 +4658,8 @@ object TxnLog {
           "cannot be reconstituted; rebuild the downstream from a " +
           "fresh checkpoint")
     }
-    def rd(files: Seq[String]): DataFrame =
-      if (files.exists(parts.contains))
-        readGrouped(s, t, files, parts, Some(schemaJson))
-      else readFiles(s, t, files, Some(schemaJson))
-    (rd(ins), rd(del))
+    (readFiles(s, t, ins, Some(schemaJson), parts),
+      readFiles(s, t, del, Some(schemaJson), parts))
   }
 
   /** Change-data-feed read: the row-level (inserts, deletes) between
@@ -4756,12 +4695,15 @@ object TxnLog {
         s"retained log in range is v${versionOf(range.head)} — " +
         "resync from a full snapshot instead")
     val acts = range.map(commitActions)
-    val schemaAtTo = snapshot(t, Some(to)).schemaJson
-    val none = readFiles(s, t, snapFrom.liveFiles,
-      schemaAtTo.orElse(snapFrom.schemaJson)).limit(0)
+    val snapTo = snapshot(t, Some(to))
     // partition metadata for every file the range can reference:
     // the from-snapshot's live set plus the range commits' adds
-    val partsMap = snapFrom.filePartitions ++ acts.flatMap(_.addParts)
+    val feed = Snapshot(to, Nil,
+      schemaJson = snapTo.schemaJson.orElse(snapFrom.schemaJson),
+      filePartitions = snapFrom.filePartitions ++ acts.flatMap(_.addParts),
+      fileSizes = snapFrom.fileSizes ++ snapTo.fileSizes)
+    val none = readRels(s, t, feed, snapFrom.liveFiles,
+      mergeSchema = true).limit(0)
     // feed-file reads are dv-FREE by default: an insert wave is the
     // rows as of its commit, regardless of rows a LATER deletion
     // vector killed (those arrive as their own delete events); the
@@ -4769,11 +4711,7 @@ object TxnLog {
     def rd(rels: Seq[String],
         dvs: Map[String, String] = Map.empty): DataFrame =
       if (rels.isEmpty) none
-      else if (rels.exists(partsMap.contains))
-        readGrouped(s, t, rels, partsMap,
-          schemaAtTo.orElse(snapFrom.schemaJson), dvs)
-      else readFiles(s, t, rels, schemaAtTo, mergeSchema = true,
-        dvs = dvs)
+      else readRels(s, t, feed.copy(dvs = dvs), rels, mergeSchema = true)
     if (acts.forall(a => !a.rewrites || a.cdcNone || a.cdcFiles.nonEmpty)) {
       // every rewrite in the range explains itself: resolve from the
       // log. A rewrite's adds are restaged survivors, NOT inserts —
@@ -4791,7 +4729,6 @@ object TxnLog {
       // it as an empty frame on the other side's schema; each side
       // diffs under its OWN deletion-vector state, so a dv-bearing
       // range still diffs row-exactly
-      val snapTo = snapshot(t, Some(to))
       val aFiles = snapFrom.liveFiles
       val bFiles = snapTo.liveFiles
       require(aFiles.nonEmpty || bFiles.nonEmpty,

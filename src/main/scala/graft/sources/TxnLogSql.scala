@@ -335,16 +335,15 @@ object GraftSqlParser {
     * relation provider would fail analysis with
     * UNSUPPORTED_DATASOURCE_FOR_DIRECT_QUERY — so the substitution
     * happens at the parser seam, giving SQL-first users the same
-    * direct-path syntax Delta tables get. Plain references get the
-    * LIVE relation ([[TxnLogLiveRelation]]): the snapshot resolves per
-    * scan, so a temp view created over the path serves fresh data
-    * after later commits instead of pinning its creation-time file
-    * list. A `VERSION AS OF` / `TIMESTAMP AS OF` reference (Spark's
-    * RelationTimeTravel) resolves EAGERLY through the relation
-    * provider's versionAsOf/timestampAsOf options: a pinned version
-    * is immutable, nothing to re-resolve. Catalog tables created
-    * `USING txnlog` resolve natively (and travel through
-    * [[TxnLogCatalog]]). Statement targets stay unresolved for
+    * direct-path syntax Delta tables get. Plain references get a
+    * LIVE [[TxnLogRelation]] (schema bound now, snapshot resolved per
+    * execution), so a temp view created over the path serves fresh
+    * data after later commits instead of pinning its creation-time
+    * file list. A `VERSION AS OF` / `TIMESTAMP AS OF` reference
+    * (Spark's RelationTimeTravel) pins its version through the
+    * relation provider's versionAsOf/timestampAsOf options. Catalog
+    * tables created `USING txnlog` resolve natively (and travel
+    * through [[TxnLogCatalog]]). Statement targets stay unresolved for
     * [[TxnLogStatementRule]]; an INSERT form it does not lower keeps
     * its UnresolvedRelation and fails loudly as table-not-found. */
   private[sources] def resolveTxnlogPaths(spark: SparkSession,
@@ -365,8 +364,10 @@ object GraftSqlParser {
               version.map("versionAsOf" -> _) ++
               ts.map(e => "timestampAsOf" -> timestampText(e))))
       case u: UnresolvedRelation if pathRef(u).isDefined =>
+        val t = TxnLog.Table(TxnLog.pathOf(pathRef(u).get))
         org.apache.spark.sql.execution.datasources.LogicalRelation(
-          TxnLogLiveRelation.of(spark.sqlContext, pathRef(u).get))
+          new TxnLogRelation(spark.sqlContext, t, None,
+            TxnLog.schemaOf(spark, t, TxnLog.snapshot(t))))
     }
   }
 

@@ -176,11 +176,12 @@ class TxnLogStreamProvider extends StreamSourceProvider
   /** BATCH reads through the same short name —
     * `spark.read.format("txnlog").option("path", root).load()` and
     * SQL `CREATE ... USING txnlog OPTIONS (path ...)` — resolved to
-    * a plain parquet HadoopFsRelation over exactly the snapshot's
-    * live files, so filter pushdown / column pruning / whole-stage
-    * codegen all apply as if the manifest were a directory listing.
-    * Time travel rides the options: `versionAsOf` (a log version) or
-    * `timestampAsOf` (epoch millis or an ISO-8601 instant). */
+    * a [[TxnLogRelation]] pinned to the snapshot, which the graft
+    * read rule expands into parquet scans over exactly its live files
+    * (filter pushdown, stats skipping, column pruning and whole-stage
+    * codegen all apply). Time travel rides the options: `versionAsOf`
+    * (a log version) or `timestampAsOf` (epoch millis or an ISO-8601
+    * instant). */
   override def createRelation(sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation =
     relationOf(sqlContext, parameters, None)
@@ -207,38 +208,23 @@ class TxnLogStreamProvider extends StreamSourceProvider
         !parameters.contains("versionAsOf") &&
         !parameters.contains("timestampAsOf"))
       userSchema.foreach(sc => TxnLog.registerSchema(t, sc))
-    val asOf: Option[Long] = parameters.get("versionAsOf") match {
-      case Some(v) => Some(v.toLong)
-      case None => parameters.get("timestampAsOf").map(ts =>
-        TxnLog.versionAt(t, TxnLog.tsMillis(ts)))
-    }
+    // the catalog's time-travel refusals, by name: both options at
+    // once would silently prefer one, a non-numeric version would
+    // surface as a raw NumberFormatException
+    require(!(parameters.contains("versionAsOf") &&
+        parameters.contains("timestampAsOf")),
+      "set either versionAsOf or timestampAsOf, not both")
+    val asOf = parameters.get("versionAsOf").map(v =>
+      try v.toLong catch { case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"txnlog VERSION AS OF takes a numeric log version, got: $v") })
+      .orElse(parameters.get("timestampAsOf").map(ts =>
+        TxnLog.versionAt(t, TxnLog.tsMillis(ts))))
+    // pinned to the version resolved NOW: the frame a load() returns
+    // reads the same snapshot at every execution
     val snap = TxnLog.snapshot(t, asOf)
-    // a hive-partitioned table's files do NOT store the partition
-    // columns, so the flat parquet relation would null-fill them —
-    // such tables resolve through the partition-aware scan instead
-    // (pinned to the observed version, the same point-in-time
-    // semantics the flat path's captured file list has). A
-    // column-MAPPED table (files hold physical names after a rename/
-    // drop) needs the same indirection: the wrapped scan aliases
-    // physical back to logical. A DELETION-VECTOR-carrying snapshot
-    // too: the flat parquet relation would serve the dead rows.
-    val mapped = snap.schemaJson.map(js =>
-      org.apache.spark.sql.types.DataType.fromJson(js)
-        .asInstanceOf[StructType]).exists(TxnLog.hasMapping)
-    if (snap.filePartitions.nonEmpty || mapped || snap.dvs.nonEmpty)
-      return new TxnLogPartitionedRelation(sqlContext, t,
-        Some(snap.version),
-        userSchema.orElse(snap.schemaJson.map(js =>
-          org.apache.spark.sql.types.DataType.fromJson(js)
-            .asInstanceOf[StructType])).getOrElse(
-          throw new IllegalStateException(
-            "partitioned txnlog reads need a log-registered schema")))
-    val paths = snap.liveFiles.map(rel => t.root.resolve(rel).toString)
-    val schema = userSchema.orElse(
-      snap.schemaJson.map(js =>
-        org.apache.spark.sql.types.DataType.fromJson(js)
-          .asInstanceOf[StructType]))
-    StreamShim.resolveParquet(sqlContext.sparkSession, paths, schema)
+    new TxnLogRelation(sqlContext, t, Some(snap.version), userSchema
+      .getOrElse(TxnLog.schemaOf(sqlContext.sparkSession, t, snap)))
   }
 
   private def tableOf(parameters: Map[String, String]): TxnLog.Table =
@@ -249,15 +235,14 @@ class TxnLogStreamProvider extends StreamSourceProvider
   private def schemaOf(sqlContext: SQLContext,
                        schema: Option[StructType],
                        parameters: Map[String, String]): StructType =
-    schema.orElse(TxnLog.registeredSchema(tableOf(parameters))).getOrElse {
-      // raw-commit tables never registered one: fall back to the live
-      // snapshot's footers, once, at stream definition time
+    schema.getOrElse {
+      // once, at stream definition time (raw-commit tables infer it
+      // from the live snapshot's footers)
       val t = tableOf(parameters)
       require(TxnLog.latestVersion(t) >= 0,
         s"txnlog table at ${t.root} has no commits and no registered " +
           "schema; commit first or pass .schema(...) explicitly")
-      TxnLog.readFiles(sqlContext.sparkSession, t,
-        TxnLog.snapshot(t).liveFiles, None, mergeSchema = true).schema
+      TxnLog.schemaOf(sqlContext.sparkSession, t, TxnLog.snapshot(t))
     }
 
   /** `readChangeFeed=true` turns the source into a CDF stream: rows
@@ -427,151 +412,176 @@ private[sources] class TxnLogSink(ctx: SQLContext, t: TxnLog.Table,
   }
 }
 
-/** Shared V1 Filter → Column translation for the txnlog relations.
-  * Exact translation or None — Or/Not over a dropped branch would
-  * change semantics, so nothing partial survives below the top
-  * level (top-level array elements are implicitly ANDed, where
-  * dropping an element is always safe); Spark re-applies every
-  * filter above a V1 relation, so untranslated predicates stay
-  * correct. */
-private[graft] object TxnLogFilters {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{col, lit}
-  import org.apache.spark.sql.sources._
-
-  def exact(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v)            => Some(col(a) === lit(v))
-    case GreaterThan(a, v)        => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v)           => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
-    case In(a, vs)                => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a)                => Some(col(a).isNull)
-    case IsNotNull(a)             => Some(col(a).isNotNull)
-    case StringStartsWith(a, p)   => Some(col(a).startsWith(p))
-    case And(l, r) => for (a <- exact(l); b <- exact(r)) yield a && b
-    case Or(l, r)  => for (a <- exact(l); b <- exact(r)) yield a || b
-    case Not(x)    => exact(x).map(!_)
-    case _         => None
-  }
-
-  /** Filter + prune `base` and hand back its internal-row RDD (the
-    * relations run with needConversion=false). */
-  def scan(base: org.apache.spark.sql.DataFrame,
-      requiredColumns: Array[String],
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val filtered = filters.flatMap(exact).foldLeft(base)(_.filter(_))
-    val pruned = filtered.select(
-      requiredColumns.map(col).toIndexedSeq: _*)
-    pruned.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.toRdd
-      .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
-  }
-}
-
-/** Batch relation for a HIVE-PARTITIONED txnlog table: wraps the
-  * partition-aware grouped read (typed reconstitution of the
-  * partition columns) behind V1's PrunedFilteredScan. Column pruning
-  * reaches the parquet scans through the inner plan's select, and
-  * exactly-translated filters push into it — including filters on
-  * the partition columns, which collapse to the reconstituted
-  * literals and prune whole scan groups in the optimizer. Spark
-  * re-applies every filter above a V1 relation, so partially
-  * untranslatable predicates stay correct. */
-private[graft] class TxnLogPartitionedRelation(
-    override val sqlContext: SQLContext, t: TxnLog.Table,
-    asOf: Option[Long], override val schema: StructType)
-  extends BaseRelation
-    with org.apache.spark.sql.sources.PrunedFilteredScan {
-  import org.apache.spark.sql.sources._
-
-  // rows are produced by an internal Dataset plan: already InternalRow
-  override def needConversion: Boolean = false
-
-  /** How many times the log was replayed into a base plan — the spec
-    * pins this at 1 for a multi-scan query (a self-join must not pay
-    * the log read and grouped-plan build per scan). */
-  private[graft] val logReads = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** The snapshot's resolved plan, built ONCE per relation instance:
-    * every buildScan (each scan of a self-join, each retry) projects
-    * and filters over the same memoized base. The version is already
-    * pinned (`asOf` captures the snapshot at relation creation), so
-    * caching adds no staleness — at a 100 TB table's history depth it
-    * removes O(versions) log-replay churn per extra scan. */
-  private lazy val base: org.apache.spark.sql.DataFrame = {
-    logReads.incrementAndGet()
-    TxnLog.read(sqlContext.sparkSession, t, asOf)
-  }
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): org.apache.spark.rdd.RDD[
-        org.apache.spark.sql.Row] =
-    TxnLogFilters.scan(base, requiredColumns, filters)
-}
-
-/** LIVE (query-time-resolved) batch relation for a `txnlog.\`/p\``
-  * SQL reference: each buildScan replays the log and plans the
-  * CURRENT snapshot, so a temp view or cached parsed plan holding
-  * this relation serves fresh data after later commits — the
-  * reference's per-query snapshot resolution, where an eagerly
-  * resolved relation would pin its creation-time file list forever
-  * (and break after vacuum). Time-traveled references (SQL
-  * `VERSION AS OF` / `TIMESTAMP AS OF`) stay EAGER: a pinned version
-  * is immutable, so there is nothing to re-resolve. The relation's
-  * SCHEMA is captured at parse
-  * time (analysis needs fixed output attributes); additive evolution
-  * after view creation keeps working — buildScan projects the
-  * captured columns out of the wider live snapshot — and a view
-  * predating a column sees it after re-creation, Delta's posture.
+/** The log-backed file index every txnlog read scans — Delta Lake's
+  * design (Armbrust et al., VLDB 2020): the file list comes from the
+  * add lines, never from a directory listing. `rels` are files of
+  * `snap`, whose add lines give their byte lengths (`size=`), decoded
+  * partition values (`part=`, typed through `partitionSchema`) and
+  * manifest (min, max) stats — matched against the PHYSICAL column
+  * names the pushed filters reference (a stats key is the column's
+  * name when the file was written, so a file written under a renamed
+  * name simply never prunes on it).
   *
-  * Consistency note: each SCAN resolves independently, so two scans
-  * of one query (a self-join through the view) may observe different
-  * versions if a commit lands between their plannings — the
-  * documented V1 trade; a job that needs one pinned snapshot across
-  * scans reads `spark.read.format("txnlog")` (the memoized
-  * [[TxnLogPartitionedRelation]] / pinned flat relation). At 100 TB
-  * the per-scan cost is one checkpoint-bounded log replay — metadata,
-  * no data file touched before the scan itself. */
-private[graft] class TxnLogLiveRelation(
-    override val sqlContext: SQLContext, t: TxnLog.Table,
-    override val schema: StructType)
-  extends BaseRelation
-    with org.apache.spark.sql.sources.PrunedFilteredScan {
+  * `listFiles` returns one directory per distinct partition spec,
+  * pruned on the partition values and, per file, on the stats: a
+  * comparison, BETWEEN or IN filter on an integral column drops a
+  * file whose range cannot hold a match; a file without stats for
+  * the column is kept. Two indexes over the same files of one
+  * snapshot are equal, so two scans of it canonicalize equal
+  * (exchange reuse, cache hits). */
+private[graft] final class TxnLogFileIndex(private val t: TxnLog.Table,
+    private val snap: TxnLog.Snapshot, private val rels: Seq[String],
+    override val partitionSchema: StructType)
+  extends org.apache.spark.sql.execution.datasources.FileIndex {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions._
+  import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata,
+    PartitionDirectory}
+  import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+    ShortType}
 
-  // rows are produced by an internal Dataset plan: already InternalRow
-  override def needConversion: Boolean = false
+  def version: Long = snap.version
 
-  /** Log replays this relation has paid — the freshness audit
-    * (spec-pinned: one per execution THROUGH a temp view, not one
-    * ever). */
-  private[graft] val logReads = new java.util.concurrent.atomic.AtomicInteger(0)
+  // qualified the way a listing qualifies them, so `_metadata.file_path`
+  // carries the same URL-encoded form the deletion-vector keys use
+  private def qualified(p: java.nio.file.Path): Path =
+    new Path(p.normalize.toString)
+      .makeQualified(java.net.URI.create("file:///"), null)
 
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    logReads.incrementAndGet()
-    // fresh snapshot per scan; the captured schema projects out of it
-    // (additive evolution widens the live read — never narrows it)
-    val base = TxnLog.read(sqlContext.sparkSession, t, None)
-    TxnLogFilters.scan(base, requiredColumns, filters)
+  /** (partition values, files) per distinct spec. A legacy add with
+    * no `size=` costs one stat. */
+  private lazy val dirs: Seq[(InternalRow, Seq[(String, FileStatusWithMetadata)])] =
+    rels.groupBy(snap.filePartitions.getOrElse(_, Map.empty)).toSeq.map {
+      case (spec, fs) =>
+        InternalRow.fromSeq(partitionSchema.fields.toSeq.map(f =>
+          spec.get(f.name).filter(_ != "__HIVE_DEFAULT_PARTITION__")
+            .map(v => Cast(Literal(v), f.dataType, Some(org.apache.spark.sql
+              .internal.SQLConf.get.sessionLocalTimeZone)).eval())
+            .orNull)) -> fs.map(rel => rel -> FileStatusWithMetadata(
+          new FileStatus(snap.fileSizes.getOrElse(rel,
+            java.nio.file.Files.size(t.root.resolve(rel))), false, 0, 0L, 0L,
+            qualified(t.root.resolve(rel)))))
+    }
+
+  /** Can a file with per-column `(min, max)` stats `st` hold a row
+    * passing `e`? Only the shapes the stats decide answer false. */
+  private def admits(st: Map[String, (Long, Long)], e: Expression): Boolean = {
+    def holds(op: String, a: Expression, x: Long) = a match {
+      case a: AttributeReference if Seq(ByteType, ShortType, IntegerType,
+          LongType).contains(a.dataType) =>
+        st.get(a.name).forall { case (lo, hi) => op match {
+          case "=" | "<=>" => lo <= x && x <= hi
+          case "<"         => lo < x
+          case "<="        => lo <= x
+          case ">"         => hi > x
+          case ">="        => hi >= x
+          case _           => true
+        } }
+      case _ => true
+    }
+    val flip = Map("<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+    e match {
+      case And(l, r)    => admits(st, l) && admits(st, r)
+      case Or(l, r)     => admits(st, l) || admits(st, r)
+      case In(a, vs)    => vs.exists(v => admits(st, EqualTo(a, v)))
+      case InSet(a, vs) =>
+        vs.exists(v => admits(st, EqualTo(a, Literal(v, a.dataType))))
+      case c: BinaryComparison => (c.left, c.right) match {
+        case (a, Literal(n: Number, _)) => holds(c.symbol, a, n.longValue)
+        case (Literal(n: Number, _), a) =>
+          holds(flip.getOrElse(c.symbol, c.symbol), a, n.longValue)
+        case _ => true
+      }
+      case _ => true
+    }
   }
+
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val keep = partitionFilters.reduceOption(And).map(p =>
+      Predicate.createInterpreted(p.transform { case a: AttributeReference =>
+        val i = partitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
+        BoundReference(i, partitionSchema(i).dataType, nullable = true)
+      }))
+    dirs.collect { case (row, fs) if keep.forall(_.eval(row)) =>
+      PartitionDirectory(row, fs.collect { case (rel, f) if dataFilters
+        .forall(admits(snap.fileStats.getOrElse(rel, Map.empty), _)) => f })
+    }.filter(_.files.nonEmpty)
+  }
+
+  override def rootPaths: Seq[Path] = Seq(qualified(t.root))
+  override def inputFiles: Array[String] =
+    dirs.flatMap(_._2).map(_._2.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = dirs.flatMap(_._2).map(_._2.getLen).sum
+
+  override def equals(o: Any): Boolean = o match {
+    case x: TxnLogFileIndex =>
+      x.t == t && x.version == version && x.rels == rels
+    case _ => false
+  }
+  override def hashCode: Int = (t, version, rels).##
 }
 
-private[graft] object TxnLogLiveRelation {
-  /** Resolve the relation for a path reference: schema pinned NOW
-    * (registered, or the live footers for raw-commit logs), data
-    * re-resolved per scan. */
-  def of(ctx: SQLContext, path: String): TxnLogLiveRelation = {
-    val t = TxnLog.Table(TxnLog.pathOf(path))
-    val schema = TxnLog.registeredSchema(t).getOrElse {
-      require(TxnLog.latestVersion(t) >= 0,
-        s"empty transaction log at ${t.logDir}")
-      TxnLog.readFiles(ctx.sparkSession, t,
-        TxnLog.snapshot(t).liveFiles, None, mergeSchema = true).schema
+/** The relation every SQL path reference, catalog name and
+  * `format("txnlog")` read analyzes to: the table, the version it
+  * pins (None = the latest at each execution) and the schema analysis
+  * binds. It never scans: [[TxnLogReadExpansion]] replaces it with
+  * [[TxnLog.read]]'s plan before optimization, and `buildScan` — what
+  * a session without the graft extensions reaches — refuses by name.
+  * `logReads` counts the snapshots resolved for it (one per execution,
+  * however many times a query scans it). */
+private[graft] final class TxnLogRelation(
+    override val sqlContext: SQLContext, val t: TxnLog.Table,
+    val asOf: Option[Long], override val schema: StructType)
+  extends BaseRelation with org.apache.spark.sql.sources.TableScan {
+  private[graft] val logReads = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
+    throw new IllegalStateException(
+      s"reading txnlog table ${t.root} through SQL, a catalog name or " +
+        "format(\"txnlog\") needs the graft read rule: set " +
+        "spark.sql.extensions=graft.GraftExtensions")
+}
+
+/** Plan-normalization rule (injected by GraftExtensions): every
+  * [[TxnLogRelation]] becomes [[TxnLog.read]]'s plan for its
+  * snapshot, aliased back to the relation's output attributes so
+  * references bound upstream stay valid. Normalization runs once per
+  * QueryExecution, after analysis and before the cache lookup and the
+  * optimizer: a live relation resolves the latest snapshot per
+  * execution (a temp view serves fresh data), each table resolves
+  * ONCE per pass (both sides of a self-join see one version, and
+  * their scans canonicalize equal), and filters and projections push
+  * into the parquet scans the outer plan shows. */
+private[graft] final case class TxnLogReadExpansion(
+    spark: org.apache.spark.sql.SparkSession)
+  extends org.apache.spark.sql.catalyst.rules.Rule[
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+  import org.apache.spark.sql.catalyst.expressions.{Alias, Cast}
+  import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+  import org.apache.spark.sql.execution.datasources.LogicalRelation
+
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val snaps = scala.collection.mutable
+      .Map.empty[(java.nio.file.Path, Option[Long]), TxnLog.Snapshot]
+    plan.transformUpWithSubqueries {
+      case lr @ LogicalRelation(m: TxnLogRelation, _, _, _, _) =>
+        val snap = snaps.getOrElseUpdate((m.t.root, m.asOf), {
+          m.logReads.incrementAndGet()
+          TxnLog.snapshot(m.t, m.asOf)
+        })
+        val read = org.apache.spark.sql.graftshim.Shim.analyzed(
+          TxnLog.readRels(spark, m.t, snap, snap.liveFiles, mergeSchema = true))
+        Project(lr.output.map { a =>
+          val r = read.output.find(_.name == a.name).getOrElse(
+            throw new IllegalStateException(s"txnlog table ${m.t.root} " +
+              s"has no column '${a.name}' at v${snap.version}"))
+          Alias(if (r.dataType == a.dataType) r else Cast(r, a.dataType),
+            a.name)(a.exprId, a.qualifier, Some(a.metadata))
+        }, read)
     }
-    new TxnLogLiveRelation(ctx, t, schema)
   }
 }
 

@@ -53,13 +53,13 @@ import org.apache.spark.sql.types.{Decimal, Metadata, StructField,
   *
   * READS do not re-implement a scan: [[TxnLogV2ReadRewrite]] (an
   * injected resolution rule, the Delta pattern) rewrites every
-  * read-position `DataSourceV2Relation` over a [[TxnLogTable]] onto
-  * the existing V1 relations — the live per-scan-resolved relation,
-  * or the eager pinned one for time travel — so the physical plan is
-  * the SAME dv-aware, partition-reconstituting, pushdown-verified
-  * scan every other entry point uses (and every plan-shape spec
-  * pins). At 100 TB the added cost of catalog-name access is one
-  * checkpoint-bounded metadata replay per query — no data touched. */
+  * read-position `DataSourceV2Relation` over a [[TxnLogTable]] into
+  * a [[TxnLogRelation]] — live, or pinned for time travel — which
+  * the graft read rule expands into the SAME log-indexed,
+  * dv-aware, stats-skipping parquet scan every other entry point
+  * plans (and every plan-shape spec pins). At 100 TB the added cost
+  * of catalog-name access is one checkpoint-bounded metadata replay
+  * per query — no data touched. */
 class TxnLogCatalog extends DelegatingCatalogExtension {
   import org.apache.spark.sql.graftglue.CatalogShim
 
@@ -157,7 +157,7 @@ class TxnLogCatalog extends DelegatingCatalogExtension {
   * own append/replace commits with every existing guarantee
   * (declared-layout staging, constraint enforcement, atomic
   * replace). Reads never reach a DSv2 scan: [[TxnLogV2ReadRewrite]]
-  * rewrites the relation onto the V1 plan first (BATCH_READ is
+  * rewrites the relation into a [[TxnLogRelation]] first (BATCH_READ is
   * declared so analysis admits the relation before the rule fires;
   * the `SupportsRead` impl exists only to refuse ACTIONABLY when the
   * catalog is configured without the extensions, instead of an
@@ -259,7 +259,7 @@ final case class TxnLogTable(t: TxnLog.Table, meta: CatalogTable,
         new org.apache.spark.sql.connector.read.Scan {
           override def readSchema(): StructType = TxnLogTable.this.schema()
           override def description(): String =
-            "txnlog (reads rewrite onto the V1 scan; executing this " +
+            "txnlog (reads rewrite onto the log scan; executing this " +
               "scan means the graft extensions are not installed)"
           override def toBatch
               : org.apache.spark.sql.connector.read.Batch =
@@ -343,7 +343,7 @@ private class TxnLogV2WriteBuilder(t: TxnLog.Table,
             s"${dup.toSeq.sorted.mkString(", ")} with more than one value")
         replaceSpec = ps.toMap
       case None =>
-        val exact = filters.toSeq.map(f => TxnLogFilters.exact(f)
+        val exact = filters.toSeq.map(f => TxnLogV2WriteBuilder.exact(f)
           .getOrElse(throw new IllegalArgumentException(
             s"txnlog overwrite-by-filter cannot translate: $f — " +
               "scope on partition-column equalities, a translatable " +
@@ -377,6 +377,29 @@ private class TxnLogV2WriteBuilder(t: TxnLog.Table,
 }
 
 private object TxnLogV2WriteBuilder {
+  /** A pushed V1 filter as an exactly equivalent Column, or None —
+    * Or/Not over an untranslatable branch would change semantics, so
+    * nothing partial survives. */
+  def exact(f: Filter): Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.sources._
+    f match {
+      case EqualTo(a, v)            => Some(col(a) === lit(v))
+      case GreaterThan(a, v)        => Some(col(a) > lit(v))
+      case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
+      case LessThan(a, v)           => Some(col(a) < lit(v))
+      case LessThanOrEqual(a, v)    => Some(col(a) <= lit(v))
+      case In(a, vs)                => Some(col(a).isin(vs.toIndexedSeq: _*))
+      case IsNull(a)                => Some(col(a).isNull)
+      case IsNotNull(a)             => Some(col(a).isNotNull)
+      case StringStartsWith(a, p)   => Some(col(a).startsWith(p))
+      case And(l, r) => for (a <- exact(l); b <- exact(r)) yield a && b
+      case Or(l, r)  => for (a <- exact(l); b <- exact(r)) yield a || b
+      case Not(x)    => exact(x).map(!_)
+      case _         => None
+    }
+  }
+
   /** Sentinel: a filter set that is not a partition-equality
     * conjunction (falls through to the general replaceWhere path).
     * Identity-compared so partToken's own refusals still surface. */
@@ -420,10 +443,11 @@ private object TxnLogV2WriteBuilder {
 
 /** Resolution rule (injected by GraftExtensions): every
   * READ-position `DataSourceV2Relation` over a [[TxnLogTable]]
-  * becomes the engine's own V1 relation — live (per-scan snapshot
-  * resolution, so temp views over catalog names serve fresh data)
-  * or eagerly pinned for time travel (a pinned version is
-  * immutable). Write targets are left for Spark's v2 write planning
+  * becomes a [[TxnLogRelation]] — live (the latest snapshot resolves
+  * per execution, so temp views over catalog names serve fresh
+  * data) or pinned for time travel — which [[TxnLogReadExpansion]]
+  * expands into the log-indexed parquet scan before optimization.
+  * Write targets are left for Spark's v2 write planning
   * (AppendData/OverwriteByExpression over the table's V1Write).
   * The rewrite keeps the relation's output attributes, so
   * references bound upstream stay valid — the Delta conversion
@@ -499,16 +523,9 @@ final case class TxnLogV2ReadRewrite(spark: SparkSession)
         // once) and arrives through the catalog's time-travel
         // loadTable overloads, so tt.asOf already carries the pin
         // (spec-pinned end-to-end)
-        val rel = tt.asOf match {
-          case Some(v) => // pinned: eager resolution, like SQL time travel
-            new TxnLogStreamProvider().createRelation(spark.sqlContext,
-              Map("path" -> tt.t.root.toString,
-                "versionAsOf" -> v.toString))
-          case None => // live: the snapshot resolves per scan
-            new TxnLogLiveRelation(spark.sqlContext, tt.t, tt.schema())
-        }
-        new LogicalRelation(rel, r.output, Some(tt.meta),
-          false, None)
+        new LogicalRelation(
+          new TxnLogRelation(spark.sqlContext, tt.t, tt.asOf, tt.schema()),
+          r.output, Some(tt.meta), false, None)
       case s: StreamingRelationV2 if s.table.isInstanceOf[TxnLogTable] =>
         val tt = s.table.asInstanceOf[TxnLogTable]
         if (tt.asOf.nonEmpty)

@@ -59,20 +59,18 @@ object StreamShim {
       .StreamingRelation(ds, className, output)
   }
 
-  /** Resolve a plain parquet `BaseRelation` over an explicit file
-    * list — what a `RelationProvider` must hand back so a custom
-    * format's batch reads plan as ordinary HadoopFsRelation scans
-    * (whole-stage codegen, filter pushdown, column pruning), instead
-    * of an opaque RDD[Row]. `DataSource.resolveRelation` is the
-    * constructor Spark's own paths use; it is private[sql], hence
-    * this bridge. */
-  def resolveParquet(session: org.apache.spark.sql.SparkSession,
-                     paths: Seq[String],
-                     schema: Option[org.apache.spark.sql.types.StructType])
-      : org.apache.spark.sql.sources.BaseRelation =
-    org.apache.spark.sql.execution.datasources.DataSource(
-      sparkSession = session.asInstanceOf[classic.SparkSession],
-      className = "parquet",
-      paths = paths,
-      userSpecifiedSchema = schema).resolveRelation()
+  /** One parquet `HadoopFsRelation` over `index` as a DataFrame — the
+    * relation Spark's own file sources plan (filter pushdown, column
+    * pruning, codegen, `_metadata`), both schemas made nullable the
+    * way `DataSource.resolveRelation` makes them (asNullable is
+    * private[spark], hence this bridge). */
+  def scanOf(session: org.apache.spark.sql.SparkSession,
+             index: org.apache.spark.sql.execution.datasources.FileIndex,
+             dataSchema: org.apache.spark.sql.types.StructType): DataFrame =
+    classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
+      LogicalRelation(org.apache.spark.sql.execution.datasources
+        .HadoopFsRelation(index, index.partitionSchema.asNullable,
+          dataSchema.asNullable, None,
+          new org.apache.spark.sql.execution.datasources.parquet
+            .ParquetFileFormat, Map.empty)(session)))
 }

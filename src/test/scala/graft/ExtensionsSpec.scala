@@ -633,7 +633,7 @@ class ExtensionsSpec extends AnyFunSuite {
       val rel = df.queryExecution.analyzed.collect {
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
           lr.relation
-      }.collectFirst { case r: graft.sources.TxnLogLiveRelation => r }.get
+      }.collectFirst { case r: graft.sources.TxnLogRelation => r }.get
       val before = rel.logReads.get()
       assert(spark.sql("SELECT count(*) FROM live_dfv").head().getLong(0)
         === 1L)
@@ -1794,5 +1794,96 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(analyzed("SELECT * FROM route_pq VERSION AS OF 0").isFailure)
     spark.sql("DROP TABLE IF EXISTS route_txn")
     spark.sql("DROP TABLE IF EXISTS route_pq")
+  }
+
+  test("format(txnlog) time-travel options refuse both at once and a non-numeric version by name") {
+    import spark.implicits._
+    import graft.sources.TxnLog
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-ttopts-").resolve("t")
+    val t = TxnLog.Table(root)
+    TxnLog.append(spark, t, Seq((1L, 10L)).toDF("k", "v").coalesce(1))
+    TxnLog.append(spark, t, Seq((2L, 20L)).toDF("k", "v").coalesce(1))
+    def load(opts: (String, String)*) =
+      opts.foldLeft(spark.read.format("txnlog")
+        .option("path", root.toString)) { case (r, (k, v)) => r.option(k, v) }
+        .load()
+    val both = intercept[IllegalArgumentException] {
+      load("versionAsOf" -> "0", "timestampAsOf" -> "2099-01-01")
+    }
+    assert(both.getMessage.contains("versionAsOf or timestampAsOf, not both"),
+      both.getMessage)
+    val nan = intercept[IllegalArgumentException] {
+      load("versionAsOf" -> "abc")
+    }
+    assert(nan.getMessage.contains("numeric log version, got: abc"),
+      nan.getMessage)
+    // each option alone still travels
+    assert(load("versionAsOf" -> "0").count() === 1L)
+    assert(load("timestampAsOf" -> "2099-01-01").count() === 2L)
+  }
+
+  test("a live txnlog reference resolves ONE snapshot per execution: both sides of a self-join read one version") {
+    import spark.implicits._
+    import graft.sources.{TxnLog, TxnLogFileIndex, TxnLogRelation}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-onesnap-").resolve("t")
+    val t = TxnLog.Table(root)
+    TxnLog.append(spark, t, Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    // a DataFrame-created view stores the analyzed plan: one relation
+    // instance, referenced by both sides of the join
+    val df = spark.sql(s"SELECT * FROM txnlog.`$root`")
+    df.createOrReplaceTempView("one_snap_v")
+    val rel = df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation
+    }.collectFirst { case r: TxnLogRelation => r }.get
+    def selfJoin() = spark.sql(
+      "SELECT a.k, b.v FROM one_snap_v a JOIN one_snap_v b ON a.k = b.k")
+    def versions(q: org.apache.spark.sql.DataFrame): Seq[Long] =
+      q.queryExecution.sparkPlan.collect { case f: FileSourceScanExec =>
+        f.relation.location }.collect { case i: TxnLogFileIndex => i.version }
+    val before = rel.logReads.get()
+    val q1 = selfJoin()
+    assert(q1.collect().length === 2)
+    assert(rel.logReads.get() === before + 1,
+      s"a self-join resolved ${rel.logReads.get() - before} snapshots")
+    assert(versions(q1) === Seq(0L, 0L))
+    // the next execution resolves afresh — once — and both sides move
+    spark.sql(s"INSERT INTO txnlog.`$root` VALUES (3, 30)")
+    val q2 = selfJoin()
+    assert(q2.collect().length === 3)
+    assert(rel.logReads.get() === before + 2)
+    assert(versions(q2) === Seq(1L, 1L))
+  }
+
+  test("a SQL range filter on a stats-tracked txnlog path plans one log-indexed scan over only the files its stats admit") {
+    import spark.implicits._
+    import graft.sources.{TxnLog, TxnLogFileIndex}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-sqlskip-").resolve("t")
+    val t = TxnLog.Table(root)
+    // four disjoint key ranges, one file each, stats in the manifest
+    (0 until 4).foreach(i => TxnLog.appendWithStats(spark, t,
+      (i * 100L until i * 100L + 50L).toDF("k").coalesce(1), Seq("k")))
+    TxnLog.append(spark, t, Seq(1000L).toDF("k").coalesce(1)) // no stats
+    val q = spark.sql(
+      s"SELECT k FROM txnlog.`$root` WHERE k BETWEEN 120 AND 230")
+    assert(q.collect().map(_.getLong(0)).sorted.toSeq ===
+      ((120L until 150L) ++ (200L to 230L)))
+    val scans = q.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec => f }
+    assert(scans.length === 1, s"want one scan:\n${q.queryExecution.sparkPlan}")
+    assert(scans.head.relation.location.isInstanceOf[TxnLogFileIndex])
+    val snap = TxnLog.snapshot(t)
+    val want = snap.liveFiles.filter(rel => snap.fileStats.get(rel)
+      .forall(_("k") match { case (lo, hi) => hi >= 120L && lo <= 230L }))
+    assert(want.length === 3) // files 1 and 2, and the stats-less file
+    val got = scans.head.selectedPartitions.filePartitionIterator
+      .flatMap(_.files).map(f => java.nio.file.Paths.get(
+        f.fileStatus.getPath.toUri.getPath).toString).toSeq
+    assert(got.sorted === want.map(r => root.resolve(r).toString).sorted)
   }
 }

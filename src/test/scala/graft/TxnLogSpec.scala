@@ -1835,7 +1835,7 @@ class TxnLogSpec extends AnyFunSuite {
       Seq((1L, "d1", 10L), (2L, "d2", 20L)).toDF("id", "day", "v"),
       Seq("day"))
     val schema = TxnLog.registeredSchema(t).get
-    val rel = new graft.sources.TxnLogPartitionedRelation(
+    val rel = new graft.sources.TxnLogRelation(
       spark.sqlContext, t, Some(TxnLog.latestVersion(t)), schema)
     val df = spark.baseRelationToDataFrame(rel)
     // a self-join scans the relation twice; the log replay and
@@ -4668,5 +4668,27 @@ class TxnLogSpec extends AnyFunSuite {
     }
     assert(results(0) === results(1))
     assert(results(0).length === 31)
+  }
+
+  test("txnlog: a partitioned read is ONE scan over the log-backed file index, pruned by partition value") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val t = freshTable()
+    TxnLog.appendPartitioned(spark, t,
+      Seq((1L, "d1"), (2L, "d2"), (3L, "d3")).toDF("id", "day"), Seq("day"))
+    val df = TxnLog.read(spark, t)
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1))).sorted
+      .toSeq === Seq((1L, "d1"), (2L, "d2"), (3L, "d3")))
+    def scans(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
+    assert(scans(df).length === 1,
+      s"want one scan, not one per partition:\n${df.queryExecution.sparkPlan}")
+    val loc = scans(df).head.relation.location
+    assert(loc.isInstanceOf[graft.sources.TxnLogFileIndex],
+      s"scan lists through ${loc.getClass.getName}")
+    // the partition filter prunes inside the index: one directory
+    val one = df.filter(col("day") === "d2")
+    assert(one.collect().map(_.getLong(0)).toSeq === Seq(2L))
+    assert(scans(one).head.selectedPartitions.partitionCount === 1)
   }
 }

@@ -3,10 +3,11 @@
 
     python3 tools/codelines.py <file.scala> [name ...]
 
-Prints the file's code lines, then one line per named `def`: the code
-lines from its `def` line up to the next member at the same indent (a
-code line at that indent or less that does not close a bracket). A name
-that several members share (overloads) sums them.
+Prints the file's code lines, then one line per named member — a `def`,
+`class`, `object` or `trait`: the code lines from its declaration line up
+to the next member at the same indent (a code line at that indent or
+less that does not close a bracket). A name that several members share
+(overloads, a class and its companion object) sums them.
 
 A line counts unless it is blank or, after leading whitespace, starts
 with `//`, `/*`, `/**` or `*`.
@@ -25,9 +26,10 @@ def indent(line):
 
 
 def member_lines(lines, name):
-    """Code lines of every `def name` in `lines` (summed over overloads)."""
-    head = re.compile(r"^\s*(?:[\w\[\]]+\s+)*def\s+" + re.escape(name) +
-                      r"(?![\w$])")
+    """Code lines of every `def`, `class`, `object` or `trait` called
+    `name` in `lines` (summed over overloads and companions)."""
+    head = re.compile(r"^\s*(?:[\w\[\]]+\s+)*(?:def|class|object|trait)\s+"
+                      + re.escape(name) + r"(?![\w$])")
     total = 0
     for i, line in enumerate(lines):
         if not head.match(line):
