@@ -107,7 +107,8 @@ object TxnLog {
   /** `fileStats`: per live file, per column, the (min, max) embedded
     * in its add action — the manifest's data-skipping index. Files
     * added without stats simply never prune: conservative, always
-    * correct. `schemaJson`: the schema REGISTERED in the log at this
+    * correct. Stats are keyed by PHYSICAL column name ([[statsKey]]).
+    * `schemaJson`: the schema REGISTERED in the log at this
     * version (one `schema` action per schema-changing commit), which
     * makes evolved reads footer-count-independent. `filePartitions`:
     * per live file, the hive-style partition values recorded in its
@@ -137,6 +138,14 @@ object TxnLog {
     /** Declared constraints at this version — carried BY the snapshot
       * so rewrite ops enforce without a second log replay. */
     def constraints: Constraints = Constraints(notNull, checks)
+    /** The key a column's `fileStats` carry: its PHYSICAL name under
+      * this version's schema — the name in the data files, which a
+      * rename keeps and no other column can take — else the name. */
+    def statsKey(c: String): String = physicalOf.getOrElse(c, c)
+    private lazy val physicalOf: Map[String, String] =
+      schemaJson.map(parseSchema).filter(hasMapping)
+        .map(_.fields.map(f => f.name -> physicalName(f)).toMap)
+        .getOrElse(Map.empty)
     /** The partition layout every write op must stage through: the
       * DDL-declared columns (authoritative, in declared order — a
       * `PARTITIONED BY` CREATE binds the layout before any data
@@ -1119,9 +1128,9 @@ object TxnLog {
     * right after the path, before any stats triples — the ONE place
     * the decorated add grammar is produced. */
   private def partitionedAddLines(s: SparkSession, t: Table, stage: Path,
-                                  statsCols: Seq[String]): Seq[String] = {
+                                  keys: Seq[String]): Seq[String] = {
     val stageRel = t.root.relativize(stage).toString
-    addLinesFor(s, t, stage, statsCols).map { line =>
+    addLinesFor(s, t, stage, keys).map { line =>
       val arr = line.split('\t')
       val segs = arr(1).stripPrefix(stageRel + "/").split('/').dropRight(1)
       (arr.take(2) ++ segs.map { seg =>
@@ -1316,7 +1325,8 @@ object TxnLog {
   /** `add` action lines for the staged files, with the staged byte
     * size stamped as a `size=` token (one stat per STAGED file, at
     * write time — never per live file at read time) and (min, max)
-    * triples for `statsCols` read from the staged parquet FOOTERS
+    * triples for the `keys` columns (PHYSICAL names, the names the
+    * stats are keyed by) read from the staged parquet FOOTERS
     * (driver-side metadata, zero Spark jobs — see [[footers]]),
     * falling back to ONE file-count-scale aggregate over the staged
     * files whenever a footer cannot prove the identical bounds. A
@@ -1324,29 +1334,20 @@ object TxnLog {
     * empty frame) gets no add line: it stays in the sealed stage for
     * vacuum, and an empty write commits no data file. */
   private def addLinesFor(s: SparkSession, t: Table, stage: Path,
-                          statsCols: Seq[String]): Seq[String] = {
+                          keys: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
     def sized(rel: String): String =
       s"add\t$rel\tsize=${Files.size(t.root.resolve(rel))}"
-    // staged files hold PHYSICAL names; manifest stats stay keyed by
-    // the LOGICAL name (pruneBox matches user predicates) — aggregate
-    // the physical column under the logical label
-    lazy val physOf: Map[String, String] = registeredSchema(t) match {
-      case Some(sc) if hasMapping(sc) =>
-        sc.fields.map(f => f.name -> physicalName(f)).toMap
-      case _ => Map.empty
-    }
-    def pn(c: String): String = physOf.getOrElse(c, c)
-    val foot = footers(s, t, stagedFiles(t, stage), statsCols.map(pn))
+    val foot = footers(s, t, stagedFiles(t, stage), keys)
       .filter(_._2 != 0)
     val rels = foot.map(_._1)
-    if (statsCols.isEmpty || foot.forall(_._3.isDefined))
+    if (keys.isEmpty || foot.forall(_._3.isDefined))
       return foot.map { case (rel, _, bounds) =>
-        (sized(rel) +: bounds.flatten.toSeq.flatMap(statsCols.zip(_).map {
+        (sized(rel) +: bounds.flatten.toSeq.flatMap(keys.zip(_).map {
           case (c, (lo, hi)) => s"$c:$lo:$hi" })).mkString("\t")
       }
-    val aggs = statsCols.flatMap(c =>
-      Seq(min(col(pn(c))).as(s"lo_$c"), max(col(pn(c))).as(s"hi_$c")))
+    val aggs = keys.flatMap(c =>
+      Seq(min(col(c)).as(s"lo_$c"), max(col(c)).as(s"hi_$c")))
     val byPath = s.read.parquet(stage.toString)
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
@@ -1360,8 +1361,8 @@ object TxnLog {
         // an all-null or empty file yields null aggregates: add the
         // file with NO stats (conservative, never prunes) rather than
         // fabricating a range
-        if (statsCols.exists(c => r.isNullAt(r.fieldIndex(s"lo_$c")))) None
-        else Some(abs -> statsCols.map(c =>
+        if (keys.exists(c => r.isNullAt(r.fieldIndex(s"lo_$c")))) None
+        else Some(abs -> keys.map(c =>
           // Number, not Long: a widened column's staged files may
           // still carry the narrow integral type — and a FRACTIONAL
           // aggregate (int widened to double) must round OUTWARD
@@ -1817,7 +1818,7 @@ object TxnLog {
     // a metadata check, no data read.
     val maxKey = graft.functions.ZOrder.maxKeyExclusive(keys.length)
     for (c <- keys;
-         (lo, hi) <- snap.fileStats.values.flatMap(_.get(c))
+         (lo, hi) <- snap.fileStats.values.flatMap(_.get(snap.statsKey(c)))
            .reduceOption((p, q) => (math.min(p._1, q._1),
              math.max(p._2, q._2))))
       require(lo >= 0 && hi < maxKey,
@@ -1854,27 +1855,33 @@ object TxnLog {
     (pruneBox(snap, preds).length, snap.liveFiles.length)
   }
 
-  /** The stats columns a rewrite should RE-STAMP: manifest-tracked
-    * columns that still exist in the current schema — a column
-    * DROPPED (or renamed away) leaves orphaned stats triples in old
-    * add actions, and aggregating a vanished column over restaged
-    * files would fail analysis, bricking every rewrite op. Tables
-    * without a registered schema keep all tracked columns. */
+  /** The stats columns a rewrite should RE-STAMP, by logical name:
+    * current columns whose stats key some live file tracks — a
+    * column DROPPED leaves orphaned stats triples in old add actions,
+    * and aggregating a vanished column over restaged files would
+    * fail analysis, bricking every rewrite op. Tables without a
+    * registered schema keep all tracked columns. */
   private def liveStatsCols(snap: Snapshot): Seq[String] = {
-    val fields = snap.schemaJson.map(parseSchema(_).fieldNames.toSet)
-    snap.fileStats.values.flatMap(_.keys).toSeq.distinct.sorted
-      .filter(c => fields.forall(_.contains(c)))
+    val keys = snap.fileStats.values.flatMap(_.keys).toSet
+    snap.schemaJson.map(parseSchema(_).fieldNames.toSeq)
+      .getOrElse(keys.toSeq).filter(c => keys.contains(snap.statsKey(c)))
+      .sorted
   }
 
+  /** The live files whose stats intersect every `(column, lo, hi)`
+    * range — [[TxnLogFileIndex.admits]] on the box. */
   private def pruneBox(snap: Snapshot,
-                       preds: Seq[(String, Long, Long)]): Seq[String] =
-    preds.foldLeft(snap.liveFiles)((files, p) =>
-      files.filter { f =>
-        snap.fileStats.get(f).flatMap(_.get(p._1)) match {
-          case Some((mn, mx)) => mx >= p._2 && mn <= p._3
-          case None           => true
-        }
-      })
+                       preds: Seq[(String, Long, Long)]): Seq[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{And,
+      AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    val box = preds.map { case (c, lo, hi) =>
+      val a = AttributeReference(snap.statsKey(c),
+        org.apache.spark.sql.types.LongType)()
+      And(GreaterThanOrEqual(a, Literal(lo)), LessThanOrEqual(a, Literal(hi)))
+    }
+    snap.liveFiles.filter(f => box.forall(
+      TxnLogFileIndex.admits(snap.fileStats.getOrElse(f, Map.empty), _)))
+  }
 
   /** Atomic REPLACE (the `mode("overwrite")` path): ONE commit
     * removes every live file and adds the staged rows — readers see
@@ -2425,9 +2432,9 @@ object TxnLog {
     * — the one writer of table stages (appends, overwrites,
     * compaction, row-level rewrites), so no write op can silently
     * flatten files out of partition discipline. The files hold the
-    * physical names of `schemaJson`'s column mapping. Partitioned
-    * stats drop the partition columns (they are not in the data
-    * files). */
+    * physical names of `schemaJson`'s column mapping, and the stats
+    * of `statsCols` are keyed by them. Partitioned stats drop the
+    * partition columns (they are not in the data files). */
   private def stageAdds(s: SparkSession, t: Table, df: DataFrame,
       stage: Path, partCols: Seq[String],
       statsCols: Seq[String],
@@ -2435,17 +2442,17 @@ object TxnLog {
     // the files hold PHYSICAL names (no-op without a mapping);
     // partition columns never map, so partitionBy stays logical
     val out = toPhysical(df, schemaJson.map(parseSchema))
+    val physical = df.columns.zip(out.columns).toMap
+    val keys = statsCols.map(c => physical.getOrElse(c, c))
     val adds =
       if (partCols.isEmpty) {
         out.write.parquet(stage.toString)
-        addLinesFor(s, t, stage, statsCols)
+        addLinesFor(s, t, stage, keys)
       } else {
         out.write.partitionBy(partCols: _*).parquet(stage.toString)
-        partitionedAddLines(s, t, stage,
-          statsCols.filterNot(partCols.contains))
+        partitionedAddLines(s, t, stage, keys.filterNot(partCols.contains))
       }
-    Staged(stage, adds, df.schema, partCols,
-      df.columns.zip(out.columns).toMap)
+    Staged(stage, adds, df.schema, partCols, physical)
   }
 
   /** Read a [[Staged]] stage back as the rows it holds, under logical
@@ -2925,7 +2932,8 @@ object TxnLog {
       // opened — the CDC-sync posture at 100 TB (the source is
       // sync-sized; the table is not)
       val candidates =
-        if (!snap.fileStats.values.exists(_.contains(keyCol))) snap.liveFiles
+        if (!snap.fileStats.values.exists(_.contains(snap.statsKey(keyCol))))
+          snap.liveFiles
         else keys.agg(min(col(keyCol)), max(col(keyCol))).head() match {
           case r if r.isNullAt(0) => Nil // empty source: nothing matches
           case r => (r.get(0), r.get(1)) match {
@@ -3073,7 +3081,7 @@ object TxnLog {
     // each stats-tracked key column bounds the candidate set by the
     // source's range on it (consumed below)
     val trackedKeys = keyCols.filter(k =>
-      snap.fileStats.values.exists(_.contains(k)))
+      snap.fileStats.values.exists(_.contains(snap.statsKey(k))))
     // loud ambiguity refusal + per-tracked-key source range in ONE
     // source-scale job (r22, guide §1.5 — fewer actions): the worst
     // per-key multiplicity and every tracked key's min/max ride the
@@ -3871,9 +3879,9 @@ object TxnLog {
     * the old name (its SQL text cannot be rewritten safely — drop
     * and re-add the constraint around the rename). A NOT NULL
     * constraint migrates automatically in the same commit.
-    * Manifest (min, max) stats recorded under the OLD logical name
-    * stop pruning for the new name — conservative, never wrong; the
-    * next OPTIMIZE re-stamps them. Returns the committed version. */
+    * Manifest (min, max) stats are keyed by the physical name, so
+    * they keep pruning under the new name. Returns the committed
+    * version. */
   def renameColumn(t: Table, oldName: String, newName: String): Long = {
     require(newName.nonEmpty && !newName.exists(c => c == '\t' || c == '\n'),
       s"bad column name: '$newName'")

@@ -417,10 +417,9 @@ private[sources] class TxnLogSink(ctx: SQLContext, t: TxnLog.Table,
   * add lines, never from a directory listing. `rels` are files of
   * `snap`, whose add lines give their byte lengths (`size=`), decoded
   * partition values (`part=`, typed through `partitionSchema`) and
-  * manifest (min, max) stats — matched against the PHYSICAL column
-  * names the pushed filters reference (a stats key is the column's
-  * name when the file was written, so a file written under a renamed
-  * name simply never prunes on it).
+  * manifest (min, max) stats, keyed by PHYSICAL column name — the
+  * name the pushed filters reference, since the relation scans the
+  * physical schema.
   *
   * `listFiles` returns one directory per distinct partition spec,
   * pruned on the partition values and, per file, on the stats: a
@@ -438,8 +437,6 @@ private[graft] final class TxnLogFileIndex(private val t: TxnLog.Table,
   import org.apache.spark.sql.catalyst.expressions._
   import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata,
     PartitionDirectory}
-  import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
-    ShortType}
 
   def version: Long = snap.version
 
@@ -464,9 +461,45 @@ private[graft] final class TxnLogFileIndex(private val t: TxnLog.Table,
             qualified(t.root.resolve(rel)))))
     }
 
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val keep = partitionFilters.reduceOption(And).map(p =>
+      Predicate.createInterpreted(p.transform { case a: AttributeReference =>
+        val i = partitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
+        BoundReference(i, partitionSchema(i).dataType, nullable = true)
+      }))
+    dirs.collect { case (row, fs) if keep.forall(_.eval(row)) =>
+      PartitionDirectory(row, fs.collect { case (rel, f) if dataFilters
+        .forall(TxnLogFileIndex.admits(snap.fileStats.getOrElse(rel,
+          Map.empty), _)) => f })
+    }.filter(_.files.nonEmpty)
+  }
+
+  override def rootPaths: Seq[Path] = Seq(qualified(t.root))
+  override def inputFiles: Array[String] =
+    dirs.flatMap(_._2).map(_._2.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = dirs.flatMap(_._2).map(_._2.getLen).sum
+
+  override def equals(o: Any): Boolean = o match {
+    case x: TxnLogFileIndex =>
+      x.t == t && x.version == version && x.rels == rels
+    case _ => false
+  }
+  override def hashCode: Int = (t, version, rels).##
+}
+
+private[graft] object TxnLogFileIndex {
+  import org.apache.spark.sql.catalyst.expressions._
+  import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+    ShortType}
+
   /** Can a file with per-column `(min, max)` stats `st` hold a row
-    * passing `e`? Only the shapes the stats decide answer false. */
-  private def admits(st: Map[String, (Long, Long)], e: Expression): Boolean = {
+    * passing `e`? Attributes name stats keys (PHYSICAL names); only
+    * the shapes the stats decide answer false. The one stats test:
+    * the index's pushed filters and [[TxnLog]]'s box probes both
+    * call it. */
+  private[sources] def admits(st: Map[String, (Long, Long)], e: Expression): Boolean = {
     def holds(op: String, a: Expression, x: Long) = a match {
       case a: AttributeReference if Seq(ByteType, ShortType, IntegerType,
           LongType).contains(a.dataType) =>
@@ -496,32 +529,6 @@ private[graft] final class TxnLogFileIndex(private val t: TxnLog.Table,
       case _ => true
     }
   }
-
-  override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val keep = partitionFilters.reduceOption(And).map(p =>
-      Predicate.createInterpreted(p.transform { case a: AttributeReference =>
-        val i = partitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
-        BoundReference(i, partitionSchema(i).dataType, nullable = true)
-      }))
-    dirs.collect { case (row, fs) if keep.forall(_.eval(row)) =>
-      PartitionDirectory(row, fs.collect { case (rel, f) if dataFilters
-        .forall(admits(snap.fileStats.getOrElse(rel, Map.empty), _)) => f })
-    }.filter(_.files.nonEmpty)
-  }
-
-  override def rootPaths: Seq[Path] = Seq(qualified(t.root))
-  override def inputFiles: Array[String] =
-    dirs.flatMap(_._2).map(_._2.getPath.toString).toArray
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = dirs.flatMap(_._2).map(_._2.getLen).sum
-
-  override def equals(o: Any): Boolean = o match {
-    case x: TxnLogFileIndex =>
-      x.t == t && x.version == version && x.rels == rels
-    case _ => false
-  }
-  override def hashCode: Int = (t, version, rels).##
 }
 
 /** The relation every SQL path reference, catalog name and

@@ -2794,6 +2794,30 @@ class TxnLogSpec extends AnyFunSuite {
     assert(TxnLog.read(spark, rn).count() === 2L)
   }
 
+  test("txnlog: stats are keyed by storage name, so a renamed-away name reused by another column never drops rows") {
+    import spark.implicits._
+    val t = freshTable()
+    TxnLog.appendWithStats(spark, t,
+      Seq((1L, 100L), (2L, 101L)).toDF("a", "c").coalesce(1), Seq("a", "c"))
+    TxnLog.renameColumn(t, "a", "b") // b is stored as a
+    TxnLog.renameColumn(t, "c", "a") // a is stored as c
+    TxnLog.appendWithStats(spark, t,
+      Seq((11L, 200L), (12L, 201L)).toDF("b", "a").coalesce(1), Seq("b", "a"))
+    def rows(q: String) = spark.sql(q).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(rows(s"SELECT b, a FROM txnlog.`${t.root}` WHERE b = 11") ===
+      Seq((11L, 200L)))
+    assert(rows(s"SELECT b, a FROM txnlog.`${t.root}` WHERE a = 100") ===
+      Seq((1L, 100L)))
+    assert(TxnLog.readPruned(spark, t, "b", 11L, 12L).count() === 2L)
+    // the box probes prune each name to the one file that holds it
+    assert(TxnLog.plannedFiles(t, "b", 11L, 12L) === ((1, 2)))
+    assert(TxnLog.plannedFiles(t, "a", 100L, 101L) === ((1, 2)))
+    TxnLog.delete(spark, t, col("a") === 100L)
+    assert(rows(s"SELECT b, a FROM txnlog.`${t.root}`") ===
+      Seq((2L, 101L), (11L, 200L), (12L, 201L)))
+  }
+
   test("txnlog: type widening, partition-scoped OPTIMIZE and startingVersion streams") {
     import spark.implicits._
     import org.apache.spark.sql.types._
