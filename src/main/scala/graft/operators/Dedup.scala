@@ -301,14 +301,12 @@ object Dedup {
     // member in every band bucket). Unlike simhash, identical sigs do
     // NOT prove jac >= tau, so intra-group pairs still flow through
     // exact verification with everything else.
-    // r22: the signature-group table feeds THREE consumers (intra
-    // pairs + both band self-join sides) and exchange reuse never
-    // collapses the aliased sides — without this the shingle explode +
-    // minhash aggregate ran per reference. Distinct-signature scale;
-    // released at the next query build (returned-plan consumer).
-    val groups = CheckpointLedger.track(sigs.groupBy(col("sig"))
+    // The signature-group table feeds THREE consumers (intra pairs +
+    // both band self-join sides); all three keep (sig, ids), so AQE
+    // reuses the group aggregate's exchange and the shingle explode +
+    // minhash aggregate run once.
+    val groups = sigs.groupBy(col("sig"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .localCheckpoint())
     val intra = groups.select(explode(expr(
       """flatten(transform(ids, (a, i) ->
            transform(slice(ids, i + 2, size(ids)), b ->
@@ -374,12 +372,10 @@ object Dedup {
     // would make its ids array, and its C(n,2) TRUE output, absurd;
     // real pipelines emit the group representative instead, which is
     // exactly what dedup_exact/dedup_survivor do.)
-    // r22: same three-consumer shape as minhashLsh — materialize the
-    // signature groups once (the word explode + simhash aggregate ran
-    // per reference before); released at the next query build
-    val groups = CheckpointLedger.track(sigs.groupBy(col("sig"))
+    // Same three-consumer shape as minhashLsh: one column set, so the
+    // word explode + simhash aggregate run once behind a reused exchange
+    val groups = sigs.groupBy(col("sig"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .localCheckpoint())
     val intra = groups
       .select(explode(expr(
         """filter(flatten(transform(ids, (a, i) ->
@@ -464,9 +460,9 @@ object Dedup {
     *
     *  1. per-doc w-token windows with their start position
     *     (row-local explode, no shuffle);
-    *  2. the cross-document window keys (one hash shuffle — the same
-    *     shuffle class [[substring]] already pays), semi-joined back
-    *     to positions (co-keyed with #2's exchange);
+    *  2. the cross-document windows: one window over the key (one
+    *     hash shuffle — the same shuffle class [[substring]] already
+    *     pays) keeps the positions whose key min(doc) < max(doc);
     *  3. islands: pos − row_number() over (doc, pos) groups each
     *     doc's consecutive shared positions into one run — a per-doc
     *     window, partition-scale because a doc's windows are
@@ -509,25 +505,15 @@ object Dedup {
       .select(col("doc_id"), (col("pos") + 1).as("pos"),
         graft.functions.RollingHash.rollingHash(col("col")).as("wfp"),
         md5(col("col").cast("binary")).as("wmd5"))
-      // r21: materialize the fingerprinted window stream ONCE — it
-      // feeds BOTH the dup-key aggregate and the position side of the
-      // semi-join, and because dupKeys arrives broadcast there is no
-      // exchange whose reuse could dedupe them: the r21 plan audit
-      // showed the full explode+md5 pass duplicated (two documents
-      // scans). At 100 TB this is the window-fingerprint table an
-      // ExactSubstr pipeline materializes on shared storage anyway
-      // (the staged-shingles precedent); rows are (id, pos, 2 fps).
-      // r22: consumed by the RETURNED plan -> tracked, released at the
-      // next declared-query build (CheckpointLedger)
-      .localCheckpoint()
-    CheckpointLedger.track(keyed)
-    val dupKeys = keyed
-      .groupBy(col("wfp"), col("wmd5"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2)
-      .select(col("wfp"), col("wmd5"))
+    // a window key held by >= 2 distinct docs has min(doc) < max(doc),
+    // so one window over the key reads the fingerprinted stream once
+    // (a dup-key aggregate semi-joined back would read it twice)
+    val byKey = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("wfp"), col("wmd5"))
     val runs = keyed
-      .join(dupKeys, Seq("wfp", "wmd5"))
+      .withColumn("lo", min(col("doc_id")).over(byKey))
+      .withColumn("hi", max(col("doc_id")).over(byKey))
+      .filter(col("lo") < col("hi"))
       .select(col("doc_id"), col("pos"))
       .withColumn("isl", col("pos") - row_number().over(winExpr))
       .groupBy(col("doc_id"), col("isl"))
@@ -618,8 +604,13 @@ object Dedup {
     // pipeline (minhash + banding + exact verification) is a lazy
     // plan that re-executes inside every propagation round. Edges are
     // true-output-scale, so the checkpoint is small even at 100 TB.
+    // Each pair emits both directions from ONE read of the pipeline (a
+    // union with its mirror would run the pipeline above its exchanges
+    // twice)
     val edges = pairs
-      .unionByName(pairs.select(col("y").as("x"), col("x").as("y")))
+      .select(explode(array(struct(col("x"), col("y")),
+        struct(col("y").as("x"), col("x").as("y")))).as("e"))
+      .select(col("e.x").as("x"), col("e.y").as("y"))
       .localCheckpoint()
     val nodes = edges.select(col("x").as("v")).distinct()
     var labels = nodes.select(col("v"), col("v").as("label"))
@@ -662,9 +653,9 @@ object Dedup {
     // otherwise yield silently wrong component ids, diverging from
     // the oracle's full recursive reachability with no error.
     // the edge set served its last join; the FINAL labels checkpoint
-    // feeds the returned plan -> tracked for the next-query sweep
+    // is the iterate's state and feeds the returned plan, so Spark's
+    // ContextCleaner frees it once that frame is unreachable
     org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(edges)
-    CheckpointLedger.track(labels)
     if (!converged)
       throw new IllegalStateException(
         s"connected-components label propagation did not converge " +
@@ -765,13 +756,11 @@ object Dedup {
           hp.slice(b * bandBits, (b + 1) * bandBits).map(_.toSeq).toSeq)
           .as("bv"))
     }
-    // r22: both self-join sides re-computed the corpus hyperplane
-    // signatures (aliased sides canonicalize apart — no exchange
-    // reuse); one corpus×4-row materialization, ledger-released
-    val bands = CheckpointLedger.track(e
+    // both self-join sides keep (vec_id, band, bv), so AQE reuses one
+    // side's exchange and the corpus signatures are computed once
+    val bands = e
       .select(col("vec_id"), explode(array(bandCols: _*)).as("bb"))
       .select(col("vec_id"), col("bb.band").as("band"), col("bb.bv").as("bv"))
-      .localCheckpoint())
     bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
           col("a.vec_id") < col("b.vec_id"))
@@ -844,11 +833,13 @@ object Dedup {
       .select((col("doc_id") + 1000000L).as("doc_id"), fp.as("fp"))
     val batch = fresh.unionByName(replay)
     // the corpus fingerprint set is read three times (width count,
-    // bloom-bit fold, exact hit-verdict join) — materialize it once
-    // rather than re-scanning + re-distincting the corpus per use
-    val corpusFps = CheckpointLedger.track(
-      docs.filter(col("doc_id") % 5 =!= 0)
-        .select(fp.as("fp")).distinct().localCheckpoint())
+    // bloom-bit fold, exact hit-verdict join) — materialize it once.
+    // Sharing it by exchange reuse instead cost a job and wall (sf0.01,
+    // local[4], median of 7 JVM pairs: 0.73 s checkpointed, 0.91 s
+    // shared, 1/7 wins); the returned plan reads it, so Spark's
+    // ContextCleaner frees it with the frame.
+    val corpusFps = docs.filter(col("doc_id") % 5 =!= 0)
+      .select(fp.as("fp")).distinct().localCheckpoint()
     bloomAdmitOn(batch, corpusFps, bloomAdmitBits(corpusFps.count()))
   }
 
@@ -913,17 +904,14 @@ object Dedup {
     * driver). Emits the full per-vector verdict (vec_id, cell, kept)
     * — the admission list a curation pipeline feeds downstream. */
   def semantic(s: SparkSession, d: String): DataFrame =
-    // Materialize the corpus assignment ONCE (the components-edges
-    // pattern): the verdict references it three times (both self-join
-    // sides + the verdict spine), and without the checkpoint the whole
-    // k-means training chain re-executes for each — measured 9.7 s →
-    // 1.0 s at sf0.01. At 100 TB the assignment is written to storage
-    // once per pipeline run and shared with ml_kmeans/sim_knn_ivf
-    // anyway; localCheckpoint (memory-and-disk) is the local analog.
-    // r22: corpus-scale blocks — tracked, released at the next
-    // declared-query build (CheckpointLedger) instead of JVM lifetime
-    semanticOn(CheckpointLedger.track(
-      Similarity.trainedCells(s, d).localCheckpoint()))
+    // Materialize the corpus assignment ONCE: the verdict reads it
+    // three times (both self-join sides + the verdict spine). Training
+    // collects its centroids, so without the checkpoint only the
+    // map-only assignment re-runs, yet that still lost (sf0.01,
+    // local[4], median of 7 JVM pairs: 0.98 s checkpointed, 1.08 s
+    // shared, 2/7 wins). The returned plan reads it, so Spark's
+    // ContextCleaner frees it with the frame.
+    semanticOn(Similarity.trainedCells(s, d).localCheckpoint())
 
   /** The verdict pipeline over any (vec_id, cell, embedding)
     * assignment — exposed so specs can plant duplicates into chosen

@@ -1467,13 +1467,11 @@ object Multimodal {
       .mapPartitions(_.map(id => MediaPayload(id, ImageSynth.realImage(id))))
       .toDF()
       .select(col("doc_id"), expr("image_dhash(bytes)").as("phash"))
-    // r22 plan audit: the banded self-join + final spine held THREE
-    // copies of the groups subtree, and the expensive part under it —
-    // the full-corpus image DECODE — ran per copy (6 documents scans,
-    // zero exchange reuse). Groups are distinct-hash-scale; materialize
-    // once per call (released at the next query build — the returned
-    // plan consumes them)
-    val groups = CheckpointLedger.track(hashes.groupBy(col("phash")).agg(
+    // Groups have ONE consumer, so the full-corpus image decode under
+    // their aggregate runs once: each group's four band rows find
+    // their bucket-mates through a window over (band, key), where a
+    // banded self-join plus the group spine would read them 3 times
+    val groups = hashes.groupBy(col("phash")).agg(
       count(lit(1)).as("n_docs"),
       sum(when(expr("(doc_id div 40) % 2 = 0"), 1L).otherwise(0L))
         .as("n_png"),
@@ -1481,24 +1479,19 @@ object Multimodal {
         .as("n_jpeg"),
       min(col("doc_id")).as("first_doc"),
       max(col("doc_id")).as("last_doc"))
-      .localCheckpoint())
-    val banded = groups.select(col("phash"),
-        explode(expr("array(0, 1, 2, 3)")).as("band"))
+    val bucket = Window.partitionBy(col("band"), col("key"))
+    groups
+      .withColumn("band", explode(expr("array(0, 1, 2, 3)")))
       .withColumn("key", expr("(phash >> (band * 16)) & 65535"))
-    val nn = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.phash") =!= col("b.phash"))
-      .select(col("a.phash").as("pa"), col("b.phash").as("pb"))
-      .distinct()
-      .withColumn("hamming", expr("bit_count(pa ^ pb)").cast("long"))
-      .filter(col("hamming") <= 6)
-      .groupBy(col("pa"))
-      .agg(min(col("hamming")).as("nn_hamming"),
-        count(lit(1)).as("nn_pairs"))
-    groups.join(nn, groups("phash") === nn("pa"), "left")
-      .select(col("phash"), col("n_docs"), col("n_png"), col("n_jpeg"),
-        col("first_doc"), col("last_doc"), col("nn_hamming"),
-        coalesce(col("nn_pairs"), lit(0L)).as("nn_pairs"))
+      .withColumn("mates", collect_set(col("phash")).over(bucket))
+      .withColumn("nb", expr(
+        "filter(mates, m -> m != phash AND bit_count(m ^ phash) <= 6)"))
+      .groupBy(Seq("phash", "n_docs", "n_png", "n_jpeg", "first_doc",
+        "last_doc").map(col): _*)
+      .agg(min(expr("array_min(transform(nb, m -> bit_count(m ^ phash)))"))
+          .cast("long").as("nn_hamming"),
+        size(array_distinct(flatten(collect_list(col("nb")))))
+          .cast("long").as("nn_pairs"))
       .orderBy(col("phash"))
   }
 }

@@ -3395,7 +3395,7 @@ object TxnLog {
   // ---------------------------------------------------------------
 
   /** One version file parsed into its change-relevant pieces. */
-  private final case class CommitActions(adds: Seq[String],
+  private[graft] final case class CommitActions(adds: Seq[String],
       hasRemoves: Boolean, cdcNone: Boolean,
       cdcFiles: Seq[(String, String)], // (relpath, insert|delete)
       addParts: Map[String, Map[String, String]], // partitioned adds
@@ -4535,10 +4535,9 @@ object TxnLog {
     * ignoreDeletes) accepts such rewrites and RE-EMITS their new
     * images; the downstream must tolerate re-delivered rows. A
     * remove-bearing commit with NO cdc info can never stream. */
-  private[graft] def appendFeed(t: Table, from: Long, to: Long,
-                                  ignoreDeletes: Boolean,
-                                  ignoreChanges: Boolean = false): Seq[String] =
-    streamRange(t, from, to).flatMap { case (vf, a) =>
+  private[graft] def appendFeed(range: StreamRange, ignoreDeletes: Boolean,
+      ignoreChanges: Boolean = false): Seq[String] =
+    range.commits.flatMap { case (vf, a) =>
       if (!a.rewrites) // dv commits are rewrites: adds ≠ insert wave
         a.adds ++ a.cdcFiles.collect { case (rel, "insert") => rel }
       else if (a.cdcNone) Nil
@@ -4562,47 +4561,40 @@ object TxnLog {
       }
     }
 
-  /** The commits in (from, to] with their actions — a stream batch's
-    * range. A range whose oldest commit expired, or holding a rewrite
+  /** A stream batch's range: the commits in (from, to] with their
+    * actions, and the retention floor (the oldest retained version). */
+  private[graft] case class StreamRange(floor: Long,
+      commits: Seq[(Path, CommitActions)])
+
+  /** One log listing and one read per commit file for a micro-batch.
+    * A range whose oldest commit expired, or holding a rewrite
     * without cdc info, refuses: a stream can neither skip nor diff. */
-  private def streamRange(t: Table, from: Long,
-      to: Long): Seq[(Path, CommitActions)] = {
-    val range = versionFiles(t)
-      .filter(p => versionOf(p) > from && versionOf(p) <= to)
+  private[graft] def streamRange(t: Table, from: Long,
+      to: Long): StreamRange = {
+    val all = versionFiles(t)
+    val range = all.filter(p => versionOf(p) > from && versionOf(p) <= to)
     range.headOption.foreach(h => require(versionOf(h) == from + 1,
       s"stream range v$from..v$to is partially expired: earliest " +
         s"retained log in range is v${versionOf(h)} — restart the " +
         "stream from a fresh checkpoint"))
-    range.map { vf =>
+    val floor = all.headOption.map(versionOf).getOrElse(0L)
+    StreamRange(floor, range.map { vf =>
       val a = commitActions(vf)
       if (a.rewrites && !a.cdcNone && a.cdcFiles.isEmpty)
         throw new IllegalStateException(
           s"commit ${vf.getFileName} rewrites files without cdc info; " +
             "the stream cannot resolve it from the log")
       vf -> a
-    }
+    })
   }
 
-  /** Log-resolved change-feed FILE LISTS for (from, to] — the CDF
-    * streaming source's batch planner: (insert files, delete change
-    * files). Unlike [[changes]] this REFUSES a rewrite without cdc
-    * info instead of snapshot-diffing (a stream cannot diff
-    * incrementally). */
-  private[graft] def changeFeedFiles(t: Table, from: Long,
-      to: Long): (Seq[String], Seq[String]) = {
-    val acts = streamRange(t, from, to).map(_._2)
-    (acts.filter(!_.rewrites).flatMap(_.adds) ++
-      acts.flatMap(_.cdcFiles).collect { case (rel, "insert") => rel },
-      acts.flatMap(_.cdcFiles).collect { case (rel, "delete") => rel })
-  }
-
-  /** Partition metadata for every file a feed over (from, to] can
+  /** Partition metadata for every file a feed over the range can
     * reference: the from-snapshot's live files plus the range
     * commits' partitioned adds. Metadata-scale; empty for
     * unpartitioned tables (the common case pays one map lookup). */
   private def feedPartsMap(t: Table, from: Long,
-      to: Long): Map[String, Map[String, String]] = {
-    val rangeParts = streamRange(t, from, to).flatMap(_._2.addParts)
+      range: StreamRange): Map[String, Map[String, String]] = {
+    val rangeParts = range.commits.flatMap(_._2.addParts)
     // a stream may legitimately resume at the version just below the
     // expireLog retention floor (its range is fully retained even
     // though `from` itself is not replayable): fall back to the
@@ -4610,10 +4602,9 @@ object TxnLog {
     // exactly AT the floor version recorded their partition metadata
     // only in pre-floor state, which is gone — [[readChangeFeedBatch]]
     // refuses those loudly instead of null-filling the columns.
-    val floor = versionFiles(t).headOption.map(versionOf).getOrElse(0L)
     val base =
       if (from < 0) Map.empty[String, Map[String, String]]
-      else snapshot(t, Some(math.max(from, floor))).filePartitions
+      else snapshot(t, Some(math.max(from, range.floor))).filePartitions
     base ++ rangeParts
   }
 
@@ -4623,13 +4614,18 @@ object TxnLog {
   private[graft] def readFeedBatch(s: SparkSession, t: Table, from: Long,
       to: Long, ignoreDeletes: Boolean, ignoreChanges: Boolean,
       schemaJson: String): DataFrame = {
-    readFiles(s, t, appendFeed(t, from, to, ignoreDeletes, ignoreChanges),
-      Some(schemaJson), feedPartsMap(t, from, to))
+    val range = streamRange(t, from, to)
+    readFiles(s, t, appendFeed(range, ignoreDeletes, ignoreChanges),
+      Some(schemaJson), feedPartsMap(t, from, range))
   }
 
   /** One CDF micro-batch as (inserts, deletes) DataFrames, partition
     * columns reconstituted (zero-copy deletes from dropPartition
-    * reference partition-recorded data files). A stream resuming ONE
+    * reference partition-recorded data files). Inserts are the
+    * append commits' adds plus the insert change files; deletes are
+    * the delete change files. Unlike [[changes]] a rewrite without
+    * cdc info REFUSES instead of snapshot-diffing (a stream cannot
+    * diff incrementally). A stream resuming ONE
     * version below the expireLog retention floor can hit zero-copy
     * deletes whose partition metadata lived only in pre-floor state:
     * reading those flat would silently null-fill the partition
@@ -4637,9 +4633,13 @@ object TxnLog {
     * files under cdc/ carry every column and are exempt). */
   private[graft] def readChangeFeedBatch(s: SparkSession, t: Table,
       from: Long, to: Long, schemaJson: String): (DataFrame, DataFrame) = {
-    val (ins, del) = changeFeedFiles(t, from, to)
-    val parts = feedPartsMap(t, from, to)
-    val floor = versionFiles(t).headOption.map(versionOf).getOrElse(0L)
+    val range = streamRange(t, from, to)
+    val acts = range.commits.map(_._2)
+    val ins = acts.filter(!_.rewrites).flatMap(_.adds) ++
+      acts.flatMap(_.cdcFiles).collect { case (rel, "insert") => rel }
+    val del = acts.flatMap(_.cdcFiles).collect { case (rel, "delete") => rel }
+    val parts = feedPartsMap(t, from, range)
+    val floor = range.floor
     if (from >= 0 && from < floor) {
       val unresolved = del.filterNot(parts.contains)
         .filterNot(_.startsWith("cdc/"))

@@ -407,32 +407,37 @@ class PlansSpec extends AnyFunSuite {
       s"documents scan reads beyond doc_id/text:\n${plan.take(900)}")
   }
 
-  test("phash groups: corpus decode runs once, branches read materialized groups") {
-    // r22: the distinct-hash groups MATERIALIZE once when the query is
-    // built (their aggregate runs the full-corpus decode exactly once;
-    // before, the banded self-join's aliased sides canonicalized apart
-    // and re-decoded the corpus per side), and every branch of the
-    // RESULT plan reads the checkpointed rows
-    // (the build itself sweeps earlier queries' tracked checkpoints,
-    // so after it exactly this query's registration must be pending)
-    val df = SparkEntry.queries("mm_phash_neardup")(spark, sf)
-    assert(graft.operators.CheckpointLedger.pendingCount >= 1,
-      "groups checkpoint not tracked for the next-query sweep")
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    // the decode projection must NOT appear in the result plan at all
-    // — if it does, some branch re-decodes the corpus
-    assert(!plan.contains("static_invoke(graft.operators.DHash.ofBytes"),
-      s"a result-plan branch re-runs the corpus decode:\n${plan.take(900)}")
-    // both the banded sides and the final spine read the materialized
-    // groups (the checkpoint RDD), not a recomputed aggregate
-    assert("Scan ExistingRDD".r.findAllIn(plan).size >= 2,
-      s"branches do not read the materialized groups:\n${plan.take(900)}")
+  test("phash groups: corpus decode runs once, in one documents scan") {
+    // the groups have ONE consumer (a window over the band buckets
+    // replaces the banded self-join and its spine), so the aggregate
+    // and the full-corpus image decode under it run once
+    val plan = finalPlanOf("mm_phash_neardup")
+    val scans = "Scan parquet".r.findAllIn(plan).size
+    assert(scans == 1, s"expected 1 documents scan, found $scans:\n${plan.take(900)}")
+    assert("static_invoke\\(graft.operators.DHash.ofBytes".r
+      .findAllIn(plan).size == 1,
+      s"the corpus decode runs more than once:\n${plan.take(900)}")
     // nothing pairwise at doc scale
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"pairwise operator crept in:\n${plan.take(900)}")
+  }
+
+  test("simhash groups are shared by exchange reuse: one documents scan") {
+    // intra pairs and both band sides keep (sig, ids), so the group
+    // aggregate's exchange is reused instead of re-running the word
+    // explode + simhash aggregate per consumer
+    val plan = finalPlanOf("dedup_simhash")
+    val reused = "ReusedExchange".r.findAllIn(plan).size
+    assert(reused >= 2, s"expected >= 2 reused exchanges, found $reused:\n$plan")
+    val scans = "Scan parquet".r.findAllIn(plan).size
+    assert(scans == 1, s"expected 1 documents scan, found $scans:\n$plan")
+  }
+
+  test("minhash groups are shared by exchange reuse") {
+    val plan = finalPlanOf("dedup_minhash_lsh")
+    val reused = "ReusedExchange".r.findAllIn(plan).size
+    assert(reused >= 3, s"expected >= 3 reused exchanges, found $reused:\n$plan")
   }
 
   test("retention cohort: first-touch window and roll-up share two exchanges") {

@@ -1033,18 +1033,18 @@ class TxnLogSpec extends AnyFunSuite {
     val to = TxnLog.latestVersion(t)
     // default: the delete commit fails the append feed
     intercept[IllegalStateException] {
-      TxnLog.appendFeed(t, 0L, to, ignoreDeletes = false)
+      TxnLog.appendFeed(TxnLog.streamRange(t, 0L, to), ignoreDeletes = false)
     }
     // ignoreDeletes alone: the pure delete is skipped, but the MERGE
     // (deletes AND new images) still fails — emitting its inserts
     // would double-count row 2 downstream
     val e = intercept[IllegalStateException] {
-      TxnLog.appendFeed(t, 0L, to, ignoreDeletes = true)
+      TxnLog.appendFeed(TxnLog.streamRange(t, 0L, to), ignoreDeletes = true)
     }
     assert(e.getMessage.contains("ignoreChanges"))
     // ignoreChanges: the merge's new images are re-emitted
-    val files = TxnLog.appendFeed(t, 0L, to, ignoreDeletes = true,
-      ignoreChanges = true)
+    val files = TxnLog.appendFeed(TxnLog.streamRange(t, 0L, to),
+      ignoreDeletes = true, ignoreChanges = true)
     val rows = TxnLog.readFiles(spark, t, files,
       TxnLog.snapshot(t).schemaJson).collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted
@@ -1217,7 +1217,8 @@ class TxnLogSpec extends AnyFunSuite {
       .toSeq === Seq(1L))
     // the delete-only commit streams as a rewrite: pure append feed
     // consumers with ignoreDeletes skip it (no insert images ride)
-    assert(TxnLog.appendFeed(t, v1, v2, ignoreDeletes = true) === Nil)
+    assert(TxnLog.appendFeed(TxnLog.streamRange(t, v1, v2),
+      ignoreDeletes = true) === Nil)
   }
 
   test("txnlog: a blind append landing during OPTIMIZE commutes; a conflicting rewrite still refuses") {
@@ -3898,10 +3899,12 @@ class TxnLogSpec extends AnyFunSuite {
     // the append-feed stream refuses a DV commit by default and
     // skips it under ignoreDeletes (it is a pure-delete commit)
     val boom = intercept[IllegalStateException] {
-      TxnLog.appendFeed(t, vPre, vNow, ignoreDeletes = false)
+      TxnLog.appendFeed(TxnLog.streamRange(t, vPre, vNow),
+        ignoreDeletes = false)
     }
     assert(boom.getMessage.contains("row-level deletes"), boom.getMessage)
-    assert(TxnLog.appendFeed(t, vPre, vNow, ignoreDeletes = true).isEmpty)
+    assert(TxnLog.appendFeed(TxnLog.streamRange(t, vPre, vNow),
+      ignoreDeletes = true).isEmpty)
     // OPTIMIZE materializes the vector away
     TxnLog.compact(spark, t)
     val after = TxnLog.snapshot(t)
