@@ -122,7 +122,9 @@ object TxnLog {
     * filesystem, which at 100 TB table scale is the difference
     * between a log replay and O(live files) driver FS calls. Files
     * added by legacy/raw commits simply lack an entry; consumers
-    * fall back to one stat for those. */
+    * fall back to one stat for those. `txns`: each streaming app's
+    * highest committed batch id, the fence an exactly-once sink
+    * re-checks on every commit attempt. */
   final case class Snapshot(version: Long, liveFiles: Seq[String],
       fileStats: Map[String, Map[String, (Long, Long)]] = Map.empty,
       schemaJson: Option[String] = None,
@@ -134,7 +136,8 @@ object TxnLog {
       declaredPartCols: Seq[String] = Nil,
       properties: Map[String, String] = Map.empty,
       minReader: Long = 1L,
-      dropped: Set[String] = Set.empty) {
+      dropped: Set[String] = Set.empty,
+      private[sources] val txns: Map[String, Long] = Map.empty) {
     /** Declared constraints at this version — carried BY the snapshot
       * so rewrite ops enforce without a second log replay. */
     def constraints: Constraints = Constraints(notNull, checks)
@@ -191,15 +194,19 @@ object TxnLog {
   private def listing(stream: java.util.stream.Stream[Path]): Seq[Path] =
     try stream.iterator().asScala.toSeq finally stream.close()
 
-  private def versionFiles(t: Table): Seq[Path] =
-    listing(Files.list(t.logDir))
-      .filter(_.getFileName.toString.matches("\\d{20}\\.log"))
-      .sortBy(versionOf)
+  /** The log's version files and checkpoint files, each in version
+    * order, from ONE listing of the log directory. */
+  private def logFiles(t: Table): (Seq[Path], Seq[Path]) = {
+    val all = listing(Files.list(t.logDir))
+    def named(ext: String): Seq[Path] =
+      all.filter(_.getFileName.toString.matches(s"\\d{20}\\.$ext"))
+        .sortBy(versionOf)
+    (named("log"), named("ckpt"))
+  }
 
-  private def checkpointFiles(t: Table): Seq[Path] =
-    listing(Files.list(t.logDir))
-      .filter(_.getFileName.toString.matches("\\d{20}\\.ckpt"))
-      .sortBy(versionOf)
+  private def versionFiles(t: Table): Seq[Path] = logFiles(t)._1
+
+  private def checkpointFiles(t: Table): Seq[Path] = logFiles(t)._2
 
   /** Latest committed version, or -1 for an empty table. */
   def latestVersion(t: Table): Long =
@@ -352,8 +359,13 @@ object TxnLog {
   /** Replay the log through `asOf`, starting from the newest
     * checkpoint at or below it — at most [[CheckpointInterval]] log
     * files are read no matter how old the table is. */
-  private def replayState(t: Table, asOf: Option[Long]): (Long, State) = {
-    val all = versionFiles(t)
+  private def replayState(t: Table, asOf: Option[Long]): (Long, State) =
+    replay(t, logFiles(t), asOf)
+
+  /** [[replayState]] over an already-taken [[logFiles]] listing. */
+  private def replay(t: Table, files: (Seq[Path], Seq[Path]),
+                     asOf: Option[Long]): (Long, State) = {
+    val (all, ckpts) = files
     val upTo = asOf match {
       case Some(v) =>
         val have = all.filter(versionOf(_) <= v)
@@ -367,7 +379,7 @@ object TxnLog {
     require(upTo.nonEmpty, s"empty transaction log at ${t.logDir}")
     val target = versionOf(upTo.last)
     val st = new State
-    val ckpt = checkpointFiles(t).filter(versionOf(_) <= target).lastOption
+    val ckpt = ckpts.filter(versionOf(_) <= target).lastOption
     val from = ckpt match {
       case Some(c) =>
         for (line <- Files.readAllLines(c).asScala if line.nonEmpty)
@@ -394,8 +406,18 @@ object TxnLog {
   /** Replay the action log through `asOf` (latest when None). The
     * live set is insertion-ordered so file order — and thus scan
     * planning — is deterministic across replays. */
-  def snapshot(t: Table, asOf: Option[Long] = None): Snapshot = {
-    val (v, st) = replayState(t, asOf)
+  def snapshot(t: Table, asOf: Option[Long] = None): Snapshot =
+    snapshotOf(replayState(t, asOf))
+
+  /** The latest version's [[snapshot]] from one log listing; None on
+    * an empty log. */
+  private def latestSnapshot(t: Table): Option[Snapshot] = {
+    val files = logFiles(t)
+    if (files._1.isEmpty) None else Some(snapshotOf(replay(t, files, None)))
+  }
+
+  private def snapshotOf(replayed: (Long, State)): Snapshot = {
+    val (v, st) = replayed
     val live = st.live.asScala.toSeq
     Snapshot(v, live, st.stats.view.filterKeys(st.live.contains).toMap,
       st.schemaJson,
@@ -403,7 +425,7 @@ object TxnLog {
       st.sizes.view.filterKeys(st.live.contains).toMap,
       st.notNull, st.checks,
       st.dvs.view.filterKeys(st.live.contains).toMap,
-      st.declaredParts, st.props, st.minReader, st.dropped)
+      st.declaredParts, st.props, st.minReader, st.dropped, st.txns)
   }
 
   /** Decode a deletion vector's `a-b`/`a` range string (sorted,
@@ -601,7 +623,9 @@ object TxnLog {
     * A nonempty `readSet` also forces rewrite claim semantics
     * (exactly base+1) even with no removes — the deletion-vector
     * commit shape, which changes row state without a remove line.
-    * Returns the committed version. */
+    * These lines are FIXED; a commit whose lines depend on the state
+    * it lands on goes through [[commitRecomputed]]. Returns the
+    * committed version. */
   def commit(t: Table, base: Long, adds: Seq[String],
              removes: Seq[String] = Nil,
              extra: Seq[String] = Nil,
@@ -620,125 +644,149 @@ object TxnLog {
       // over future state (replaceWhere on an empty partition) into
       // the same claim semantics with nothing to reconcile against.
       val rewrite = removes.nonEmpty || readSet.nonEmpty || forceClaim
-      var myBase = base
-      var v = if (rewrite) myBase + 1
-              else math.max(latestVersion(t), myBase) + 1
-      var committed = -1L
-      var attempts = 0
-      while (committed < 0) {
-        val target = t.logDir.resolve(f"$v%020d.log")
-        try {
-          Files.createLink(target, tmp)
-          committed = v
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            if (!rewrite)
-              v += 1 // blind append: nothing to invalidate, next slot
-            else {
-              def refuse(why: String): Nothing =
-                throw new java.util.ConcurrentModificationException(
-                  s"rewrite commit based on stale snapshot " +
-                    s"v$myBase: $why; recompute the rewrite against " +
-                    "the current snapshot and retry")
-              if (!reconcileDisjoint)
-                refuse(s"version $v was taken concurrently")
-              attempts += 1
-              if (attempts > MaxCommitRetries)
-                refuse(s"gave up after $MaxCommitRetries " +
-                  "reconcile-and-retry attempts (writer storm)")
-              val latest = latestVersion(t)
-              val guard = removes.toSet ++ readSet
-              // classify each intervening COMMIT: blind appends
-              // commute (their new files were never in this
-              // statement's read set — Delta's WriteSerializable
-              // exemption); a LOGICAL NO-OP rewrite (compaction,
-              // `cdc none`) commutes when its touched files are
-              // disjoint from the read set (row state unchanged, so
-              // the predicate scan's answer stands); a ROW-CHANGING
-              // rewrite always refuses — its ADDS may have moved
-              // rows INTO this statement's predicate scope, which no
-              // file-set check can see (Delta raises
-              // ConcurrentAppend/ConcurrentDeleteRead there)
-              versionFiles(t)
-                .filter(p => versionOf(p) > myBase && versionOf(p) <= latest)
-                .foreach { vf =>
-                  val lines = Files.readAllLines(vf).asScala
-                  // metadata the staged rewrite was computed under
-                  // must not shift beneath it: new constraints were
-                  // never enforced on the staged files, schema/layout
-                  // changes invalidate their shape, a dropped
-                  // column's tombstone forbids bytes the staging may
-                  // carry, and PROPERTY flips steer routing decisions
-                  // (merge-on-read) taken at snapshot time — Delta's
-                  // MetadataChangedException covers all of these
-                  lines.find(l =>
-                    l.startsWith("schema\t") ||
-                    l.startsWith("partcols\t") ||
-                    l.startsWith("constraint\t") ||
-                    l.startsWith("dropconstraint\t") ||
-                    l.startsWith("dropped\t") ||
-                    l.startsWith("property\t") ||
-                    l.startsWith("unsetproperty\t"))
-                  .foreach(l => refuse(
-                    s"a concurrent commit changed table metadata " +
-                      s"(${l.split('\t').take(2).mkString(" ")})"))
-                  val touched = lines.collect {
-                    case l if l.startsWith("remove\t") ||
-                        l.startsWith("dv\t") => l.split('\t')(1)
-                  }
-                  if (touched.nonEmpty) {
-                    val conflict = touched.filter(guard)
-                    if (conflict.nonEmpty)
-                      refuse(s"concurrent commits rewrote read-set " +
-                        s"file(s) ${conflict.take(3).mkString(", ")}")
-                    // a PREDICATE-based statement (nonempty readSet)
-                    // must also refuse row-changing interlopers
-                    // wholesale: their ADDS may have moved rows INTO
-                    // the predicate's scope, which no file-set check
-                    // can see. A file-scoped logical no-op
-                    // (compaction: empty readSet — it read exactly
-                    // its removes) commutes with them when
-                    // file-disjoint, and compactions themselves
-                    // commute with predicates over disjoint files.
-                    // The commute key is the DEDICATED
-                    // [[RowStateUnchanged]] action (not the `cdc
-                    // none` feed marker, which is a CDF convention a
-                    // future rewrite op could plausibly emit while
-                    // changing rows): only [[noopRewriteLines]]
-                    // produces it, and that helper is the one place
-                    // the "rows unchanged" claim is made.
-                    if (readSet.nonEmpty &&
-                        !lines.contains(RowStateUnchanged))
-                      refuse("a concurrent row-changing rewrite " +
-                        s"(${vf.getFileName}) may have moved rows " +
-                        "into this statement's scope")
-                  }
-                }
-              myBase = latest // commuting interlopers: rebase, retry
-              v = latest + 1
+      val guard = removes.toSet ++ readSet
+      // claim `v` for a read set valid at `myBase`; on a lost slot a
+      // blind append walks up, a rewrite reconciles or refuses
+      @annotation.tailrec
+      def publish(v: Long, myBase: Long, attempts: Int): Long =
+        if (link(t, v, tmp)) v
+        else if (!rewrite) publish(v + 1, myBase, attempts) // next slot
+        else {
+          def refuse(why: String): Nothing =
+            throw new java.util.ConcurrentModificationException(
+              s"rewrite commit based on stale snapshot " +
+                s"v$myBase: $why; recompute the rewrite against " +
+                "the current snapshot and retry")
+          if (!reconcileDisjoint)
+            refuse(s"version $v was taken concurrently")
+          if (attempts >= MaxCommitRetries)
+            refuse(s"gave up after $MaxCommitRetries " +
+              "reconcile-and-retry attempts (writer storm)")
+          val latest = latestVersion(t)
+          // classify each intervening COMMIT: blind appends
+          // commute (their new files were never in this
+          // statement's read set — Delta's WriteSerializable
+          // exemption); a LOGICAL NO-OP rewrite (compaction,
+          // `cdc none`) commutes when its touched files are
+          // disjoint from the read set (row state unchanged, so
+          // the predicate scan's answer stands); a ROW-CHANGING
+          // rewrite always refuses — its ADDS may have moved
+          // rows INTO this statement's predicate scope, which no
+          // file-set check can see (Delta raises
+          // ConcurrentAppend/ConcurrentDeleteRead there)
+          versionFiles(t)
+            .filter(p => versionOf(p) > myBase && versionOf(p) <= latest)
+            .foreach { vf =>
+              val lines = Files.readAllLines(vf).asScala
+              // metadata the staged rewrite was computed under
+              // must not shift beneath it: new constraints were
+              // never enforced on the staged files, schema/layout
+              // changes invalidate their shape, a dropped
+              // column's tombstone forbids bytes the staging may
+              // carry, and PROPERTY flips steer routing decisions
+              // (merge-on-read) taken at snapshot time — Delta's
+              // MetadataChangedException covers all of these
+              lines.find(l =>
+                l.startsWith("schema\t") ||
+                l.startsWith("partcols\t") ||
+                l.startsWith("constraint\t") ||
+                l.startsWith("dropconstraint\t") ||
+                l.startsWith("dropped\t") ||
+                l.startsWith("property\t") ||
+                l.startsWith("unsetproperty\t"))
+              .foreach(l => refuse(
+                s"a concurrent commit changed table metadata " +
+                  s"(${l.split('\t').take(2).mkString(" ")})"))
+              val touched = lines.collect {
+                case l if l.startsWith("remove\t") ||
+                    l.startsWith("dv\t") => l.split('\t')(1)
+              }
+              if (touched.nonEmpty) {
+                val conflict = touched.filter(guard)
+                if (conflict.nonEmpty)
+                  refuse(s"concurrent commits rewrote read-set " +
+                    s"file(s) ${conflict.take(3).mkString(", ")}")
+                // a PREDICATE-based statement (nonempty readSet)
+                // must also refuse row-changing interlopers
+                // wholesale: their ADDS may have moved rows INTO
+                // the predicate's scope, which no file-set check
+                // can see. A file-scoped logical no-op
+                // (compaction: empty readSet — it read exactly
+                // its removes) commutes with them when
+                // file-disjoint, and compactions themselves
+                // commute with predicates over disjoint files.
+                // The commute key is the DEDICATED
+                // [[RowStateUnchanged]] action (not the `cdc
+                // none` feed marker, which is a CDF convention a
+                // future rewrite op could plausibly emit while
+                // changing rows): only [[noopRewriteLines]]
+                // produces it, and that helper is the one place
+                // the "rows unchanged" claim is made.
+                if (readSet.nonEmpty &&
+                    !lines.contains(RowStateUnchanged))
+                  refuse("a concurrent row-changing rewrite " +
+                    s"(${vf.getFileName}) may have moved rows " +
+                    "into this statement's scope")
+              }
             }
+          publish(latest + 1, latest, attempts + 1) // commuting: rebase
         }
-      }
+      val committed = publish(
+        if (rewrite) base + 1 else math.max(latestVersion(t), base) + 1,
+        base, 0)
       maybeCheckpoint(t, committed)
       committed
     } finally Files.deleteIfExists(tmp)
   }
 
+  /** Link the written commit body `tmp` as exactly version `v`; false
+    * when the slot is already taken — the single-syscall claim every
+    * publish goes through. */
+  private def link(t: Table, v: Long, tmp: Path): Boolean =
+    try { Files.createLink(t.logDir.resolve(f"$v%020d.log"), tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+
   /** Attempt to publish `lines` as exactly version `v`; false when
-    * the slot is already taken. The single-syscall link claim from
-    * [[commit]], exposed for protocols that must re-validate their
-    * read set between attempts. */
+    * the slot is already taken. Only [[commitRecomputed]] and the
+    * version-0 claims of [[registerSchema]] and [[shallowClone]] call
+    * it. */
   private def tryPublish(t: Table, v: Long, lines: Seq[String]): Boolean = {
     val tmp = t.logDir.resolve(s".tmp-${UUID.randomUUID()}")
     Files.writeString(tmp, lines.mkString("", "\n", "\n"))
     try {
-      Files.createLink(t.logDir.resolve(f"$v%020d.log"), tmp)
-      maybeCheckpoint(t, v)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
+      val won = link(t, v, tmp)
+      if (won) maybeCheckpoint(t, v)
+      won
     } finally Files.deleteIfExists(tmp)
   }
+
+  /** The one loop for commits whose lines are RECOMPUTED from the
+    * state they land on — Delta's optimistic read, validate, claim.
+    * Each attempt reads the latest [[Snapshot]] once (None on an
+    * empty log) and hands it to `body`, which validates against it
+    * and returns the lines to publish (Right) or declines with the
+    * call's result (Left: nothing to publish, or a fence that already
+    * holds). The loop claims exactly base+1 and re-runs `body` on a
+    * lost slot, so every published line was computed against the
+    * version directly below it. */
+  @annotation.tailrec
+  private def commitRecomputed(t: Table)(
+      body: Option[Snapshot] => Either[Long, Seq[String]]): Long = {
+    val cur = latestSnapshot(t)
+    val base = cur.fold(-1L)(_.version)
+    body(cur) match {
+      case Left(result) => result
+      case Right(lines) if tryPublish(t, base + 1, lines) => base + 1
+      case Right(_) => commitRecomputed(t)(body)
+    }
+  }
+
+  /** Does the streaming fence (`appId`, `batchId`) already hold at
+    * `cur` — that app's txn marker at or above the batch? */
+  private def fenceHolds(cur: Option[Snapshot],
+                         fence: Option[(String, Long)]): Boolean =
+    fence.exists { case (app, bid) =>
+      cur.exists(_.txns.get(app).exists(_ >= bid)) }
 
   // ---------------------------------------------------------------
   // Schema registration
@@ -749,12 +797,13 @@ object TxnLog {
     * the newest checkpoint summarizes everything at or below itself,
     * so the walk is bounded by [[CheckpointInterval]] files. */
   def registeredSchema(t: Table): Option[StructType] = {
-    val ckptV = checkpointFiles(t).lastOption.map(versionOf).getOrElse(-1L)
-    val newerFirst = versionFiles(t).filter(versionOf(_) > ckptV).reverse
+    val (versions, ckpts) = logFiles(t)
+    val ckptV = ckpts.lastOption.map(versionOf).getOrElse(-1L)
+    val newerFirst = versions.filter(versionOf(_) > ckptV).reverse
     for (vf <- newerFirst; line <- Files.readAllLines(vf).asScala.reverse)
       if (line.startsWith("schema\t"))
         return Some(parseSchema(line.split('\t')(1)))
-    checkpointFiles(t).lastOption.flatMap { c =>
+    ckpts.lastOption.flatMap { c =>
       Files.readAllLines(c).asScala.find(_.startsWith("schema\t"))
         .map(l => parseSchema(l.split('\t')(1)))
     }
@@ -831,13 +880,8 @@ object TxnLog {
       case _ => df
     }
 
-  /** PHYSICAL names tombstoned by DROP COLUMN — replay-accumulated
-    * (read only on schema-registering commits, which are rare). */
-  private def droppedPhysicals(t: Table): Set[String] =
-    if (latestVersion(t) < 0) Set.empty
-    else replayState(t, None)._2.dropped
-
-  /** Merge `incoming` into the registered schema: shared names must
+  /** Merge `incoming` into the schema `snap` registers (None: a fresh
+    * location, where `incoming` registers as is): shared names must
     * keep their types AND their physical mapping
     * (refuse-rather-than-corrupt), genuinely new fields append — the
     * ADDITIVE evolution contract. A new field whose physical name (=
@@ -852,11 +896,10 @@ object TxnLog {
     * table shape as a side effect). Returns (merged schema, whether
     * registration is needed, whether a column widened — the caller
     * must stamp the type-widening protocol floor then). */
-  private def mergedSchema(t: Table, cur: Option[StructType],
-                           incoming: StructType,
+  private def mergedSchema(snap: Option[Snapshot], incoming: StructType,
                            allowWiden: Boolean = false)
       : (StructType, Boolean, Boolean) =
-    cur match {
+    snap.flatMap(_.schemaJson).map(parseSchema) match {
       case None => (incoming, true, false)
       case Some(c) =>
         val byName = c.fields.map(f => f.name -> f).toMap
@@ -886,7 +929,7 @@ object TxnLog {
         }
         val fresh = incoming.fields.filterNot(f => byName.contains(f.name))
         if (fresh.nonEmpty) {
-          val dead = droppedPhysicals(t)
+          val dead = snap.fold(Set.empty[String])(_.dropped)
           val clash = fresh.map(physicalName).filter(dead.contains)
           require(clash.isEmpty,
             s"column name(s) ${clash.mkString(", ")} were DROPPED from " +
@@ -978,7 +1021,7 @@ object TxnLog {
     * like [[append]]; `statsCols` stamp per-file (min, max) exactly
     * like [[appendWithStats]]. The wave stages against the wave-entry
     * registered schema; a concurrent schema-changing commit conflicts
-    * through commitRegistering's re-merge, as with any append race.
+    * through commitAppend's re-merge, as with any append race.
     * Every slice must carry one schema (nullability aside): a slice
     * that evolved the schema would stage against a registration its
     * predecessor's commit has not made yet, so a differing slice
@@ -1004,90 +1047,61 @@ object TxnLog {
       val staged = stagedPar(s, slices.zip(stages).map {
         case (df, stg) => () => stageAdds(s, t, df, stg, Nil, statsCols, reg)
       })
-      staged.map { st =>
-        val enforcedAt = latestVersion(t)
-        enforceStaged(s, t, st, constraintsOf(t))
-        commitRegistering(t, st.schema, st.adds,
-          () => enforceStaged(s, t, st, constraintsOf(t)), enforcedAt)
-      }
+      staged.map(commitAppend(s, t, _))
     } finally seal(t, stages: _*)
   }
 
   /** The one append body: stage `df` through `partCols` (flat when
-    * empty), enforce the table's constraints on the staged rows and
-    * publish the add lines plus `extraLines` through
-    * [[commitRegistering]]. Under a `fence` (a streaming batch's
-    * `(appId, batchId)`) it returns -1 when the batch already holds. */
+    * empty) and publish it through [[commitAppend]]. Under a `fence`
+    * (a streaming batch's `(appId, batchId)`) it returns -1 when the
+    * batch already holds. */
   private def appendStaged(s: SparkSession, t: Table, df: DataFrame,
       partCols: Seq[String], statsCols: Seq[String],
       extraLines: Seq[String] = Nil, allowWiden: Boolean = false,
       fence: Option[(String, Long)] = None): Long = {
     val stage = newStage(t, t.dataDir)
-    try {
-      val st = stageAdds(s, t, df, stage, partCols, statsCols,
-        registeredSchema(t).map(_.json))
-      // the enforcement's validity horizon is captured BEFORE the
-      // check runs: a constraint declared between this read and the
-      // first publish attempt moves latestVersion past it, which
-      // commitRegistering treats as a slot loss (re-enforce) even on
-      // the first iteration — a constraint landing mid-staging can
-      // never be skipped by a first-attempt win
-      val enforcedAt = latestVersion(t)
-      enforceStaged(s, t, st, constraintsOf(t))
-      commitRegistering(t, df.schema, st.adds ++ extraLines,
-        () => enforceStaged(s, t, st, constraintsOf(t)),
-        enforcedAt, allowWiden, fence)
-    } finally seal(t, stage)
+    try commitAppend(s, t,
+      stageAdds(s, t, df, stage, partCols, statsCols,
+        registeredSchema(t).map(_.json)),
+      extraLines, allowWiden, fence)
+    finally seal(t, stage)
   }
 
-  /** The append-commit protocol shared by flat and partitioned
-    * appends: publish `lines0` as one commit, registering the merged
-    * schema when it changed. EVERY schema-bearing commit must merge
-    * against the TRUE latest: claim exactly base+1, re-merge and
-    * retry on loss. This includes the base < 0 first write — a
-    * blind-append retry there would republish a stale schema over a
-    * racing first-writer's columns (last-schema-wins replay).
+  /** The append-commit tail shared by flat, partitioned and sliced
+    * appends, one [[commitRecomputed]] attempt at a time: publish the
+    * staged adds plus `extraLines` as one commit, registering the
+    * merged schema when it changed. Every append merges against the
+    * TRUE latest, the base < 0 first write included — a blind-append
+    * retry would republish a stale schema over a racing first
+    * writer's columns (last-schema-wins replay).
     *
-    * `enforcedAt` is the latest version the caller's constraint
-    * enforcement was valid against (Long.MaxValue = no enforcement
-    * to re-run). ANY divergence between it and the slot target's
-    * base — a first-attempt interloper included, not just a lost
-    * slot — re-runs `onSlotLoss` before publishing, closing the
-    * window where rows staged before ADD CONSTRAINT could commit
-    * after it unchecked.
+    * Every attempt enforces the constraints of its own state on the
+    * staged rows (a retry's base has always moved): rows staged
+    * before an ADD CONSTRAINT can never commit after it unchecked,
+    * and a refusal publishes nothing.
     *
-    * A `fence` (`appId`, `batchId`) is re-checked before every
-    * attempt, first of all: when that app's txn marker already holds
-    * the batch (a replayed twin won the slot), nothing publishes and
-    * the result is -1. */
-  private def commitRegistering(t: Table, incoming: StructType,
-                                lines0: Seq[String],
-                                onSlotLoss: () => Unit = () => (),
-                                enforcedAt: Long = Long.MaxValue,
-                                allowWiden: Boolean = false,
-                                fence: Option[(String, Long)] = None): Long = {
-    var committed = -1L
-    var cleanAt = enforcedAt
-    while (committed < 0) {
-      val base = latestVersion(t)
-      if (fence.exists { case (app, bid) =>
-          lastBatch(t, app).exists(_ >= bid) }) return -1L
-      if (cleanAt != Long.MaxValue && base != cleanAt) {
-        onSlotLoss() // something landed since the last enforcement —
-        cleanAt = base // a constraint declaration among the options
+    * A `fence` (`appId`, `batchId`) is checked first on every
+    * attempt: when that app's txn marker already holds the batch (a
+    * replayed twin won the slot), nothing publishes and the result
+    * is -1. */
+  private def commitAppend(s: SparkSession, t: Table, st: Staged,
+      extraLines: Seq[String] = Nil, allowWiden: Boolean = false,
+      fence: Option[(String, Long)] = None): Long = {
+    commitRecomputed(t) { cur =>
+      if (fenceHolds(cur, fence)) Left(-1L)
+      else {
+        enforceStaged(s, t, st, cur.fold(NoConstraints)(_.constraints))
+        val (schema, changed, widened) =
+          mergedSchema(cur, st.schema, allowWiden)
+        // a write-side widening promotes old files' scan types exactly
+        // like the explicit ALTER — same protocol floor, same commit
+        val lines = (if (widened) Seq(ProtocolV2Line) else Nil) ++
+          (if (changed) Seq(s"schema\t${schema.json}") else Nil) ++
+          st.adds ++ extraLines
+        // an empty write: nothing to publish
+        if (lines.isEmpty) Left(cur.fold(-1L)(_.version)) else Right(lines)
       }
-      val (schema, changed, widened) =
-        mergedSchema(t, registeredSchema(t), incoming, allowWiden)
-      val schemaLine = changed || base < 0
-      // a write-side widening promotes old files' scan types exactly
-      // like the explicit ALTER — same protocol floor, same commit
-      val lines = (if (widened) Seq(ProtocolV2Line) else Nil) ++
-        (if (schemaLine)
-          Seq(s"schema\t${schema.json}") else Nil) ++ lines0
-      if (lines.isEmpty) return base // an empty write: nothing to publish
-      if (tryPublish(t, base + 1, lines)) committed = base + 1
     }
-    committed
   }
 
   /** Hive-style PARTITIONED append: `df` stages via
@@ -1387,9 +1401,10 @@ object TxnLog {
     * long-running stream pays O(1) log reads per micro-batch, not
     * O(versions). */
   def lastBatch(t: Table, appId: String): Option[Long] = {
-    val ckpt = checkpointFiles(t).lastOption
+    val (versions, ckpts) = logFiles(t)
+    val ckpt = ckpts.lastOption
     val ckptV = ckpt.map(versionOf).getOrElse(-1L)
-    for (vf <- versionFiles(t).filter(versionOf(_) > ckptV).reverse) {
+    for (vf <- versions.filter(versionOf(_) > ckptV).reverse) {
       val here = Files.readAllLines(vf).asScala.collect {
         case l if l.startsWith("txn\t") =>
           l.split('\t') match {
@@ -1912,17 +1927,18 @@ object TxnLog {
         s"(${declared.mkString(", ")}); this overwrite partitions by " +
         s"(${partCols0.mkString(", ")}) — stage through the declared " +
         "layout")
-    val snap = if (latestVersion(t) < 0) None else Some(snapshot(t))
+    val snap = latestSnapshot(t)
     // constraints are table identity too: one that reads a column the
     // new schema drops could never be evaluated again, so the replace
     // refuses rather than dropping it silently
     snap.foreach { sn =>
-      val fields = sn.schemaJson.fold(Set.empty[String])(
-        parseSchema(_).fieldNames.toSet)
+      val lost = sn.schemaJson.fold(Seq.empty[String])(
+        parseSchema(_).fieldNames.toSeq.filterNot(f =>
+          df.columns.exists(_.equalsIgnoreCase(f))))
       val stale = sn.notNull.diff(df.columns.toSet).toSeq.sorted
         .map(c => s"NOT NULL $c") ++
-        sn.checks.toSeq.sorted.collect { case (n, sql) if !checkRefs(sql)
-          .intersect(fields).subsetOf(df.columns.toSet) => s"CHECK $n" }
+        sn.checks.toSeq.sorted.collect {
+          case (n, sql) if checkCols(sql, lost).nonEmpty => s"CHECK $n" }
       require(stale.isEmpty,
         s"replace drops column(s) that constraint(s) " +
           s"${stale.mkString(", ")} reference — drop the constraint(s) " +
@@ -1995,7 +2011,7 @@ object TxnLog {
         missing.toSeq.sorted.mkString(", "))
     overwrite(s, t, Some(snap), Some(df), partCols, liveStatsCols(snap),
       snap.schemaJson, snap.constraints,
-      schemaHeader(t, snap, df.schema, allowWiden),
+      schemaHeader(snap, df.schema, allowWiden),
       victims = adds => {
         // Delta's scope validation, on the STAGED OUTPUT rather than a
         // separate pass over the input plan — a nondeterministic
@@ -2052,7 +2068,7 @@ object TxnLog {
         "back into partition discipline first")
     overwrite(s, t, Some(snap), Some(df), partCols, liveStatsCols(snap),
       snap.schemaJson, snap.constraints,
-      schemaHeader(t, snap, df.schema, allowWiden),
+      schemaHeader(snap, df.schema, allowWiden),
       victims = adds =>
         if (adds.isEmpty) None // empty input: no-op
         else {
@@ -2180,8 +2196,7 @@ object TxnLog {
     props.keys.foreach(k => require(
       k.nonEmpty && !k.exists(c => c == '\t' || c == '\n'),
       s"bad property key: '$k'"))
-    val snap =
-      if (latestVersion(t) < 0) None else Some(snapshot(t))
+    val snap = latestSnapshot(t)
     val oldProps = snap.map(_.properties).getOrElse(Map.empty)
     // the partcols line is ALWAYS emitted (empty clears a previous
     // declaration) — the layout is part of the definition
@@ -2240,7 +2255,7 @@ object TxnLog {
                        allowWiden: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val snap = snap0.getOrElse(snapshot(t))
-    val header = schemaHeader(t, snap, df.schema, allowWiden)
+    val header = schemaHeader(snap, df.schema, allowWiden)
     val cond = coalesce(pred, lit(false))
     def inScope(st: Staged): Unit = if (st.adds.nonEmpty) {
       val stray = readStaged(s, st).filter(not(cond)).limit(1).collect()
@@ -2275,10 +2290,10 @@ object TxnLog {
     * pinned-narrow scans; additive columns register in the SAME
     * commit, widening needs the mergeSchema opt-in like every other
     * write. */
-  private def schemaHeader(t: Table, snap: Snapshot, incoming: StructType,
+  private def schemaHeader(snap: Snapshot, incoming: StructType,
       allowWiden: Boolean): Seq[String] = {
-    val (merged, changed, widened) = mergedSchema(t,
-      snap.schemaJson.map(parseSchema), incoming, allowWiden)
+    val (merged, changed, widened) =
+      mergedSchema(Some(snap), incoming, allowWiden)
     (if (widened) Seq(ProtocolV2Line) else Nil) ++
       (if (changed) Seq(s"schema\t${merged.json}") else Nil)
   }
@@ -2884,20 +2899,6 @@ object TxnLog {
     } finally hits.foreach(_._2.unpersist())
   }
 
-  /** Publish `lines` into exactly the next free slot unless the
-    * fence (`app`, `bid`) already holds — re-checked before every
-    * attempt, so a replayed twin that landed the batch first is
-    * detected, never re-applied (a blind append's slot walk never
-    * re-checks the marker). Returns the version holding the batch. */
-  @annotation.tailrec
-  private def publishFenced(t: Table, app: String, bid: Long,
-      lines: Seq[String]): Long = {
-    val base = latestVersion(t)
-    if (lastBatch(t, app).exists(_ >= bid)) base
-    else if (tryPublish(t, base + 1, lines)) base + 1
-    else publishFenced(t, app, bid, lines)
-  }
-
   /** MERGE (upsert) by KEY-GROUP REPLACEMENT: every table row whose
     * `keyCol` value occurs in `source` is removed, and every `source`
     * row is inserted — the whole-row upsert a CDC-fed lakehouse table
@@ -2947,7 +2948,7 @@ object TxnLog {
         newRows = Some((_: DataFrame) => src), dvCaps = None,
         schemaLines = {
           val (schema, changed, _) =
-            mergedSchema(t, registeredSchema(t), src.schema)
+            mergedSchema(Some(snap), src.schema)
           if (changed) Seq(s"schema\t${schema.json}") else Nil
         }).getOrElse(
         appendStaged(s, t, src, snap.partCols, liveStatsCols(snap)))
@@ -3116,12 +3117,11 @@ object TxnLog {
     // (whole-row INSERT evolves additively; wider types refuse).
     val evolvedTo: Option[(StructType, Boolean)] =
       if (!evolveSchema) None
-      else snap.schemaJson.map(parseSchema) match {
-        case None => None // first write: the source schema registers
-        case Some(cur) =>
-          val (m, changed, widenedAny) =
-            mergedSchema(t, Some(cur), src.schema, allowWiden = true)
-          if (changed) Some((m, widenedAny)) else None
+      else if (snap.schemaJson.isEmpty) None // the source schema registers
+      else {
+        val (m, changed, widenedAny) =
+          mergedSchema(Some(snap), src.schema, allowWiden = true)
+        if (changed) Some((m, widenedAny)) else None
       }
     val candidates =
       if (trackedKeys.isEmpty) snap.liveFiles
@@ -3222,7 +3222,7 @@ object TxnLog {
       val (schema, changed, widenedAny) = evolvedTo match {
         case Some((m, w)) => (m, true, w)
         case None if inserted.nonEmpty && !hasInsertExpr =>
-          mergedSchema(t, snap.schemaJson.map(parseSchema), src.schema)
+          mergedSchema(Some(snap), src.schema)
         case None => (src.schema, false, false)
       }
       (if (widenedAny) Seq(ProtocolV2Line) else Nil) ++
@@ -3326,8 +3326,12 @@ object TxnLog {
       .getOrElse(inserted match {
         case Some(rows) => appendStaged(s, t, rows, snap.partCols,
           statsCols, marker, allowWiden = evolveSchema, fence = fence)
-        case None => fence.fold(snap.version) { case (app, bid) =>
-          publishFenced(t, app, bid, marker) }
+        // the marker alone, fence re-checked on every attempt: a
+        // replayed twin that landed the batch first is never re-applied
+        case None if fence.nonEmpty => commitRecomputed(t) { cur =>
+          if (fenceHolds(cur, fence)) Left(cur.fold(-1L)(_.version))
+          else Right(marker) }
+        case None => snap.version
       })
     } finally org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(src)
   }
@@ -3616,7 +3620,7 @@ object TxnLog {
     * which routes SQL DELETE/UPDATE through the merge-on-read
     * path). */
   def propertiesOf(t: Table): Map[String, String] =
-    if (latestVersion(t) < 0) Map.empty else snapshot(t).properties
+    latestSnapshot(t).fold(Map.empty[String, String])(_.properties)
 
   /** `ALTER TABLE t SET TBLPROPERTIES (k = v, …)` — one metadata
     * commit carrying every pair. */
@@ -3655,8 +3659,9 @@ object TxnLog {
     def parse(line: String): Seq[String] =
       line.split('\t').drop(1).headOption.getOrElse("").split(',').toSeq
         .filter(_.nonEmpty).map(unescapePart)
-    val src = checkpointFiles(t).lastOption
-      .orElse(versionFiles(t).headOption.filter(versionOf(_) == 0L))
+    val (versions, ckpts) = logFiles(t)
+    val src = ckpts.lastOption
+      .orElse(versions.headOption.filter(versionOf(_) == 0L))
     src.flatMap { f =>
       val r = Files.newBufferedReader(f)
       // scan the HEADER PREFIX (everything before the first
@@ -3839,32 +3844,20 @@ object TxnLog {
     * version. */
   def addColumns(t: Table, newCols: StructType): Long = {
     require(newCols.nonEmpty, "addColumns needs at least one column")
-    require(latestVersion(t) >= 0,
-      s"empty transaction log at ${t.logDir}: commit data first " +
+    commitRecomputed(t) { latest =>
+      val (snap, cur) = evolvable(t, latest, ": commit data first " +
         "(the first append registers the initial schema)")
-    var committed = -1L
-    while (committed < 0) {
-      // ONE replay per attempt: the base version and the schema it
-      // carries come from the same read, so a racing column add
-      // re-merges against the state the slot claim actually targets
-      val base = latestVersion(t)
-      val cur = registeredSchema(t).getOrElse(
-        throw new IllegalStateException(
-          s"table at ${t.root} never registered a schema (raw " +
-            "commits); append through the API once before evolving it"))
-      val (merged, changed, _) = mergedSchema(t, Some(cur),
-        StructType(cur.fields ++ newCols.fields))
-      if (!changed) return base
+      val (merged, changed, _) =
+        mergedSchema(latest, StructType(cur.fields ++ newCols.fields))
       // DEFAULT-carrying columns change read semantics (an older
       // reader would null-fill pre-evolution rows) — protocol floor 4
       val proto =
         if (newCols.fields.exists(_.metadata.contains(ExistsDefaultKey)))
           Seq(ProtocolV4Line)
         else Nil
-      if (tryPublish(t, base + 1, proto :+ s"schema\t${merged.json}"))
-        committed = base + 1
+      if (!changed) Left(snap.version)
+      else Right(proto :+ s"schema\t${merged.json}")
     }
-    committed
   }
 
   /** RENAME COLUMN as ONE metadata commit — no data file rewritten:
@@ -3885,20 +3878,13 @@ object TxnLog {
   def renameColumn(t: Table, oldName: String, newName: String): Long = {
     require(newName.nonEmpty && !newName.exists(c => c == '\t' || c == '\n'),
       s"bad column name: '$newName'")
-    var committed = -1L
-    while (committed < 0) {
-      val base = latestVersion(t)
-      require(base >= 0, s"empty transaction log at ${t.logDir}")
-      val cur = registeredSchema(t).getOrElse(
-        throw new IllegalStateException(
-          s"table at ${t.root} never registered a schema (raw " +
-            "commits); append through the API once before evolving it"))
+    commitRecomputed(t) { latest =>
+      val (snap, cur) = evolvable(t, latest)
       require(cur.fieldNames.contains(oldName),
         s"no column '$oldName' (table has ${cur.fieldNames.mkString(", ")})")
       require(!cur.fieldNames.contains(newName),
         s"column '$newName' already exists")
-      evolutionGuards(t, oldName, "rename")
-      val (_, st) = replayState(t, None)
+      evolutionGuards(snap, oldName, "rename")
       val fields = cur.fields.map { f =>
         if (f.name != oldName) f
         else org.apache.spark.sql.types.StructField(newName, f.dataType,
@@ -3907,17 +3893,14 @@ object TxnLog {
             .putString(PhysicalKey, physicalName(f)).build())
       }
       val migrate =
-        if (!st.notNull.contains(oldName)) Nil
+        if (!snap.notNull.contains(oldName)) Nil
         else Seq(s"dropconstraint\tnotnull\t$oldName",
           s"constraint\tnotnull\t$newName")
       // column mapping changes read semantics: older readers must
       // refuse, not serve physical names — bump the protocol floor
-      if (tryPublish(t, base + 1,
-          ProtocolV2Line +: s"schema\t${StructType(fields).json}" +:
-            migrate))
-        committed = base + 1
+      Right(ProtocolV2Line +: s"schema\t${StructType(fields).json}" +:
+        migrate)
     }
-    committed
   }
 
   /** DROP COLUMN as ONE metadata commit: the field leaves the
@@ -3930,33 +3913,23 @@ object TxnLog {
     * CHECK constraint references; a NOT NULL constraint drops with
     * the column. Time travel below the commit still shows it.
     * Returns the committed version. */
-  def dropColumn(t: Table, name: String): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = latestVersion(t)
-      require(base >= 0, s"empty transaction log at ${t.logDir}")
-      val cur = registeredSchema(t).getOrElse(
-        throw new IllegalStateException(
-          s"table at ${t.root} never registered a schema (raw " +
-            "commits); append through the API once before evolving it"))
+  def dropColumn(t: Table, name: String): Long =
+    commitRecomputed(t) { latest =>
+      val (snap, cur) = evolvable(t, latest)
       require(cur.fieldNames.contains(name),
         s"no column '$name' (table has ${cur.fieldNames.mkString(", ")})")
       require(cur.length > 1, s"cannot drop the last column '$name'")
-      evolutionGuards(t, name, "drop")
-      val (_, st) = replayState(t, None)
+      evolutionGuards(snap, name, "drop")
       val phys = physicalName(cur.fields.find(_.name == name).get)
       val fields = cur.fields.filterNot(_.name == name)
       val migrate =
-        if (st.notNull.contains(name))
+        if (snap.notNull.contains(name))
           Seq(s"dropconstraint\tnotnull\t$name")
         else Nil
-      val lines = Seq(ProtocolV2Line,
+      Right(Seq(ProtocolV2Line,
         s"schema\t${StructType(fields).json}",
-        s"dropped\t$phys") ++ migrate
-      if (tryPublish(t, base + 1, lines)) committed = base + 1
+        s"dropped\t$phys") ++ migrate)
     }
-    committed
-  }
 
   /** Lossless widenings Spark's parquet reader promotes IN-SCAN
     * (verified against 4.x: requesting a wider schema over narrower
@@ -3988,51 +3961,53 @@ object TxnLog {
     * schema). Partition columns refuse — their values reconstitute
     * from layout strings and retyping them mid-table would change
     * prune semantics. Returns the committed version. */
-  def widenColumn(t: Table, name: String, to: DataType): Long = {
-    var committed = -1L
-    while (committed < 0) {
-      val base = latestVersion(t)
-      require(base >= 0, s"empty transaction log at ${t.logDir}")
-      val cur = registeredSchema(t).getOrElse(
-        throw new IllegalStateException(
-          s"table at ${t.root} never registered a schema (raw " +
-            "commits); append through the API once before evolving it"))
+  def widenColumn(t: Table, name: String, to: DataType): Long =
+    commitRecomputed(t) { latest =>
+      val (snap, cur) = evolvable(t, latest)
       val f = cur.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(
           s"no column '$name' (table has ${cur.fieldNames.mkString(", ")})"))
-      if (f.dataType == to) return base // idempotent migrations
-      require(canWiden(f.dataType, to),
-        s"cannot change '$name' from ${f.dataType.simpleString} to " +
-          s"${to.simpleString}: only lossless widenings are supported " +
-          "(byte<short<int<long, float->double, byte/short/int->double)")
-      val partCols = snapshot(t).partCols.toSet
-      require(!partCols.contains(name),
-        s"cannot widen partition column '$name' — rewrite the table " +
-          "to change its partitioning types")
-      val fields = cur.fields.map(x =>
-        if (x.name == name) x.copy(dataType = to) else x)
-      // widened scan types change read semantics: bump the protocol
-      if (tryPublish(t, base + 1,
-          Seq(ProtocolV2Line, s"schema\t${StructType(fields).json}")))
-        committed = base + 1
+      if (f.dataType == to) Left(snap.version) // idempotent migrations
+      else {
+        require(canWiden(f.dataType, to),
+          s"cannot change '$name' from ${f.dataType.simpleString} to " +
+            s"${to.simpleString}: only lossless widenings are supported " +
+            "(byte<short<int<long, float->double, byte/short/int->double)")
+        require(!snap.partCols.contains(name),
+          s"cannot widen partition column '$name' — rewrite the table " +
+            "to change its partitioning types")
+        val fields = cur.fields.map(x =>
+          if (x.name == name) x.copy(dataType = to) else x)
+        // widened scan types change read semantics: bump the protocol
+        Right(Seq(ProtocolV2Line, s"schema\t${StructType(fields).json}"))
+      }
     }
-    committed
+
+  /** The state an evolution verb validates against: the attempt's
+    * snapshot and the schema it registers. An empty log refuses
+    * (`emptyHint` appended to the message), and so does a log of raw
+    * commits that never registered a schema. */
+  private def evolvable(t: Table, latest: Option[Snapshot],
+      emptyHint: String = ""): (Snapshot, StructType) = {
+    require(latest.nonEmpty, s"empty transaction log at ${t.logDir}$emptyHint")
+    val snap = latest.get
+    (snap, snap.schemaJson.map(parseSchema).getOrElse(
+      throw new IllegalStateException(
+        s"table at ${t.root} never registered a schema (raw " +
+          "commits); append through the API once before evolving it")))
   }
 
   /** Shared refusals for rename/drop: partition columns (the layout
     * IS the name) and columns referenced by a CHECK constraint
     * (opaque SQL text — cannot be rewritten safely). */
-  private def evolutionGuards(t: Table, name: String, op: String): Unit = {
-    val partCols = snapshot(t).partCols.toSet
-    require(!partCols.contains(name),
+  private def evolutionGuards(snap: Snapshot, name: String,
+                              op: String): Unit = {
+    require(!snap.partCols.contains(name),
       s"cannot $op partition column '$name': the hive layout and " +
         "partition metadata key on it — rewrite the table to change " +
         "its partitioning")
-    val (_, st) = replayState(t, None)
-    val refs = st.checks.filter { case (_, sql) =>
-      ("""\b""" + java.util.regex.Pattern.quote(name) + """\b""").r
-        .findFirstIn(sql).isDefined
-    }
+    val refs = snap.checks.filter { case (_, sql) =>
+      checkCols(sql, Seq(name)).nonEmpty }
     require(refs.isEmpty,
       s"cannot $op column '$name': CHECK constraint(s) " +
         s"${refs.keys.mkString(", ")} reference it — drop the " +
@@ -4047,23 +4022,27 @@ object TxnLog {
 
   private val NoConstraints = Constraints(Set.empty, Map.empty)
 
-  /** A CHECK's column references, read by Spark's expression parser
-    * (no session needed): words inside string literals are not
-    * references, and a backtick-quoted name stays one name. */
-  private def checkRefs(sql: String): Set[String] =
-    org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+  /** The columns among `fields` a CHECK references, read by Spark's
+    * expression parser (no session needed: words inside string
+    * literals are not references, and a backtick-quoted name stays
+    * one name) and matched without regard to case, as Spark resolves
+    * them — `K > 0` references column `k`. */
+  private def checkCols(sql: String, fields: Iterable[String]): Set[String] = {
+    val refs = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
       .parseExpression(sql).collect {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          a.nameParts.head
+          a.nameParts.head.toLowerCase(java.util.Locale.ROOT)
       }.toSet
+    fields.filter(f => refs.contains(f.toLowerCase(java.util.Locale.ROOT)))
+      .toSet
+  }
 
   /** Constraints registered in the log (replay-accumulated —
     * checkpoint-bounded like every other metadata read; ops that
     * already hold a [[Snapshot]] read `snap.constraints` instead of
     * paying this second replay). */
   def constraintsOf(t: Table): Constraints =
-    if (latestVersion(t) < 0) NoConstraints
-    else snapshot(t).constraints
+    latestSnapshot(t).fold(NoConstraints)(_.constraints)
 
   /** Declare `col NOT NULL` in one metadata commit — enforced on
     * every subsequent write ([[enforceStaged]]) with a loud
@@ -4072,16 +4051,19 @@ object TxnLog {
     * of the live table refuses the declaration otherwise (a
     * constraint the data already violates would make every future
     * rewrite of old rows fail). */
-  def addNotNull(s: SparkSession, t: Table, colName: String): Long = {
-    while (true) {
-      val schema = registeredSchema(t).getOrElse(
+  def addNotNull(s: SparkSession, t: Table, colName: String): Long =
+    commitRecomputed(t) { latest =>
+      val snap = latest.filter(_.schemaJson.nonEmpty).getOrElse(
         throw new IllegalStateException(
           s"table at ${t.root} never registered a schema; append " +
             "through the API once before constraining it"))
+      val schema = parseSchema(snap.schemaJson.get)
       require(schema.fieldNames.contains(colName),
         s"NOT NULL constraint targets unknown column '$colName' " +
           s"(table has ${schema.fieldNames.mkString(", ")})")
-      val snap = snapshot(t)
+      // the validating scan is only good for the snapshot it ran on:
+      // a concurrent append that slips in is re-validated on the
+      // retry, never blind-walked past
       if (snap.liveFiles.nonEmpty) {
         val nulls = readRels(s, t, snap, snap.liveFiles)
           .filter(org.apache.spark.sql.functions.col(colName).isNull)
@@ -4090,15 +4072,8 @@ object TxnLog {
           s"cannot declare $colName NOT NULL: $nulls existing row(s) " +
             "are null — clean the data first")
       }
-      // claim EXACTLY snap.version+1: the validating scan is only
-      // good for the snapshot it ran on — a concurrent append that
-      // slipped in must be re-validated, not blind-walked past
-      if (tryPublish(t, snap.version + 1,
-          Seq(s"constraint\tnotnull\t$colName")))
-        return snap.version + 1
+      Right(Seq(s"constraint\tnotnull\t$colName"))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Declare a named CHECK constraint (any boolean SQL expression
     * over the table's columns) in one metadata commit; existing rows
@@ -4111,8 +4086,10 @@ object TxnLog {
                exprSql: String): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     require(name.matches("[A-Za-z0-9_-]+"), s"bad constraint name: $name")
-    while (true) {
-      val snap = snapshot(t)
+    commitRecomputed(t) { latest =>
+      require(latest.nonEmpty, s"empty transaction log at ${t.logDir}")
+      val snap = latest.get
+      // validated per attempt, like addNotNull
       if (snap.liveFiles.nonEmpty) {
         val bad = readRels(s, t, snap, snap.liveFiles)
           .filter(not(coalesce(expr(exprSql), lit(true)))).count()
@@ -4120,27 +4097,23 @@ object TxnLog {
           s"cannot declare CHECK $name ($exprSql): $bad existing row(s) " +
             "violate it — clean the data first")
       }
-      // exact-slot claim: revalidate on loss (see addNotNull)
-      if (tryPublish(t, snap.version + 1,
-          Seq(s"constraint\tcheck\t$name\t${escapePart(exprSql)}")))
-        return snap.version + 1
+      Right(Seq(s"constraint\tcheck\t$name\t${escapePart(exprSql)}"))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Drop a NOT NULL constraint (by column) or a CHECK constraint
     * (by name) in one metadata commit; unknown names refuse. */
-  def dropConstraint(t: Table, name: String): Long = {
-    val c = constraintsOf(t)
-    val line =
-      if (c.notNull.contains(name)) s"dropconstraint\tnotnull\t$name"
-      else if (c.checks.contains(name)) s"dropconstraint\tcheck\t$name"
-      else throw new IllegalArgumentException(
-        s"no constraint '$name' on ${t.root} (not null: " +
-          s"${c.notNull.mkString(", ")}; checks: " +
-          s"${c.checks.keys.mkString(", ")})")
-    commit(t, latestVersion(t), adds = Nil, extra = Seq(line))
-  }
+  def dropConstraint(t: Table, name: String): Long =
+    commitRecomputed(t) { latest =>
+      val c = latest.fold(NoConstraints)(_.constraints)
+      Right(Seq(
+        if (c.notNull.contains(name)) s"dropconstraint\tnotnull\t$name"
+        else if (c.checks.contains(name)) s"dropconstraint\tcheck\t$name"
+        else throw new IllegalArgumentException(
+          s"no constraint '$name' on ${t.root} (not null: " +
+            s"${c.notNull.mkString(", ")}; checks: " +
+            s"${c.checks.keys.mkString(", ")})")))
+    }
 
   /** Enforce the table's constraints over a STAGED write before its
     * commit — reading the staged files back through [[readStaged]]
@@ -4158,7 +4131,7 @@ object TxnLog {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not,
       sum, when}
     if (c.isEmpty || st.adds.isEmpty) return
-    val reg = registeredSchema(t)
+    lazy val reg = registeredSchema(t) // only an omitted column reads it
     // logical names, partition columns at their written types
     val df = readStaged(s, st)
     val have = df.columns.toSet
@@ -4312,12 +4285,14 @@ object TxnLog {
     val restoredFields = tgt.schemaJson.orElse(cur.schemaJson)
       .map(parseSchema(_).fieldNames.toSet)
     val curFields = cur.schemaJson
-      .map(parseSchema(_).fieldNames.toSet).getOrElse(Set.empty)
-    def refs(sql: String): Set[String] = checkRefs(sql).intersect(curFields)
+      .fold(Seq.empty[String])(parseSchema(_).fieldNames.toSeq)
+    // the current columns the restored schema no longer carries
+    val lost = restoredFields.fold(Seq.empty[String])(f =>
+      curFields.filterNot(c => f.exists(_.equalsIgnoreCase(c))))
     val keptNotNull =
       cur.notNull.filter(c => restoredFields.forall(_.contains(c)))
     val keptChecks = cur.checks.filter { case (_, sql) =>
-      restoredFields.forall(f => refs(sql).subsetOf(f)) }
+      checkCols(sql, lost).isEmpty }
     val conDrops =
       (cur.notNull -- keptNotNull).toSeq.sorted
         .map(c => s"dropconstraint\tnotnull\t$c") ++
@@ -4484,26 +4459,16 @@ object TxnLog {
       val extra = proto ++ schemaLine ++ partColsLine ++
         droppedLines ++ propLines ++ conDrops ++ addLines ++ dvDelta ++
         dvCdc ++ cdc
-      def headerRepublished(v: Long): Long = {
-        // declaredPartCols is a v0/checkpoint HEADER read — a layout
-        // change must republish it or later writers route wrong
-        if (partColsLine.nonEmpty) checkpoint(t, v)
-        v
-      }
       // a dv-reconciling restore with NO removes is still a row-state
       // rewrite: it must claim exactly the next slot like every other
       // dv commit — blind-walking past a concurrent deletion-vector
       // commit would wipe its delete with stale state
-      if (removes.isEmpty && dvDelta.nonEmpty) {
-        if (tryPublish(t, cur.version + 1, extra))
-          return headerRepublished(cur.version + 1)
-        throw new java.util.ConcurrentModificationException(
-          s"restore with deletion-vector reconciliation based on stale " +
-            s"snapshot v${cur.version}: version ${cur.version + 1} was " +
-            "taken concurrently; retry the restore")
-      }
-      headerRepublished(commit(t, cur.version, adds = Nil,
-        removes = removes, extra = extra))
+      val v1 = commit(t, cur.version, adds = Nil, removes = removes,
+        extra = extra, forceClaim = dvDelta.nonEmpty)
+      // declaredPartCols is a v0/checkpoint HEADER read — a layout
+      // change must republish it or later writers route wrong
+      if (partColsLine.nonEmpty) checkpoint(t, v1)
+      v1
     } finally seal(t, stages.toSeq: _*)
   }
 
@@ -4588,13 +4553,16 @@ object TxnLog {
     })
   }
 
-  /** Partition metadata for every file a feed over the range can
-    * reference: the from-snapshot's live files plus the range
-    * commits' partitioned adds. Metadata-scale; empty for
-    * unpartitioned tables (the common case pays one map lookup). */
-  private def feedPartsMap(t: Table, from: Long,
-      range: StreamRange): Map[String, Map[String, String]] = {
+  /** Partition metadata for the `files` a feed batch over the range
+    * reads: the range commits' partitioned adds, plus the
+    * from-snapshot's live files when the batch reads a file the range
+    * did not add (a zero-copy delete, a change file) — an append-only
+    * batch replays nothing. Metadata-scale; empty for unpartitioned
+    * tables. */
+  private def feedPartsMap(t: Table, from: Long, range: StreamRange,
+      files: Seq[String]): Map[String, Map[String, String]] = {
     val rangeParts = range.commits.flatMap(_._2.addParts)
+    val added = range.commits.flatMap(_._2.adds).toSet
     // a stream may legitimately resume at the version just below the
     // expireLog retention floor (its range is fully retained even
     // though `from` itself is not replayable): fall back to the
@@ -4603,7 +4571,8 @@ object TxnLog {
     // only in pre-floor state, which is gone — [[readChangeFeedBatch]]
     // refuses those loudly instead of null-filling the columns.
     val base =
-      if (from < 0) Map.empty[String, Map[String, String]]
+      if (from < 0 || files.forall(added))
+        Map.empty[String, Map[String, String]]
       else snapshot(t, Some(math.max(from, range.floor))).filePartitions
     base ++ rangeParts
   }
@@ -4615,8 +4584,9 @@ object TxnLog {
       to: Long, ignoreDeletes: Boolean, ignoreChanges: Boolean,
       schemaJson: String): DataFrame = {
     val range = streamRange(t, from, to)
-    readFiles(s, t, appendFeed(range, ignoreDeletes, ignoreChanges),
-      Some(schemaJson), feedPartsMap(t, from, range))
+    val files = appendFeed(range, ignoreDeletes, ignoreChanges)
+    readFiles(s, t, files, Some(schemaJson),
+      feedPartsMap(t, from, range, files))
   }
 
   /** One CDF micro-batch as (inserts, deletes) DataFrames, partition
@@ -4638,7 +4608,7 @@ object TxnLog {
     val ins = acts.filter(!_.rewrites).flatMap(_.adds) ++
       acts.flatMap(_.cdcFiles).collect { case (rel, "insert") => rel }
     val del = acts.flatMap(_.cdcFiles).collect { case (rel, "delete") => rel }
-    val parts = feedPartsMap(t, from, range)
+    val parts = feedPartsMap(t, from, range, ins ++ del)
     val floor = range.floor
     if (from >= 0 && from < floor) {
       val unresolved = del.filterNot(parts.contains)

@@ -4718,4 +4718,92 @@ class TxnLogSpec extends AnyFunSuite {
     assert(one.collect().map(_.getLong(0)).toSeq === Seq(2L))
     assert(scans(one).head.selectedPartitions.partitionCount === 1)
   }
+
+  test("txnlog: CHECK references match columns without regard to case; words in string literals are not references") {
+    import spark.implicits._
+    def table(check: String): TxnLog.Table = {
+      val t = freshTable()
+      TxnLog.append(spark, t,
+        Seq((1L, "a", 1L)).toDF("k", "s", "v").coalesce(1))
+      TxnLog.addCheck(spark, t, "k_chk", check)
+      t
+    }
+    // Spark resolves `K` to column k: every verb that would strand
+    // the CHECK refuses, naming it, and publishes nothing
+    val stranding: Seq[(String, TxnLog.Table => Long)] = Seq(
+      "rename" -> (t => TxnLog.renameColumn(t, "k", "k2")),
+      "drop" -> (t => TxnLog.dropColumn(t, "k")),
+      "replace" -> (t => TxnLog.replace(spark, t,
+        Seq(("b", 2L)).toDF("s", "v").coalesce(1))))
+    stranding.foreach { case (op, run) =>
+      val t = table("K > 0")
+      val e = intercept[IllegalArgumentException](run(t))
+      assert(e.getMessage.contains("k_chk"), s"$op: ${e.getMessage}")
+      assert(TxnLog.latestVersion(t) === 1L, op)
+      TxnLog.append(spark, t,
+        Seq((2L, "b", 2L)).toDF("k", "s", "v").coalesce(1))
+    }
+    // the k inside the string literal is no reference: rename proceeds
+    val t = table("s <> 'k'")
+    TxnLog.renameColumn(t, "k", "k2")
+    TxnLog.append(spark, t,
+      Seq((2L, "b", 2L)).toDF("k2", "s", "v").coalesce(1))
+    assert(TxnLog.read(spark, t).count() === 2L)
+  }
+
+  test("txnlog: an append-only feed batch replays no snapshot below its range") {
+    val t = freshTable()
+    TxnLog.append(spark, t, oneRowDf(1))
+    TxnLog.append(spark, t, oneRowDf(2))
+    val schema = TxnLog.registeredSchema(t).get.json
+    // a malformed line in v0: any replay of the from-snapshot fails
+    Files.write(t.logDir.resolve(f"${0L}%020d.log"), "bogus\n".getBytes,
+      java.nio.file.StandardOpenOption.APPEND)
+    val rows = TxnLog.readFeedBatch(spark, t, 0L, 1L, ignoreDeletes = false,
+      ignoreChanges = false, schema).collect().map(_.getLong(0)).toSeq
+    assert(rows === Seq(2L))
+  }
+
+  test("txnlog: racing metadata verbs and appends each land once; versions dense, schema and constraints exact") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.{LongType, StringType, StructField,
+      StructType}
+    val t = freshTable()
+    TxnLog.append(spark, t, Seq((0L, 0)).toDF("id", "n").coalesce(1))
+    TxnLog.addCheck(spark, t, "pre_chk", "id < 1000000")
+    val verbs: Seq[() => Long] = Seq(
+      () => TxnLog.addColumns(t, StructType(Seq(StructField("c1", StringType)))),
+      () => TxnLog.addColumns(t, StructType(Seq(StructField("c2", LongType)))),
+      () => TxnLog.widenColumn(t, "n", LongType),
+      () => TxnLog.addCheck(spark, t, "id_pos", "id >= 0"),
+      () => TxnLog.dropConstraint(t, "pre_chk"))
+    val appends: Seq[() => Long] = (1 to 3).map { i => () =>
+      TxnLog.append(spark, t, Seq((i.toLong, i)).toDF("id", "n").coalesce(1))
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val versions = try {
+      (verbs ++ appends).map(task => pool.submit(
+        new java.util.concurrent.Callable[Long] { def call(): Long = task() }))
+        .map(_.get())
+    } finally pool.shutdown()
+    // every call published its own version, and nothing else landed
+    val latest = TxnLog.latestVersion(t)
+    assert(versions.sorted === (2L to latest), versions)
+    // each verb's action appears exactly once in the log
+    val lines = (2L to latest).flatMap(v => Files.readAllLines(
+      t.logDir.resolve(f"$v%020d.log")).asScala)
+    assert(lines.count(_.startsWith("schema\t")) === 3, lines)
+    assert(lines.count(_.startsWith("constraint\tcheck\tid_pos\t")) === 1)
+    assert(lines.count(_ == "dropconstraint\tcheck\tpre_chk") === 1)
+    val schema = TxnLog.registeredSchema(t).get
+    assert(schema.length === 4 && schema.fields.map(f =>
+      f.name -> f.dataType).toMap === Map("id" -> LongType,
+      "n" -> LongType, "c1" -> StringType, "c2" -> LongType), schema)
+    val c = TxnLog.constraintsOf(t)
+    assert(c.notNull.isEmpty && c.checks === Map("id_pos" -> "id >= 0"))
+    // no appended row lost or doubled
+    assert(TxnLog.read(spark, t).select("id", "n").as[(Long, Long)]
+      .collect().sorted.toSeq === (0L to 3L).map(i => (i, i)))
+  }
 }
